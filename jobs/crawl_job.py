@@ -40,8 +40,7 @@ def run(spark, args):
     from packages_sgml_spark.spark.warc import (warc_pages,
                                                 warc_todo_paths,
                                                 write_wet_pages)
-    from packages_sgml_spark.spark.extract import (extract,
-                                                   extracted_with_meta)
+    from packages_sgml_spark.spark.extract import extract
     from packages_sgml_spark.spark.checkpoint import (
         with_lineage, partition_metrics, resume_filter)
 

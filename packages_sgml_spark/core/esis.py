@@ -61,13 +61,17 @@ class ESISParser(SGMLParser):
     def ev_pi(self, text):
         self.lines.append("?" + _escape(text))
 
+    def dump(self, data) -> str:
+        """Parse `data` and return its ESIS event stream as text;
+        appends 'C' on an error-free parse (conforming), like the
+        reference CLI."""
+        _dom, errors = self.parse(data)
+        lines = list(self.lines)
+        if not any(e.severity == "error" for e in errors):
+            lines.append("C")
+        return "\n".join(lines) + "\n"
+
 
 def esis_dump(data, dialect="sgml", **kw) -> str:
-    """Parse and return the ESIS event stream as text; appends 'C' on
-    an error-free parse (conforming), like the reference CLI."""
-    p = ESISParser(ParserOptions(dialect=dialect, **kw))
-    _dom, errors = p.parse(data)
-    lines = list(p.lines)
-    if not any(e.severity == "error" for e in errors):
-        lines.append("C")
-    return "\n".join(lines) + "\n"
+    """ESISParser.dump with ParserOptions(dialect=dialect, **kw)."""
+    return ESISParser(ParserOptions(dialect=dialect, **kw)).dump(data)

@@ -1,20 +1,45 @@
-"""The extraction operator: html binary column -> extracted text, DOM
-node table, parse errors.
+"""Page sinks: the html binary column -> extracted text, DOM node rows,
+parse errors and the other per-page outputs of the parser.
 
-Spark mapping (SURVEY.md §1.3): one Arrow-batched `mapInPandas` UDF
-runs the core parser per row — no per-row Python UDF dispatch; the
-batch loop is inside one Python call per Arrow batch.  Catalyst sees a
-narrow map over (url, html [, dialect]), so column pruning and
-predicate pushdown on the other columns still reach the parquet scan.
+Every sink is one call to `_page_sink`, the only batch loop that
+parses pages.  It owns:
 
-At 100 TB: the input is repartitioned by xxhash64(url) so work is
-uniform regardless of crawl ordering; hot hosts don't matter here
-because the unit of work is a document (embarrassingly parallel), and
-the only shuffle in the extract path is that explicit repartition
-(skippable with repartition=0 when the source layout is already fine).
+* the prologue: select (url, html [, pass-through] [, dialect]) and,
+  at 100 TB, repartition by xxhash64(url) so work is uniform
+  regardless of crawl ordering.  The unit of work is a document
+  (embarrassingly parallel), so hot hosts don't matter here.
+  `repartition="auto"` shuffles only when the source has fewer
+  partitions than cores, N > 0 always, 0 never;
+* one Arrow-batched map over pandas frames: no per-row Python UDF
+  dispatch.  Catalyst sees a narrow map over the selected columns, so
+  column pruning and predicate pushdown on the rest still reach the
+  scan;
+* the per-page guards, the max_memory analog of sgml2pl.c:603-615.
+  NULL or empty html is status "empty", html over MAX_HTML_BYTES is
+  "too_large", a parse that raises is "exception"; no bad page fails
+  its task.  Status vocabulary: ok | empty | too_large | exception |
+  not_found (extract_element_text's page without the element);
+* one ParserOptions per dialect per task, not per page (the parsers
+  only read their options).
+
+A sink is a per-page function `page(html: bytes, opts, key)`, where
+`key` is the tuple of the page's url and pass-through values, plus its
+output schema.  There are three output shapes:
+
+1. one status row per page, for a schema with a `status` column:
+   `key + page(...)`, or for a page that was not parsed, NULL values,
+   zero counts, the status, and the guard's message in `parse_errors`
+   where the schema has it (`extract`, `extract_markdown`,
+   `extract_main`, the one-string sinks);
+2. zero or more rows per page, returned by `page`; a page that was
+   not parsed contributes none (`extract_nodes_rows`,
+   `extract_name_count`, `links.outlinks`, the `templates` passes);
+3. a per-task fold over the shape-2 rows (`extract_tag_counts`).
 """
 
-from typing import Iterator
+from collections import Counter
+from functools import partial
+from operator import itemgetter
 
 import pandas as pd
 
@@ -24,7 +49,10 @@ from pyspark.sql.types import (
     StructType)
 
 from ..core.dom import dom_to_json, extract_text, flatten_nodes
-from ..core.parser import ParserOptions, SGMLParser, TextOnlyParser
+from ..core.parser import (FirstElementTextParser, NodeTableParser,
+                           ParserOptions, SGMLParser, TagCountParser,
+                           TextOnlyParser)
+from .util import spread
 
 NODE_TYPE = StructType([
     StructField("node_id", IntegerType()),
@@ -57,127 +85,202 @@ EXTRACT_SCHEMA = StructType([
     StructField("status", StringType()),
 ])
 
-MAX_HTML_BYTES = 8 * 1024 * 1024   # per-row guard (max_memory analog,
+MAX_HTML_BYTES = 8 * 1024 * 1024   # per-page guard (max_memory analog,
                                    # sgml2pl.c:603-615)
 
 
-def _parse_one(html, dialect, want_dom_json, want_nodes,
-               text_format="plain"):
-    opts = ParserOptions(dialect=dialect, encoding="utf-8",
-                         max_errors=-1 if dialect.startswith(("html", "xhtml"))
-                         else 50)
-    if dialect.startswith(("html", "xhtml")):
-        opts.quiet = False
-    if not want_dom_json and not want_nodes:
-        if text_format == "markdown":
-            # markdown event sink (r8): structure kept as cheap
-            # syntax — the LLM-corpus text shape — at near text-only
-            # cost (core/markdown.py MarkdownParser, rides the
-            # compiled executor's tape mode)
-            from ..core.markdown import MarkdownParser
-            p = MarkdownParser(opts)
-            _dom, errors = p.parse(html)
-            errs = [{"severity": e.severity, "line": e.line,
-                     "message": e.message} for e in errors]
-            return p.markdown(), None, None, errs
-        # text-only fast path: no DOM construction
-        p = TextOnlyParser(opts)
-        _dom, errors = p.parse(html)
-        errs = [{"severity": e.severity, "line": e.line,
-                 "message": e.message} for e in errors]
-        return p.text(), None, None, errs
-    if want_nodes and not want_dom_json:
-        # node-table fast path (r5): flat rows built in the event
-        # sinks — no Element DOM, no recursive flatten; identical
-        # rows (NodeTableParser docstring + tape-mode parity tests)
-        from ..core.parser import NodeTableParser
-        p = NodeTableParser(opts)
-        _dom, errors = p.parse(html)
-        errs = [{"severity": e.severity, "line": e.line,
-                 "message": e.message} for e in errors]
-        return p.text(), None, p.finish_rows(), errs
-    p = SGMLParser(opts)
-    dom, errors = p.parse(html)
-    text = extract_text(dom)
-    dj = dom_to_json(dom) if want_dom_json else None
-    nodes = (flatten_nodes(dom, p.elem_spans, p.data_spans)
-             if want_nodes else None)
-    errs = [{"severity": e.severity, "line": e.line, "message": e.message}
-            for e in errors]
-    return text, dj, nodes, errs
+def _options(dialect, **kw):
+    """ParserOptions of the page sinks: UTF-8 input, every error
+    collected."""
+    return ParserOptions(dialect=dialect, encoding="utf-8",
+                         max_errors=-1, **kw)
 
 
-def extract_batch_iter(batches: Iterator[pd.DataFrame], dialect_default,
-                       want_dom_json, want_nodes, text_format="plain"):
+_quiet_options = partial(_options, quiet=True)
+
+
+def _extract_options(dialect):
+    """extract()'s error policy: unlimited collection only for the
+    HTML dialects; strict ones cap at 50 so one garbage page can't
+    accumulate millions of ParseError objects."""
+    return ParserOptions(
+        dialect=dialect, encoding="utf-8",
+        max_errors=-1 if dialect.startswith(("html", "xhtml")) else 50)
+
+
+def _unparsed(cols, status, nbytes, message):
+    """Output columns of a page that was not parsed: NULL values and
+    zero counts, with the guard's message (if any) as its one parse
+    error."""
+    fill = {"parse_errors": [] if message is None else
+            [{"severity": "error", "line": 0, "message": message}],
+            "n_errors": 0 if message is None else 1,
+            "n_nodes": 0, "n_blocks_kept": 0, "html_bytes": nbytes,
+            "status": status}
+    return tuple(fill.get(c) for c in cols)
+
+
+def _page_records(batches, page, options, dialect, status_cols=None):
+    """The batch loop behind every page sink: one list of output
+    records per Arrow batch that has any.
+
+    A batch holds `html`, an optional per-row `dialect` (NULL falls
+    back to `dialect`) and the key columns, url first, that reach
+    `page` as one tuple.  With `status_cols` (the output columns after
+    url) every page yields `key + page(...)` or its status row;
+    without, `page` returns the page's records and a page that was
+    not parsed yields none."""
+    opts = {}
     for pdf in batches:
-        out = {k: [] for k in ("url", "text_extracted", "dom_json", "nodes",
-                               "parse_errors", "n_nodes", "n_errors",
-                               "html_bytes", "status")}
-        urls = pdf["url"].tolist()
         htmls = pdf["html"].tolist()
-        dialects = (pdf["dialect"].tolist()
-                    if "dialect" in pdf.columns else None)
-        for i in range(len(urls)):
-            url = urls[i]
-            html = htmls[i]
-            dialect = (dialects[i] if dialects is not None
-                       else dialect_default) or dialect_default
-            out["url"].append(url)
-            nbytes = len(html) if html is not None else 0
-            out["html_bytes"].append(nbytes)
-            if html is None or nbytes == 0:
-                out["text_extracted"].append(None)
-                out["dom_json"].append(None)
-                out["nodes"].append(None)
-                out["parse_errors"].append([])
-                out["n_nodes"].append(0)
-                out["n_errors"].append(0)
-                out["status"].append("empty")
-                continue
-            if nbytes > MAX_HTML_BYTES:
-                out["text_extracted"].append(None)
-                out["dom_json"].append(None)
-                out["nodes"].append(None)
-                out["parse_errors"].append(
-                    [{"severity": "error", "line": 0,
-                      "message": "Insufficient input buffer resources"}])
-                out["n_nodes"].append(0)
-                out["n_errors"].append(1)
-                out["status"].append("too_large")
-                continue
-            try:
-                text, dj, nodes, errs = _parse_one(
-                    bytes(html), dialect, want_dom_json, want_nodes,
-                    text_format)
-                out["text_extracted"].append(text)
-                out["dom_json"].append(dj)
-                out["nodes"].append(nodes)
-                out["parse_errors"].append(errs)
-                out["n_nodes"].append(len(nodes) if nodes else 0)
-                out["n_errors"].append(len(errs))
-                out["status"].append("ok")
-            except Exception as ex:    # noqa: BLE001 - per-row isolation
-                out["text_extracted"].append(None)
-                out["dom_json"].append(None)
-                out["nodes"].append(None)
-                out["parse_errors"].append(
-                    [{"severity": "error", "line": 0,
-                      "message": "parser exception: %s" % ex}])
-                out["n_nodes"].append(0)
-                out["n_errors"].append(1)
-                out["status"].append("exception")
-        yield pd.DataFrame(out)
+        dialects = (pdf["dialect"].tolist() if "dialect" in pdf.columns
+                    else [None] * len(htmls))
+        keys = zip(*[pdf[c].tolist() for c in pdf.columns
+                     if c not in ("html", "dialect")])
+        recs = []
+        for key, html, d in zip(keys, htmls, dialects):
+            nbytes = 0 if html is None else len(html)
+            if nbytes == 0:
+                status, message = "empty", None
+            elif nbytes > MAX_HTML_BYTES:
+                status, message = ("too_large",
+                                   "Insufficient input buffer resources")
+            else:
+                d = d or dialect
+                o = opts.get(d)
+                if o is None:
+                    o = opts[d] = options(d)
+                try:
+                    out = page(bytes(html), o, key)
+                except Exception as ex:  # noqa: BLE001 per-page isolation
+                    status, message = ("exception",
+                                       "parser exception: %s" % ex)
+                else:
+                    if status_cols is None:
+                        recs.extend(out)
+                    else:
+                        recs.append(key + out)
+                    continue
+            if status_cols is not None:
+                recs.append(key + _unparsed(status_cols, status, nbytes,
+                                            message))
+        # never yield an empty frame: pandas cannot type an empty
+        # column, and Arrow's map converter rejects the guess
+        if recs:
+            yield recs
+
+
+def _page_batches(batches, schema, page, options=_options,
+                  dialect="html5", fold=None):
+    """`_page_records` as pandas frames of `schema` — the body of a
+    page sink's Python worker, also callable on the driver.  A schema
+    with a `status` column gets one row per page (shape 1); `fold`
+    reduces the task's shape-2 records."""
+    cols = schema.fieldNames()
+    records = _page_records(batches, page, options, dialect,
+                            cols[1:] if "status" in cols else None)
+    for recs in (fold(records) if fold else records):
+        yield pd.DataFrame.from_records(recs, columns=cols)
+
+
+def _page_sink(pages: DataFrame, schema, page, options=_options,
+               dialect="html5", repartition="auto", fold=None,
+               keys=("url",), row_dialect=False) -> DataFrame:
+    """pages(url, html, ...) -> `schema`: one narrow Arrow-batched map
+    of `_page_batches` over the key columns, html and, with
+    `row_dialect`, the pages' own dialect column."""
+    cols = [*keys, "html"]
+    if row_dialect and "dialect" in pages.columns:
+        cols.append("dialect")
+    src = pages.select(*cols)
+    if repartition == "auto":
+        src = spread(src, F.xxhash64("url"))
+    elif repartition:
+        src = src.repartition(repartition, F.xxhash64("url"))
+
+    def fn(batches):
+        return _page_batches(batches, schema, page, options, dialect,
+                             fold)
+
+    return src.mapInPandas(fn, schema=schema)
+
+
+def _text_schema(col):
+    """(url, <col>, status): the schema of a one-string-per-page sink."""
+    return StructType([StructField("url", StringType()),
+                       StructField(col, StringType()),
+                       StructField("status", StringType())])
+
+
+def _text_only(html, opts):
+    """A page's plain text and parse errors, without building a DOM."""
+    p = TextOnlyParser(opts)
+    _dom, errors = p.parse(html)
+    return p.text(), errors
+
+
+def _markdown(html, opts):
+    """A page rendered as Markdown and its parse errors.  Renders from
+    the event stream (core/markdown.py MarkdownParser: no Element DOM,
+    rides the compiled executor's tape mode), byte-identical to the
+    dom_to_markdown walker by the differential tests in
+    tests/test_markdown.py."""
+    from ..core.markdown import MarkdownParser
+    p = MarkdownParser(opts)
+    _dom, errors = p.parse(html)
+    return p.markdown(), errors
+
+
+def _node_rows(html, opts):
+    """A page's flat pre-order node rows (NodeTableParser)."""
+    p = NodeTableParser(opts)
+    p.parse(html)
+    return p.finish_rows()
+
+
+def _extract_page(dom_json, nodes, text_format):
+    """extract()'s per-page function for one output mode."""
+    def page(html, opts, _key):
+        dj = rows = None
+        if text_format == "markdown":
+            text, errors = _markdown(html, opts)
+        elif nodes and not dom_json:
+            # node-table fast path (r5): flat rows built in the event
+            # sinks — no Element DOM, no recursive flatten; identical
+            # rows (NodeTableParser docstring + tape-mode parity tests)
+            p = NodeTableParser(opts)
+            _dom, errors = p.parse(html)
+            text, rows = p.text(), p.finish_rows()
+        elif nodes or dom_json:
+            p = SGMLParser(opts)
+            dom, errors = p.parse(html)
+            text = extract_text(dom)
+            dj = dom_to_json(dom) if dom_json else None
+            rows = (flatten_nodes(dom, p.elem_spans, p.data_spans)
+                    if nodes else None)
+        else:
+            text, errors = _text_only(html, opts)
+        errs = [{"severity": e.severity, "line": e.line,
+                 "message": e.message} for e in errors]
+        return (text, dj, rows, errs, len(rows) if rows else 0,
+                len(errs), len(html), "ok")
+    return page
+
+
+def extract_batch_iter(batches, dialect_default, want_dom_json,
+                       want_nodes, text_format="plain"):
+    """extract()'s worker loop, callable on the driver: pandas batches
+    of (url, html [, dialect]) -> EXTRACT_SCHEMA frames."""
+    return _page_batches(
+        batches, EXTRACT_SCHEMA,
+        _extract_page(want_dom_json, want_nodes, text_format),
+        _extract_options, dialect_default)
 
 
 def extract(pages: DataFrame, dialect="html5", dom_json=False, nodes=True,
             repartition="auto", text_format="plain") -> DataFrame:
-    """pages(url, html [, dialect]) -> EXTRACT_SCHEMA DataFrame.
-
-    `repartition` > 0 shuffles by xxhash64(url) first (uniform work
-    distribution at crawl scale); "auto" (default) repartitions by url
-    hash only when the source has fewer partitions than cores (an
-    under-partitioned small input would otherwise parse on one core;
-    no-op on well-laid-out crawl inputs); 0 keeps source partitioning.
+    """pages(url, html [, dialect]) -> EXTRACT_SCHEMA DataFrame.  A
+    page's own dialect, where not NULL, overrides `dialect`.
 
     `text_format="markdown"` renders text_extracted as Markdown (the
     LLM-corpus text shape) instead of plain text — same schema,
@@ -190,47 +293,28 @@ def extract(pages: DataFrame, dialect="html5", dom_json=False, nodes=True,
     if text_format == "markdown" and (dom_json or nodes):
         raise ValueError("text_format='markdown' requires "
                          "dom_json=False, nodes=False")
-    from .util import spread
-    cols = ["url", "html"]
-    if "dialect" in pages.columns:
-        cols.append("dialect")
-    src = pages.select(*cols)
-    if repartition == "auto":
-        src = spread(src, F.xxhash64("url"))
-    elif repartition:
-        src = src.repartition(repartition, F.xxhash64("url"))
-
-    def fn(batches):
-        return extract_batch_iter(batches, dialect, dom_json, nodes,
-                                  text_format)
-
-    return src.mapInPandas(fn, schema=EXTRACT_SCHEMA)
+    return _page_sink(pages, EXTRACT_SCHEMA,
+                      _extract_page(dom_json, nodes, text_format),
+                      _extract_options, dialect, repartition,
+                      row_dialect=True)
 
 
 def extract_text_only(pages: DataFrame, dialect="html5",
                       repartition="auto") -> DataFrame:
     """Text-only extraction sink for callers that keep ONLY the
-    extracted text (r9): per-row semantics identical to
-    extract(nodes=False, dom_json=False) — same parser, same options,
-    empty/oversized/failed rows yield NULL text — but the worker
-    ships one string column back instead of the full 9-column
-    EXTRACT_SCHEMA, whose parse_errors array<struct> pays Arrow's
-    per-struct conversion for every warning row the quiet=False HTML
-    parse collects (guide §4.1: control how many columns cross the
-    boundary).  extract() keeps its schema for callers that read the
-    error/meta columns (bench parse_throughput forces all of them)."""
-    def one(html):
-        opts = ParserOptions(dialect=dialect, encoding="utf-8",
-                             max_errors=-1
-                             if dialect.startswith(("html", "xhtml"))
-                             else 50)
-        if dialect.startswith(("html", "xhtml")):
-            opts.quiet = False
-        p = TextOnlyParser(opts)
-        p.parse(html)
-        return p.text(), "ok"
+    extracted text (r9): the text of extract(nodes=False,
+    dom_json=False), but the worker ships one string column back
+    instead of the full 9-column EXTRACT_SCHEMA, whose parse_errors
+    array<struct> pays Arrow's per-struct conversion for every warning
+    row the quiet=False HTML parse collects (guide §4.1: control how
+    many columns cross the boundary).  extract() keeps its schema for
+    callers that read the error/meta columns (bench parse_throughput
+    forces all of them)."""
+    def page(html, opts, _key):
+        return _text_only(html, opts)[0], "ok"
 
-    return _page_sink(pages, "text_extracted", one, repartition)
+    return _page_sink(pages, _text_schema("text_extracted"), page,
+                      _extract_options, dialect, repartition)
 
 
 MARKDOWN_SCHEMA = StructType([
@@ -245,75 +329,31 @@ def extract_markdown(pages: DataFrame, dialect="html5",
                      repartition="auto") -> DataFrame:
     """pages(url, html) -> (url, markdown, n_errors, status): HTML
     rendered to Markdown (core/markdown.py) — structure kept as cheap
-    syntax, the text shape modern LLM corpora train on.  Same
-    worker-batch loop, per-row isolation, and size guards as
-    extract(); one narrow map, no shuffle beyond the spread.
-    r8: renders from the event stream (MarkdownParser — no Element
-    DOM, rides the compiled executor's tape mode), byte-identical to
-    the dom_to_markdown walker by the differential tests in
-    tests/test_markdown.py."""
-    from ..core.parser import ParserOptions
-    from ..core.markdown import MarkdownParser
-    from .util import spread
-    pages = spread(pages, "url", factor=1) if repartition == "auto" \
-        else (pages.repartition(int(repartition), "url")
-              if repartition else pages)
+    syntax, the text shape modern LLM corpora train on.  The renderer
+    of extract(text_format="markdown")."""
+    def page(html, opts, _key):
+        md, errors = _markdown(html, opts)
+        return md, len(errors), "ok"
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"].tolist(),
-                                 pdf["html"].tolist()):
-                nbytes = len(html) if html is not None else 0
-                if nbytes == 0:
-                    rows.append((url, None, 0, "empty"))
-                    continue
-                if nbytes > MAX_HTML_BYTES:
-                    rows.append((url, None, 1, "too_large"))
-                    continue
-                try:
-                    # same error policy as extract(): unlimited
-                    # collection only for the HTML dialects; strict
-                    # ones cap at 50 so one garbage row can't
-                    # accumulate millions of ParseError objects
-                    html_d = dialect.startswith(("html", "xhtml"))
-                    opts = ParserOptions(
-                        dialect=dialect, encoding="utf-8",
-                        max_errors=-1 if html_d else 50)
-                    if html_d:
-                        opts.quiet = False
-                    p = MarkdownParser(opts)
-                    _dom, errors = p.parse(bytes(html))
-                    rows.append((url, p.markdown(), len(errors),
-                                 "ok"))
-                except Exception as ex:  # noqa: BLE001 per-row isolation
-                    rows.append((url, None, 1,
-                                 "exception: %s" % ex))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MARKDOWN_SCHEMA])
-
-    return (pages.select("url", "html")
-            .mapInPandas(fn, schema=MARKDOWN_SCHEMA))
+    return _page_sink(pages, MARKDOWN_SCHEMA, page, _extract_options,
+                      dialect, repartition)
 
 
 def extract_element_text(pages: DataFrame, element="title",
                          dialect="html5", repartition="auto") -> DataFrame:
     """Selective extraction of the first <element>'s text per page
     (stop-condition fast path: the tokenizer abandons the byte stream
-    the moment the element closes — FirstElementTextParser).  Same
-    single-narrow-map shape as extract(); at crawl scale this is the
-    cheap metadata pass (title, first h1, canonical link text) that
-    shouldn't pay for a full parse."""
-    def one(html):
-        from ..core.parser import FirstElementTextParser, ParserOptions
-        p = FirstElementTextParser(
-            ParserOptions(dialect=dialect, encoding="utf-8",
-                          max_errors=-1, quiet=True), target=element)
+    the moment the element closes — FirstElementTextParser).  At crawl
+    scale this is the cheap metadata pass (title, first h1, canonical
+    link text) that shouldn't pay for a full parse."""
+    def page(html, opts, _key):
+        p = FirstElementTextParser(opts, target=element)
         p.parse(html)
         t = p.text()
         return t, ("ok" if t is not None else "not_found")
 
-    return _page_sink(pages, "element_text", one, repartition)
+    return _page_sink(pages, _text_schema("element_text"), page,
+                      _quiet_options, dialect, repartition)
 
 
 def serialize_pages(pages: DataFrame, dialect="html5",
@@ -323,16 +363,30 @@ def serialize_pages(pages: DataFrame, dialect="html5",
     operator): pages(url, html) -> (url, xml_out).  The writer runs
     with layout=False/net=True so output is deterministic and
     SQL-reconstructable for synthesized corpora."""
-    def one(html):
-        from ..core.parser import ParserOptions, SGMLParser
+    def page(html, opts, _key):
         from ..core.serialize import xml_write
-        p = SGMLParser(ParserOptions(dialect=dialect, encoding="utf-8",
-                                     max_errors=-1, quiet=True))
-        dom, _errors = p.parse(html)
+        dom, _errors = SGMLParser(opts).parse(html)
         return xml_write(dom, header=False, layout=False, net=True,
                          dialect=out_dialect), "ok"
 
-    return _page_sink(pages, "xml_out", one, repartition)
+    return _page_sink(pages, _text_schema("xml_out"), page,
+                      _quiet_options, dialect, repartition)
+
+
+TAG_COUNTS_SCHEMA = StructType([
+    StructField("name", StringType()),
+    StructField("n", LongType()),
+])
+
+
+def _sum_counts(records):
+    """Fold (name, n) records into one record per distinct name."""
+    total = Counter()
+    for recs in records:
+        for name, n in recs:
+            total[name] += n
+    if total:
+        yield list(total.items())
 
 
 def extract_tag_counts(pages: DataFrame,
@@ -345,36 +399,14 @@ def extract_tag_counts(pages: DataFrame,
     struct per DOM node.  Counts match the node-table path exactly
     (explicit + implied begins == element nodes; pytest parity) at
     ~2.4x less cost — the aggregate-don't-materialize shape for
-    crawl-scale tag analytics.  Per-row guards mirror extract():
-    empty/oversized/exception rows contribute nothing."""
-    from .util import spread
-    src = pages.select("url", "html")
-    if repartition == "auto":
-        src = spread(src, F.xxhash64("url"))
-    elif repartition:
-        src = src.repartition(repartition, F.xxhash64("url"))
+    crawl-scale tag analytics."""
+    def page(html, opts, _key):
+        p = TagCountParser(opts)
+        p.parse(html)
+        return p.counts.items()
 
-    def fn(batches):
-        from collections import Counter
-
-        from ..core.parser import ParserOptions, TagCountParser
-        total = Counter()
-        for pdf in batches:
-            for html in pdf["html"]:
-                if html is None or len(html) == 0 or \
-                        len(html) > MAX_HTML_BYTES:
-                    continue
-                p = TagCountParser(ParserOptions(
-                    dialect=dialect, encoding="utf-8", max_errors=-1))
-                try:
-                    p.parse(bytes(html))
-                except Exception:   # noqa: BLE001 - per-row isolation
-                    continue
-                total.update(p.counts)
-        yield pd.DataFrame({"name": list(total),
-                            "n": list(total.values())})
-
-    return src.mapInPandas(fn, schema="name string, n long")
+    return _page_sink(pages, TAG_COUNTS_SCHEMA, page, dialect=dialect,
+                      repartition=repartition, fold=_sum_counts)
 
 
 NODE_ROWS_SCHEMA = StructType([
@@ -404,65 +436,35 @@ def extract_nodes_rows(pages: DataFrame, dialect="html5",
     one row per node as plain COLUMNS converts int/string columns
     vectorized; the same 48M-node corpus drops from dominating the
     job to a fraction of it.  Output rows are identical to the
-    explode path (same oracle; A/B pytest), failed/empty/oversized
-    documents contribute no rows, and the plan loses its Generate
-    (explode) node — a narrow map is all that remains.
+    explode path (same oracle; A/B pytest), and the plan loses its
+    Generate (explode) node — a narrow map is all that remains.
 
     r9: `columns` restricts the emitted node columns (guide §4.1 —
     Catalyst cannot prune through the opaque map, so without this
     every caller paid the Python-append + Arrow conversion for all
     ten columns; the attrs map column is the expensive one).  Values
     of the kept columns are identical to the full emission."""
-    from .util import spread
-    src = pages.select("url", "html")
-    if repartition == "auto":
-        src = spread(src, F.xxhash64("url"))
-    elif repartition:
-        src = src.repartition(repartition, F.xxhash64("url"))
-
-    COLS = ("node_id", "parent_id", "ord", "kind", "name", "attrs",
-            "text", "subtree_end", "start_pos", "end_pos")
+    cols = NODE_ROWS_SCHEMA.fieldNames()[1:]
     if columns is not None:
-        want = set(columns)
-        unknown = want - set(COLS)
+        unknown = set(columns) - set(cols)
         if unknown:
             raise ValueError("unknown node columns: %s" % unknown)
-        COLS = tuple(c for c in COLS if c in want)
-        schema = StructType(
-            [NODE_ROWS_SCHEMA["url"]] +
-            [NODE_ROWS_SCHEMA[c] for c in COLS])
-    else:
-        schema = NODE_ROWS_SCHEMA
+        cols = [c for c in cols if c in columns]
+    schema = StructType([NODE_ROWS_SCHEMA[c] for c in ["url", *cols]])
+    pick = (itemgetter(*cols) if len(cols) > 1
+            else lambda r: tuple(r[c] for c in cols))
 
-    def fn(batches):
-        from ..core.parser import NodeTableParser, ParserOptions
-        for pdf in batches:
-            out = {k: [] for k in ("url",) + COLS}
-            urls_out = out["url"]
-            for url, html in zip(pdf["url"].tolist(),
-                                 pdf["html"].tolist()):
-                if html is None or len(html) == 0 or \
-                        len(html) > MAX_HTML_BYTES:
-                    continue
-                p = NodeTableParser(ParserOptions(
-                    dialect=dialect, encoding="utf-8", max_errors=-1))
-                try:
-                    p.parse(bytes(html))
-                except Exception:   # noqa: BLE001 - per-row isolation
-                    continue
-                rows = p.finish_rows()
-                urls_out.extend([url] * len(rows))
-                for k in COLS:
-                    col = out[k]
-                    for r in rows:
-                        col.append(r[k])
-            if urls_out:
-                # never yield an empty frame: pandas would type the
-                # attrs column float64 and Arrow's map converter
-                # rejects the dtype (observed on all-failed batches)
-                yield pd.DataFrame(out)
+    def page(html, opts, key):
+        return [key + pick(r) for r in _node_rows(html, opts)]
 
-    return src.mapInPandas(fn, schema=schema)
+    return _page_sink(pages, schema, page, dialect=dialect,
+                      repartition=repartition)
+
+
+NAME_COUNT_SCHEMA = StructType([
+    StructField("url", StringType()),
+    StructField("n", LongType()),
+])
 
 
 def extract_name_count(pages: DataFrame, name="a",
@@ -475,92 +477,27 @@ def extract_name_count(pages: DataFrame, name="a",
     node structs: the plan is a narrow map emitting one (url, long)
     row per matching document instead of one struct per DOM node.
     Docs with zero matches are omitted (the node-table path's
-    filter-then-groupBy has the same semantics); empty/oversized/
-    failed rows contribute nothing, mirroring extract()."""
-    from .util import spread
-    src = pages.select("url", "html")
-    if repartition == "auto":
-        src = spread(src, F.xxhash64("url"))
-    elif repartition:
-        src = src.repartition(repartition, F.xxhash64("url"))
+    filter-then-groupBy has the same semantics)."""
+    def page(html, opts, key):
+        p = TagCountParser(opts)
+        p.parse(html)
+        n = p.counts.get(name, 0)
+        return [key + (n,)] if n else ()
 
-    def fn(batches):
-        from ..core.parser import ParserOptions, TagCountParser
-        for pdf in batches:
-            urls, counts = [], []
-            for url, html in zip(pdf["url"].tolist(),
-                                 pdf["html"].tolist()):
-                if html is None or len(html) == 0 or \
-                        len(html) > MAX_HTML_BYTES:
-                    continue
-                p = TagCountParser(ParserOptions(
-                    dialect=dialect, encoding="utf-8", max_errors=-1))
-                try:
-                    p.parse(bytes(html))
-                except Exception:   # noqa: BLE001 - per-row isolation
-                    continue
-                c = p.counts.get(name, 0)
-                if c:
-                    urls.append(url)
-                    counts.append(c)
-            yield pd.DataFrame({"url": urls, "n": counts})
-
-    return src.mapInPandas(fn, schema="url string, n long")
-
-
-def _page_sink(pages: DataFrame, col_name, fn_one,
-               repartition="auto") -> DataFrame:
-    """Shared shape for per-page text sinks (first-element text,
-    serialized XML, ESIS dump, canonical XML): url+html ->
-    (url, <col>, status) via one narrow mapInPandas, with the usual
-    spread/repartition handling, the per-row size guard, and per-row
-    exception isolation.  fn_one(bytes) -> (value, status)."""
-    schema = StructType([StructField("url", StringType()),
-                         StructField(col_name, StringType()),
-                         StructField("status", StringType())])
-    src = pages.select("url", "html")
-    if repartition == "auto":
-        from .util import spread
-        src = spread(src, F.xxhash64("url"))
-    elif repartition:
-        src = src.repartition(repartition, F.xxhash64("url"))
-
-    def fn(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("url", col_name, "status")}
-            for url, html in zip(pdf["url"].tolist(),
-                                 pdf["html"].tolist()):
-                out["url"].append(url)
-                if html is None or len(html) == 0:
-                    out[col_name].append(None)
-                    out["status"].append("empty")
-                    continue
-                if len(html) > MAX_HTML_BYTES:
-                    out[col_name].append(None)
-                    out["status"].append("too_large")
-                    continue
-                try:
-                    val, status = fn_one(bytes(html))
-                    out[col_name].append(val)
-                    out["status"].append(status)
-                except Exception as ex:   # noqa: BLE001
-                    out[col_name].append(None)
-                    out["status"].append("exception: %s" % ex)
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(fn, schema=schema)
+    return _page_sink(pages, NAME_COUNT_SCHEMA, page, dialect=dialect,
+                      repartition=repartition)
 
 
 def esis_pages(pages: DataFrame, dialect="html5",
                repartition="auto") -> DataFrame:
     """ESIS event-dump sink (the reference CLI's golden format,
     sgml.c:194-281) as a Spark operator: (url, esis, status)."""
-    def one(html):
-        from ..core.esis import esis_dump
-        return esis_dump(html, dialect=dialect, encoding="utf-8",
-                         quiet=True, max_errors=-1), "ok"
+    def page(html, opts, _key):
+        from ..core.esis import ESISParser
+        return ESISParser(opts).dump(html), "ok"
 
-    return _page_sink(pages, "esis", one, repartition)
+    return _page_sink(pages, _text_schema("esis"), page, _quiet_options,
+                      dialect, repartition)
 
 
 def c14n_pages(pages: DataFrame, dialect="xml", method=None,
@@ -573,17 +510,15 @@ def c14n_pages(pages: DataFrame, dialect="xml", method=None,
     tests/test_c14n_plain.py) — for ns-bearing inputs pass
     dialect="xmlns" and keep_prefix=True, the xml_write_canonical/3
     input contract (c14n2.pl:58-63)."""
-    def one(html):
+    def page(html, opts, _key):
         from ..core.c14n import EXC_C14N, xml_write_canonical
-        from ..core.parser import ParserOptions, SGMLParser
-        p = SGMLParser(ParserOptions(dialect=dialect, encoding="utf-8",
-                                     keep_prefix=keep_prefix,
-                                     quiet=True, max_errors=-1))
-        dom, _errors = p.parse(html)
+        dom, _errors = SGMLParser(opts).parse(html)
         return xml_write_canonical(
             dom, method=method if method is not None else EXC_C14N), "ok"
 
-    return _page_sink(pages, "c14n", one, repartition)
+    return _page_sink(pages, _text_schema("c14n"), page,
+                      partial(_quiet_options, keep_prefix=keep_prefix),
+                      dialect, repartition)
 
 
 def extracted_with_meta(pages: DataFrame, extracted: DataFrame) -> DataFrame:
@@ -605,50 +540,14 @@ MAIN_SCHEMA = StructType([
 def extract_main(pages: DataFrame, dialect="html5", min_words=3,
                  max_link_density=0.4, repartition="auto") -> DataFrame:
     """Main-content extraction (boilerplate strip via DOM heuristics,
-    core/boilerplate.py): pages(url, html) -> (url, text_main, ...).
-    Same single-narrow-map shape as extract()."""
-
-    src = pages.select("url", "html")
-    if repartition == "auto":
-        from .util import spread
-        src = spread(src, F.xxhash64("url"))
-    elif repartition:
-        src = src.repartition(repartition, F.xxhash64("url"))
-
-    def fn(batches):
-        from ..core.parser import SGMLParser, ParserOptions
+    core/boilerplate.py): pages(url, html) -> (url, text_main,
+    n_blocks_kept, n_errors, status)."""
+    def page(html, opts, _key):
         from ..core.boilerplate import main_content
-        for pdf in batches:
-            out = {k: [] for k in ("url", "text_main", "n_blocks_kept",
-                                   "n_errors", "status")}
-            urls = pdf["url"].tolist()
-            htmls = pdf["html"].tolist()
-            for i in range(len(urls)):
-                out["url"].append(urls[i])
-                html = htmls[i]
-                if html is None or len(html) == 0:
-                    out["text_main"].append(None)
-                    out["n_blocks_kept"].append(0)
-                    out["n_errors"].append(0)
-                    out["status"].append("empty")
-                    continue
-                try:
-                    p = SGMLParser(ParserOptions(
-                        dialect=dialect, encoding="utf-8",
-                        max_errors=-1))
-                    dom, errors = p.parse(bytes(html))
-                    text = main_content(dom, min_words,
-                                        max_link_density)
-                    out["text_main"].append(text)
-                    out["n_blocks_kept"].append(
-                        len(text.split("\n")) if text else 0)
-                    out["n_errors"].append(len(errors))
-                    out["status"].append("ok")
-                except Exception as ex:   # noqa: BLE001
-                    out["text_main"].append(None)
-                    out["n_blocks_kept"].append(0)
-                    out["n_errors"].append(1)
-                    out["status"].append("exception: %s" % ex)
-            yield pd.DataFrame(out)
+        dom, errors = SGMLParser(opts).parse(html)
+        text = main_content(dom, min_words, max_link_density)
+        return (text, len(text.split("\n")) if text else 0, len(errors),
+                "ok")
 
-    return src.mapInPandas(fn, schema=MAIN_SCHEMA)
+    return _page_sink(pages, MAIN_SCHEMA, page, dialect=dialect,
+                      repartition=repartition)

@@ -29,7 +29,7 @@ from pyspark.sql.types import (BooleanType, DoubleType, IntegerType,
                                LongType, StringType, StructField,
                                StructType)
 
-from .extract import MAX_HTML_BYTES
+from .extract import _node_rows, _page_sink
 
 LINKS_SCHEMA = StructType([
     StructField("url", StringType()),
@@ -92,35 +92,13 @@ def outlinks(pages: DataFrame, dialect="html5",
     nofollow): one row per ``<a href>`` in document order.  ``target``
     is the canonical absolute URL (None for javascript:/mailto:/
     unparseable); ``href`` keeps the raw attribute for exactness.
-    Single narrow map — same plan shape as extract()."""
-    from .util import spread
-    src = pages.select("url", "html")
-    if repartition == "auto":
-        src = spread(src, F.xxhash64("url"))
-    elif repartition:
-        src = src.repartition(repartition, F.xxhash64("url"))
+    One narrow map; the node rows are folded into link rows in the
+    worker."""
+    def page(html, opts, key):
+        return _doc_links(key[0], _node_rows(html, opts))
 
-    def fn(batches):
-        from ..core.parser import NodeTableParser, ParserOptions
-        for pdf in batches:
-            recs = []
-            for url, html in zip(pdf["url"].tolist(),
-                                 pdf["html"].tolist()):
-                if html is None or len(html) == 0 or \
-                        len(html) > MAX_HTML_BYTES:
-                    continue
-                p = NodeTableParser(ParserOptions(
-                    dialect=dialect, encoding="utf-8", max_errors=-1))
-                try:
-                    p.parse(bytes(html))
-                except Exception:  # noqa: BLE001 - per-row isolation
-                    continue
-                recs.extend(_doc_links(url, p.finish_rows()))
-            if recs:
-                yield pd.DataFrame(
-                    recs, columns=[f.name for f in LINKS_SCHEMA])
-
-    return src.mapInPandas(fn, schema=LINKS_SCHEMA)
+    return _page_sink(pages, LINKS_SCHEMA, page, dialect=dialect,
+                      repartition=repartition)
 
 
 def host_graph(links: DataFrame, keep_nofollow=False,

@@ -40,12 +40,11 @@ functionality layered on the node-table extraction
 
 import hashlib
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (DoubleType, LongType, IntegerType,
                                StringType, StructField, StructType)
 
-from .extract import MAX_HTML_BYTES
+from .extract import _node_rows, _page_sink
 
 _I64 = (1 << 63) - 1
 
@@ -117,53 +116,26 @@ _FP_SCHEMA = StructType([
 ])
 
 
-def _parse_rows(html, dialect):
-    from ..core.parser import NodeTableParser, ParserOptions
-    if html is None or len(html) == 0 or len(html) > MAX_HTML_BYTES:
-        return None
-    p = NodeTableParser(ParserOptions(dialect=dialect,
-                                      encoding="utf-8",
-                                      max_errors=-1))
-    try:
-        p.parse(bytes(html))
-    except Exception:               # noqa: BLE001 - per-row isolation
-        return None
-    return p.finish_rows()
-
-
 def node_fingerprints(pages: DataFrame, dialect="html5") -> DataFrame:
     """(url, host, html) -> one row per ELEMENT node with subtree
     fingerprints.  Narrow map (no shuffle); run it on a SAMPLE for
     mining — the full corpus never needs this pass."""
-    def fn(batches):
-        for pdf in batches:
-            out = {f.name: [] for f in _FP_SCHEMA.fields}
-            for url, host, html in zip(pdf["url"].tolist(),
-                                       pdf["host"].tolist(),
-                                       pdf["html"].tolist()):
-                rows = _parse_rows(html, dialect)
-                if not rows:
-                    continue
-                fps = _doc_fingerprints(rows)
-                for r in rows:
-                    fp = fps.get(r["node_id"])
-                    if fp is None or r["parent_id"] < 0:
-                        # roots excluded: a whole-page fp only
-                        # repeats on byte-identical pages (dedup
-                        # territory) and stripping it would empty
-                        # the document
-                        continue
-                    out["url"].append(url)
-                    out["host"].append(host)
-                    out["name"].append(r["name"])
-                    out["struct_fp"].append(fp[0])
-                    out["content_fp"].append(fp[1])
-                    out["n_nodes"].append(fp[2])
-                    out["text_len"].append(fp[3])
-            if out["url"]:
-                yield pd.DataFrame(out)
+    def page(html, opts, key):
+        rows = _node_rows(html, opts)
+        fps = _doc_fingerprints(rows)
+        out = []
+        for r in rows:
+            fp = fps.get(r["node_id"])
+            if fp is None or r["parent_id"] < 0:
+                # roots excluded: a whole-page fp only repeats on
+                # byte-identical pages (dedup territory) and stripping
+                # it would empty the document
+                continue
+            out.append(key + (r["name"],) + fp)
+        return out
 
-    return pages.mapInPandas(fn, schema=_FP_SCHEMA)
+    return _page_sink(pages, _FP_SCHEMA, page, dialect=dialect,
+                      repartition=0, keys=("url", "host"))
 
 
 def with_host(pages: DataFrame) -> DataFrame:
@@ -245,45 +217,33 @@ def extract_text_without_templates(pages: DataFrame, template_keys,
     SMALL mined template table (collect_template_keys), shipped via
     Spark broadcast; this pass is one narrow mapInPandas over the
     full corpus — zero shuffle, identical plan shape to extract()."""
-    src = with_host(pages.select("url", "html"))
-    sc = pages.sparkSession.sparkContext
-    bkeys = sc.broadcast(frozenset(template_keys))
+    bkeys = pages.sparkSession.sparkContext.broadcast(
+        frozenset(template_keys))
 
-    def fn(batches):
+    def page(html, opts, key):
+        url, host = key
         keys = bkeys.value
-        for pdf in batches:
-            urls, texts, nds, dls = [], [], [], []
-            for url, host, html in zip(pdf["url"].tolist(),
-                                       pdf["host"].tolist(),
-                                       pdf["html"].tolist()):
-                rows = _parse_rows(html, dialect)
-                if rows is None:
-                    continue
-                fps = _doc_fingerprints(rows)
-                drop_until = -1
-                n_dropped = 0
-                dropped_len = 0
-                parts = []
-                for r in rows:
-                    nid = r["node_id"]
-                    if nid < drop_until:
-                        continue
-                    fp = fps.get(nid)
-                    if (fp is not None and r["parent_id"] >= 0 and
-                            (host, fp[1]) in keys):
-                        drop_until = r["subtree_end"]
-                        n_dropped += 1
-                        dropped_len += fp[3]
-                        continue
-                    if r["kind"] == "text" and r["text"]:
-                        parts.append(r["text"])
-                urls.append(url)
-                texts.append("".join(parts))
-                nds.append(n_dropped)
-                dls.append(dropped_len)
-            if urls:
-                yield pd.DataFrame({"url": urls, "text": texts,
-                                    "n_dropped": nds,
-                                    "dropped_text_len": dls})
+        rows = _node_rows(html, opts)
+        fps = _doc_fingerprints(rows)
+        drop_until = -1
+        n_dropped = 0
+        dropped_len = 0
+        parts = []
+        for r in rows:
+            nid = r["node_id"]
+            if nid < drop_until:
+                continue
+            fp = fps.get(nid)
+            if (fp is not None and r["parent_id"] >= 0 and
+                    (host, fp[1]) in keys):
+                drop_until = r["subtree_end"]
+                n_dropped += 1
+                dropped_len += fp[3]
+                continue
+            if r["kind"] == "text" and r["text"]:
+                parts.append(r["text"])
+        return [(url, "".join(parts), n_dropped, dropped_len)]
 
-    return src.mapInPandas(fn, schema=_CLEAN_SCHEMA)
+    return _page_sink(with_host(pages.select("url", "html")),
+                      _CLEAN_SCHEMA, page, dialect=dialect, repartition=0,
+                      keys=("url", "host"))

@@ -529,25 +529,157 @@ def test_extract_element_text_matches_dom_path(spark):
     assert n_checked >= 50
 
 
-def test_page_sink_size_guard_and_statuses(spark):
-    """All page sinks share the per-row guards: empty -> 'empty',
-    oversized -> 'too_large', parse output otherwise."""
-    from pyspark.sql import functions as F
-    from packages_sgml_spark.spark.extract import (
-        MAX_HTML_BYTES, extract_element_text, serialize_pages)
+def _links_outlinks(pages):
+    from packages_sgml_spark.spark.links import outlinks
+    return outlinks(pages)
+
+
+def _templates_node_fingerprints(pages):
+    from packages_sgml_spark.spark.templates import (node_fingerprints,
+                                                     with_host)
+    return node_fingerprints(with_host(pages))
+
+
+def _templates_strip(pages):
+    from packages_sgml_spark.spark.templates import (
+        extract_text_without_templates)
+    return extract_text_without_templates(pages, set())
+
+
+# every public page sink, with its output shape: "status" (one row per
+# page), "drop" (bad pages yield no rows) or "fold" (per-task counts)
+PAGE_SINKS = [
+    ("extract", "status"), ("extract_text_only", "status"),
+    ("extract_markdown", "status"), ("extract_element_text", "status"),
+    ("serialize_pages", "status"), ("esis_pages", "status"),
+    ("c14n_pages", "status"), ("extract_main", "status"),
+    ("extract_nodes_rows", "drop"), ("extract_name_count", "drop"),
+    ("outlinks", "drop"), ("node_fingerprints", "drop"),
+    ("extract_text_without_templates", "drop"),
+    ("extract_tag_counts", "fold"),
+]
+
+
+def _page_sink_fn(name):
+    from packages_sgml_spark.spark import extract as ex
+    return {"outlinks": _links_outlinks,
+            "node_fingerprints": _templates_node_fingerprints,
+            "extract_text_without_templates": _templates_strip,
+            }.get(name) or getattr(ex, name)
+
+
+@pytest.fixture(scope="module")
+def guard_pages(spark):
+    from packages_sgml_spark.spark.extract import MAX_HTML_BYTES
     big = b"<p>" + b"x" * (MAX_HTML_BYTES + 1)
-    rows = [("u1", b"<html><head><title>T</title></head></html>"),
-            ("u2", b""), ("u3", None), ("u4", big),
+    good = [("u1", b"<html><head><title>T</title></head><body><p>one "
+                   b"two three four <a href='http://x.org/a'>link</a>"
+                   b"</p></body></html>"),
             ("u5", b"<p>no title</p>")]
-    pages = spark.createDataFrame(rows, "url string, html binary")
-    got = {r.url: (r.element_text, r.status)
-           for r in extract_element_text(pages).collect()}
-    assert got["u1"] == ("T", "ok")
-    assert got["u2"][1] == "empty" and got["u3"][1] == "empty"
-    assert got["u4"][1] == "too_large"
-    assert got["u5"] == (None, "not_found")
-    ser = {r.url: r.status for r in serialize_pages(pages).collect()}
-    assert ser["u1"] == "ok" and ser["u4"] == "too_large"
+    schema = "url string, html binary"
+    return (spark.createDataFrame(
+        good + [("u2", b""), ("u3", None), ("u4", big)], schema),
+        spark.createDataFrame(good, schema))
+
+
+@pytest.mark.parametrize("name,shape", PAGE_SINKS,
+                         ids=[n for n, _ in PAGE_SINKS])
+def test_page_sink_size_guard_and_statuses(guard_pages, name, shape):
+    """All page sinks share the per-page guards.  Status-row sinks
+    give empty/NULL html 'empty' and html over MAX_HTML_BYTES
+    'too_large', with a NULL value and n_errors 1; drop-style and
+    fold sinks give those pages no rows."""
+    pages, good = guard_pages
+    sink = _page_sink_fn(name)
+    rows = sink(pages).collect()
+    if shape == "fold":
+        def totals(rs):
+            out = {}
+            for r in rs:
+                out[r.name] = out.get(r.name, 0) + r.n
+            return out
+        assert totals(rows) == totals(sink(good).collect()) != {}
+        return
+    if shape == "drop":
+        assert {"u1"} <= {r.url for r in rows} <= {"u1", "u5"}
+        return
+    got = {r.url: r for r in rows}
+    assert sorted(got) == ["u1", "u2", "u3", "u4", "u5"]
+    assert got["u1"].status == "ok"
+    assert got["u5"].status == ("not_found"
+                                if name == "extract_element_text"
+                                else "ok")
+    assert got["u2"].status == got["u3"].status == "empty"
+    assert got["u4"].status == "too_large"
+    value = rows[0].__fields__[1]
+    for u in ("u2", "u3", "u4"):
+        assert got[u][value] is None, u
+    if "n_errors" in rows[0].__fields__:
+        assert got["u2"].n_errors == 0 and got["u4"].n_errors == 1
+    if name == "extract_element_text":
+        assert got["u1"].element_text == "T"
+
+
+def test_page_sink_exception_status_driver_side():
+    """A per-page function that raises yields status 'exception' in
+    every status-row schema (the message stays in parse_errors where
+    the schema has it) and no rows in the drop shape — driven through
+    the sinks' batch generator on the driver, no Spark job."""
+    import pandas as pd
+    from packages_sgml_spark.spark.extract import (
+        EXTRACT_SCHEMA, MAIN_SCHEMA, MARKDOWN_SCHEMA, NODE_ROWS_SCHEMA,
+        _page_batches, _text_schema)
+
+    def boom(html, opts, key):
+        raise ValueError("boom")
+
+    def batch():
+        return iter([pd.DataFrame({"url": ["u1", "u2"],
+                                   "html": [b"<p>x", b""]})])
+
+    for schema in (EXTRACT_SCHEMA, MARKDOWN_SCHEMA, MAIN_SCHEMA,
+                   _text_schema("esis")):
+        out = pd.concat(list(_page_batches(batch(), schema, boom)))
+        assert out["status"].tolist() == ["exception", "empty"]
+        assert out["url"].tolist() == ["u1", "u2"]
+        assert out[schema.fieldNames()[1]].isna().all()
+        if "n_errors" in out:
+            assert out["n_errors"].tolist() == [1, 0]
+    out = next(_page_batches(batch(), EXTRACT_SCHEMA, boom))
+    assert out["parse_errors"].tolist() == [
+        [{"severity": "error", "line": 0,
+          "message": "parser exception: boom"}], []]
+    assert list(_page_batches(batch(), NODE_ROWS_SCHEMA, boom)) == []
+
+
+def test_shared_parser_options_unchanged_by_parsing():
+    """Page sinks build one ParserOptions per dialect per task and
+    share it across pages, so parsing must never write to it."""
+    from packages_sgml_spark.core.esis import ESISParser
+    from packages_sgml_spark.core.markdown import MarkdownParser
+    from packages_sgml_spark.core.parser import (
+        FirstElementTextParser, NodeTableParser, SGMLParser,
+        TagCountParser, TextOnlyParser)
+    from packages_sgml_spark.spark.extract import (
+        _extract_options, _options, _quiet_options)
+    corpus = [b"<!DOCTYPE html><html><head><title>T &amp; U</title>"
+              b"<script>if (a < b) x();</script></head><body>"
+              b"<p>one<p>two &nbsp; <a href=x rel=nofollow>l</a>"
+              b"<ul><li>a<li>b</ul><table><tr><td>c</table>",
+              b"<?xml version='1.0'?><r xmlns:a='u1'><a:x k='v'>t</a:x>"
+              b"<y/><![CDATA[<z>]]></r>",
+              b"<div><b>unclosed <i>soup</div></b> &bogus; \xff\xfe",
+              b"\x00\x01 not markup at all"]
+    for opts in (_extract_options("html5"), _extract_options("xml"),
+                 _options("html5"), _quiet_options("html5"),
+                 _quiet_options("xml", keep_prefix=True)):
+        before = dict(vars(opts))
+        for cls in (TextOnlyParser, MarkdownParser, NodeTableParser,
+                    SGMLParser, TagCountParser, FirstElementTextParser,
+                    ESISParser):
+            for html in corpus:
+                cls(opts).parse(html)
+        assert vars(opts) == before, opts.dialect
 
 
 def test_spread_semantics(spark):
@@ -972,11 +1104,17 @@ def test_synthetic_pages_unique_links_deterministic(spark):
         hrefs.extend(re.findall(rb'href="([^"]+)"', html))
     assert len(hrefs) == len(set(hrefs)) > 100   # all distinct
     # extract parity: Spark worker vs driver-local parse
-    from packages_sgml_spark.spark.extract import extract, _parse_one
+    import pandas as pd
+    from packages_sgml_spark.spark.extract import (extract,
+                                                   extract_batch_iter)
     from packages_sgml_spark.spark.queries import ensure_workers
     ensure_workers(spark)
     got = {r.url: r.text_extracted for r in
            extract(a, dialect="html5", nodes=False).collect()}
-    for u, html in ra[:10]:
-        want = _parse_one(html, "html5", False, False)[0]
-        assert got[u] == want, u
+    local = pd.DataFrame(ra[:10], columns=["url", "html"])
+    want = {}
+    for pdf in extract_batch_iter(iter([local]), "html5", False, False):
+        want.update(zip(pdf["url"], pdf["text_extracted"]))
+    assert len(want) == 10
+    for u, _html in ra[:10]:
+        assert got[u] == want[u], u

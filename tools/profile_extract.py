@@ -38,13 +38,15 @@ def main():
     total_mb = st.b / 1e6
 
     # -- 1. single-thread ceiling on this exact corpus ----------------
-    sample = [bytes(r.html) for r in pages.limit(300).collect()]
-    from packages_sgml_spark.spark.extract import _parse_one
+    import pandas as pd
+    from packages_sgml_spark.spark.extract import extract_batch_iter
+    sample = pd.DataFrame([(r.url, bytes(r.html))
+                           for r in pages.limit(300).collect()],
+                          columns=["url", "html"])
+    nb = int(sample["html"].str.len().sum())
     t0 = time.process_time()
-    nb = 0
-    for hb in sample:
-        _parse_one(hb, "html5", False, False)
-        nb += len(hb)
+    for _ in extract_batch_iter(iter([sample]), "html5", False, False):
+        pass
     st_cpu = time.process_time() - t0
     single_mb_s = nb / 1e6 / st_cpu
 
