@@ -89,12 +89,15 @@ def run(spark, args):
     if args.quality:
         # doc-level corpus filters over the fresh extractions:
         # Gopher quality rules + C4 line cleaning + stopword lang-id,
-        # one sidecar row per url — r8: quality_features computes all
-        # three rule families in ONE narrow projection over one scan
-        # (shared word/line splits, no joins), value-identical to the
-        # former gopher_quality ⋈ c4_clean ⋈ lang_id_stopwords
-        # composition (pinned by tests/test_quality_fused.py)
-        from packages_sgml_spark.spark.textops import quality_features
+        # one sidecar row per url.  The Python kernel form: this job
+        # already runs Python workers for the parse, so one
+        # mapInArrow pass costs less than the JVM projection's
+        # higher-order-function lambdas, which do not codegen and
+        # are JIT-compiled anew in every launch.  Values equal
+        # quality_features (tests/test_quality_fused.py,
+        # tests/test_jobs.py)
+        from packages_sgml_spark.spark.textops import \
+            quality_features_arrow
         # url-level resume for the sidecar itself: quality rows are
         # produced for text rows that don't have one yet, NOT for
         # this_run — a crash between the text and quality commits
@@ -105,7 +108,7 @@ def run(spark, args):
         if done_q is not None:
             todo_q = todo_q.join(done_q.select("url"), "url",
                                  "left_anti")
-        # repartition ONCE so the fused projection's internal spread
+        # repartition ONCE so the quality pass's internal spread
         # no-ops (r7 history: three separate spreads shuffled the
         # text column three times; r8's single projection would need
         # no shuffle at all, but the explicit url-hash repartition
@@ -115,7 +118,7 @@ def run(spark, args):
                               F.col("text_extracted").alias("text"))
                 .repartition(spark.sparkContext.defaultParallelism,
                              "doc_id"))
-        quality = (quality_features(docs)
+        quality = (quality_features_arrow(docs)
                    .withColumnRenamed("doc_id", "url")
                    .withColumn("run_id", F.lit(args.run_id)))
         quality.write.mode("append").parquet(out + "/quality")

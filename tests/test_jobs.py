@@ -203,6 +203,54 @@ def test_quality_sidecar_heals_and_never_duplicates(spark, tmp_path):
     assert q2.select("url").distinct().count() == 2
 
 
+_PROSE = (" ".join(["The quick brown fox jumps over the lazy dog, "
+                    "and that is the whole story of the morning."] * 8))
+QUALITY_DOCS = [
+    ("https://q.example/prose", "2026-01-02T00:00:01Z",
+     ("<html><body>" + "".join("<p>%s</p>" % _PROSE for _ in range(4))
+      + "</body></html>").encode()),
+    ("https://q.example/list", "2026-01-02T00:00:02Z",
+     "<html><body><ul><li>• first item</li><li>- second item</li>"
+     "<li>* third</li></ul><p>Wait for it...</p><p>And more…</p>"
+     "<pre>\tindented\x0bline { brace }</pre></body></html>"
+     .encode()),
+    ("https://q.example/intl", "2026-01-02T00:00:03Z",
+     "<html><body><p>İstanbul THE WITH ΣΟΣ the of der und la le "
+     "#tag lorem ipsum javascript.</p></body></html>".encode()),
+    ("https://q.example/empty", "2026-01-02T00:00:04Z", b""),
+]
+
+
+def test_crawl_quality_sidecar_matches_jvm_form(spark, tmp_path):
+    """The crawl job's quality sink (the Python kernel form) equals
+    the JVM quality_features over the job's own text sink: every url,
+    all 12 feature columns."""
+    import crawl_job
+    from pyspark.sql import functions as F
+    from packages_sgml_spark.core.quality import FIELDS
+    from packages_sgml_spark.spark.textops import quality_features
+    land = tmp_path / "warc"
+    land.mkdir()
+    out = str(tmp_path / "sink")
+    _write_archive(land / "c-00000.warc.gz",
+                   DOCS1 + DOCS2 + QUALITY_DOCS)
+    crawl_job.run(spark, _args(input=str(land), output=out,
+                               run_id="r1", quality=True))
+    names = [name for name, _ in FIELDS]
+    text = spark.read.parquet(out + "/text")
+    jvm = quality_features(text.select(
+        F.col("url").alias("doc_id"),
+        F.col("text_extracted").alias("text")))
+    want = {r.doc_id: tuple(r[n] for n in names) for r in jvm.collect()}
+    got = {r.url: tuple(r[n] for n in names) for r in
+           spark.read.parquet(out + "/quality").collect()}
+    assert len(want) == len(DOCS1 + DOCS2 + QUALITY_DOCS)
+    assert got == want
+    # the corpus exercises what the sidecar is for
+    assert want["https://q.example/prose"][names.index("gopher_pass")]
+    assert want["https://q.example/empty"][-2:] == (None, None)
+
+
 def test_crawl_job_markdown_text_format(spark, tmp_path):
     """--text-format markdown writes Markdown into text_extracted
     with the same schema/lineage/resume semantics — and the value

@@ -21,6 +21,31 @@ def _harness():
     return m
 
 
+def _kernel_quality_features(spark, sf_dir):
+    """The crawl job's Python-kernel quality form over the staged
+    quality_features input."""
+    from packages_sgml_spark.spark.queries import _t
+    from packages_sgml_spark.spark.queries_staged import _line_docs
+    from packages_sgml_spark.spark.textops import quality_features_arrow
+    return quality_features_arrow(_line_docs(_t(spark, sf_dir,
+                                                "documents")))
+
+
+# inputs gated against a staged key's oracle with no registry key of
+# their own (the registry stays frozen): name -> (oracle key, query)
+UNREGISTERED = {"quality_features_arrow": ("quality_features",
+                                           _kernel_quality_features)}
+
+
+def _query_and_oracle(name):
+    from packages_sgml_spark.spark.queries_staged_r9 import (
+        R9_ORACLES, R9_QUERIES)
+    if name in UNREGISTERED:
+        key, query = UNREGISTERED[name]
+        return query, R9_ORACLES[key]
+    return R9_QUERIES[name], R9_ORACLES[name]
+
+
 @pytest.fixture(scope="module")
 def duck():
     h = _harness()
@@ -57,16 +82,16 @@ def test_registry_still_frozen_at_70():
                                   "dedup_spans",
                                   "shard_assign",
                                   "semdedup_keep",
-                                  "classifier_score"])
+                                  "classifier_score",
+                                  "quality_features_arrow"])
 def test_staged_r9_query_matches_oracle(spark, duck, name):
     import decimal
-    from packages_sgml_spark.spark.queries_staged_r9 import (
-        R9_ORACLES, R9_QUERIES)
     h = _harness()
-    df = R9_QUERIES[name](spark, SF_DIR)
+    query, oracle = _query_and_oracle(name)
+    df = query(spark, SF_DIR)
     cols = df.columns
     rows = [tuple(r) for r in df.collect()]
-    cur = duck.execute(R9_ORACLES[name])
+    cur = duck.execute(oracle)
     ocols = [d[0] for d in cur.description]
     orows = cur.fetchall()
     assert len(rows) == len(orows), (name, len(rows), len(orows))
@@ -524,8 +549,7 @@ def test_randomized_cross_engine_differential(spark):
 
     import duckdb
 
-    from packages_sgml_spark.spark.queries_staged_r9 import (
-        R9_ORACLES, R9_QUERIES)
+    from packages_sgml_spark.spark.queries_staged_r9 import R9_QUERIES
     h = _harness()
     rng = random.Random(0xC0FFEE)
     vocab = (["the", "And", "data", "X9", "12.5", "web-scale",
@@ -584,13 +608,15 @@ def test_randomized_cross_engine_differential(spark):
         n_expect = {"dedup_spans": 40, "classifier_score": 40,
                     "dup_ngram_frac": 40, "dedup_keep": 40,
                     "corpus_keep": 40, "quality_features": 40,
+                    "quality_features_arrow": 40,
                     "shard_assign": 40, "unigram_logprob": 40,
                     "semdedup_keep": 30}
-        for name in sorted(R9_QUERIES):
-            df = R9_QUERIES[name](spark, td)
+        for name in sorted(R9_QUERIES) + sorted(UNREGISTERED):
+            query, oracle = _query_and_oracle(name)
+            df = query(spark, td)
             cols = df.columns
             srows = [tuple(x) for x in df.collect()]
-            cur = con.execute(R9_ORACLES[name])
+            cur = con.execute(oracle)
             ocols = [x[0] for x in cur.description]
             orows = cur.fetchall()
             assert len(srows) == len(orows), (
