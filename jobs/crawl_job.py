@@ -42,7 +42,7 @@ def run(spark, args):
                                                 write_wet_pages)
     from packages_sgml_spark.spark.extract import extract
     from packages_sgml_spark.spark.checkpoint import (
-        with_lineage, partition_metrics, resume_filter)
+        append_rows, with_lineage, partition_metrics, resume_filter)
 
     out = args.output.rstrip("/")
     archives_path = out + "/archives"
@@ -143,11 +143,13 @@ def run(spark, args):
 
     # commit the archive manifest LAST: a crash before this line
     # leaves these archives "todo" for the next run, and the
-    # url-level anti-join absorbs the partial text they wrote
-    spark.createDataFrame(
-        [(p, args.run_id) for p in todo],
-        "warc_file string, run_id string") \
-        .coalesce(1).write.mode("append").parquet(archives_path)
+    # url-level anti-join absorbs the partial text they wrote.  The
+    # driver writes the rows itself (one parquet part file, renamed
+    # into place): the file list is already on the driver, and a
+    # createDataFrame write would add a Spark job that re-serializes
+    # it through Python workers
+    append_rows(spark, archives_path, [(p, args.run_id) for p in todo],
+                "warc_file string, run_id string")
     return summary
 
 

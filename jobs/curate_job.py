@@ -32,9 +32,13 @@ where each document's extraction is independent — would silently
 compute decisions against a different corpus than the one it claims
 to describe.  Instead each stage commits its sink (overwrite mode;
 every stage is deterministic, so re-running converges to identical
-bytes) and THEN appends a manifest row; a killed run redoes at most
-the one stage whose manifest row never landed, and finished stages
-are re-read, never recomputed.
+bytes) and THEN appends a manifest row to <output>/stages; a killed
+run redoes at most the one stage whose manifest row never landed,
+and finished stages are re-read, never recomputed.  The driver writes
+each manifest row itself (checkpoint.append_rows: one parquet part
+file through the session's Hadoop FileSystem, renamed into place).
+A createDataFrame write would run a Spark job and start Python
+workers in this otherwise JVM-only job just to store one row.
 
 At 100 TB the stage sinks are exactly the checkpoints you want
 anyway (decisions and clean text are reusable corpus artifacts, not
@@ -59,6 +63,7 @@ def run(spark, args):
     returns the summary dict that main() prints."""
     from pyspark.sql import functions as F
 
+    from packages_sgml_spark.spark.checkpoint import append_rows
     from packages_sgml_spark.spark.datafilters import (
         corpus_keep, dedup_spans, shard_assign)
 
@@ -101,11 +106,10 @@ def run(spark, args):
         return 0 if df is None else df.count()
 
     def commit_stage(stage, rows):
-        spark.createDataFrame(
-            [(stage, args.run_id, rows, params)],
-            "stage string, run_id string, rows long, "
-            "params string") \
-            .coalesce(1).write.mode("append").parquet(stages_path)
+        append_rows(spark, stages_path,
+                    [(stage, args.run_id, rows, params)],
+                    "stage string, run_id string, rows long, "
+                    "params string")
 
     docs = (spark.read.parquet(args.input)
             .select(F.col(args.id_col).alias("doc_id"),

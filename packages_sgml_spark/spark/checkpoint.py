@@ -45,6 +45,51 @@ def read_parquet_or_none(spark, path):
         return None
 
 
+def append_rows(spark, path, rows, schema):
+    """Append `rows` (tuples in the order of the DDL string `schema`)
+    to the parquet table at `path` as one new part file written by
+    the driver: no Spark job, no Python worker (a
+    createDataFrame(list).write re-serializes the rows through a
+    PythonRDD).  pyarrow serializes the rows, the session's Hadoop
+    FileSystem stores them under a hidden `_tmp-` name, renames the
+    file into place and touches `_SUCCESS`.  The footer carries the
+    Spark row schema, so driver-written and Spark-written parts read
+    back as one table with the DDL's names, types and nullability."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema).with_metadata(
+        {"org.apache.spark.sql.parquet.row.metadata": schema.json()})
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], arrow_schema)
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf, compression="snappy")
+
+    sc = spark.sparkContext
+    Path = sc._jvm.org.apache.hadoop.fs.Path
+    root = Path(path)
+    fs = root.getFileSystem(sc._jsc.hadoopConfiguration())
+    name = "part-00000-%s-c000.snappy.parquet" % uuid.uuid4()
+    tmp = Path(root, "_tmp-" + name)
+    try:
+        out = fs.create(tmp, False)
+        try:
+            out.write(bytearray(buf.getvalue().to_pybytes()))
+        finally:
+            out.close()
+        if not fs.rename(tmp, Path(root, name)):
+            raise IOError("could not rename %s into %s" % (tmp, path))
+    except Exception:
+        fs.delete(tmp, False)
+        raise
+    fs.create(Path(root, "_SUCCESS"), True).close()
+
+
 def with_lineage(extracted: DataFrame, run_id: str) -> DataFrame:
     """Tag extraction output with run lineage + partition id."""
     return (extracted

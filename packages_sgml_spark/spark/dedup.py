@@ -177,7 +177,12 @@ def minhash_lsh_pairs(docs: DataFrame, k=N_HASHES, bands=N_BANDS,
     Single corpus scan end-to-end: signatures are a narrow per-row
     map, the windowed rep frame is checkpointed once, and pair
     emission groups the banded reps without any self-join of the
-    shingle subtree."""
+    shingle subtree.
+
+    Runs a Spark job while the DataFrame is being built: that
+    checkpoint is localCheckpoint(eager=True), so the scan, minhash
+    and rep window execute at call time, before any action on the
+    result."""
     with_rep, hcols = _sig_with_rep(docs, k)
     star = (with_rep.filter(F.col("doc_id") != F.col("rep"))
             .select(F.col("rep").alias("doc_a"),
@@ -433,16 +438,25 @@ def simhash_pairs(docs: DataFrame, bands=4, hd_max=3,
     return star.unionByName(rep_pairs).distinct()
 
 
-def dedup_components(pairs: DataFrame, max_iterations=12) -> DataFrame:
+def dedup_components(pairs: DataFrame) -> DataFrame:
     """Connected components over near-dup candidate pairs:
     (doc_id, component) where component = min doc_id reachable (the
     canonical representative to keep).
 
     Iterative min-label propagation: each round every node adopts the
-    min label among itself and its neighbours; converges in O(graph
-    diameter) rounds (near-dup clusters are tiny, so a fixed bound is
-    safe; at extreme scale swap in the alternating large-star/
-    small-star variant — same join shapes)."""
+    min label among itself and its neighbours, and the rounds run
+    until no label moves — O(graph diameter) rounds, so a long chain
+    of edited page versions still collapses to one component (at
+    extreme scale swap in the alternating large-star/small-star
+    variant — same join shapes).  Each round's projection also emits
+    `moved` (the neighbour label undercut the node's own), so the
+    convergence test is a filter over the frame just checkpointed,
+    not a join of new labels against old.
+
+    Runs Spark jobs while the DataFrame is being built: the edge
+    frame and every round's labels are localCheckpoint(eager=True)
+    materializations, and each round's convergence test is a take(1)
+    action."""
     fwd = pairs.select(F.col("doc_a").alias("src"),
                        F.col("doc_b").alias("dst"))
     edges = fwd.union(fwd.select(F.col("dst").alias("src"),
@@ -453,27 +467,23 @@ def dedup_components(pairs: DataFrame, max_iterations=12) -> DataFrame:
     labels = (edges.select("src").distinct()
               .select(F.col("src").alias("node"),
                       F.col("src").alias("label")))
-    for _ in range(max_iterations):
+    while True:
         neigh = (edges.join(labels,
                             edges.dst == labels.node)
                  .groupBy("src")
                  .agg(F.min("label").alias("nlabel")))
-        new_labels = (labels.join(neigh,
-                                  labels.node == neigh.src, "left")
-                      .select("node",
-                              F.least("label",
-                                      F.coalesce("nlabel", "label"))
-                              .alias("label")))
         # cut lineage each round: iterative algorithms otherwise
         # re-execute the whole chain on every action (checkpointing
         # is the standard CC-on-Spark pattern)
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "node")
-                   .filter(F.col("n.label") != F.col("o.label"))
-                   .take(1))
-        labels = new_labels
-        if not changed:
+        labels = (labels.join(neigh, labels.node == neigh.src, "left")
+                  .select("node",
+                          F.least("label",
+                                  F.coalesce("nlabel", "label"))
+                          .alias("label"),
+                          (F.col("nlabel") < F.col("label"))
+                          .alias("moved"))
+                  .localCheckpoint(eager=True))
+        if not labels.filter("moved").take(1):
             break
     return labels.select(F.col("node").alias("doc_id"),
                          F.col("label").alias("component"))
@@ -514,7 +524,13 @@ def dedup_keep(docs: DataFrame) -> DataFrame:
     They are filtered out of the minhash input and re-attached as
     explicit min-doc_id star edges — the same shape the oracle's
     identical-signature collapse produces, bounded at any NULL
-    count."""
+    count.
+
+    Runs Spark jobs while the DataFrame is being built:
+    minhash_lsh_pairs' signature checkpoint and dedup_components'
+    per-round checkpoints and take(1) convergence tests all execute
+    at call time (localCheckpoint(eager=True) and take are eager), so
+    most of the dedup work is done before any action on the result."""
     nonnull = docs.filter(F.col("text").isNotNull())
     nulls = docs.filter(F.col("text").isNull()).select("doc_id")
     null_star = (nulls.crossJoin(

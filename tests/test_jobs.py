@@ -301,6 +301,60 @@ def test_extract_text_format_matches_extract_markdown(spark):
         extract(pages, nodes=False, text_format="tokens")
 
 
+MANIFESTS = {
+    "stages": ("stage string, run_id string, rows long, params string",
+               [("decisions", "cur-1", 5, '{"n_shards": 4}'),
+                ("clean", None, None, "")]),
+    "archives": ("warc_file string, run_id string",
+                 [("file:/land/a-00000.warc.gz", "r1"),
+                  ("file:/land/a-00001.warc.gz", None)]),
+}
+
+
+@pytest.mark.parametrize("manifest", sorted(MANIFESTS))
+def test_append_rows_matches_spark_write(spark, tmp_path, manifest):
+    """The driver-written manifest part reads back with exactly the
+    schema (names, types, nullability) of the createDataFrame write it
+    replaces, shares a directory with Spark-written parts (outputs of
+    earlier runs still resume), leaves _SUCCESS and no temp file, and
+    launches no Spark job."""
+    from packages_sgml_spark.spark.checkpoint import append_rows
+    ddl, rows = MANIFESTS[manifest]
+    spark_dir = str(tmp_path / "spark")
+    spark.createDataFrame(rows[:1], ddl).coalesce(1) \
+        .write.mode("append").parquet(spark_dir)
+    want = spark.read.parquet(spark_dir).schema
+
+    sc = spark.sparkContext
+    group = "append-rows-" + manifest
+    sc.setJobGroup(group, "append_rows must not run a job")
+    try:
+        drv_dir = str(tmp_path / "driver")
+        append_rows(spark, drv_dir, rows, ddl)
+        append_rows(spark, spark_dir, rows[1:], ddl)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        # the tracker does see jobs of this group
+        spark.read.parquet(drv_dir).collect()
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    got = spark.read.parquet(drv_dir)
+    assert got.schema == want
+    assert sorted(got.collect(), key=str) == sorted(
+        spark.createDataFrame(rows, ddl).collect(), key=str)
+    mixed = spark.read.parquet(spark_dir)
+    assert mixed.schema == want
+    assert sorted(mixed.collect(), key=str) == sorted(
+        spark.createDataFrame(rows, ddl).collect(), key=str)
+    for d in (drv_dir, spark_dir):
+        names = os.listdir(d)
+        assert "_SUCCESS" in names
+        assert not [n for n in names if "_tmp" in n], names
+    assert len([n for n in os.listdir(spark_dir)
+                if n.endswith(".parquet")]) == 2
+
+
 def _curate_args(**kw):
     import argparse
     base = dict(run_id="cur-test", id_col="doc_id", text_col="text",

@@ -332,6 +332,17 @@ def test_dedup_components_planted(spark):
     comp = {r.doc_id: r.component
             for r in dedup_components(pairs).collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7, 4: 4, 8: 4, 6: 4}
+    # a near-dup chain of n edited page versions (v0-v1, v1-v2, ...)
+    # is ONE component however long it is: propagation runs until no
+    # label moves (a 12-round cap split a 14-chain in two and a
+    # 20-chain into 8)
+    for n in (14, 20):
+        pairs = spark.createDataFrame(
+            [(100 + i, 101 + i) for i in range(n - 1)],
+            "doc_a long, doc_b long")
+        comp = {r.doc_id: r.component
+                for r in dedup_components(pairs).collect()}
+        assert comp == {100 + i: 100 for i in range(n)}, n
 
 
 def test_compression_ratio_planted(spark):

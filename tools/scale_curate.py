@@ -21,6 +21,11 @@ once with contiguous ranks, the shared footer is cut from EVERY
 surviving doc (tokens_after < tokens_before by at least
 footer_len * docs_out), and a rerun resumes all four stages.
 
+`stage_s` splits the first run's wall time per stage: a stage ends
+when its sink's `_SUCCESS` marker is written and starts when the
+previous one ended (perfbench's stage_times rule), so each stage
+also carries the previous stage's manifest commit.
+
 Usage: python tools/scale_curate.py [n_docs] [cpus]
 """
 
@@ -72,6 +77,19 @@ def _mk_docs(spark, n_docs):
                        text.alias("text"))
 
 
+STAGES = ("decisions", "clean", "shards", "metrics")
+
+
+def stage_times(out, start):
+    """Seconds per curate stage, from each sink's _SUCCESS mtime."""
+    times, prev = {}, start
+    for stage in STAGES:
+        t = os.stat(os.path.join(out, stage, "_SUCCESS")).st_mtime
+        times[stage] = round(t - prev, 2)
+        prev = t
+    return times
+
+
 def main():
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     n_docs = int(args[0]) if args else 200_000
@@ -97,6 +115,7 @@ def main():
     t0 = time.time()
     s = run(spark, ja)
     wall = time.time() - t0
+    stage_s = stage_times(ja.output, t0)
     n_bp = sum(1 for i in range(n_docs) if i % 10 < 3)
 
     assert s["docs_in"] == n_docs
@@ -124,7 +143,7 @@ def main():
 
     print(json.dumps({
         "n_docs": n_docs, "cpus": cpus, "mb": round(mb, 1),
-        "wall_sec": round(wall, 1),
+        "wall_sec": round(wall, 1), "stage_s": stage_s,
         "mb_per_sec": round(mb / wall, 1),
         "resume_noop_sec": round(resume_wall, 1),
         "docs_kept": s["docs_kept"], "docs_out": s["docs_out"],
