@@ -21,14 +21,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "extract_text", "extract_title", "element_histogram",
-    "pricing_summary", "top_customers", "events_hourly",
-    "top_event_per_user", "lang_id", "quality", "token_count",
-    "fingerprint", "dedup_exact", "minhash_lsh_pairs", "simhash",
-    "knn_cosine", "knn_lsh",
-]
-
 
 def _force(df):
     df.write.format("noop").mode("overwrite").save()
@@ -49,7 +41,7 @@ def main():
     args = ap.parse_args()
 
     from packages_sgml_spark.spark.session import get_spark
-    from packages_sgml_spark.spark.queries import QUERIES
+    from packages_sgml_spark.spark.queries import HEADLINE, QUERIES
 
     names = (HEADLINE if args.all
              else [q.strip() for q in (args.queries or "").split(",")

@@ -37,7 +37,10 @@ def contamination(docs: DataFrame, n=CONTAM_N,
     non-benchmark doc — docs too short to form a single n-gram are
     reported with n_contaminated=0 (clean), not silently omitted, so
     consumers can join the result back onto the corpus without an
-    absent-means-clean convention."""
+    absent-means-clean convention.
+
+    Building the frame runs a Spark job: the benchmark n-gram set is
+    a localCheckpoint(eager=True) snapshot of `docs` at call time."""
     from .util import spread
     docs = spread(docs, "doc_id")
 

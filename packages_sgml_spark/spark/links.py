@@ -229,7 +229,11 @@ def pagerank(edges: DataFrame, n_iter=10, damping=0.85,
     localCheckpoint every ``checkpoint_every`` iterations exactly as
     dedup_components does.  Iteration count is fixed (crawl practice:
     ~10 suffices for host graphs); convergence testing would add a
-    driver action per round for no ranking benefit."""
+    driver action per round for no ranking benefit.
+
+    Building the frame runs Spark jobs: the node count and the
+    localCheckpoint() cuts (eager by default) snapshot `edges` at
+    call time."""
     e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"),
                       F.col(weight).cast("double").alias("w"))
          .groupBy("src", "dst").agg(F.sum("w").alias("w")))

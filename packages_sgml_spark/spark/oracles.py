@@ -5,7 +5,12 @@ supplier part orders lineitem events documents embeddings.
 Column names/aliases match queries.py exactly; aggregate arithmetic
 uses the same DECIMAL casts so value-hashes agree bit-for-bit.
 Queries with engine-specific hashing (xxhash64) or join-order-free
-candidate sets have no oracle (driver records rows-only)."""
+candidate sets have no oracle (driver records rows-only).
+
+Only this module writes ORACLES, and it imports no query module:
+the parameters a query shares with its oracle live in pages.py."""
+
+from .pages import ANCHOR_CAP, BL_MIN_DOCS, N_ROBOT_HOSTS, PR_DAMP, PR_ITER
 
 _LANGS = ["de", "en", "es", "fr", "nl", "pt"]
 _MARKERS = {
@@ -27,7 +32,7 @@ def _occ(pat):
 def _lang_pieces():
     """The four SQL fragments of the lang-id formula over a `padded`
     source column — the ONE definition both the registered lang_id
-    oracle and the staged quality_features oracle build from (r8
+    oracle and the quality_features oracle build from (r8
     review: two hand-maintained copies could silently drift)."""
     score_cols = []
     for lang in _LANGS:
@@ -99,6 +104,12 @@ sh AS (
   FROM words),
 u AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh)
 """
+
+def _lang_name_values():
+    from ..core.iso639 import ISO_639_1
+    return ", ".join("('%s', '%s')" % (k, v)
+                     for k, v in sorted(ISO_639_1.items()))
+
 
 ORACLES = {
     "extract_text": """
@@ -242,16 +253,7 @@ r AS (SELECT q_id, n_id, cos,
       FROM scored)
 SELECT q_id, CAST(rank AS INT) AS rank, n_id, cos
 FROM r WHERE rank <= 5""",
-}
 
-
-def _lang_name_values():
-    from ..core.iso639 import ISO_639_1
-    return ", ".join("('%s', '%s')" % (k, v)
-                     for k, v in sorted(ISO_639_1.items()))
-
-
-ORACLES.update({
     "local_supplier_volume": """
 SELECT r_name, n_name,
        round(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
@@ -307,7 +309,7 @@ WITH l AS (SELECT doc_id,
   FROM documents)
 SELECT doc_id, lex, round(CAST(lex AS DOUBLE), 6) AS value
 FROM l WHERE lex <> 'NaN'""",
-})
+}
 
 ORACLES["salted_source_stats"] = """
 SELECT source, COUNT(doc_id) AS n_docs,
@@ -900,8 +902,835 @@ SELECT url_canon,
 FROM c GROUP BY url_canon"""
 
 
-# Round-8 registration: oracles for the staged crawl-surface queries
-# (fix_text is rows-only — no entry here, like compression_ratio).
-from .queries_staged import R8_ORACLES  # noqa: E402
+# ---------------------------------------------------------------------
+# crawl-pipeline surface (r8); fix_text is rows-only (no entry here,
+# like compression_ratio)
+# ---------------------------------------------------------------------
 
-ORACLES.update(R8_ORACLES)
+ORACLES["outlinks"] = """
+SELECT doc_id, CAST(i AS INT) AS link_ord,
+       '/r/' || i || '?x=' || doc_id || '#f' AS href,
+       'https://d' || (doc_id % 13) || '.example/r/' || i ||
+         '?x=' || doc_id AS target,
+       'ref ' || i AS anchor, FALSE AS nofollow
+FROM documents, unnest(range(0, doc_id % 5 + 1)) AS t(i)
+UNION ALL
+SELECT doc_id, CAST(doc_id % 5 + 1 AS INT),
+       'https://h' || (doc_id % 7) || '.example/z',
+       'https://h' || (doc_id % 7) || '.example/z', 'x', FALSE
+FROM documents
+UNION ALL
+SELECT doc_id, CAST(doc_id % 5 + 2 AS INT), '/nf',
+       'https://d' || (doc_id % 13) || '.example/nf', 'nf', TRUE
+FROM documents
+UNION ALL
+SELECT doc_id, CAST(doc_id % 5 + 3 AS INT), 'javascript:void(0)',
+       NULL, 'js', FALSE
+FROM documents
+"""
+
+
+ORACLES["host_graph"] = """
+SELECT 'd' || (doc_id % 13) || '.example' AS src_host,
+       'h' || (doc_id % 7) || '.example' AS dst_host,
+       COUNT(*) AS n
+FROM documents GROUP BY 1, 2
+"""
+
+
+def _pagerank_oracle_sql(n_iter=PR_ITER, d=PR_DAMP):
+    """Unrolled power iteration (DuckDB recursive CTEs cannot carry
+    the per-step aggregate, so each iteration is its own CTE — the
+    SQL is generated, semantics identical to links.pagerank)."""
+    parts = ["""
+WITH e AS (
+  SELECT 'h' || (doc_id % 7) AS src, 'h' || ((doc_id * 3 + 1) % 7)
+           AS dst, CAST(COUNT(*) AS DOUBLE) AS w
+  FROM documents GROUP BY 1, 2),
+outw AS (SELECT src, SUM(w) AS w_out FROM e GROUP BY src),
+frac AS (SELECT e.src, e.dst, e.w / outw.w_out AS frac
+         FROM e JOIN outw ON e.src = outw.src),
+nodes AS (SELECT src AS host FROM e UNION SELECT dst FROM e),
+nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS c FROM nodes),
+r0 AS (SELECT host, 1.0 / nn.c AS rank FROM nodes, nn)"""]
+    for i in range(1, n_iter + 1):
+        p, r = i - 1, i
+        parts.append("""
+c%d AS (SELECT frac.dst, SUM(frac.frac * r%d.rank) AS contrib
+        FROM frac JOIN r%d ON frac.src = r%d.host GROUP BY frac.dst),
+d%d AS (SELECT COALESCE(SUM(r%d.rank), 0.0) AS dang
+        FROM r%d LEFT JOIN outw ON r%d.host = outw.src
+        WHERE outw.src IS NULL),
+r%d AS (SELECT nodes.host,
+               (1.0 - %r) / nn.c + %r *
+                 (COALESCE(c%d.contrib, 0.0) + d%d.dang / nn.c) AS rank
+        FROM nodes LEFT JOIN c%d ON nodes.host = c%d.dst,
+             nn, d%d)""" % (r, p, p, p, r, p, p, p, r, d, d,
+                            r, r, r, r, r))
+    return (",".join(parts) +
+            "\nSELECT host, round(rank, 9) AS rank FROM r%d" % n_iter)
+
+
+ORACLES["pagerank_hosts"] = _pagerank_oracle_sql()
+
+
+# SQL twin of pages.line_docs (text + shared footer + lang line).
+_LINEDOC_SQL_T = ("text || chr(10) || 'Shared footer.' || chr(10) "
+                  "|| lang")
+
+
+ORACLES["boilerplate_lines"] = """
+WITH src AS (SELECT doc_id, %s AS t FROM documents),
+ln AS (
+  SELECT doc_id, trim(parts[i]) AS line
+  FROM (SELECT doc_id, string_split(t, chr(10)) AS parts FROM src),
+       unnest(range(1, len(parts) + 1)) AS u(i)
+  WHERE trim(parts[i]) <> '')
+SELECT line, COUNT(DISTINCT doc_id) AS n_docs, COUNT(*) AS n_total
+FROM ln GROUP BY line HAVING COUNT(DISTINCT doc_id) >= %d
+""" % (_LINEDOC_SQL_T, BL_MIN_DOCS)
+
+
+ORACLES["strip_boilerplate"] = """
+WITH src AS (SELECT doc_id, %s AS t FROM documents),
+ln AS (
+  SELECT doc_id, i, parts[i] AS line, trim(parts[i]) AS key
+  FROM (SELECT doc_id, string_split(t, chr(10)) AS parts FROM src),
+       unnest(range(1, len(parts) + 1)) AS u(i)),
+bl AS (
+  SELECT key FROM ln WHERE key <> ''
+  GROUP BY key HAVING COUNT(DISTINCT doc_id) >= %d),
+kept AS (
+  SELECT ln.* FROM ln LEFT JOIN bl ON ln.key = bl.key
+  WHERE bl.key IS NULL),
+rebuilt AS (
+  SELECT doc_id, string_agg(line, chr(10) ORDER BY i) AS text_clean,
+         COUNT(*) AS n_kept
+  FROM kept GROUP BY doc_id),
+tot AS (SELECT doc_id, COUNT(*) AS n_lines FROM ln GROUP BY doc_id)
+SELECT src.doc_id,
+       COALESCE(rebuilt.text_clean, '') AS text_clean,
+       CAST(COALESCE(tot.n_lines, 0) - COALESCE(rebuilt.n_kept, 0)
+            AS INT) AS n_lines_removed
+FROM src
+LEFT JOIN rebuilt ON src.doc_id = rebuilt.doc_id
+LEFT JOIN tot ON src.doc_id = tot.doc_id
+""" % (_LINEDOC_SQL_T, BL_MIN_DOCS)
+
+
+ORACLES["robots_allowed"] = """
+SELECT 'https://r' || (doc_id %% 5) || '.example/' ||
+         CASE WHEN doc_id %% 3 = 0 THEN 'private/x' ELSE 'pub/x' END ||
+         '?id=' || doc_id AS url,
+       CASE WHEN doc_id %% 5 >= %d THEN TRUE
+            WHEN doc_id %% 3 = 0 THEN FALSE ELSE TRUE END AS allowed,
+       CASE WHEN doc_id %% 5 >= %d THEN NULL
+            ELSE CAST((doc_id %% 5) + 0.5 AS DOUBLE) END AS crawl_delay
+FROM documents
+""" % (N_ROBOT_HOSTS, N_ROBOT_HOSTS)
+
+
+_GOPHER_STOP_SQL = " + ".join(
+    "CASE WHEN padded LIKE '%% %s %%' THEN 1 ELSE 0 END" % w
+    for w in ("the", "be", "to", "of", "and", "that", "have", "with"))
+
+
+ORACLES["gopher_quality"] = """
+WITH b AS (SELECT doc_id, coalesce(text, '') AS text FROM documents),
+s AS (
+  SELECT doc_id,
+    list_filter(regexp_split_to_array(trim(text), '\\s+'),
+                x -> x <> '') AS words,
+    regexp_split_to_array(text, '\\r?\\n') AS lines,
+    CAST((length(text) - length(replace(text, '#', ''))) +
+         (length(text) - length(replace(text, '...', ''))) / 3 +
+         (length(text) - length(replace(text, '…', ''))) AS INT)
+      AS n_symbols,
+    ' ' || regexp_replace(lower(text), '\\s+', ' ', 'g') || ' '
+      AS padded
+  FROM b),
+g AS (
+  SELECT doc_id,
+    CAST(len(words) AS BIGINT) AS n_words,
+    CAST(greatest(len(words), 1) AS DOUBLE) AS wden,
+    CAST(greatest(len(lines), 1) AS DOUBLE) AS lden,
+    CAST(COALESCE(list_sum(list_transform(words, x -> length(x))), 0)
+         AS DOUBLE) AS wchars,
+    CAST(len(list_filter(words, x -> regexp_matches(x, '[A-Za-z]')))
+         AS DOUBLE) AS n_alpha,
+    CAST(len(list_filter(lines, x -> list_contains(
+      ['•','‣','▪','●','◦','⁃','*','-'],
+      substr(ltrim(x), 1, 1)))) AS DOUBLE) AS n_bullet,
+    CAST(len(list_filter(lines, x -> rtrim(x) LIKE '%...'
+         OR rtrim(x) LIKE '%…')) AS DOUBLE) AS n_ellipsis,
+    n_symbols,
+    CAST({stop} AS INT) AS n_stop_hits
+  FROM s),
+r AS (
+  SELECT doc_id, n_words,
+    round(wchars / wden, 6) AS mean_word_len,
+    round(n_symbols / wden, 6) AS symbol_ratio,
+    round(n_bullet / lden, 6) AS bullet_frac,
+    round(n_ellipsis / lden, 6) AS ellipsis_frac,
+    round(n_alpha / wden, 6) AS alpha_word_frac,
+    n_stop_hits
+  FROM g)
+SELECT *,
+  CAST(CASE WHEN n_words BETWEEN 50 AND 100000
+             AND mean_word_len BETWEEN 3.0 AND 10.0
+             AND symbol_ratio <= 0.1
+             AND bullet_frac <= 0.9
+             AND ellipsis_frac <= 0.3
+             AND alpha_word_frac >= 0.8
+             AND n_stop_hits >= 2
+       THEN 1 ELSE 0 END AS INT) AS gopher_pass
+FROM r
+""".format(stop=_GOPHER_STOP_SQL)
+
+
+ORACLES["c4_clean"] = """
+WITH b AS (SELECT doc_id, coalesce(%s, '') AS text FROM documents),
+s AS (SELECT doc_id, text, regexp_split_to_array(text, '\\r?\\n') AS lines
+      FROM b),
+k AS (SELECT doc_id, text, len(lines) AS n_lines,
+  list_filter(lines, l ->
+    (rtrim(l) LIKE '%%.' OR rtrim(l) LIKE '%%!' OR
+     rtrim(l) LIKE '%%?' OR rtrim(l) LIKE '%%"')
+    AND len(list_filter(regexp_split_to_array(trim(l), '\\s+'),
+                        x -> x <> '')) >= 5
+    AND NOT contains(lower(l), 'javascript')) AS kept
+  FROM s)
+SELECT doc_id, CAST(n_lines AS INT) AS n_lines,
+  CAST(len(kept) AS INT) AS n_kept,
+  array_to_string(kept, chr(10)) AS text_clean,
+  CAST(CASE WHEN len(kept) >= 3
+             AND NOT contains(lower(text), 'lorem ipsum')
+             AND NOT contains(text, '{') THEN 1 ELSE 0 END AS INT)
+    AS c4_keep
+FROM k
+""" % _LINEDOC_SQL_T
+
+
+ORACLES["page_meta"] = """
+SELECT 'https://m' || (doc_id % 13) || '.example/p/' || doc_id AS url,
+       'T ' || doc_id AS title,
+       'D ' || doc_id AS meta_description,
+       CASE WHEN doc_id % 3 = 0 THEN 'OG ' || doc_id END AS og_title,
+       CASE WHEN doc_id % 2 = 0
+            THEN 'https://c.example/' || doc_id END AS canonical,
+       'en-US' AS html_lang
+FROM documents
+"""
+
+
+ORACLES["feed_entries"] = """
+SELECT 'feed://' || doc_id AS url, CAST(j AS INT) AS entry_ord,
+       'E ' || doc_id || '-' || j AS title,
+       'https://b' || (doc_id % 7) || '.example/p/' || j AS link,
+       'urn:' || doc_id || ':' || j AS guid,
+       '2026-01-0' || ((j % 9) + 1) AS published
+FROM documents, unnest(range(1, doc_id % 4 + 2)) AS t(j)
+"""
+
+
+ORACLES["markdown"] = """
+SELECT 'md://' || doc_id AS url,
+       '# H ' || doc_id || chr(10) || chr(10) ||
+       'P ' || doc_id || ' with **bold** and [L](https://x/' ||
+         doc_id || ').' || chr(10) || chr(10) ||
+       '- i1' || chr(10) || '- i2 ' || doc_id AS markdown,
+       CAST(0 AS INT) AS n_errors,
+       'ok' AS status
+FROM documents
+"""
+
+
+ORACLES["url_filter"] = """
+WITH u AS (
+  SELECT doc_id,
+         'https://h' || (doc_id % 11) || '.site' || (doc_id % 3) ||
+           '.example' ||
+           CASE WHEN doc_id % 7 = 0 THEN '/login/' ELSE '/p/' END ||
+           doc_id AS url,
+         CASE WHEN doc_id % 11 = 0 AND doc_id % 3 = 0 THEN 'host'
+              WHEN doc_id % 3 = 1 THEN 'suffix'
+              WHEN doc_id % 7 = 0 THEN 'path' END AS reason
+  FROM documents)
+SELECT url, reason AS url_block_reason,
+       CAST(CASE WHEN reason IS NULL THEN 1 ELSE 0 END AS INT)
+         AS url_keep
+FROM u
+"""
+
+
+ORACLES["jsonld"] = """
+SELECT 'ld://' || doc_id AS url, CAST(1 AS INT) AS block_ord,
+       '{"@type": "Article", "headline": "H ' || doc_id || '"}'
+         AS jsonld,
+       CAST(1 AS INT) AS is_valid,
+       'Article' AS schema_type
+FROM documents
+UNION ALL
+SELECT 'ld://' || doc_id, CAST(2 AS INT), '{broken',
+       CAST(0 AS INT), NULL
+FROM documents WHERE doc_id % 5 = 0
+"""
+
+
+ORACLES["anchor_texts"] = """
+WITH links AS (%s),
+l AS (SELECT target, trim(anchor) AS anchor FROM links
+      WHERE target IS NOT NULL AND length(trim(anchor)) > 0),
+pairs AS (SELECT target, anchor, COUNT(*) AS n FROM l GROUP BY 1, 2),
+ranked AS (
+  SELECT *, row_number() OVER (PARTITION BY target
+                               ORDER BY n DESC, anchor) AS rn
+  FROM pairs)
+SELECT target AS url, CAST(SUM(n) AS BIGINT) AS n_anchors,
+       COUNT(*) AS n_distinct_anchors,
+       array_to_string(
+         list_sort(array_agg(anchor) FILTER (WHERE rn <= %d)), '||')
+         AS anchors_joined
+FROM ranked GROUP BY target
+""" % (ORACLES["outlinks"], ANCHOR_CAP)
+
+
+# ---------------------------------------------------------------------
+# training-data pipeline (r9)
+# ---------------------------------------------------------------------
+
+def _quality_features_oracle(src=_LINEDOC_SQL_T):
+    # src: SQL expression for the text column (default: the
+    # line-ified shape; corpus_keep reuses this oracle over plain
+    # `text`).
+    # COLUMN-NAME TRAP: both borrowed fragments hardcode a source
+    # column named `padded`, but they mean DIFFERENT strings — the
+    # gopher stop-hits read the \s+-normalized text, the lang marker
+    # counts the raw ' '||lower(text)||' '.  Here `padded` is the
+    # lang string and the gopher fragment is rewritten to `gpadded`
+    # (caught by the oracle gate: nl-vs-de flips on docs whose text
+    # ends '\nde').
+    scores, ranks, case, greatest = _lang_pieces()
+    return """
+WITH b AS (SELECT doc_id, coalesce({src}, '') AS text,
+                  {src} AS rawtext FROM documents),
+s AS (
+  SELECT doc_id,
+    list_filter(regexp_split_to_array(trim(text), '\\s+'),
+                x -> x <> '') AS words,
+    regexp_split_to_array(text, '\\r?\\n') AS lines,
+    CAST((length(text) - length(replace(text, '#', ''))) +
+         (length(text) - length(replace(text, '...', ''))) / 3 +
+         (length(text) - length(replace(text, '…', ''))) AS INT)
+      AS n_symbols,
+    ' ' || regexp_replace(lower(text), '\\s+', ' ', 'g') || ' '
+      AS gpadded,
+    ' ' || lower(rawtext) || ' ' AS padded,
+    (NOT contains(lower(text), 'lorem ipsum')
+     AND NOT contains(text, '{{')) AS c4_page_ok
+  FROM b),
+g AS (
+  SELECT doc_id,
+    CAST(len(words) AS BIGINT) AS n_words,
+    CAST(greatest(len(words), 1) AS DOUBLE) AS wden,
+    CAST(greatest(len(lines), 1) AS DOUBLE) AS lden,
+    CAST(COALESCE(list_sum(list_transform(words, x -> length(x))), 0)
+         AS DOUBLE) AS wchars,
+    CAST(len(list_filter(words, x -> regexp_matches(x, '[A-Za-z]')))
+         AS DOUBLE) AS n_alpha,
+    CAST(len(list_filter(lines, x -> list_contains(
+      ['•','‣','▪','●','◦','⁃','*','-'],
+      substr(ltrim(x), 1, 1)))) AS DOUBLE) AS n_bullet,
+    CAST(len(list_filter(lines, x -> rtrim(x) LIKE '%...'
+         OR rtrim(x) LIKE '%…')) AS DOUBLE) AS n_ellipsis,
+    n_symbols,
+    CAST({stop} AS INT) AS n_stop_hits,
+    CAST(len(list_filter(lines, l ->
+      (rtrim(l) LIKE '%.' OR rtrim(l) LIKE '%!' OR
+       rtrim(l) LIKE '%?' OR rtrim(l) LIKE '%"')
+      AND len(list_filter(regexp_split_to_array(trim(l), '\\s+'),
+                          x -> x <> '')) >= 5
+      AND NOT contains(lower(l), 'javascript'))) AS INT) AS n_kept,
+    c4_page_ok,
+    {scores}
+  FROM s),
+r AS (
+  SELECT doc_id, n_words,
+    round(wchars / wden, 6) AS mean_word_len,
+    round(n_symbols / wden, 6) AS symbol_ratio,
+    round(n_bullet / lden, 6) AS bullet_frac,
+    round(n_ellipsis / lden, 6) AS ellipsis_frac,
+    round(n_alpha / wden, 6) AS alpha_word_frac,
+    n_stop_hits, n_kept, c4_page_ok,
+    {ranks}, {greatest} AS lang_score
+  FROM g)
+SELECT doc_id, n_words, mean_word_len, symbol_ratio, bullet_frac,
+  ellipsis_frac, alpha_word_frac, n_stop_hits,
+  CAST(CASE WHEN n_words BETWEEN 50 AND 100000
+             AND mean_word_len BETWEEN 3.0 AND 10.0
+             AND symbol_ratio <= 0.1
+             AND bullet_frac <= 0.9
+             AND ellipsis_frac <= 0.3
+             AND alpha_word_frac >= 0.8
+             AND n_stop_hits >= 2
+       THEN 1 ELSE 0 END AS INT) AS gopher_pass,
+  n_kept,
+  CAST(CASE WHEN n_kept >= 3 AND c4_page_ok THEN 1 ELSE 0 END AS INT)
+    AS c4_keep,
+  {case} AS lang_pred, lang_score
+FROM r
+""".format(src=src,
+           stop=_GOPHER_STOP_SQL.replace('padded', 'gpadded'), scores=scores,
+           ranks=ranks, case=case, greatest=greatest)
+
+
+ORACLES["quality_features"] = _quality_features_oracle()
+
+
+# Spark keys grams by xxhash64 (8-byte shuffle rows — the scale
+# path); the oracle groups by the gram STRING.  Value-identical
+# unless a 64-bit collision mis-tags a position (~#grams/2^64).
+ORACLES["dup_ngram_frac"] = """
+WITH w AS (
+  SELECT doc_id,
+    regexp_split_to_array(
+      regexp_replace(lower(trim(coalesce(text, ''))), '\\s+', ' ',
+                     'g'), ' ') AS words
+  FROM documents),
+g AS (
+  SELECT doc_id,
+    CASE WHEN len(words) >= 8
+      THEN list_transform(range(1, len(words) - 6),
+                          i -> array_to_string(words[i:i+7], ' '))
+      ELSE CAST([] AS VARCHAR[]) END AS grams
+  FROM w),
+cnts AS (
+  SELECT doc_id, gram, count(*) AS c
+  FROM (SELECT doc_id, unnest(grams) AS gram FROM g)
+  GROUP BY doc_id, gram),
+dup AS (SELECT gram FROM cnts GROUP BY gram HAVING count(*) > 1),
+nd AS (SELECT doc_id, sum(c) AS n_dup FROM cnts
+       WHERE gram IN (SELECT gram FROM dup) GROUP BY doc_id),
+nt AS (SELECT doc_id, sum(c) AS n_grams FROM cnts GROUP BY doc_id)
+SELECT d.doc_id,
+  CAST(coalesce(nt.n_grams, 0) AS BIGINT) AS n_grams,
+  round(coalesce(nd.n_dup, 0) /
+        greatest(coalesce(nt.n_grams, 0), 1), 6) AS dup_ngram_frac
+FROM documents d
+LEFT JOIN nt USING (doc_id)
+LEFT JOIN nd USING (doc_id)
+"""
+
+
+# Wraps the registered simhash oracle as a CTE, then replicates
+# the star / band / cap / verify semantics of dedup.simhash_pairs
+# (row_number cap = the list_sort slice; bit_count(xor) = the
+# banded Hamming verify; both engines' bit_count cast to INT —
+# DuckDB's returns TINYINT).
+ORACLES["simhash_pairs"] = """
+WITH sim AS ({simhash}),
+wr AS (SELECT doc_id, simhash,
+              min(doc_id) OVER (PARTITION BY simhash) AS rep
+       FROM sim),
+star AS (SELECT rep AS doc_a, doc_id AS doc_b, CAST(0 AS INT) AS hamming
+         FROM wr WHERE doc_id <> rep),
+reps AS (SELECT doc_id, simhash FROM wr WHERE doc_id = rep),
+banded AS (
+  SELECT doc_id, simhash, (simhash >> (8 * t.i)) & 255 AS key, t.i AS band
+  FROM reps, range(4) t(i)),
+ranked AS (
+  SELECT band, key, doc_id, simhash,
+         row_number() OVER (PARTITION BY band, key
+                            ORDER BY doc_id) AS rn,
+         count(*) OVER (PARTITION BY band, key) AS sz
+  FROM banded),
+capped AS (SELECT band, key, doc_id, simhash FROM ranked
+           WHERE rn <= {cap} AND sz >= 2),
+rpairs AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
+  FROM capped a JOIN capped b
+    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
+  WHERE bit_count(xor(a.simhash, b.simhash)) <= 3)
+SELECT DISTINCT doc_a, doc_b, hamming FROM (
+  SELECT * FROM star UNION ALL SELECT * FROM rpairs)
+""".format(simhash=ORACLES["simhash"], cap=_lsh_cap())
+
+
+# DuckDB list slices are 1-based inclusive and clamp at the array
+# end, mirroring Spark's F.slice(w, start, length) exactly; empty /
+# whitespace-only docs produce zero chunk rows on both engines
+# (range(0,0) unnests to nothing; Spark guards the descending
+# sequence(0,-1) trap).
+ORACLES["doc_chunks"] = """
+WITH t AS (
+  SELECT doc_id,
+    regexp_replace(coalesce(text, ''), '^\\s+|\\s+$', '', 'g')
+      AS stripped
+  FROM documents),
+w AS (
+  SELECT doc_id,
+    CASE WHEN length(stripped) = 0
+         THEN CAST([] AS VARCHAR[])
+         ELSE regexp_split_to_array(stripped, '\\s+') END AS words
+  FROM t),
+c AS (
+  SELECT doc_id, words,
+         unnest(range(0, CAST(ceil(len(words) / 32.0) AS BIGINT)))
+           AS i
+  FROM w)
+SELECT doc_id, CAST(i AS INT) AS chunk_id,
+  CAST(len(words[(i*32+1):(i*32+32)]) AS INT) AS n_tokens,
+  array_to_string(words[(i*32+1):(i*32+32)], ' ') AS chunk_text
+FROM c
+"""
+
+
+# Same md5-hex permutation on both engines (Spark md5(encode(s,
+# 'utf-8')) == DuckDB md5(VARCHAR), lowercase hex), doc_id
+# tie-break, identical row_number semantics.
+ORACLES["stratified_sample"] = """
+WITH r AS (
+  SELECT doc_id, source,
+         CAST(row_number() OVER (
+           PARTITION BY source
+           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS INT)
+           AS sample_rank
+  FROM documents)
+SELECT doc_id, source, sample_rank FROM r WHERE sample_rank <= 10
+"""
+
+
+# Per-doc CTE mirrors the registered quality oracle's b/s stages
+# (same trim/split/punct/stop-hit formulas — shared _occ fragments,
+# no drift), then integer-sums per source with one terminal
+# division per ratio.  Sums are CAST to BIGINT before fetch:
+# DuckDB sum(int) returns HUGEINT and DECIMAL cells are
+# driver-unsafe.
+ORACLES["host_quality"] = """
+WITH b AS (
+  SELECT doc_id, source, text, length(text) AS n_chars,
+         CASE WHEN length(trim(text)) = 0 THEN 0
+              ELSE len(regexp_split_to_array(trim(text), '\\s+')) END
+           AS n_words,
+         length(text) -
+           length(regexp_replace(text, '[.,!?;:]', '', 'g'))
+           AS n_punct,
+         ' ' || lower(text) || ' ' AS padded
+  FROM documents),
+s AS (SELECT source, n_chars, n_words, n_punct, ({occ}) AS stop_hits
+      FROM b),
+g AS (
+  SELECT source,
+         count(*) AS n_docs,
+         CAST(sum(n_words) AS BIGINT) AS sw,
+         CAST(sum(n_chars) AS BIGINT) AS sc,
+         CAST(sum(n_punct) AS BIGINT) AS sp,
+         CAST(sum(stop_hits) AS BIGINT) AS ss,
+         CAST(sum(CASE WHEN n_words < 30 THEN 1 ELSE 0 END)
+              AS BIGINT) AS nshort
+  FROM s GROUP BY source)
+SELECT source,
+  CAST(n_docs AS BIGINT) AS n_docs,
+  sw AS n_words,
+  round(sw / n_docs, 6) AS mean_doc_words,
+  round(sp / greatest(sc, 1), 6) AS punct_ratio,
+  round(ss / greatest(sw, 1), 6) AS stopword_ratio,
+  round(nshort / n_docs, 6) AS short_doc_frac
+FROM g
+""".format(occ=" + ".join(_occ(" %s " % w) for w in _STOPWORDS))
+
+
+# Wraps the registered dedup_components recursive-CTE oracle as
+# a named subquery (DuckDB allows WITH RECURSIVE inside a CTE
+# body), adds cluster sizes, and left-joins onto the doc base —
+# singletons coalesce to themselves with size 1.
+ORACLES["dedup_keep"] = """
+WITH comp AS ({comp}),
+sz AS (SELECT component, count(*) AS csize FROM comp
+       GROUP BY component)
+SELECT d.doc_id,
+  CAST(coalesce(c.component, d.doc_id) AS BIGINT) AS component,
+  CAST(coalesce(s.csize, 1) AS BIGINT) AS cluster_size,
+  CAST(CASE WHEN coalesce(c.component, d.doc_id) = d.doc_id
+       THEN 1 ELSE 0 END AS INT) AS keep
+FROM documents d
+LEFT JOIN comp c ON d.doc_id = c.doc_id
+LEFT JOIN sz s ON c.component = s.component
+""".format(comp=ORACLES["dedup_components"])
+
+
+# Identical running-sum window on both engines (ROWS UNBOUNDED
+# PRECEDING .. 1 PRECEDING, doc_id order within source); integer
+# token counts make the cumulative sum exact.
+ORACLES["pack_sequences"] = """
+WITH per AS (
+  SELECT doc_id, source,
+         CAST(CASE WHEN length(trim(text)) = 0 THEN 0
+              ELSE len(regexp_split_to_array(trim(text), '\\s+'))
+              END AS BIGINT) AS n_tokens
+  FROM documents),
+c AS (
+  SELECT doc_id, source, n_tokens,
+         CAST(coalesce(sum(n_tokens) OVER (
+           PARTITION BY source ORDER BY doc_id
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+           AS BIGINT) AS before
+  FROM per)
+SELECT doc_id, source, n_tokens,
+       CAST(floor(before / 128) AS BIGINT) AS seq_id,
+       CAST(before % 128 AS BIGINT) AS seq_offset
+FROM c
+"""
+
+
+# The top-k CUT is part of the contract: both engines order by
+# (count DESC, gram ASC) so boundary ties resolve identically and
+# the 50-row SETS hash-match.
+ORACLES["vocab_ngrams"] = """
+WITH w AS (
+  SELECT doc_id,
+    regexp_split_to_array(
+      regexp_replace(lower(trim(coalesce(text, ''))), '\\s+', ' ',
+                     'g'), ' ') AS words
+  FROM documents),
+g AS (
+  SELECT doc_id,
+    CASE WHEN len(words) >= 2
+      THEN list_transform(range(1, len(words)),
+                          i -> array_to_string(words[i:i+1], ' '))
+      ELSE CAST([] AS VARCHAR[]) END AS grams
+  FROM w),
+u AS (SELECT doc_id, unnest(grams) AS gram FROM g)
+SELECT gram,
+       CAST(count(*) AS BIGINT) AS n_occurrences,
+       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
+FROM u GROUP BY gram
+ORDER BY n_occurrences DESC, gram
+LIMIT 50
+"""
+
+
+# Determinism: both engines fold ln(count) terms over a SORTED list
+# (sort_array+F.aggregate vs list_sort+list_reduce, same 0.0 seed
+# via list_prepend) — identical IEEE addition order, so the only
+# cross-engine noise is a possible 1-ulp ln() divergence, absorbed
+# by round(.,6) and pinned by this gate on the fixed corpus.
+ORACLES["unigram_logprob"] = """
+WITH w AS (
+  SELECT doc_id,
+    list_filter(regexp_split_to_array(
+      regexp_replace(lower(trim(coalesce(text, ''))), '\\s+', ' ',
+                     'g'), ' '), x -> x <> '') AS words
+  FROM documents),
+u AS (SELECT doc_id, unnest(words) AS word FROM w),
+f AS (SELECT word, count(*) AS c FROM u GROUP BY word),
+tot AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM f),
+perdoc AS (
+  SELECT doc_id, CAST(count(*) AS BIGINT) AS n,
+         list_sort(list(ln(CAST(c AS DOUBLE)))) AS lns
+  FROM u JOIN f USING (word) GROUP BY doc_id),
+s AS (
+  SELECT doc_id, n,
+         n * ln(CAST((SELECT t FROM tot) AS DOUBLE)) -
+           list_reduce(list_prepend(0.0, lns), (a, b) -> a + b)
+           AS nll
+  FROM perdoc)
+SELECT d.doc_id, CAST(coalesce(s.n, 0) AS BIGINT) AS n_words,
+  round(coalesce(s.nll / greatest(s.n, 1), 0.0), 6) AS mean_nll
+FROM documents d LEFT JOIN s USING (doc_id)
+"""
+
+
+# No float accumulation anywhere: score is one int*ln(int/int)
+# expression per (source, term) row; the (score DESC, term ASC)
+# row_number makes the per-host cut deterministic on both engines.
+ORACLES["tfidf_top_terms"] = """
+WITH w AS (
+  SELECT doc_id, source,
+    list_filter(regexp_split_to_array(
+      regexp_replace(lower(trim(coalesce(text, ''))), '\\s+', ' ',
+                     'g'), ' '), x -> x <> '') AS words
+  FROM documents),
+pos AS (SELECT source, unnest(words) AS term FROM w),
+tf AS (SELECT source, term, CAST(count(*) AS BIGINT) AS tf
+       FROM pos GROUP BY source, term),
+dfx AS (SELECT term, CAST(count(*) AS BIGINT) AS df
+        FROM tf GROUP BY term),
+ns AS (SELECT CAST(count(DISTINCT source) AS BIGINT) AS n
+       FROM documents),
+s AS (
+  SELECT source, term, tf, df,
+         round(tf * ln(CAST((SELECT n FROM ns) AS DOUBLE) /
+                       CAST(df AS DOUBLE)), 6) AS score
+  FROM tf JOIN dfx USING (term)),
+r AS (
+  SELECT source, term, tf, df, score,
+         CAST(row_number() OVER (
+           PARTITION BY source
+           ORDER BY score DESC, term) AS INT) AS rank
+  FROM s)
+SELECT source, term, tf, df, score, rank FROM r WHERE rank <= 5
+"""
+
+
+# Nests the dedup_keep oracle and the quality_features oracle
+# (re-parametrized over plain `text` instead of the
+# line-ified shape) as CTEs and joins on doc_id.
+ORACLES["corpus_keep"] = """
+WITH dk AS ({dk}),
+qf AS ({qf})
+SELECT d.doc_id, dk.keep AS keep_dedup, qf.gopher_pass, qf.c4_keep,
+  qf.lang_pred,
+  CAST(CASE WHEN dk.keep = 1 AND qf.gopher_pass = 1
+             AND qf.c4_keep = 1 THEN 1 ELSE 0 END AS INT) AS keep
+FROM documents d
+JOIN dk ON d.doc_id = dk.doc_id
+JOIN qf ON d.doc_id = qf.doc_id
+""".format(dk=ORACLES["dedup_keep"],
+           qf=_quality_features_oracle(src="text"))
+
+
+# Spark keys grams by xxhash64 (8-byte shuffle rows); the oracle
+# groups by the gram STRING — value-identical modulo the documented
+# 64-bit collision odds (same note as dup_ngram_frac).  NULL text
+# behaves as empty on both sides (per-doc transformation: no
+# cross-doc evidence to poison, unlike dedup_keep).  Matching runs
+# on the normalized lowercase words; emission uses the parallel
+# original-case owords array (identical token boundaries).
+ORACLES["dedup_spans"] = """
+WITH w AS (
+  SELECT doc_id,
+    CASE WHEN length(trim(coalesce(text, ''))) = 0
+         THEN CAST([] AS VARCHAR[])
+         ELSE regexp_split_to_array(
+                regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),
+                ' ')
+    END AS words,
+    CASE WHEN length(trim(coalesce(text, ''))) = 0
+         THEN CAST([] AS VARCHAR[])
+         ELSE regexp_split_to_array(trim(text), '\\s+')
+    END AS owords
+  FROM documents),
+gp AS (
+  SELECT doc_id, words,
+         unnest(range(1, greatest(len(words) - 6, 1))) AS pos
+  FROM w),
+g AS (
+  SELECT doc_id, pos,
+         array_to_string(words[pos:pos+7], ' ') AS gram
+  FROM gp),
+dupg AS (
+  SELECT gram FROM (
+    SELECT gram, count(DISTINCT doc_id) AS nd FROM g GROUP BY gram)
+  WHERE nd >= 2),
+cov AS (
+  SELECT DISTINCT g.doc_id, g.pos + r.k AS j
+  FROM g JOIN dupg USING (gram), range(8) r(k)),
+wip AS (
+  SELECT doc_id, owords,
+         unnest(range(1, len(owords) + 1)) AS j
+  FROM w),
+wi AS (
+  SELECT doc_id, j, owords[j] AS word
+  FROM wip),
+kept AS (
+  SELECT wi.doc_id, wi.j, wi.word
+  FROM wi LEFT JOIN cov ON wi.doc_id = cov.doc_id AND wi.j = cov.j
+  WHERE cov.j IS NULL),
+per AS (
+  SELECT doc_id, CAST(count(*) AS INT) AS n_kept,
+         string_agg(word, ' ' ORDER BY j) AS kept_text
+  FROM kept GROUP BY doc_id)
+SELECT d.doc_id,
+  CAST(len(w.words) AS INT) AS n_words,
+  CAST(coalesce(per.n_kept, 0) AS INT) AS n_kept,
+  coalesce(per.kept_text, '') AS kept_text
+FROM documents d
+JOIN w USING (doc_id)
+LEFT JOIN per USING (doc_id)
+"""
+
+
+# Same md5-hex permutation trick as stratified_sample; the shard
+# bucket parses the first 8 hex digits (F.conv base 16 on Spark,
+# CAST('0x…') on DuckDB — both yield the same uint32, % 8 of a
+# non-negative value matches pmod).
+ORACLES["shard_assign"] = """
+WITH k AS (
+  SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS key
+  FROM documents),
+s AS (
+  SELECT doc_id, key,
+         CAST(CAST(concat('0x', substr(key, 1, 8)) AS BIGINT) % 8
+              AS INT) AS shard
+  FROM k)
+SELECT doc_id, shard,
+       CAST(row_number() OVER (PARTITION BY shard
+                               ORDER BY key, doc_id) AS INT)
+         AS shard_pos
+FROM s
+"""
+
+
+# Wraps the registered embedding_dups oracle (same threshold /
+# planes) as the pair CTE, then the dedup_keep recursive-reach /
+# size / keep shape over the embeddings base.
+ORACLES["semdedup_keep"] = """
+WITH RECURSIVE p AS ({dups}),
+edges AS (SELECT vec_a AS src, vec_b AS dst FROM p
+          UNION SELECT vec_b, vec_a FROM p),
+reach(src, node) AS (
+  SELECT src, src FROM (SELECT DISTINCT src FROM edges)
+  UNION
+  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.node = e.src),
+comp AS (SELECT src AS vec_id, MIN(node) AS component
+         FROM reach GROUP BY src),
+sz AS (SELECT component, count(*) AS csize FROM comp
+       GROUP BY component)
+SELECT e.vec_id,
+  CAST(coalesce(c.component, e.vec_id) AS BIGINT) AS component,
+  CAST(coalesce(s.csize, 1) AS BIGINT) AS cluster_size,
+  CAST(CASE WHEN coalesce(c.component, e.vec_id) = e.vec_id
+       THEN 1 ELSE 0 END AS INT) AS keep
+FROM embeddings e
+LEFT JOIN comp c ON e.vec_id = c.vec_id
+LEFT JOIN sz s ON c.component = s.component
+""".format(dups=ORACLES["embedding_dups"])
+
+
+# Same md5-hex uint32 parse on both engines (the shard_assign
+# pairing); the weight sum folds over a SORTED list on both sides;
+# sigmoid's exp() is the accepted 1-ulp surface under round(.,6)
+# (the unigram_logprob precedent).
+ORACLES["classifier_score"] = """
+WITH w AS (
+  SELECT doc_id, list_filter(regexp_split_to_array(
+      regexp_replace(lower(trim(coalesce(text, ''))), '\\s+', ' ',
+                     'g'), ' '), x -> x <> '') AS words
+  FROM documents),
+pos AS (SELECT doc_id, unnest(words) AS term FROM w),
+vocab AS (
+  SELECT term,
+         CAST(concat('0x', substr(md5(term), 1, 8)) AS BIGINT) AS h
+  FROM (SELECT DISTINCT term FROM pos)),
+wt AS (SELECT term, h / 4294967295.0 - 0.5 AS weight
+       FROM vocab WHERE h % 2 = 0),
+per AS (
+  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
+         CAST(count(weight) AS BIGINT) AS n_hits,
+         list_sort(list_filter(list(weight),
+                               x -> x IS NOT NULL)) AS ws
+  FROM pos LEFT JOIN wt USING (term) GROUP BY doc_id),
+s AS (
+  SELECT doc_id, n_words, n_hits,
+         0.25 + list_reduce(list_prepend(0.0, ws), (a, b) -> a + b)
+              / greatest(n_words, 1) AS z
+  FROM per)
+SELECT d.doc_id,
+  coalesce(s.n_words, 0) AS n_words,
+  coalesce(s.n_hits, 0) AS n_hits,
+  coalesce(round(1.0 / (1.0 + exp(-s.z)), 6),
+           round(1.0 / (1.0 + exp(-0.25)), 6)) AS score
+FROM documents d LEFT JOIN s USING (doc_id)
+"""

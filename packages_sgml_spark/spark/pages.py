@@ -185,6 +185,125 @@ def docs_as_pages(docs: DataFrame, links=False) -> DataFrame:
         F.col("doc_id"), F.col("lang"))
 
 
+# Gate parameters shared by a registry query and its DuckDB oracle
+# (spark/queries.py, spark/oracles.py): one definition each.
+PR_ITER = 5           # pagerank_hosts power iterations
+PR_DAMP = 0.85        # pagerank_hosts damping
+ANCHOR_CAP = 3        # anchor_texts max texts per target
+N_ROBOT_HOSTS = 4     # robots_allowed: hosts r0..r3 have robots; r4 none
+BL_MIN_DOCS = 3       # boilerplate_lines / strip_boilerplate threshold
+
+
+# Synthesized link pages: page url https://d<doc_id%13>.example/p/<id>
+# with, per document (k = doc_id % 5 + 1):
+#   k relative links  /r/<i>?x=<id>#f   anchor "ref <b><i></b>"
+#   1 absolute cross-host link https://h<doc_id%7>.example/z
+#   1 rel=nofollow /nf, 1 javascript: — exercising skip paths.
+# Everything is SQL-reconstructable for the DuckDB oracle.
+
+
+def docs_as_link_pages(docs):
+    from .util import spread
+    docs = spread(docs, "doc_id")   # r9: parallel synth (docs_as_pages)
+    d = F.col("doc_id")
+    k = (d % 5 + 1).cast("int")
+    rel_links = F.array_join(F.transform(
+        F.sequence(F.lit(0), k - 1),
+        lambda i: F.concat(
+            F.lit('<a href="/r/'), i.cast("string"),
+            F.lit("?x="), d.cast("string"),
+            F.lit('#f">ref <b>'), i.cast("string"),
+            F.lit("</b></a>"))), "")
+    html_str = F.concat(
+        F.lit("<html><head><title>t</title></head><body>"),
+        rel_links,
+        F.lit('<a href="https://h'), (d % 7).cast("string"),
+        F.lit('.example/z">x</a>'),
+        F.lit('<a href="/nf" rel="nofollow">nf</a>'),
+        F.lit('<a href="javascript:void(0)">js</a>'),
+        F.lit("</body></html>"))
+    url = F.concat(F.lit("https://d"), (d % 13).cast("string"),
+                   F.lit(".example/p/"), d.cast("string"))
+    return docs.select(url.alias("url"),
+                       F.encode(html_str, "utf-8").alias("html"))
+
+
+def line_docs(docs):
+    """Line-ified documents: text is one line; append a footer shared
+    by every document and the lang code (shared by ~1/8 of docs) —
+    real cross-document boilerplate with planted truth,
+    SQL-reconstructable (oracles._LINEDOC_SQL_T)."""
+    # F.concat, NOT concat_ws: the SQL twin (_LINEDOC_SQL_T) is
+    # `text || ... || lang` and || PROPAGATES NULL — concat_ws
+    # silently skipped a NULL text and fabricated footer-only
+    # content for failed extractions, a cross-engine divergence no
+    # NULL-free gate corpus can see (caught by the r8 session-5
+    # randomized differential; the NULL-text doc then flows NULL
+    # into every downstream op, which all coalesce it as empty).
+    return docs.select(
+        "doc_id",
+        F.concat(F.col("text"), F.lit("\nShared footer.\n"),
+                 F.col("lang")).alias("text"))
+
+
+def docs_as_head_pages(docs):
+    """Synthesized head-metadata pages: title + description always;
+    canonical only when doc_id%2==0, og:title when doc_id%3==0 —
+    NULL-field paths exercised.  SQL-reconstructable."""
+    from .util import spread
+    docs = spread(docs, "doc_id")   # r9: parallel synth
+    d = F.col("doc_id")
+    ds = d.cast("string")
+    html_str = F.concat(
+        F.lit('<html lang="en-US"><head><title>T '), ds,
+        F.lit("</title>"),
+        F.lit('<meta name="description" content="D '), ds,
+        F.lit('">'),
+        F.when(d % 2 == 0, F.concat(
+            F.lit('<link rel="canonical" href="https://c.example/'),
+            ds, F.lit('">'))).otherwise(F.lit("")),
+        F.when(d % 3 == 0, F.concat(
+            F.lit('<meta property="og:title" content="OG '), ds,
+            F.lit('">'))).otherwise(F.lit("")),
+        F.lit("</head><body><p>x</p></body></html>"))
+    url = F.concat(F.lit("https://m"), (d % 13).cast("string"),
+                   F.lit(".example/p/"), ds)
+    return docs.select(url.alias("url"),
+                       F.encode(html_str, "utf-8").alias("html"))
+
+
+def docs_as_atom_pages(docs):
+    """Synthesized Atom feeds (default xmlns — the r7 node-tape
+    xmlns path): k = doc_id%4+1 entries; a feed-level <title> child
+    tests entry scoping (it must NOT leak into any entry row)."""
+    from .util import spread
+    docs = spread(docs, "doc_id")   # r9: parallel synth
+    d = F.col("doc_id")
+    ds = d.cast("string")
+    k = (d % 4 + 1).cast("int")
+    entries = F.array_join(F.transform(
+        F.sequence(F.lit(1), k),
+        lambda j: F.concat(
+            F.lit("<entry><title>E "), ds, F.lit("-"),
+            j.cast("string"),
+            F.lit('</title><link href="https://b'),
+            (d % 7).cast("string"), F.lit(".example/p/"),
+            j.cast("string"),
+            F.lit('" rel="alternate"/><id>urn:'), ds, F.lit(":"),
+            j.cast("string"),
+            F.lit("</id><updated>2026-01-0"),
+            (j % 9 + 1).cast("string"),
+            F.lit("</updated></entry>"))), "")
+    xml = F.concat(
+        F.lit('<?xml version="1.0"?>'
+              '<feed xmlns="http://www.w3.org/2005/Atom">'
+              "<title>Feed</title>"),
+        entries, F.lit("</feed>"))
+    url = F.concat(F.lit("feed://"), ds)
+    return docs.select(url.alias("url"),
+                       F.encode(xml, "utf-8").alias("html"))
+
+
 def golden_table(spark) -> DataFrame:
     """Expected-output table (FIXTURES.md §3) built by running the
     core parser directly over the Test corpus: url, text_expected,

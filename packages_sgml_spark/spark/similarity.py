@@ -25,10 +25,6 @@ def _norm(a):
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def knn_bruteforce(emb: DataFrame, query_ids, k=5) -> DataFrame:
     """Exact top-k cosine neighbors for each query vec_id (excluding
     self).  Deterministic tie-break on neighbor id.
@@ -47,7 +43,10 @@ def knn_bruteforce(emb: DataFrame, query_ids, k=5) -> DataFrame:
     boundary-free by construction; sign/rounding margins ~1e-5 vs
     float error ~1e-15).  Rows whose embedding is NULL or of a
     different length than the query vectors score cos=NULL, exactly
-    like the old zip_with fold (NULL-propagating)."""
+    like the old zip_with fold (NULL-propagating).
+
+    Building the frame runs a Spark job: the query vectors are
+    collect()ed at call time, a snapshot of `emb` as it was then."""
     qrows = (emb.filter(F.col("vec_id").isin(list(query_ids)))
              .select("vec_id", "embedding").collect())
     qrows = sorted((r for r in qrows if r[1] is not None),
@@ -215,7 +214,10 @@ def knn_lsh(emb: DataFrame, query_ids, dim, k=5, n_planes=6) -> DataFrame:
     Bucket bits are sign decisions with measured >= 1e10x margin over
     summation-order error; rows with NULL/wrong-length embeddings
     keep the old semantics (bucket 0, cos NULL if matched).  1.03 s
-    (r8 shape) -> 0.66 (r9 join shape) -> ~0.4 s on the 20k probe."""
+    (r8 shape) -> 0.66 (r9 join shape) -> ~0.4 s on the 20k probe.
+
+    Building the frame runs a Spark job: the query vectors are
+    collect()ed at call time, a snapshot of `emb` as it was then."""
     qrows = (emb.filter(F.col("vec_id").isin(list(query_ids)))
              .select("vec_id", "embedding").collect())
     qrows = sorted((r for r in qrows if r[1] is not None),
@@ -311,8 +313,9 @@ def embedding_near_dups(emb: DataFrame, threshold=0.95,
     buys on this corpus."""
     # r9: norms are computed once per row (numpy pass on the LSH
     # path, one JVM fold on the exact path) instead of once per PAIR
-    # inside cosine() — the pair scoring drops from three interpreted
-    # HOF folds to one dot; values identical (same doubles divided).
+    # inside the pair's cosine — the pair scoring drops from three
+    # interpreted HOF folds to one dot; values identical (same
+    # doubles divided).
     if use_lsh and not n_probes:
         # r9 (guide §4.2): score each bucket as a GROUP — the old
         # self-join materialized BOTH 64-dim arrays per candidate
@@ -415,7 +418,10 @@ def embedding_dup_recall(emb: DataFrame, threshold=0.95, dim=64,
     which is the standard sampled ANN-recall protocol.  The recall
     estimate is unbiased for the sampled population; the production
     LSH plan being audited is unchanged.  sample_frac=1 (the oracled
-    registry default) is exact."""
+    registry default) is exact.
+
+    Building the frame runs Spark jobs: the three pair sets are
+    localCheckpoint(eager=True) snapshots of `emb` at call time."""
     if sample_frac < 1.0:
         emb = emb.filter(
             F.pmod(F.xxhash64(F.col("vec_id")), F.lit(1000000)) <
@@ -513,7 +519,10 @@ def ivf_assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
     cid, the window's tie-break), a NaN sim ranks greatest exactly
     like Spark's NaN-largest DESC sort, and an invalid/NULL
     embedding (all sims NULL -> window fell through to cid ASC)
-    maps to the lowest cid."""
+    maps to the lowest cid.
+
+    Building the frame runs a Spark job: the centroids are
+    collect()ed at call time, a snapshot of `cents` as it was then."""
     crows = sorted(((r["cid"], list(r["centroid"]))
                     for r in cents.select("cid", "centroid").collect()
                     if r["centroid"] is not None),
@@ -572,7 +581,11 @@ def ivf_knn(emb: DataFrame, query_ids, k=5, n_centroids=16,
             nprobe=4, iterations=0) -> DataFrame:
     """IVF approximate top-k: search only the nprobe clusters nearest
     each query.  The scale path: candidate set shrinks from n to
-    ~n*nprobe/n_centroids per query."""
+    ~n*nprobe/n_centroids per query.
+
+    Building the frame runs Spark jobs: the centroids are a
+    localCheckpoint(eager=True) snapshot of `emb`, collect()ed by
+    ivf_assign, both at call time."""
     cents = ivf_centroids(emb, n_centroids, iterations=iterations)
     # cents is consumed twice below (ivf_assign + the qprobe
     # crossJoin); without a lineage cut Catalyst plans the

@@ -227,7 +227,7 @@ def quality_features(docs: DataFrame) -> DataFrame:
     copy of the corpus; use c4_clean for the cleaned text itself.
 
     Callers: curate's corpus_keep, streaming.stream_quality and the
-    staged `quality_features` key use this JVM form; it is also the
+    registered `quality_features` key use this JVM form; it is also the
     reference the Python kernel is tested against.  The crawl job
     uses quality_features_arrow instead.  Curate stays on the JVM
     because it starts no Python workers: switching it to the kernel
@@ -270,14 +270,14 @@ def quality_features_arrow(docs: DataFrame) -> DataFrame:
     """quality_features computed by the per-document Python kernel
     core.quality.features in ONE mapInArrow: same spread, same 13
     columns, names, types and values (tests/test_quality_fused.py,
-    the staged oracle gate and the crawl-job parity test pin it to
+    the quality_features oracle gate and the crawl-job parity test pin it to
     the JVM form).
 
     Callers: jobs/crawl_job.py only.  That job has already started
     Python workers for the parse, so the kernel pays no new boundary
     cost and skips the JVM form's interpreted, per-launch
     JIT-compiled higher-order-function lambdas.  Curate's
-    corpus_keep, stream_quality and the staged key keep
+    corpus_keep, stream_quality and the registered key keep
     quality_features: the JVM-only curate job would have to start
     Python workers for it, which raised its peak RSS from 3030 to
     ~3620 MB (+19.5%) for no wall-time gain."""

@@ -1,84 +1,56 @@
-"""Round-8 staged registry entries, gated NOW with the exact
-check_correctness compare (row count + column set + order-insensitive
-value hash vs DuckDB) so round-8 registration is a mechanical dict
-update.  The registry itself stays frozen mid-round — queries.py must
-NOT import queries_staged until round start."""
+"""The r8 crawl-pipeline registry keys: their oracle gate (the exact
+check_correctness compare at sf0.001, kept under this test's ids;
+tests/test_registry.py gates the rest of the registry) and the
+planted-truth check of the rows-only fix_text key."""
 
-import importlib.util
-import os
-
-import duckdb
 import pytest
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = "/root/testdata/sf0.001"
 
-
-def _harness():
-    spec = importlib.util.spec_from_file_location(
-        "check_correctness", os.path.join(REPO, "tools",
-                                          "check_correctness.py"))
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-    return m
+GATED = ("outlinks", "host_graph", "pagerank_hosts", "boilerplate_lines",
+         "strip_boilerplate", "robots_allowed", "gopher_quality",
+         "anchor_texts", "c4_clean", "page_meta", "feed_entries",
+         "markdown", "jsonld", "url_filter")
 
 
-@pytest.fixture(scope="module")
-def duck():
-    h = _harness()
-    con = duckdb.connect()
-    for t in h.TABLES:
-        p = os.path.join(SF_DIR, t + ".parquet")
-        if os.path.exists(p):
-            con.execute(
-                "CREATE VIEW %s AS SELECT * FROM read_parquet('%s')"
-                % (t, p))
-    return con
+@pytest.mark.parametrize("name", GATED)
+def test_staged_query_matches_oracle(oracle_gate, name):
+    oracle_gate(name)
 
 
 def test_registry_frozen_at_r8_count():
-    """Round-8 registration happened at round start: the registry is
-    now frozen at 70 keys (55 + the 15 staged crawl-surface queries)
-    and queries.py carries the registration import."""
+    """The r8 crawl-surface block is 15 keys (the 14 gated ones plus
+    the rows-only fix_text), all live in the one registry table."""
     import __spark_entry__ as E
-    assert len(E.queries()) == 70
-    src = open(os.path.join(
-        REPO, "packages_sgml_spark", "spark", "queries.py")).read()
-    assert "queries_staged" in src
+    r8 = set(GATED) | {"fix_text"}
+    assert len(GATED) == len(set(GATED)) == 14 and len(r8) == 15
+    assert r8 <= set(E.queries())
 
 
-@pytest.mark.parametrize("name", [
-    "outlinks", "host_graph", "pagerank_hosts", "boilerplate_lines",
-    "strip_boilerplate", "robots_allowed", "gopher_quality",
-    "anchor_texts", "c4_clean", "page_meta", "feed_entries",
-    "markdown", "jsonld", "url_filter"])
-def test_staged_query_matches_oracle(spark, duck, name):
-    import decimal
-    from packages_sgml_spark.spark.queries_staged import (R8_ORACLES,
-                                                          R8_QUERIES)
-    h = _harness()
-    df = R8_QUERIES[name](spark, SF_DIR)
-    cols = df.columns
-    rows = [tuple(r) for r in df.collect()]
-    cur = duck.execute(R8_ORACLES[name])
-    ocols = [d[0] for d in cur.description]
-    orows = cur.fetchall()
-    assert len(rows) == len(orows), (name, len(rows), len(orows))
-    assert sorted(cols) == sorted(ocols), (name, cols, ocols)
-    assert rows, name                      # non-degenerate
-    for r in rows[:5] + orows[:5]:         # driver-unsafe Decimal ban
-        assert not any(isinstance(v, decimal.Decimal) for v in r)
-    assert h.table_hash(cols, rows) == h.table_hash(ocols, orows), name
+def test_staged_keys_registered_exactly():
+    """Every r8 key is live with its oracle wired; fix_text is
+    rows-only, registered with no oracle, like compression_ratio."""
+    import __spark_entry__ as E
+    from packages_sgml_spark.spark.oracles import ORACLES
+    from packages_sgml_spark.spark.queries import QUERIES
+    live_q = E.queries()
+    live_o = E.oracle_sql()
+    for k in GATED + ("fix_text",):
+        assert live_q[k] is QUERIES[k], k
+    for k in GATED:
+        assert live_o[k] == ORACLES[k], k
+    assert "fix_text" in live_q and "fix_text" not in live_o
+    assert set(live_q) - set(live_o) == {"fix_text", "compression_ratio"}
 
 
 def test_staged_fix_text_inverse(spark):
-    """fix_text has no SQL oracle; its staged gate is the planted
-    inverse property — repairing deterministically mis-decoded text
-    recovers the original (NFC-composed) byte-for-byte."""
+    """fix_text has no SQL oracle; its gate is the planted inverse
+    property — repairing deterministically mis-decoded text recovers
+    the original (NFC-composed) byte-for-byte."""
     import unicodedata
-    from packages_sgml_spark.spark.queries_staged import R8_QUERIES
+    from packages_sgml_spark.spark.queries import QUERIES
     got = {r.doc_id: r for r in
-           R8_QUERIES["fix_text"](spark, SF_DIR).collect()}
+           QUERIES["fix_text"](spark, SF_DIR).collect()}
     import duckdb as d
     orig = dict(d.sql(
         "SELECT doc_id, text FROM read_parquet('%s/documents.parquet')"
@@ -89,24 +61,3 @@ def test_staged_fix_text_inverse(spark):
         want = text + " — café № %d…" % doc_id
         assert r.text_fixed == unicodedata.normalize("NFC", want)
         assert r.n_passes == 1 and r.changed == 1
-
-
-def test_staged_keys_registered_exactly(spark):
-    """Post-registration invariants: every staged key is live, its
-    live callable IS the staged callable (no shadowing), and the
-    oracle wiring matches (fix_text is rows-only — registered with no
-    oracle, like compression_ratio).  (The spark fixture is needed
-    because queries_staged builds Column expressions at import
-    time.)"""
-    import __spark_entry__ as E
-    from packages_sgml_spark.spark.queries_staged import (R8_ORACLES,
-                                                          R8_QUERIES)
-    live_q = E.queries()
-    live_o = E.oracle_sql()
-    for k, fn in R8_QUERIES.items():
-        assert live_q[k] is fn, k
-    for k, sql in R8_ORACLES.items():
-        assert live_o[k] == sql, k
-    assert "fix_text" in live_q and "fix_text" not in live_o
-    assert set(R8_ORACLES) <= set(R8_QUERIES)
-    assert set(R8_QUERIES) - set(R8_ORACLES) == {"fix_text"}

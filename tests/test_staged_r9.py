@@ -1,114 +1,67 @@
-"""Round-9 staged registry entries, gated NOW with the exact
-check_correctness compare so round-9 registration is mechanical.
-The live registry stays frozen at 70 mid-round (r5 drift-kill rule)."""
+"""The r9 training-data registry keys: their oracle gate (the exact
+check_correctness compare at sf0.001, kept under this test's ids;
+tests/test_registry.py gates the rest of the registry), planted
+semantics and cross-engine differentials."""
 
-import importlib.util
-import os
-
-import duckdb
 import pytest
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def _harness():
-    spec = importlib.util.spec_from_file_location(
-        "check_correctness", os.path.join(REPO, "tools",
-                                          "check_correctness.py"))
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-    return m
+GATED = ("quality_features", "dup_ngram_frac", "simhash_pairs",
+         "doc_chunks", "stratified_sample", "host_quality", "dedup_keep",
+         "pack_sequences", "vocab_ngrams", "unigram_logprob",
+         "tfidf_top_terms", "corpus_keep", "dedup_spans", "shard_assign",
+         "semdedup_keep", "classifier_score")
 
 
 def _kernel_quality_features(spark, sf_dir):
-    """The crawl job's Python-kernel quality form over the staged
+    """The crawl job's Python-kernel quality form over the
     quality_features input."""
+    from packages_sgml_spark.spark.pages import line_docs
     from packages_sgml_spark.spark.queries import _t
-    from packages_sgml_spark.spark.queries_staged import _line_docs
     from packages_sgml_spark.spark.textops import quality_features_arrow
-    return quality_features_arrow(_line_docs(_t(spark, sf_dir,
-                                                "documents")))
+    return quality_features_arrow(line_docs(_t(spark, sf_dir,
+                                               "documents")))
 
 
-# inputs gated against a staged key's oracle with no registry key of
-# their own (the registry stays frozen): name -> (oracle key, query)
+# inputs gated against a registry key's oracle with no registry key of
+# their own: name -> (oracle key, query)
 UNREGISTERED = {"quality_features_arrow": ("quality_features",
                                            _kernel_quality_features)}
 
 
 def _query_and_oracle(name):
-    from packages_sgml_spark.spark.queries_staged_r9 import (
-        R9_ORACLES, R9_QUERIES)
+    from packages_sgml_spark.spark.oracles import ORACLES
+    from packages_sgml_spark.spark.queries import QUERIES
     if name in UNREGISTERED:
         key, query = UNREGISTERED[name]
-        return query, R9_ORACLES[key]
-    return R9_QUERIES[name], R9_ORACLES[name]
+        return query, ORACLES[key]
+    return QUERIES[name], ORACLES[name]
 
 
-@pytest.fixture(scope="module")
-def duck():
-    h = _harness()
-    con = duckdb.connect()
-    for t in h.TABLES:
-        p = os.path.join(SF_DIR, t + ".parquet")
-        if os.path.exists(p):
-            con.execute(
-                "CREATE VIEW %s AS SELECT * FROM read_parquet('%s')"
-                % (t, p))
-    return con
+@pytest.mark.parametrize("name", GATED + tuple(UNREGISTERED))
+def test_staged_r9_query_matches_oracle(oracle_gate, name):
+    oracle_gate(name, *_query_and_oracle(name))
 
 
 def test_registry_still_frozen_at_70():
+    """The 16 r9 keys are added on top of the 70-key registry: taking
+    them out leaves exactly the 70 keys it had before."""
     import __spark_entry__ as E
-    assert len(E.queries()) == 70
-    src = open(os.path.join(
-        REPO, "packages_sgml_spark", "spark", "queries.py")).read()
-    assert "queries_staged_r9" not in src
-
-
-@pytest.mark.parametrize("name", ["quality_features",
-                                  "dup_ngram_frac",
-                                  "simhash_pairs",
-                                  "doc_chunks",
-                                  "stratified_sample",
-                                  "host_quality",
-                                  "dedup_keep",
-                                  "pack_sequences",
-                                  "vocab_ngrams",
-                                  "unigram_logprob",
-                                  "tfidf_top_terms",
-                                  "corpus_keep",
-                                  "dedup_spans",
-                                  "shard_assign",
-                                  "semdedup_keep",
-                                  "classifier_score",
-                                  "quality_features_arrow"])
-def test_staged_r9_query_matches_oracle(spark, duck, name):
-    import decimal
-    h = _harness()
-    query, oracle = _query_and_oracle(name)
-    df = query(spark, SF_DIR)
-    cols = df.columns
-    rows = [tuple(r) for r in df.collect()]
-    cur = duck.execute(oracle)
-    ocols = [d[0] for d in cur.description]
-    orows = cur.fetchall()
-    assert len(rows) == len(orows), (name, len(rows), len(orows))
-    assert sorted(cols) == sorted(ocols), (name, cols, ocols)
-    assert rows, name
-    for r in rows[:5] + orows[:5]:
-        assert not any(isinstance(v, decimal.Decimal) for v in r)
-    assert h.table_hash(cols, rows) == h.table_hash(ocols, orows), name
-
-
-def test_staged_r9_keys_do_not_collide(spark):
-    import __spark_entry__ as E
-    from packages_sgml_spark.spark.queries_staged_r9 import (
-        R9_ORACLES, R9_QUERIES)
     live = set(E.queries())
-    assert not (set(R9_QUERIES) & live)
-    assert set(R9_ORACLES) == set(R9_QUERIES)
+    assert len(GATED) == len(set(GATED)) == 16
+    assert set(GATED) <= live
+    assert len(live - set(GATED)) == 70
+
+
+def test_staged_r9_keys_do_not_collide():
+    """Each r9 key is registered once with its own oracle, and the
+    gate-only inputs in UNREGISTERED take no registry name."""
+    import __spark_entry__ as E
+    import test_staged_r8
+    live_q = E.queries()
+    live_o = E.oracle_sql()
+    assert not set(GATED) & set(test_staged_r8.GATED + ("fix_text",))
+    assert set(GATED) <= set(live_o) <= set(live_q)
+    assert not set(UNREGISTERED) & set(live_q)
 
 
 def test_doc_chunks_planted_semantics(spark):
@@ -322,7 +275,7 @@ def test_corpus_keep_planted_semantics(spark):
     assert rows[3].keep == 0
 
 
-def test_null_text_cross_engine_differential(spark):
+def test_null_text_cross_engine_differential(spark, check_correctness):
     """Regression for the two r8 session-4 review catches — a corpus
     with NULL-text docs (failed extractions, a real crawl shape the
     NULL-free sf gates cannot see) must hash-match the oracle:
@@ -335,8 +288,8 @@ def test_null_text_cross_engine_differential(spark):
     import duckdb
 
     from packages_sgml_spark.spark.datafilters import corpus_keep
-    from packages_sgml_spark.spark.queries_staged_r9 import R9_ORACLES
-    h = _harness()
+    from packages_sgml_spark.spark.oracles import ORACLES
+    h = check_correctness
     rows = [(10, "h1", ""), (11, "h2", None), (12, "h3", "  "),
             (13, "h1", "ab"), (14, "h2", None),
             (5, "h3", "a solitary document with unique words " * 8)]
@@ -350,7 +303,7 @@ def test_null_text_cross_engine_differential(spark):
     df = corpus_keep(docs)
     cols = df.columns
     srows = [tuple(r) for r in df.collect()]
-    cur = con.execute(R9_ORACLES["corpus_keep"])
+    cur = con.execute(ORACLES["corpus_keep"])
     ocols = [d[0] for d in cur.description]
     orows = cur.fetchall()
     assert len(srows) == len(orows) == 6
@@ -419,20 +372,20 @@ def test_shard_assign_planted_semantics(spark):
     assert sorted(rows) == sorted(again)
 
 
-def test_semdedup_keep_planted_semantics(spark):
+def test_semdedup_keep_planted_semantics(spark, check_correctness):
     """Hand-built embeddings: identical vectors cluster via the
     exact-dup star collapse (min vec_id kept), an orthogonal vector
     stays a kept singleton, and the two collapse-ineligible shapes —
     all-zero vectors (cos = 0/0, which DuckDB folds to NULL) and
     NULL embeddings — stay singletons on BOTH engines (the star
     collapse must not invent edges the oracle's cosine never
-    passes).  Cross-engine: the full result hash-matches the staged
+    passes).  Cross-engine: the full result hash-matches the registered
     oracle on this adversarial corpus."""
     import duckdb
 
-    from packages_sgml_spark.spark.queries_staged_r9 import R9_ORACLES
+    from packages_sgml_spark.spark.oracles import ORACLES
     from packages_sgml_spark.spark.similarity import semdedup_keep
-    h = _harness()
+    h = check_correctness
     e1 = [1.0] + [0.0] * 63
     e2 = [0.0, 1.0] + [0.0] * 62
     zero = [0.0] * 64
@@ -455,7 +408,7 @@ def test_semdedup_keep_planted_semantics(spark):
     con.execute(
         "CREATE TABLE embeddings(vec_id BIGINT, embedding DOUBLE[])")
     con.executemany("INSERT INTO embeddings VALUES (?,?)", rows_in)
-    cur = con.execute(R9_ORACLES["semdedup_keep"])
+    cur = con.execute(ORACLES["semdedup_keep"])
     ocols = [d[0] for d in cur.description]
     orows = cur.fetchall()
     srows = [tuple(r) for r in
@@ -467,7 +420,7 @@ def test_semdedup_keep_planted_semantics(spark):
 
 def test_classifier_score_planted_semantics(spark):
     """Hand-computed linear-classifier scores: weights derive from
-    md5 exactly as the staged query builds them, so a small corpus's
+    md5 exactly as the registered query builds them, so a small corpus's
     scores are computable in Python; OOV-only docs score exactly
     sigmoid(bias); empty and NULL docs score sigmoid(bias) with
     n_words=0; and every in-vocab occurrence counts (not distinct
@@ -534,9 +487,9 @@ def test_classifier_score_duplicate_weights_guard(spark):
     assert tuple(want) == tuple(got)
 
 
-def test_randomized_cross_engine_differential(spark):
+def test_randomized_cross_engine_differential(spark, check_correctness):
     """Deterministic pseudo-random corpora (seeded, reproducible)
-    through the FULL driver-exact compare for EVERY staged key,
+    through the FULL driver-exact compare for EVERY r9 key,
     covering shapes the sf tables and planted tests don't braid
     together: mixed case, digits/punctuation tokens, cross-doc
     repeated phrases at random offsets, tab/CRLF whitespace runs,
@@ -549,8 +502,7 @@ def test_randomized_cross_engine_differential(spark):
 
     import duckdb
 
-    from packages_sgml_spark.spark.queries_staged_r9 import R9_QUERIES
-    h = _harness()
+    h = check_correctness
     rng = random.Random(0xC0FFEE)
     vocab = (["the", "And", "data", "X9", "12.5", "web-scale",
               "loss,", "eta!", "Mixed", "case"] +
@@ -611,7 +563,7 @@ def test_randomized_cross_engine_differential(spark):
                     "quality_features_arrow": 40,
                     "shard_assign": 40, "unigram_logprob": 40,
                     "semdedup_keep": 30}
-        for name in sorted(R9_QUERIES) + sorted(UNREGISTERED):
+        for name in sorted(GATED) + sorted(UNREGISTERED):
             query, oracle = _query_and_oracle(name)
             df = query(spark, td)
             cols = df.columns

@@ -86,6 +86,11 @@ def main():
     import __spark_entry__ as E
     from packages_sgml_spark.spark.session import get_spark
 
+    qs = E.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print("unknown query names:", unknown)
+        return 1
     spark = get_spark(cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "16")))
     con = duckdb.connect()
     for t in TABLES:
@@ -94,7 +99,6 @@ def main():
             con.execute(
                 "CREATE VIEW %s AS SELECT * FROM read_parquet('%s')"
                 % (t, p))
-    qs = E.queries()
     oracles = E.oracle_sql()
     failures = []
     for name, fn in qs.items():
