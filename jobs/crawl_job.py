@@ -20,10 +20,14 @@ and always on:
   exact — documents already extracted by the killed run are never
   appended twice.
 
-At crawl scale (~10^5 archives of ~1 GB) the archive manifest is a
-driver-side file list — the normal Spark file-pruning shape — while
-the url-level done-set stays distributed (key-partitioned anti-join,
-no broadcast of 10^12 urls).
+At crawl scale (~10^5 archives of ~1 GB) the archive list and its
+manifest are driver-side metadata, read on the driver: the input is
+listed once per launch (warc.list_archives, a fixed number of py4j
+calls, no Spark job), the manifest is read back with pyarrow
+(checkpoint.read_rows), and the pruned listing plans the scan as it
+stands — on a fresh output the first Spark job of a launch is the
+parse writing the text sink.  The url-level done-set stays
+distributed (key-partitioned anti-join, no broadcast of 10^12 urls).
 """
 
 import argparse
@@ -37,12 +41,12 @@ def run(spark, args):
     returns the summary dict that main() prints."""
     from pyspark.sql import functions as F
 
-    from packages_sgml_spark.spark.warc import (warc_pages,
-                                                warc_todo_paths,
+    from packages_sgml_spark.spark.warc import (warc_pages, warc_todo,
                                                 write_wet_pages)
     from packages_sgml_spark.spark.extract import extract
     from packages_sgml_spark.spark.checkpoint import (
-        append_rows, with_lineage, partition_metrics, resume_filter)
+        append_rows, read_rows, with_lineage, partition_metrics,
+        resume_filter)
 
     out = args.output.rstrip("/")
     archives_path = out + "/archives"
@@ -53,10 +57,11 @@ def run(spark, args):
             read_parquet_or_none
         return read_parquet_or_none(spark, path)
 
-    done_archives = read_or_none(archives_path)
-    if done_archives is None:
-        done_archives = spark.createDataFrame([], "warc_file string")
-    todo = warc_todo_paths(spark, args.input, done_archives)
+    # file-level resume on the driver: the one listing of the input,
+    # pruned by the archive manifest, plans the scan below as it
+    # stands — neither runs a Spark job
+    done = (r[0] for r in read_rows(spark, archives_path, ["warc_file"]))
+    todo = warc_todo(spark, args.input, done)
     summary = {"run_id": args.run_id, "archives": len(todo),
                "docs_new": 0}
     if not todo:
@@ -147,8 +152,11 @@ def run(spark, args):
     # driver writes the rows itself (one parquet part file, renamed
     # into place): the file list is already on the driver, and a
     # createDataFrame write would add a Spark job that re-serializes
-    # it through Python workers
-    append_rows(spark, archives_path, [(p, args.run_id) for p in todo],
+    # it through Python workers.  Only archives the listing saw with
+    # content are recorded: one still being written (zero-length, or
+    # a ._COPYING_ name) was not parsed and stays todo
+    append_rows(spark, archives_path,
+                [(p, args.run_id) for p, _n in todo],
                 "warc_file string, run_id string")
     return summary
 

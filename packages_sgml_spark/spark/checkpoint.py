@@ -90,6 +90,39 @@ def append_rows(spark, path, rows, schema):
     fs.create(Path(root, "_SUCCESS"), True).close()
 
 
+def read_rows(spark, path, columns=None):
+    """The rows (tuples, in column order) of the parquet table at
+    `path`, read by the driver: the twin of append_rows, with no Spark
+    job.  The session's Hadoop FileSystem lists the part files by
+    binaryFile's rules (so `_SUCCESS`, in-flight `_tmp-` parts and
+    `.crc` checksums are skipped) and reads each one; pyarrow decodes
+    it, driver-written and Spark-written parts alike.  A missing sink,
+    or one with no part files (a crashed first write leaves only
+    `_temporary/`), has no rows; any other failure (unreadable or
+    corrupt part) raises, as in read_parquet_or_none."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from .warc import list_archives
+
+    sc = spark.sparkContext
+    Path = sc._jvm.org.apache.hadoop.fs.Path
+    fs = Path(path).getFileSystem(sc._jsc.hadoopConfiguration())
+    if not fs.exists(Path(path)):
+        return []
+    rows = []
+    for uri, _n in list_archives(spark, path):
+        stream = fs.open(Path(uri))
+        try:
+            data = sc._jvm.org.apache.commons.io.IOUtils.toByteArray(
+                stream)
+        finally:
+            stream.close()
+        t = pq.read_table(pa.BufferReader(data), columns=columns)
+        rows += zip(*(c.to_pylist() for c in t.columns))
+    return rows
+
+
 def with_lineage(extracted: DataFrame, run_id: str) -> DataFrame:
     """Tag extraction output with run lineage + partition id."""
     return (extracted

@@ -9,6 +9,13 @@ file independently, and the only exchange in the whole ingest is the
 optional url-hash spread the downstream extract already owns.  Nothing
 here shuffles.
 
+The file list is driver-side metadata, not data: ``list_archives``
+reads it through the session's Hadoop FileSystem in a fixed number of
+py4j calls per listed root (never one per file) and runs no Spark job.
+One listing serves a whole crawl launch — ``warc_todo`` prunes it
+against the done set, and ``read_warc`` plans its scan (and the r8
+range splits) from it without touching the file system again.
+
 Memory: a task holds one compressed file + one decompressed record at
 a time (member-per-record means members decompress individually);
 the 2 GiB JVM byte-array bound on a ``binaryFile`` row comfortably
@@ -24,7 +31,9 @@ returns a manifest frame.  All Python work is Arrow-batched
 ``mapInPandas`` — no per-row UDFs.
 """
 
+import fnmatch
 import os
+import re
 
 import pandas as pd
 
@@ -62,9 +71,7 @@ def _records_frame_iter(path, rec_iter, errors, record_types,
     from ..core.warc import (http_content_type, sniff_charset,
                              split_http_response, to_utf8)
     rows = []
-    fname = path
-    if fname.startswith("file:"):
-        fname = fname[5:]
+    fname = _strip_file(path)
     for rec in rec_iter:
         rtype = rec.type
         if record_types and rtype not in record_types:
@@ -111,6 +118,12 @@ def _records_frame_iter(path, rec_iter, errors, record_types,
     return frame
 
 
+def _strip_file(uri):
+    """``uri`` without its ``file:`` scheme: the path form the
+    ``warc_file`` column and the crawl's archive manifest record."""
+    return uri[5:] if uri.startswith("file:") else uri
+
+
 def _local_path(uri):
     """Locally-openable path for a binaryFile URI, or None (ranged
     reads open the file directly; non-local schemes can't)."""
@@ -124,6 +137,128 @@ def _local_path(uri):
     return None
 
 
+_SEP = "\0"                  # joins path lists crossing py4j: no file
+                             # name can hold it
+_GLOB = re.compile(r"[{}\[\]*?\\]")        # Spark's isGlobPath chars
+_FS_PREFIX = re.compile(r"[A-Za-z][\w+.-]*:(//[^/]*)?")
+_STATUS = re.compile(r"; isDirectory=(true|false)(?:; length=(\d+))?")
+
+
+def _skipped(name):
+    """binaryFile's file-name filter (Spark's
+    ``HadoopFSUtils.shouldFilterOutPathName``): hidden and ``_`` names
+    (``_SUCCESS``, ``.crc`` checksums) and in-flight ``._COPYING_``
+    copies, bar parquet metadata files and ``_k=v`` directories."""
+    skip = ((name.startswith("_") and "=" not in name) or
+            name.startswith(".") or name.endswith("._COPYING_"))
+    return skip and not name.startswith(("_common_metadata",
+                                         "_metadata"))
+
+
+def _jstrings(jvm, strings):
+    """``strings`` as a Java String[] in a fixed number of py4j calls
+    (a Python list crosses py4j one call per element)."""
+    return jvm.java.util.regex.Pattern.compile(_SEP).split(
+        _SEP.join(strings))
+
+
+def _statuses(jvm, statuses):
+    """A Java FileStatus[] as [(path, length, is_dir)], read back as
+    two joined strings: the paths, and the statuses' ``toString``,
+    which every Hadoop 3 FileStatus starts with
+    ``{path=<path>; isDirectory=<b>[; length=<n>]``."""
+    seq = jvm.scala.collection.mutable.ArraySeq
+    paths = seq.make(jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(
+        statuses)).mkString(_SEP)
+    if not paths:
+        return []
+    out = []
+    for p, text in zip(paths.split(_SEP),
+                       seq.make(statuses).mkString(_SEP).split(_SEP)):
+        at = text.find("{path=" + p)
+        m = _STATUS.match(text, at + 6 + len(p)) if at >= 0 else None
+        if m is None:
+            raise ValueError("unrecognised FileStatus: %s" % text)
+        out.append((p, int(m.group(2) or 0), m.group(1) == "true"))
+    return out
+
+
+def list_archives(spark, path):
+    """The files a ``binaryFile`` load of ``path`` (a path, glob or
+    list of them) reads, as [(uri, length)] — listed on the driver
+    through the session's Hadoop FileSystem, with no Spark job.
+
+    binaryFile's rules: a glob stands for its matches; a directory
+    for the files directly inside it (subdirectories are not descended
+    into); names ``_skipped`` filters and zero-length files (an archive
+    still being created) are left out; a missing path, or a glob
+    matching nothing, raises FileNotFoundError.  ``uri`` is the
+    qualified path binaryFile reports in its ``path`` column.
+
+    py4j calls: a fixed number per file system plus per glob, however
+    many files there are — the listing crosses as joined strings."""
+    from py4j.protocol import Py4JJavaError
+    sc = spark.sparkContext
+    jvm = sc._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    by_fs = {}
+    for p in [path] if isinstance(path, str) else path:
+        m = _FS_PREFIX.match(p)
+        by_fs.setdefault(m.group(0) if m else "", []).append(p)
+    out = []
+    for roots in by_fs.values():
+        fs = Path(roots[0]).getFileSystem(sc._jsc.hadoopConfiguration())
+        expanded = []
+        for root in roots:
+            if not _GLOB.search(root):
+                expanded.append(root)
+                continue
+            matches = fs.globStatus(Path(root))
+            if not matches:
+                raise FileNotFoundError("Path does not exist: " + root)
+            expanded += [p for p, _n, _d in _statuses(jvm, matches)]
+        try:
+            listed = fs.listStatus(
+                jvm.org.apache.hadoop.util.StringUtils.stringToPath(
+                    _jstrings(jvm, expanded)))
+        except Py4JJavaError as ex:
+            if "java.io.FileNotFoundException" not in str(ex):
+                raise
+            raise FileNotFoundError(
+                str(ex.java_exception.getMessage())) from None
+        for p, length, is_dir in _statuses(jvm, listed):
+            name = p.rsplit("/", 1)[-1]
+            if _skipped(name):
+                continue
+            if is_dir and "=" in name:
+                # binaryFile would read a key=value layout as a
+                # partition column; refuse it rather than drop files
+                raise ValueError("partition directory %s: list its "
+                                 "files instead" % p)
+            if not is_dir and length:
+                out.append((p, length))
+    return out
+
+
+def _listing(spark, path):
+    """A ``list_archives`` listing of ``path``; a listing passed in
+    (a list of (path, length) pairs) is returned as it stands."""
+    if (isinstance(path, (list, tuple)) and path and
+            not isinstance(path[0], str)):
+        return list(path)
+    return list_archives(spark, path)
+
+
+def _binary_files(spark, paths):
+    """``binaryFile`` over an explicit file list, handed to the JVM as
+    one string (``load(list)`` crosses py4j once per path)."""
+    jvm = spark.sparkContext._jvm
+    seq = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(
+        _jstrings(jvm, paths))
+    return DataFrame(
+        spark._jsparkSession.read().format("binaryFile").load(seq), spark)
+
+
 SPLIT_BYTES = 1536 << 20     # archives larger than this split into
 RANGE_BYTES = 512 << 20      # member-aligned ranges of this size —
                              # the 2 GiB JVM byte-array bound on a
@@ -133,10 +268,16 @@ RANGE_BYTES = 512 << 20      # member-aligned ranges of this size —
 def read_warc(spark, path, record_types=("response",),
               transcode=False, split_bytes=SPLIT_BYTES,
               range_bytes=RANGE_BYTES):
-    """WARC archive(s) at ``path`` (glob ok; ``.warc`` or ``.warc.gz``)
-    -> WARC_SCHEMA DataFrame.  One task per archive file; no shuffle.
+    """WARC archive(s) at ``path`` (a path, glob or list of them, or a
+    ``list_archives`` listing; ``.warc`` or ``.warc.gz``) ->
+    WARC_SCHEMA DataFrame.  One task per archive file; no shuffle.
     ``record_types`` filters records in the scan (None = all types);
     malformed content lands in ``x-parse-errors`` rows, never raises.
+
+    The scan is planned from the file listing (paths + sizes, no
+    content) on the driver, with no Spark job: a path is listed once
+    with ``list_archives``; a listing is used as it stands, so a
+    crawl that already listed its archives stats none of them again.
 
     Oversized archives (r8): ``.warc.gz`` files larger than
     ``split_bytes`` are read as MULTIPLE ``range_bytes`` tasks — each
@@ -144,12 +285,10 @@ def read_warc(spark, path, record_types=("response",),
     member and parses every member starting inside the range
     (core.warc.iter_warc_records_file_range; a member straddling the
     range end belongs to the task holding its first byte, so ranges
-    tile the archive exactly).  The file list (paths + sizes only, no
-    content) is enumerated at plan time like ``warc_todo_paths``.
-    Ranged tasks open the file directly, so they need a
-    locally-readable path (``file:`` URI or mounted FS) — plain
-    ``.warc`` files and non-local schemes keep the single-task
-    binaryFile path and its documented 2 GiB row bound.
+    tile the archive exactly).  Ranged tasks open the file directly,
+    so they need a locally-readable path (``file:`` URI or mounted
+    FS) — plain ``.warc`` files and non-local schemes keep the
+    single-task binaryFile path and its documented 2 GiB row bound.
 
     ``transcode=True`` normalizes response payloads to UTF-8 in the
     same scan (charset = BOM > HTTP header > WHATWG meta prescan >
@@ -165,18 +304,20 @@ def read_warc(spark, path, record_types=("response",),
                 yield _records_frame(path_, content, rtypes,
                                      transcode)
 
-    listing = (spark.read.format("binaryFile").load(path)
-               .select("path", "length").collect())
-    big = [(r.path, int(r.length)) for r in listing
-           if r.length > split_bytes and r.path.endswith(".gz") and
-           _local_path(r.path) is not None]
+    listing = _listing(spark, path)
+    big = [(p, n) for p, n in listing
+           if n > split_bytes and p.endswith(".gz") and
+           _local_path(p) is not None]
+    big_set = {p for p, _n in big}
+    small = [p for p, _n in listing if p not in big_set]
+    out = None
+    if small:
+        out = (_binary_files(spark, small).select("path", "content")
+               .mapInPandas(fn, schema=WARC_SCHEMA))
     if not big:
-        src = (spark.read.format("binaryFile").load(path)
-               .select("path", "content"))
-        return src.mapInPandas(fn, schema=WARC_SCHEMA)
+        return out if out is not None else \
+            spark.createDataFrame([], WARC_SCHEMA)
 
-    big_set = {p for p, _l in big}
-    small = [r.path for r in listing if r.path not in big_set]
     tasks = []
     for p, length in big:
         s = 0
@@ -202,11 +343,7 @@ def read_warc(spark, path, record_types=("response",),
                   tasks, "path string, start long, end long")
               .repartition(len(tasks))
               .mapInPandas(range_fn, schema=WARC_SCHEMA))
-    if not small:
-        return ranged
-    src = (spark.read.format("binaryFile").load(small)
-           .select("path", "content"))
-    return src.mapInPandas(fn, schema=WARC_SCHEMA).unionByName(ranged)
+    return ranged if out is None else out.unionByName(ranged)
 
 
 def warc_pages(spark, path, statuses=(200,),
@@ -267,22 +404,25 @@ def stream_warc(spark, input_dir, record_types=("response",),
     return src.mapInPandas(fn, schema=WARC_SCHEMA)
 
 
-def warc_todo_paths(spark, path, done: DataFrame):
-    """Batch-mode file-level resume: archive paths under ``path``
-    minus the processed set (``done`` needs a warc_file column — the
-    read_warc output or the write manifest read back).  Returns a
-    driver-side list of paths for binaryFile's multi-path load — a
-    file MANIFEST (one row per archive, ~10^5 per crawl), not data,
-    so collecting it is the normal Spark file-pruning pattern; the
-    pruning must happen at plan time to skip the parse entirely."""
-    files = (spark.read.format("binaryFile")
-             .option("pathGlobFilter", "*.warc*")
-             .load(path)
-             .select(F.regexp_replace("path", "^file:", "")
-                     .alias("warc_file")))
-    todo = files.join(done.select("warc_file").distinct(),
-                      "warc_file", "left_anti")
-    return [r.warc_file for r in todo.collect()]
+def warc_todo(spark, path, done=()):
+    """Batch-mode file-level resume: the ``*.warc*`` archives of
+    ``path`` (a path, glob or list of them, or a ``list_archives``
+    listing) minus ``done`` (the processed ``warc_file`` paths — the
+    crawl's archive manifest read back), as a listing of
+    (``file:``-stripped path, length) that ``read_warc`` and
+    ``warc_pages`` take as it stands.  A file MANIFEST (one entry per
+    archive, ~10^5 per crawl), not data: it is listed and pruned on
+    the driver with no Spark job, at plan time, so done archives are
+    never parsed."""
+    done = set(done)
+    todo = ((_strip_file(p), n) for p, n in _listing(spark, path)
+            if fnmatch.fnmatchcase(p.rsplit("/", 1)[-1], "*.warc*"))
+    return [(p, n) for p, n in todo if p not in done]
+
+
+def warc_todo_paths(spark, path, done=()):
+    """The paths of ``warc_todo(spark, path, done)``."""
+    return [p for p, _n in warc_todo(spark, path, done)]
 
 
 WRITE_MANIFEST_SCHEMA = StructType([

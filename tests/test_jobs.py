@@ -139,6 +139,45 @@ def test_crawl_job_url_resume_after_partial_write(spark, tmp_path):
     assert text.count() == 2          # still exactly one row per doc
 
 
+def test_crawl_job_never_records_archive_in_flight(spark, tmp_path):
+    """An archive still being written — created but empty, or landing
+    under a ._COPYING_ name — is neither todo nor recorded as done;
+    once it is complete, the next run extracts its records."""
+    import crawl_job
+    from packages_sgml_spark.spark.checkpoint import read_rows
+    from packages_sgml_spark.spark.warc import warc_todo_paths
+    land = tmp_path / "warc"
+    land.mkdir()
+    out = str(tmp_path / "sink")
+    _write_archive(land / "c-00000.warc.gz", DOCS1)
+    (land / "c-00001.warc.gz").write_bytes(b"")
+    _write_archive(land / "c-00002.warc.gz._COPYING_", DOCS2)
+    assert [os.path.basename(p) for p in
+            warc_todo_paths(spark, str(land))] == ["c-00000.warc.gz"]
+    s1 = crawl_job.run(spark, _args(input=str(land), output=out,
+                                    run_id="r1"))
+    assert s1["archives"] == 1 and s1["docs_new"] == 2
+    assert [os.path.basename(r[0]) for r in
+            read_rows(spark, out + "/archives")] == ["c-00000.warc.gz"]
+
+    # both finish landing
+    _write_archive(land / "c-00001.warc.gz",
+                   [("https://j.example/4", "2026-01-01T00:00:04Z",
+                     b"<html><p>delta</html>")])
+    os.rename(land / "c-00002.warc.gz._COPYING_",
+              land / "c-00002.warc.gz")
+    s2 = crawl_job.run(spark, _args(input=str(land), output=out,
+                                    run_id="r2"))
+    assert s2["archives"] == 2 and s2["docs_new"] == 2
+    assert sorted(r.url for r in
+                  spark.read.parquet(out + "/text").collect()) == [
+        "https://j.example/1", "https://j.example/2",
+        "https://j.example/3", "https://j.example/4"]
+    assert sorted(os.path.basename(r[0]) for r in
+                  read_rows(spark, out + "/archives")) == [
+        "c-00000.warc.gz", "c-00001.warc.gz", "c-00002.warc.gz"]
+
+
 @pytest.mark.slow
 def test_spark_submit_py_files_launch(tmp_path):
     """The real launch mode: a fresh spark-submit JVM, package code
@@ -353,6 +392,45 @@ def test_append_rows_matches_spark_write(spark, tmp_path, manifest):
         assert not [n for n in names if "_tmp" in n], names
     assert len([n for n in os.listdir(spark_dir)
                 if n.endswith(".parquet")]) == 2
+
+
+def test_read_rows_reads_back_every_part(spark, tmp_path):
+    """read_rows is append_rows' twin: no sink, or a sink with no part
+    files, has no rows; driver-written and Spark-written parts read
+    back together (a manifest from an older run still resumes); a
+    corrupt part raises instead of reading as "nothing done"; and no
+    Spark job runs."""
+    from packages_sgml_spark.spark.checkpoint import (append_rows,
+                                                      read_rows)
+    ddl, rows = MANIFESTS["archives"]
+    sink = str(tmp_path / "archives")
+    crashed = tmp_path / "crashed"
+    (crashed / "_temporary" / "0").mkdir(parents=True)
+    spark.createDataFrame(rows[:1], ddl).coalesce(1) \
+        .write.mode("append").parquet(sink)
+
+    sc = spark.sparkContext
+    group = "read-rows"
+    sc.setJobGroup(group, "read_rows must not run a job")
+    try:
+        assert read_rows(spark, str(tmp_path / "missing")) == []
+        assert read_rows(spark, str(crashed)) == []
+        append_rows(spark, sink, rows[1:], ddl)
+        got = read_rows(spark, sink)
+        assert read_rows(spark, sink, ["warc_file"]) == [
+            (r[0],) for r in got]
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted(got, key=str) == sorted(rows, key=str)
+    assert sorted(got, key=str) == sorted(
+        (tuple(r) for r in spark.read.parquet(sink).collect()), key=str)
+
+    (tmp_path / "archives" / "part-99999-junk.snappy.parquet") \
+        .write_bytes(b"not a parquet file")
+    import pyarrow as pa
+    with pytest.raises(pa.ArrowInvalid):
+        read_rows(spark, sink)
 
 
 def _curate_args(**kw):

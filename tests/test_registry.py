@@ -144,3 +144,35 @@ def test_check_correctness_rejects_unknown_query(check_correctness,
     assert check_correctness.main() == 1
     assert "unknown query names: ['dedup_component']" in \
         capsys.readouterr().out
+
+
+def test_check_correctness_gates_its_own_checkout(tmp_path, monkeypatch,
+                                                  capsys):
+    """The tool gates the registry of the checkout it runs from, so a
+    second tree (an A/B copy) is checked against its own queries."""
+    import importlib.util
+    import json
+    import shutil
+    (tmp_path / "tools").mkdir()
+    tool = tmp_path / "tools" / "check_correctness.py"
+    shutil.copy(os.path.join(REPO, "tools", "check_correctness.py"), tool)
+    (tmp_path / "__spark_entry__.py").write_text(
+        "def queries():\n    return {'stub_only_query': None}\n\n\n"
+        "def oracle_sql():\n    return {}\n")
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    monkeypatch.delitem(sys.modules, "__spark_entry__", raising=False)
+    spec = importlib.util.spec_from_file_location("cc_copy", tool)
+    m = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(m)
+
+    monkeypatch.setattr(sys, "argv", [
+        str(tool), "/root/testdata/sf0.001", "stub_only_query",
+        "not_a_query"])
+    assert m.main() == 1                   # before any SparkSession
+    assert "unknown query names: ['not_a_query']" in \
+        capsys.readouterr().out
+    verdicts = tmp_path / "CORRECTNESS.json"
+    verdicts.write_text(json.dumps({"stub_only_query":
+                                    {"err": "no_oracle"}}))
+    assert m.reconcile(str(verdicts)) == 0
+    assert "registry: 1 queries" in capsys.readouterr().out

@@ -343,18 +343,138 @@ def test_warc_todo_paths(spark, archive_dir):
         warc_todo_paths
     path, _docs = archive_dir
     glob = str(path) + "/*.warc*"
-    empty = spark.createDataFrame([], "warc_file string")
+    empty = []
     todo0 = warc_todo_paths(spark, glob, empty)
     assert sorted(os.path.basename(p) for p in todo0) == \
         ["crawl-00000.warc.gz", "crawl-00001.warc"]
     # mark the first archive done via its own read output
-    done = read_warc(spark, todo0[0]).select("warc_file")
+    done = [r.warc_file for r in
+            read_warc(spark, todo0[0]).select("warc_file").collect()]
     todo1 = warc_todo_paths(spark, glob, done)
     assert [os.path.basename(p) for p in todo1] == \
         [os.path.basename(p) for p in todo0 if p != todo0[0]]
     # the returned paths load directly
     assert read_warc(spark, todo1[0] if len(todo1) == 1 else todo1
                      ).count() > 0
+
+
+def _listing_tree(root):
+    """A landing directory holding everything binaryFile leaves out
+    or keeps: commit markers, checksums, an in-flight copy, an empty
+    (still being created) archive, a non-WARC file and nested
+    directories."""
+    files = {
+        "a.warc.gz": b"a" * 30, "b.warc": b"b" * 7, "notes.txt": b"n",
+        "sp ace.warc.gz": b"s" * 3, "_SUCCESS": b"", "_x.warc.gz": b"xx",
+        ".a.warc.gz.crc": b"crc", "c.warc.gz._COPYING_": b"c" * 9,
+        "zero.warc.gz": b"", "sub/d.warc.gz": b"d" * 11,
+        "sub/_e.warc": b"e", "sub/deeper/f.warc.gz": b"f" * 4,
+        "_hidden/g.warc": b"g" * 5,
+    }
+    for rel, data in files.items():
+        f = root / rel
+        f.parent.mkdir(parents=True, exist_ok=True)
+        f.write_bytes(data)
+    return root
+
+
+LISTING_INPUTS = {
+    "directory": lambda r: str(r),
+    "glob": lambda r: str(r) + "/*",
+    "warc-glob": lambda r: str(r) + "/*.warc*",
+    "list": lambda r: [str(r / "a.warc.gz"), str(r / "_x.warc.gz"),
+                       str(r / "zero.warc.gz"), str(r / "sub"),
+                       "file:" + str(r / "b.warc"),
+                       str(r / "c.warc.gz._COPYING_")],
+    "subdirectory": lambda r: str(r / "sub"),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(LISTING_INPUTS))
+def test_list_archives_matches_binaryfile(spark, tmp_path, shape):
+    """The driver listing is exactly the (path, length) set a
+    binaryFile load of the same input reads."""
+    from packages_sgml_spark.spark.warc import list_archives
+    arg = LISTING_INPUTS[shape](_listing_tree(tmp_path))
+    want = sorted(tuple(r) for r in spark.read.format("binaryFile")
+                  .load(arg).select("path", "length").collect())
+    assert sorted(list_archives(spark, arg)) == want
+    assert want
+
+
+def test_list_archives_missing_path(spark, tmp_path):
+    from packages_sgml_spark.spark.warc import list_archives
+    for arg in (str(tmp_path / "nope"), str(tmp_path / "*.nope"),
+                [str(tmp_path), str(tmp_path / "nope")]):
+        with pytest.raises(FileNotFoundError):
+            list_archives(spark, arg)
+    assert list_archives(spark, str(tmp_path)) == []
+
+
+def test_warc_todo_and_pages_build_run_no_job(spark, archive_dir):
+    """File-level resume and the scan plan come from the driver
+    listing: pruning the archives and building warc_pages over the
+    todo listing launch no Spark job."""
+    from packages_sgml_spark.spark.warc import (list_archives,
+                                                warc_pages, warc_todo,
+                                                warc_todo_paths)
+    path, docs = archive_dir
+    listing = list_archives(spark, str(path))
+    sc = spark.sparkContext
+    group = "warc-todo-no-job"
+    sc.setJobGroup(group, "listing and planning must not run a job")
+    try:
+        todo = warc_todo_paths(spark, str(path), ["/elsewhere.warc"])
+        pages = warc_pages(spark, warc_todo(spark, listing))
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        # the tracker does see jobs of this group
+        n = pages.count()
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(todo) == 2 and n == len(docs)
+
+
+def _count_py4j_calls(spark, fn):
+    """py4j round trips made by fn(), bar the memory ("m") commands
+    py4j sends whenever Python garbage-collects a Java proxy."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(command, *a, **kw):
+        calls.append(not command.startswith("m\n"))
+        return send(command, *a, **kw)
+
+    client.send_command = counting
+    try:
+        fn()
+    finally:
+        client.send_command = send
+    return sum(calls)
+
+
+def test_listing_py4j_calls_do_not_grow_with_files(spark, tmp_path):
+    """Listing a directory, pruning it and building the scan over the
+    listing cross py4j a fixed number of times, however many archives
+    there are (one call per file costs minutes at 10^5 archives)."""
+    from packages_sgml_spark.spark.warc import (list_archives,
+                                                warc_pages, warc_todo)
+
+    def calls(n):
+        root = tmp_path / str(n)
+        root.mkdir()
+        for i in range(n):
+            (root / ("c-%03d.warc.gz" % i)).write_bytes(b"x")
+
+        def run():
+            listing = list_archives(spark, str(root))
+            assert len(listing) == n
+            warc_pages(spark, warc_todo(spark, listing))
+        run()                                 # warm the JVM views
+        return _count_py4j_calls(spark, run)
+
+    assert calls(3) == calls(30)
 
 
 def test_warc_reader_mutation_fuzz():

@@ -48,7 +48,6 @@ def reconcile(correctness_path):
 
     Usage: python tools/check_correctness.py --reconcile FILE.json"""
     import json
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as E
     got = json.load(open(correctness_path))
     want = set(E.queries())
@@ -82,7 +81,6 @@ def main():
         return reconcile(sys.argv[2])
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as E
     from packages_sgml_spark.spark.session import get_spark
 

@@ -6,7 +6,12 @@ the WHOLE pipeline, not just the parse stage.
 
     PYTHONPATH=. python3 tools/scale_crawl.py [n_archives] [docs_per]
 
-Writes nothing outside a temp dir; prints one JSON line.
+Writes nothing outside a temp dir; prints one JSON line.  `stage_s`
+splits each size's best run per sink — text, metrics, archives — by
+the rule tools/scale_curate.py and perfbench use: a stage ends when
+its sink's `_SUCCESS` marker is written and starts when the previous
+one ended (the first starts with the job), so `text` also carries the
+planning before the parse.
 """
 
 import json
@@ -43,9 +48,15 @@ def make_archives(root, n_archives=48, docs_per=600):
     return total
 
 
+STAGES = ("text", "metrics", "archives")
+
+
 def run_once(cpus, warc_dir, out_dir):
+    """One crawl_job run on a fresh local[cpus] session; returns
+    (wall seconds, summary, stage seconds)."""
     import argparse
     from packages_sgml_spark.spark.session import get_spark
+    from tools.scale_curate import stage_times
     import crawl_job
     spark = get_spark(app="scale-crawl-%d" % cpus, cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
@@ -57,7 +68,7 @@ def run_once(cpus, warc_dir, out_dir):
     summary = crawl_job.run(spark, args)
     dt = time.time() - t0
     spark.stop()
-    return dt, summary
+    return dt, summary, stage_times(out_dir, t0, STAGES)
 
 
 def main():
@@ -72,17 +83,18 @@ def main():
     try:
         warc_dir = os.path.join(tmp, "warc")
         raw = make_archives(warc_dir, n_archives, docs_per)
-        results = {}
+        results, stages = {}, {}
         # interleave twice, keep best of each (co-tenant noise)
         for cpus in (n_lo, n_hi, n_lo, n_hi):
             out = os.path.join(tmp, "out-%d-%d" % (cpus,
                                                    len(results)))
-            dt, summary = run_once(cpus, warc_dir, out)
+            dt, summary, stage_s = run_once(cpus, warc_dir, out)
             assert summary["docs_new"] == n_archives * docs_per, \
                 summary
             cur = results.get(cpus)
             if cur is None or dt < cur:
                 results[cpus] = dt
+                stages[str(cpus)] = stage_s
             shutil.rmtree(out, ignore_errors=True)
         eff = results[n_lo] / (4 * results[n_hi])
         print(json.dumps({
@@ -93,6 +105,7 @@ def main():
             "n_docs": n_archives * docs_per,
             "raw_mb": round(raw / 1e6, 1),
             "sec": {str(k): round(v, 2) for k, v in results.items()},
+            "stage_s": stages,
             "mb_per_sec": {str(k): round(raw / 1e6 / v, 1)
                            for k, v in results.items()},
         }))

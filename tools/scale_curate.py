@@ -80,10 +80,10 @@ def _mk_docs(spark, n_docs):
 STAGES = ("decisions", "clean", "shards", "metrics")
 
 
-def stage_times(out, start):
-    """Seconds per curate stage, from each sink's _SUCCESS mtime."""
+def stage_times(out, start, stages=STAGES):
+    """Seconds per stage, from each stage sink's _SUCCESS mtime."""
     times, prev = {}, start
-    for stage in STAGES:
+    for stage in stages:
         t = os.stat(os.path.join(out, stage, "_SUCCESS")).st_mtime
         times[stage] = round(t - prev, 2)
         prev = t
