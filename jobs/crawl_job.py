@@ -5,12 +5,23 @@ spark-submit launch:
     spark-submit --py-files packages_sgml_spark.zip \
         jobs/crawl_job.py --input <warc_dir_or_glob> \
         --output <sink_dir> [--run-id run42] [--dialect html5] \
-        [--wet] [--statuses 200]
+        [--wet] [--quality] [--statuses 200]
 
 WARC archives in -> pages shape (WET-style UTF-8 normalization) ->
-text extraction with parse-error metrics -> parquet text sink +
-per-partition metrics sidecar [+ WET archives].  Resume is two-level
-and always on:
+text extraction with parse-error metrics [and the quality features]
+in one Python pass per page -> parquet text sink + per-partition
+metrics sidecar [+ per-url quality sidecar] [+ WET archives].
+
+The parse runs once: its rows are materialized by one eager
+localCheckpoint to disk, and every sink is written from those rows,
+in the order text -> metrics -> quality -> WET -> archive manifest.
+`docs_new` and the metrics sidecar count exactly the rows this launch
+wrote, never a re-read of a sink.  The checkpoint, not a persist(),
+also cuts the rows' lineage to the text sink they were resumed
+against: Spark re-caches a persisted plan over a path when that path
+is written, which would re-run the anti-join against the new sink.
+
+Resume is two-level and always on:
 
 - file level: archives recorded in <output>/archives (appended only
   AFTER the text write commits) are pruned from the next run's input
@@ -18,16 +29,19 @@ and always on:
   archives;
 - url level: an anti-join against the text sink makes the re-read
   exact — documents already extracted by the killed run are never
-  appended twice.
+  appended twice.  The quality sidecar resumes the same way: text
+  rows of earlier launches with no quality row are sided in this
+  launch's quality write.
 
 At crawl scale (~10^5 archives of ~1 GB) the archive list and its
 manifest are driver-side metadata, read on the driver: the input is
 listed once per launch (warc.list_archives, a fixed number of py4j
 calls, no Spark job), the manifest is read back with pyarrow
-(checkpoint.read_rows), and the pruned listing plans the scan as it
-stands — on a fresh output the first Spark job of a launch is the
-parse writing the text sink.  The url-level done-set stays
-distributed (key-partitioned anti-join, no broadcast of 10^12 urls).
+(checkpoint.read_rows), the sinks resumed against are read with their
+known columns (no schema-inference job), and the pruned listing plans
+the scan as it stands — the first Spark job of a launch is the parse.
+The url-level done-set stays distributed (key-partitioned anti-join,
+no broadcast of 10^12 urls).
 """
 
 import argparse
@@ -39,23 +53,21 @@ import time
 def run(spark, args):
     """Body, session-injected so tests and notebooks can drive it;
     returns the summary dict that main() prints."""
-    from pyspark.sql import functions as F
+    from pyspark import StorageLevel
+    from pyspark.sql import Observation, functions as F
 
+    from packages_sgml_spark.core.quality import FIELDS
     from packages_sgml_spark.spark.warc import (warc_pages, warc_todo,
                                                 write_wet_pages)
-    from packages_sgml_spark.spark.extract import extract
+    from packages_sgml_spark.spark.extract import extract_text_quality
     from packages_sgml_spark.spark.checkpoint import (
-        append_rows, read_rows, with_lineage, partition_metrics,
-        resume_filter)
+        METRICS_DDL, append_rows, read_rows, read_parquet_or_none,
+        with_lineage, partition_metrics, resume_filter)
 
     out = args.output.rstrip("/")
     archives_path = out + "/archives"
     text_path = out + "/text"
-
-    def read_or_none(path):
-        from packages_sgml_spark.spark.checkpoint import \
-            read_parquet_or_none
-        return read_parquet_or_none(spark, path)
+    quality_path = out + "/quality"
 
     # file-level resume on the driver: the one listing of the input,
     # pruned by the archive manifest, plans the scan below as it
@@ -70,77 +82,72 @@ def run(spark, args):
     statuses = tuple(int(s) for s in args.statuses.split(",")) \
         if args.statuses else ()
     pages = warc_pages(spark, todo, statuses=statuses)
-    done_text = read_or_none(text_path)
+    # the text sink as it stands before this launch writes to it,
+    # read with the columns it is known to have (no inference job);
+    # its file listing is taken here, so the quality repair below
+    # never sees this launch's own text rows
+    done_text = read_parquet_or_none(
+        spark, text_path, "url string, text_extracted string")
     if done_text is not None:
         pages = resume_filter(pages, done_text)
 
     rep = args.repartition
     if rep != "auto":
         rep = int(rep)
-    ex = extract(pages, dialect=args.dialect, nodes=False,
-                 repartition=rep,
-                 text_format=getattr(args, "text_format", "plain"))
-    tagged = with_lineage(ex, args.run_id)
-    tagged.select("url", "url_hash", "text_extracted", "n_errors",
-                  "html_bytes", "status", "run_id", "partition_id") \
-          .write.mode("append").parquet(text_path)
+    ex = extract_text_quality(
+        pages, dialect=args.dialect, repartition=rep,
+        text_format=getattr(args, "text_format", "plain"),
+        quality=args.quality)
+    rows = with_lineage(ex, args.run_id).localCheckpoint(
+        eager=True, storageLevel=StorageLevel.DISK_ONLY)
 
-    this_run = spark.read.parquet(text_path) \
-        .filter(F.col("run_id") == args.run_id)
-    partition_metrics(this_run).write.mode("append") \
-        .parquet(out + "/metrics")
-    summary["docs_new"] = this_run.count()
+    rows.select("url", "url_hash", "text_extracted", "n_errors",
+                "html_bytes", "status", "run_id", "partition_id") \
+        .write.mode("append").parquet(text_path)
+
+    # one row per partition: collected and committed by the driver
+    metrics = partition_metrics(rows).collect()
+    append_rows(spark, out + "/metrics", metrics, METRICS_DDL)
+    summary["docs_new"] = sum(m.docs for m in metrics)
 
     if args.quality:
         # doc-level corpus filters over the fresh extractions:
         # Gopher quality rules + C4 line cleaning + stopword lang-id,
-        # one sidecar row per url.  The Python kernel form: this job
-        # already runs Python workers for the parse, so one
-        # mapInArrow pass costs less than the JVM projection's
-        # higher-order-function lambdas, which do not codegen and
-        # are JIT-compiled anew in every launch.  Values equal
-        # quality_features (tests/test_quality_fused.py,
-        # tests/test_jobs.py)
-        from packages_sgml_spark.spark.textops import \
-            quality_features_arrow
-        # url-level resume for the sidecar itself: quality rows are
-        # produced for text rows that don't have one yet, NOT for
-        # this_run — a crash between the text and quality commits
-        # (or a same-run-id rerun) would otherwise leave urls
-        # permanently unsided or doubly-sided
-        todo_q = spark.read.parquet(text_path)
-        done_q = read_or_none(out + "/quality")
-        if done_q is not None:
-            todo_q = todo_q.join(done_q.select("url"), "url",
-                                 "left_anti")
-        # repartition ONCE so the quality pass's internal spread
-        # no-ops (r7 history: three separate spreads shuffled the
-        # text column three times; r8's single projection would need
-        # no shuffle at all, but the explicit url-hash repartition
-        # stays — it is the north rule's skew leveller for the
-        # CPU-heavy filter pass)
-        docs = (todo_q.select(F.col("url").alias("doc_id"),
-                              F.col("text_extracted").alias("text"))
-                .repartition(spark.sparkContext.defaultParallelism,
-                             "doc_id"))
-        quality = (quality_features_arrow(docs)
-                   .withColumnRenamed("doc_id", "url")
-                   .withColumn("run_id", F.lit(args.run_id)))
-        quality.write.mode("append").parquet(out + "/quality")
-        # count from the WRITTEN sink: re-executing the join plan
-        # would double the whole quality stage
-        summary["docs_pass_quality"] = (
-            spark.read.parquet(out + "/quality")
-            .where((F.col("run_id") == args.run_id) &
-                   (F.col("gopher_pass") == 1) &
-                   (F.col("c4_keep") == 1)).count())
+        # one sidecar row per url.  The features came out of the
+        # parse pass (core.quality.features on each extracted text),
+        # so the fresh rows need no second Python pass and no
+        # shuffle
+        quality = rows.select("url", *(name for name, _ in FIELDS),
+                              "run_id")
+        if done_text is not None:
+            # url-level resume for the sidecar itself: text rows of
+            # earlier launches without a quality row (a crash between
+            # the text and quality commits) are sided in this write,
+            # by the same kernel in its own mapInArrow
+            from packages_sgml_spark.spark.textops import \
+                quality_features_arrow
+            orphans = done_text
+            done_q = read_parquet_or_none(spark, quality_path,
+                                          "url string")
+            if done_q is not None:
+                orphans = orphans.join(done_q, "url", "left_anti")
+            quality = quality.unionByName(
+                quality_features_arrow(
+                    orphans.select(F.col("url").alias("doc_id"),
+                                   F.col("text_extracted")
+                                   .alias("text")))
+                .withColumnRenamed("doc_id", "url")
+                .withColumn("run_id", F.lit(args.run_id)))
+        passed = Observation()
+        quality.observe(passed, F.count_if(
+            (F.col("gopher_pass") == 1) & (F.col("c4_keep") == 1))
+            .alias("n")).write.mode("append").parquet(quality_path)
+        summary["docs_pass_quality"] = passed.get["n"]
 
     if args.wet:
-        wet_pages = (this_run
-                     .select("url",
-                             F.lit(None).cast("timestamp")
-                             .alias("warc_ts"),
-                             F.col("text_extracted").alias("text")))
+        wet_pages = rows.select(
+            "url", F.lit(None).cast("timestamp").alias("warc_ts"),
+            F.col("text_extracted").alias("text"))
         manifest = write_wet_pages(wet_pages, out + "/wet",
                                    prefix="wet-" + args.run_id)
         summary["wet_records"] = sum(

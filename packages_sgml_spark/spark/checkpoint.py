@@ -19,8 +19,10 @@ import time
 from pyspark.sql import DataFrame, functions as F
 
 
-def read_parquet_or_none(spark, path):
+def read_parquet_or_none(spark, path, schema=None):
     """Read a sink that may not exist yet; None means "first run".
+    With `schema` (a DDL string of the columns wanted) the read takes
+    it as given: no schema-inference Spark job.
 
     Only a genuinely-missing or genuinely-empty sink qualifies —
     PATH_NOT_FOUND / "Path does not exist" for missing,
@@ -34,8 +36,9 @@ def read_parquet_or_none(spark, path):
     hand-maintained copies of this three-string match would drift
     on the next Spark error-class rename)."""
     from pyspark.errors import AnalysisException
+    reader = spark.read if schema is None else spark.read.schema(schema)
     try:
-        return spark.read.parquet(path)
+        return reader.parquet(path)
     except AnalysisException as ex:
         msg = str(ex)
         if ("PATH_NOT_FOUND" not in msg
@@ -129,6 +132,15 @@ def with_lineage(extracted: DataFrame, run_id: str) -> DataFrame:
             .withColumn("run_id", F.lit(run_id))
             .withColumn("partition_id", F.spark_partition_id())
             .withColumn("url_hash", F.xxhash64("url")))
+
+
+# the metrics sidecar's columns as the crawl job has always stored
+# them: partition_metrics over the text sink read back, so the group
+# keys are nullable and only the count is NOT NULL
+METRICS_DDL = ("run_id string, partition_id int, docs bigint not null, "
+               "bytes bigint, parse_errors bigint, failed_docs bigint, "
+               "url_hash_min bigint, url_hash_max bigint, "
+               "updated_at_ms bigint")
 
 
 def partition_metrics(tagged: DataFrame) -> DataFrame:

@@ -29,8 +29,8 @@ output schema.  There are three output shapes:
 1. one status row per page, for a schema with a `status` column:
    `key + page(...)`, or for a page that was not parsed, NULL values,
    zero counts, the status, and the guard's message in `parse_errors`
-   where the schema has it (`extract`, `extract_markdown`,
-   `extract_main`, the one-string sinks);
+   where the schema has it (`extract`, `extract_text_quality`,
+   `extract_markdown`, `extract_main`, the one-string sinks);
 2. zero or more rows per page, returned by `page`; a page that was
    not parsed contributes none (`extract_nodes_rows`,
    `extract_name_count`, `links.outlinks`, the `templates` passes);
@@ -171,24 +171,33 @@ def _page_records(batches, page, options, dialect, status_cols=None):
 
 
 def _page_batches(batches, schema, page, options=_options,
-                  dialect="html5", fold=None):
+                  dialect="html5", fold=None, derive=None):
     """`_page_records` as pandas frames of `schema` — the body of a
     page sink's Python worker, also callable on the driver.  A schema
     with a `status` column gets one row per page (shape 1); `fold`
-    reduces the task's shape-2 records."""
+    reduces the task's shape-2 records.  `derive`, a (fields, fn)
+    pair, appends `fn(record)` to every record, status rows included,
+    as the columns `fields` after `schema`'s."""
     cols = schema.fieldNames()
     records = _page_records(batches, page, options, dialect,
                             cols[1:] if "status" in cols else None)
-    for recs in (fold(records) if fold else records):
+    if fold:
+        records = fold(records)
+    if derive:
+        fields, fn = derive
+        cols = cols + [f.name for f in fields]
+        records = ([r + fn(r) for r in recs] for recs in records)
+    for recs in records:
         yield pd.DataFrame.from_records(recs, columns=cols)
 
 
 def _page_sink(pages: DataFrame, schema, page, options=_options,
                dialect="html5", repartition="auto", fold=None,
-               keys=("url",), row_dialect=False) -> DataFrame:
-    """pages(url, html, ...) -> `schema`: one narrow Arrow-batched map
-    of `_page_batches` over the key columns, html and, with
-    `row_dialect`, the pages' own dialect column."""
+               keys=("url",), row_dialect=False,
+               derive=None) -> DataFrame:
+    """pages(url, html, ...) -> `schema` [+ `derive`'s fields]: one
+    narrow Arrow-batched map of `_page_batches` over the key columns,
+    html and, with `row_dialect`, the pages' own dialect column."""
     cols = [*keys, "html"]
     if row_dialect and "dialect" in pages.columns:
         cols.append("dialect")
@@ -200,9 +209,10 @@ def _page_sink(pages: DataFrame, schema, page, options=_options,
 
     def fn(batches):
         return _page_batches(batches, schema, page, options, dialect,
-                             fold)
+                             fold, derive)
 
-    return src.mapInPandas(fn, schema=schema)
+    out = StructType(schema.fields + derive[0]) if derive else schema
+    return src.mapInPandas(fn, schema=out)
 
 
 def _text_schema(col):
@@ -315,6 +325,47 @@ def extract_text_only(pages: DataFrame, dialect="html5",
 
     return _page_sink(pages, _text_schema("text_extracted"), page,
                       _extract_options, dialect, repartition)
+
+
+TEXT_META_SCHEMA = StructType([
+    StructField("url", StringType()),
+    StructField("text_extracted", StringType()),
+    StructField("n_errors", IntegerType()),
+    StructField("html_bytes", LongType()),
+    StructField("status", StringType()),
+])
+
+
+def extract_text_quality(pages: DataFrame, dialect="html5",
+                         repartition="auto", text_format="plain",
+                         quality=True) -> DataFrame:
+    """pages(url, html [, dialect]) -> TEXT_META_SCHEMA plus, with
+    `quality`, the 12 core.quality FIELDS columns: the text and
+    per-page meta of extract(nodes=False, dom_json=False,
+    text_format=...), and the crawl quality sidecar's features, from
+    ONE Python pass.  The features are `core.quality.features` of the
+    text just extracted, on every row (a status row's NULL text gives
+    features(None)), with the names, types and nullability of the
+    FIELDS DDL; values equal the JVM textops.quality_features over
+    the same text (tests/test_jobs.py).  The page's text crosses the Arrow
+    boundary once, and the worker ships no parse_errors array back."""
+    if text_format not in ("plain", "markdown"):
+        raise ValueError("text_format must be 'plain' or 'markdown'")
+    render = _markdown if text_format == "markdown" else _text_only
+
+    def page(html, opts, _key):
+        text, errors = render(html, opts)
+        return text, len(errors), len(html), "ok"
+
+    derive = None
+    if quality:
+        from ..core.quality import FIELDS, features
+        fields = StructType.fromDDL(
+            ", ".join("%s %s" % f for f in FIELDS)).fields
+        derive = (fields, lambda rec: features(rec[1]))
+    return _page_sink(pages, TEXT_META_SCHEMA, page, _extract_options,
+                      dialect, repartition, row_dialect=True,
+                      derive=derive)
 
 
 MARKDOWN_SCHEMA = StructType([

@@ -7,10 +7,9 @@ no Python in the hot path) and each has an exact ANSI-SQL oracle in
 __spark_entry__.oracle_sql().  The one exception among the SQL-able
 operators is quality_features_arrow, the same features as
 quality_features computed by the Python kernel core.quality in one
-mapInArrow.  The crawl job uses it because it has already started
-Python workers to parse pages, so it pays no extra boundary cost,
-while the JVM form's higher-order-function lambdas do not codegen:
-they are interpreted and JIT-compiled in every cold launch.
+mapInArrow.  The crawl job computes the features in its parse pass
+(extract.extract_text_quality) and uses quality_features_arrow only
+to side text rows of earlier launches that have no quality row.
 (fix_text and compression_ratio are pandas UDFs too, because codec
 and zlib work has no Spark builtin.)"""
 
@@ -229,10 +228,11 @@ def quality_features(docs: DataFrame) -> DataFrame:
     Callers: curate's corpus_keep, streaming.stream_quality and the
     registered `quality_features` key use this JVM form; it is also the
     reference the Python kernel is tested against.  The crawl job
-    uses quality_features_arrow instead.  Curate stays on the JVM
-    because it starts no Python workers: switching it to the kernel
-    raised its peak RSS from 3030 to ~3620 MB (+19.5%) for no
-    wall-time gain."""
+    computes the same features with the Python kernel in its parse
+    pass, and repairs orphaned text rows with quality_features_arrow.
+    Curate stays on the JVM because it starts no Python workers:
+    switching it to the kernel raised its peak RSS from 3030 to
+    ~3620 MB (+19.5%) for no wall-time gain."""
     from .datafilters import c4_line_keep
     from .util import spread
     docs = spread(docs, "doc_id")
@@ -273,14 +273,15 @@ def quality_features_arrow(docs: DataFrame) -> DataFrame:
     the quality_features oracle gate and the crawl-job parity test pin it to
     the JVM form).
 
-    Callers: jobs/crawl_job.py only.  That job has already started
-    Python workers for the parse, so the kernel pays no new boundary
-    cost and skips the JVM form's interpreted, per-launch
-    JIT-compiled higher-order-function lambdas.  Curate's
-    corpus_keep, stream_quality and the registered key keep
-    quality_features: the JVM-only curate job would have to start
-    Python workers for it, which raised its peak RSS from 3030 to
-    ~3620 MB (+19.5%) for no wall-time gain."""
+    Callers: jobs/crawl_job.py only, to repair orphans: text rows of
+    earlier launches that have no quality row (a crash between the
+    text and quality commits).  The crawl's own pages get the same
+    kernel in the parse pass (extract.extract_text_quality), so their
+    text crosses the Arrow boundary once.  Curate's corpus_keep,
+    stream_quality and the registered key keep quality_features: the
+    JVM-only curate job would have to start Python workers for it,
+    which raised its peak RSS from 3030 to ~3620 MB (+19.5%) for no
+    wall-time gain."""
     from ..core.quality import FIELDS, arrow_batches
     from .util import spread
     docs = spread(docs, "doc_id")

@@ -290,6 +290,240 @@ def test_crawl_quality_sidecar_matches_jvm_form(spark, tmp_path):
     assert want["https://q.example/empty"][-2:] == (None, None)
 
 
+def test_crawl_job_same_run_id_rerun_counts_each_doc_once(spark,
+                                                          tmp_path):
+    """A rerun under the same run_id after the manifest commit was
+    lost extracts nothing new, so it reports and records nothing new:
+    docs_new and the metrics sidecar cover the rows a launch wrote,
+    not every text row carrying its run_id."""
+    import crawl_job
+    import shutil
+    land = tmp_path / "warc"
+    land.mkdir()
+    out = str(tmp_path / "sink")
+    _write_archive(land / "c-00000.warc.gz", DOCS1)
+    s1 = crawl_job.run(spark, _args(input=str(land), output=out,
+                                    run_id="r1"))
+    assert s1["docs_new"] == 2
+    shutil.rmtree(out + "/archives")
+    s2 = crawl_job.run(spark, _args(input=str(land), output=out,
+                                    run_id="r1"))
+    assert s2["archives"] == 1 and s2["docs_new"] == 0
+    metrics = spark.read.parquet(out + "/metrics").collect()
+    assert sum(r.docs for r in metrics) == 2
+    assert {r.run_id for r in metrics} == {"r1"}
+    assert spark.read.parquet(out + "/text").count() == 2
+
+
+def _launch_plans(spark, fn):
+    """Run fn() and return the plan-node names of each SQL execution
+    that it started and that ran a Spark job, in start order."""
+    sc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        sc.listenerBus().waitUntilEmpty()
+        it = store.executionsList().iterator()
+        while it.hasNext():
+            yield it.next()
+
+    mark = max((e.executionId() for e in executions()), default=-1)
+    fn()
+    plans = []
+    for eid in sorted(e.executionId() for e in executions()
+                      if e.executionId() > mark and e.jobs().size()):
+        nodes = store.planGraph(eid).allNodes().iterator()
+        names = []
+        while nodes.hasNext():
+            names.append(nodes.next().name())
+        plans.append(names)
+    return plans
+
+
+def _python_maps(names):
+    """The Python map nodes (mapInPandas/mapInArrow) of a plan."""
+    return [n for n in names if n in ("MapInPandas", "MapInArrow",
+                                      "PythonMapInArrow")]
+
+
+def test_crawl_job_resumed_launch_starts_with_the_parse(
+        spark, tmp_path, monkeypatch):
+    """A resumed launch (text and quality sinks exist, a new archive
+    landed) reads the sinks it resumes against with their known
+    columns: no Spark job runs before the page sink is planned (a
+    schema-inference read would run one), and the launch's first SQL
+    execution is the parse."""
+    import crawl_job
+    from packages_sgml_spark.spark import extract
+    land = tmp_path / "warc"
+    land.mkdir()
+    out = str(tmp_path / "sink")
+    _write_archive(land / "c-00000.warc.gz", DOCS1)
+    crawl_job.run(spark, _args(input=str(land), output=out,
+                               run_id="r1", quality=True))
+    _write_archive(land / "c-00001.warc.gz", DOCS2)
+
+    tracker = spark.sparkContext.statusTracker()
+    group = "resumed-launch"
+    jobs_before_sink = []
+    sink = extract.extract_text_quality
+
+    def counted(*a, **kw):
+        jobs_before_sink.append(len(tracker.getJobIdsForGroup(group)))
+        return sink(*a, **kw)
+
+    monkeypatch.setattr(extract, "extract_text_quality", counted)
+    summary = {}
+
+    def launch():
+        spark.sparkContext.setJobGroup(group, "resumed crawl launch")
+        try:
+            summary.update(crawl_job.run(spark, _args(
+                input=str(land), output=out, run_id="r2",
+                quality=True)))
+        finally:
+            spark.sparkContext.setLocalProperty("spark.jobGroup.id",
+                                                None)
+
+    plans = _launch_plans(spark, launch)
+    assert summary["docs_new"] == 1
+    assert jobs_before_sink == [0]
+    # the tracker does see this launch's jobs
+    assert list(tracker.getJobIdsForGroup(group))
+    # the WARC scan's map and the page sink's
+    assert len(_python_maps(plans[0])) == 2, plans[0]
+
+
+def test_crawl_quality_plan_one_python_pass(spark, tmp_path):
+    """A fresh --quality launch sends each page through Python once:
+    the only Python map nodes it executes are the parse's (the WARC
+    scan's and the page sink's, which also computes the quality
+    features), and the quality write reads the parsed rows with no
+    Exchange and no second Python pass."""
+    import crawl_job
+    land = tmp_path / "warc"
+    land.mkdir()
+    out = str(tmp_path / "sink")
+    _write_archive(land / "c-00000.warc.gz",
+                   DOCS1 + DOCS2 + QUALITY_DOCS)
+    plans = _launch_plans(spark, lambda: crawl_job.run(
+        spark, _args(input=str(land), output=out, run_id="r1",
+                     quality=True)))
+    assert sum(len(_python_maps(p)) for p in plans) == 2, plans
+    assert len(_python_maps(plans[0])) == 2
+    writes = [p for p in plans
+              if "Execute InsertIntoHadoopFsRelationCommand" in p]
+    assert len(writes) == 2                    # text, then quality
+    for names in writes:
+        assert not _python_maps(names) and "Exchange" not in names, \
+            names
+
+
+def _passing_doc(url):
+    """A page whose text passes both the Gopher rules and the C4
+    line filter."""
+    return (url, "2026-01-02T00:00:05Z",
+            ("<html><body>" + "\n".join("<p>%s</p>" % _PROSE
+                                        for _ in range(4))
+             + "</body></html>").encode())
+
+
+def test_quality_sidecar_mixed_resume(spark, tmp_path):
+    """Run 1 with --quality, its quality sink lost, a new archive
+    lands, run 2 with --quality: run 2 sides its own fresh urls from
+    the parse pass and run 1's orphaned text rows by the repair pass,
+    every url of both runs exactly once, and docs_pass_quality counts
+    the passing rows of both."""
+    import crawl_job
+    import shutil
+    from packages_sgml_spark.core.quality import FIELDS, features
+    land = tmp_path / "warc"
+    land.mkdir()
+    out = str(tmp_path / "sink")
+    run1 = DOCS1 + [_passing_doc("https://q.example/pass1")]
+    run2 = DOCS2 + QUALITY_DOCS + [_passing_doc("https://q.example/pass2")]
+    _write_archive(land / "c-00000.warc.gz", run1)
+    crawl_job.run(spark, _args(input=str(land), output=out,
+                               run_id="r1", quality=True))
+    shutil.rmtree(out + "/quality")
+    _write_archive(land / "c-00001.warc.gz", run2)
+    s2 = crawl_job.run(spark, _args(input=str(land), output=out,
+                                    run_id="r2", quality=True))
+    assert s2["archives"] == 1 and s2["docs_new"] == len(run2)
+    text = {r.url: r.text_extracted for r in
+            spark.read.parquet(out + "/text").collect()}
+    q = spark.read.parquet(out + "/quality").collect()
+    assert len(text) == len(run1 + run2)
+    assert sorted(r.url for r in q) == sorted(text)
+    names = [name for name, _ in FIELDS]
+    for r in q:
+        assert tuple(r[n] for n in names) == features(text[r.url])
+        assert r.run_id == "r2"
+    passed = sorted(r.url for r in q
+                    if r.gopher_pass == 1 and r.c4_keep == 1)
+    assert passed == ["https://q.example/pass1",
+                      "https://q.example/pass2"]
+    assert s2["docs_pass_quality"] == 2
+
+
+# (name, arrow type, nullable) of each crawl sink's part files, as
+# every launch since the sinks were introduced has written them
+CRAWL_SINK_SCHEMAS = {
+    "text": [("url", "string", True), ("url_hash", "int64", False),
+             ("text_extracted", "string", True),
+             ("n_errors", "int32", True), ("html_bytes", "int64", True),
+             ("status", "string", True), ("run_id", "string", False),
+             ("partition_id", "int32", False)],
+    "metrics": [("run_id", "string", True),
+                ("partition_id", "int32", True),
+                ("docs", "int64", False), ("bytes", "int64", True),
+                ("parse_errors", "int64", True),
+                ("failed_docs", "int64", True),
+                ("url_hash_min", "int64", True),
+                ("url_hash_max", "int64", True),
+                ("updated_at_ms", "int64", True)],
+    "quality": [("url", "string", True), ("n_words", "int64", False),
+                ("mean_word_len", "double", True),
+                ("symbol_ratio", "double", True),
+                ("bullet_frac", "double", True),
+                ("ellipsis_frac", "double", True),
+                ("alpha_word_frac", "double", True),
+                ("n_stop_hits", "int32", False),
+                ("gopher_pass", "int32", True),
+                ("n_kept", "int32", False), ("c4_keep", "int32", False),
+                ("lang_pred", "string", True),
+                ("lang_score", "int32", True),
+                ("run_id", "string", False)],
+}
+
+
+def test_crawl_sink_schemas_pinned(spark, tmp_path):
+    """A fresh --quality launch writes the text, metrics and quality
+    sinks with their established names, types and nullability, both in
+    each part file and in the Spark schema its footer carries."""
+    import glob
+    import pyarrow.parquet as pq
+    import crawl_job
+    land = tmp_path / "warc"
+    land.mkdir()
+    out = str(tmp_path / "sink")
+    _write_archive(land / "c-00000.warc.gz",
+                   DOCS1 + DOCS2 + QUALITY_DOCS)
+    crawl_job.run(spark, _args(input=str(land), output=out,
+                               run_id="r1", quality=True))
+    for sink, want in CRAWL_SINK_SCHEMAS.items():
+        parts = glob.glob(os.path.join(out, sink, "part-*.parquet"))
+        assert parts, sink
+        for part in parts:
+            s = pq.read_schema(part)
+            assert [(f.name, str(f.type), f.nullable)
+                    for f in s] == want, (sink, part)
+            row = json.loads(
+                s.metadata[b"org.apache.spark.sql.parquet.row.metadata"])
+            assert [(f["name"], f["nullable"]) for f in row["fields"]] \
+                == [(n, null) for n, _t, null in want], (sink, part)
+
+
 def test_crawl_job_markdown_text_format(spark, tmp_path):
     """--text-format markdown writes Markdown into text_extracted
     with the same schema/lineage/resume semantics — and the value

@@ -561,6 +561,7 @@ def _templates_strip(pages):
 # page), "drop" (bad pages yield no rows) or "fold" (per-task counts)
 PAGE_SINKS = [
     ("extract", "status"), ("extract_text_only", "status"),
+    ("extract_text_quality", "status"),
     ("extract_markdown", "status"), ("extract_element_text", "status"),
     ("serialize_pages", "status"), ("esis_pages", "status"),
     ("c14n_pages", "status"), ("extract_main", "status"),
@@ -629,6 +630,32 @@ def test_page_sink_size_guard_and_statuses(guard_pages, name, shape):
         assert got["u2"].n_errors == 0 and got["u4"].n_errors == 1
     if name == "extract_element_text":
         assert got["u1"].element_text == "T"
+
+
+def test_extract_text_quality_matches_extract(guard_pages):
+    """extract_text_quality's text and per-page meta equal
+    extract(nodes=False)'s, and every row, status rows included,
+    carries core.quality.features of its text (NULL text gives
+    features(None)); quality=False ships the text columns only."""
+    from packages_sgml_spark.core.quality import FIELDS, features
+    from packages_sgml_spark.spark.extract import (TEXT_META_SCHEMA,
+                                                   extract,
+                                                   extract_text_quality)
+    pages, _good = guard_pages
+    meta = TEXT_META_SCHEMA.fieldNames()
+    names = [name for name, _ in FIELDS]
+    want = {r.url: tuple(r[c] for c in meta)
+            for r in extract(pages, nodes=False).collect()}
+    rows = extract_text_quality(pages).collect()
+    assert rows[0].__fields__ == meta + names
+    assert {r.url: tuple(r[c] for c in meta) for r in rows} == want
+    for r in rows:
+        assert tuple(r[n] for n in names) == features(r.text_extracted)
+    assert {r.url for r in rows if r.text_extracted is None} == {
+        "u2", "u3", "u4"}
+    plain = extract_text_quality(pages, quality=False)
+    assert plain.columns == meta
+    assert {r.url: tuple(r) for r in plain.collect()} == want
 
 
 def test_page_sink_exception_status_driver_side():

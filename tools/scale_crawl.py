@@ -4,16 +4,20 @@ job (jobs/crawl_job.py run()) at local[N] vs local[4N] over the same
 archive set — the north rule's two-cluster-size criterion measured on
 the WHOLE pipeline, not just the parse stage.
 
-    PYTHONPATH=. python3 tools/scale_crawl.py [n_archives] [docs_per]
+    PYTHONPATH=. python3 tools/scale_crawl.py [n_archives] [docs_per] \
+        [--quality]
 
-Writes nothing outside a temp dir; prints one JSON line.  `stage_s`
-splits each size's best run per sink — text, metrics, archives — by
+`--quality` runs the job with its quality sidecar (features computed
+in the parse pass), off by default.  Writes nothing outside a temp
+dir; prints one JSON line.  `stage_s` splits each size's best run per
+sink — text, metrics, [quality,] archives — by
 the rule tools/scale_curate.py and perfbench use: a stage ends when
 its sink's `_SUCCESS` marker is written and starts when the previous
 one ended (the first starts with the job), so `text` also carries the
 planning before the parse.
 """
 
+import argparse
 import json
 import os
 import shutil
@@ -48,13 +52,9 @@ def make_archives(root, n_archives=48, docs_per=600):
     return total
 
 
-STAGES = ("text", "metrics", "archives")
-
-
-def run_once(cpus, warc_dir, out_dir):
+def run_once(cpus, warc_dir, out_dir, quality=False):
     """One crawl_job run on a fresh local[cpus] session; returns
     (wall seconds, summary, stage seconds)."""
-    import argparse
     from packages_sgml_spark.spark.session import get_spark
     from tools.scale_curate import stage_times
     import crawl_job
@@ -63,17 +63,24 @@ def run_once(cpus, warc_dir, out_dir):
     args = argparse.Namespace(
         input=warc_dir, output=out_dir, run_id="s%d" % cpus,
         dialect="html5", statuses="200", repartition="auto",
-        wet=False, quality=False)
+        wet=False, quality=quality)
+    stages = ("text", "metrics") + (("quality",) if quality else ()) \
+        + ("archives",)
     t0 = time.time()
     summary = crawl_job.run(spark, args)
     dt = time.time() - t0
     spark.stop()
-    return dt, summary, stage_times(out_dir, t0, STAGES)
+    return dt, summary, stage_times(out_dir, t0, stages)
 
 
 def main():
-    n_archives = int(sys.argv[1]) if len(sys.argv) > 1 else 48
-    docs_per = int(sys.argv[2]) if len(sys.argv) > 2 else 600
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("n_archives", nargs="?", type=int, default=48)
+    ap.add_argument("docs_per", nargs="?", type=int, default=600)
+    ap.add_argument("--quality", action="store_true",
+                    help="also write the quality sidecar")
+    opts = ap.parse_args()
+    n_archives, docs_per = opts.n_archives, opts.docs_per
     n_lo = int(os.environ.get("BENCH_SCALE_N", "2"))
     n_hi = 4 * n_lo
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -88,7 +95,8 @@ def main():
         for cpus in (n_lo, n_hi, n_lo, n_hi):
             out = os.path.join(tmp, "out-%d-%d" % (cpus,
                                                    len(results)))
-            dt, summary, stage_s = run_once(cpus, warc_dir, out)
+            dt, summary, stage_s = run_once(cpus, warc_dir, out,
+                                            opts.quality)
             assert summary["docs_new"] == n_archives * docs_per, \
                 summary
             cur = results.get(cpus)
@@ -103,6 +111,7 @@ def main():
             "value": round(eff, 3),
             "unit": "efficiency",
             "n_docs": n_archives * docs_per,
+            "quality": opts.quality,
             "raw_mb": round(raw / 1e6, 1),
             "sec": {str(k): round(v, 2) for k, v in results.items()},
             "stage_s": stages,
