@@ -20,6 +20,14 @@ wrote, never a re-read of a sink.  The checkpoint, not a persist(),
 also cuts the rows' lineage to the text sink they were resumed
 against: Spark re-caches a persisted plan over a path when that path
 is written, which would re-run the anti-join against the new sink.
+The trade-off: the checkpoint's blocks live on executor-local disk
+and cannot be recomputed, so an executor lost after the parse fails
+the launch's remaining writes, and the launch's whole parse is lost,
+not one task.  No data is: the archive manifest is committed last,
+so a relaunch re-reads the launch's archives and the url-level
+anti-join skips every page whose text row was committed.  A reliable
+checkpoint() to a checkpoint directory would survive the loss, at
+the cost of writing the rows there.
 
 Resume is two-level and always on:
 
@@ -61,8 +69,8 @@ def run(spark, args):
                                                 write_wet_pages)
     from packages_sgml_spark.spark.extract import extract_text_quality
     from packages_sgml_spark.spark.checkpoint import (
-        METRICS_DDL, append_rows, read_rows, read_parquet_or_none,
-        with_lineage, partition_metrics, resume_filter)
+        append_metrics, append_rows, read_rows, read_parquet_or_none,
+        with_lineage, resume_filter)
 
     out = args.output.rstrip("/")
     archives_path = out + "/archives"
@@ -106,9 +114,7 @@ def run(spark, args):
         .write.mode("append").parquet(text_path)
 
     # one row per partition: collected and committed by the driver
-    metrics = partition_metrics(rows).collect()
-    append_rows(spark, out + "/metrics", metrics, METRICS_DDL)
-    summary["docs_new"] = sum(m.docs for m in metrics)
+    summary["docs_new"] = append_metrics(spark, out + "/metrics", rows)
 
     if args.quality:
         # doc-level corpus filters over the fresh extractions:

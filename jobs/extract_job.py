@@ -31,13 +31,14 @@ def main(argv=None):
     ap.add_argument("--resume", action="store_true")
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark import StorageLevel
+    from pyspark.sql import SparkSession
     spark = SparkSession.builder.appName(
         "packages-sgml-spark-extract").getOrCreate()
 
     from packages_sgml_spark.spark.extract import extract
     from packages_sgml_spark.spark.checkpoint import (
-        with_lineage, partition_metrics, resume_filter)
+        append_metrics, with_lineage, resume_filter)
 
     pages = spark.read.parquet(args.input)
     if args.resume:
@@ -51,16 +52,15 @@ def main(argv=None):
         rep = int(rep)
     ex = extract(pages, dialect=args.dialect, nodes=False,
                  repartition=rep)
-    tagged = with_lineage(ex, args.run_id)
+    # materialized once: the text write and the metrics both read it,
+    # and the metrics cover the rows this launch wrote, nothing else
+    rows = with_lineage(ex, args.run_id).localCheckpoint(
+        eager=True, storageLevel=StorageLevel.DISK_ONLY)
     cols = ["url", "url_hash", "text_extracted", "n_errors",
             "html_bytes", "status", "run_id", "partition_id"]
-    tagged.select(*cols).write.mode("append") \
+    rows.select(*cols).write.mode("append") \
         .parquet(args.output + "/text")
-    out = spark.read.parquet(args.output + "/text") \
-        .filter(F.col("run_id") == args.run_id)
-    partition_metrics(out).write.mode("append") \
-        .parquet(args.output + "/metrics")
-    n = out.count()
+    n = append_metrics(spark, args.output + "/metrics", rows)
     print("extracted %d documents (run_id=%s)" % (n, args.run_id))
     spark.stop()
     return 0

@@ -49,15 +49,16 @@ def read_parquet_or_none(spark, path, schema=None):
 
 
 def append_rows(spark, path, rows, schema):
-    """Append `rows` (tuples in the order of the DDL string `schema`)
-    to the parquet table at `path` as one new part file written by
-    the driver: no Spark job, no Python worker (a
+    """Append `rows` (tuples in the order of `schema`, a StructType or
+    a DDL string) to the parquet table at `path` as one new part file
+    written by the driver: no Spark job, no Python worker (a
     createDataFrame(list).write re-serializes the rows through a
     PythonRDD).  pyarrow serializes the rows, the session's Hadoop
     FileSystem stores them under a hidden `_tmp-` name, renames the
     file into place and touches `_SUCCESS`.  The footer carries the
     Spark row schema, so driver-written and Spark-written parts read
-    back as one table with the DDL's names, types and nullability."""
+    back as one table with the schema's names, types and
+    nullability."""
     import uuid
 
     import pyarrow as pa
@@ -65,7 +66,8 @@ def append_rows(spark, path, rows, schema):
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
-    schema = StructType.fromDDL(schema)
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
     arrow_schema = to_arrow_schema(schema).with_metadata(
         {"org.apache.spark.sql.parquet.row.metadata": schema.json()})
     table = pa.Table.from_pylist(
@@ -134,19 +136,13 @@ def with_lineage(extracted: DataFrame, run_id: str) -> DataFrame:
             .withColumn("url_hash", F.xxhash64("url")))
 
 
-# the metrics sidecar's columns as the crawl job has always stored
-# them: partition_metrics over the text sink read back, so the group
-# keys are nullable and only the count is NOT NULL
-METRICS_DDL = ("run_id string, partition_id int, docs bigint not null, "
-               "bytes bigint, parse_errors bigint, failed_docs bigint, "
-               "url_hash_min bigint, url_hash_max bigint, "
-               "updated_at_ms bigint")
+METRICS_KEYS = ("run_id", "partition_id")
 
 
 def partition_metrics(tagged: DataFrame) -> DataFrame:
     """Per-partition metrics rollup (SURVEY.md §2.5 'our pipeline
     metrics'): map-side partial agg, one row per partition."""
-    return (tagged.groupBy("run_id", "partition_id")
+    return (tagged.groupBy(*METRICS_KEYS)
             .agg(F.count("*").alias("docs"),
                  F.sum("html_bytes").alias("bytes"),
                  F.sum("n_errors").alias("parse_errors"),
@@ -158,6 +154,28 @@ def partition_metrics(tagged: DataFrame) -> DataFrame:
                  .alias("updated_at_ms")))
 
 
+def metrics_sink_schema(metrics: DataFrame):
+    """The schema the metrics sidecar stores a partition_metrics frame
+    with: its own columns, types and order, with the group keys
+    nullable, as the rollup has always left them when it ran over the
+    text sink read back (the count, `docs`, stays NOT NULL)."""
+    from pyspark.sql.types import StructField, StructType
+    return StructType([
+        StructField(f.name, f.dataType,
+                    f.nullable or f.name in METRICS_KEYS)
+        for f in metrics.schema.fields])
+
+
+def append_metrics(spark, path, tagged: DataFrame):
+    """Append partition_metrics(tagged) to the metrics sidecar at
+    `path`, written by the driver (append_rows) with
+    metrics_sink_schema; returns the docs they count."""
+    metrics = partition_metrics(tagged)
+    rows = metrics.collect()
+    append_rows(spark, path, rows, metrics_sink_schema(metrics))
+    return sum(r.docs for r in rows)
+
+
 def resume_filter(pages: DataFrame, done: DataFrame) -> DataFrame:
     """Drop already-extracted urls.  `done` needs only a url column
     (e.g. the text sink read back, or the checkpoint table)."""
@@ -167,7 +185,10 @@ def resume_filter(pages: DataFrame, done: DataFrame) -> DataFrame:
 def run_extract_with_checkpoint(pages: DataFrame, out_dir: str,
                                 run_id: str, dialect="html5"):
     """One resumable extraction pass: filters done urls, extracts,
-    appends results + metrics.  Returns (n_new, metrics_rows)."""
+    appends results + metrics.  Returns (n_new, metrics table); n_new
+    and the metrics appended cover the rows this pass wrote."""
+    from pyspark import StorageLevel
+
     from .extract import extract
 
     spark = pages.sparkSession
@@ -176,13 +197,11 @@ def run_extract_with_checkpoint(pages: DataFrame, out_dir: str,
     done = read_parquet_or_none(spark, text_path)
     todo = pages if done is None else resume_filter(pages, done)
     ex = extract(todo, dialect=dialect, nodes=False)
-    tagged = with_lineage(ex, run_id)
-    tagged.select("url", "url_hash", "text_extracted", "n_errors",
-                  "html_bytes", "status", "run_id", "partition_id") \
-          .write.mode("append").parquet(text_path)
-    out = spark.read.parquet(text_path) \
-        .filter(F.col("run_id") == run_id)
-    m = partition_metrics(out)
-    m.write.mode("append").parquet(metrics_path)
-    n_new = out.count()
+    # materialized once: the text write and the metrics both read it
+    rows = with_lineage(ex, run_id).localCheckpoint(
+        eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    rows.select("url", "url_hash", "text_extracted", "n_errors",
+                "html_bytes", "status", "run_id", "partition_id") \
+        .write.mode("append").parquet(text_path)
+    n_new = append_metrics(spark, metrics_path, rows)
     return n_new, spark.read.parquet(metrics_path)

@@ -77,6 +77,24 @@ def test_checkpoint_resume(spark, tmp_path):
     assert mm.d == 40
 
 
+def test_checkpoint_same_run_id_rerun_counts_once(spark, tmp_path):
+    """A second pass under the same run_id extracts nothing new, so
+    it reports and records nothing new: n_new and the metrics cover
+    the rows a pass wrote, not every text row carrying its run_id."""
+    from packages_sgml_spark.spark.pages import docs_as_pages
+    from packages_sgml_spark.spark.checkpoint import (
+        run_extract_with_checkpoint)
+
+    docs = spark.read.parquet(SF + "/documents.parquet").limit(6)
+    pages = docs_as_pages(docs)
+    out = str(tmp_path / "sink")
+    n1, _m1 = run_extract_with_checkpoint(pages, out, "run1")
+    n2, m2 = run_extract_with_checkpoint(pages, out, "run1")
+    assert (n1, n2) == (6, 0)
+    assert m2.agg(F.sum("docs")).collect()[0][0] == 6
+    assert spark.read.parquet(out + "/text").count() == 6
+
+
 def test_streaming_extract(spark, tmp_path):
     from packages_sgml_spark.spark.pages import docs_as_pages
     from packages_sgml_spark.spark.streaming import run_stream_to_memory
