@@ -414,10 +414,15 @@ def _lsh_bucket_expr(emb_expr, dim=64, n_planes=6, seed=1234):
     """Sign-bit bucket id as explicit SQL over literal hyperplanes.
 
     The plane components are Python-computed (similarity.
-    hyperplane_values) and injected as repr() literals into BOTH the
-    Spark plan and this SQL, and the dot product is written as a
-    left-associated explicit sum matching Spark's aggregate() fold —
-    so the >= 0 sign test is bit-identical across engines."""
+    hyperplane_values) and injected as repr() literals into this SQL;
+    similarity.lsh_signature uses the same doubles.  The dot product
+    here is a left-associated explicit sum and numpy's is a matmul,
+    so the two sum in different orders: they agree because no dot on
+    the gate corpora lies within float-reorder error (~1e-15) of zero
+    — the smallest |dot| at sf0.001/0.01/0.1 with 6 or 8 planes is
+    8.6e-6 (sf0.1; 8.1e-5 at sf0.001).
+    tests/test_spark_ops.py::test_lsh_signature_matches_duckdb pins
+    the buckets at sf0.001."""
     from .similarity import hyperplane_values
     planes = hyperplane_values(dim, n_planes, seed)
     terms = []

@@ -2,18 +2,40 @@
 (vec_id, embedding: array<float>, label).
 
 - brute-force cosine top-k: exact baseline.  The query set is small
-  (explicit ids) so it is broadcast; the big side streams through a
-  single narrow pass (no shuffle until the per-query top-k, which is
-  a tiny aggregation).  At 100 TB-scale embedding stores, this is the
-  pattern: broadcast queries x scan corpus -> partial top-k per
-  partition (AQE) -> final top-k.
-- LSH-bucketed variant: random-hyperplane signs -> bucket join,
-  cosine only within buckets (the scale path; recall < 1).
+  (explicit ids) so it is fetched to the driver; the corpus streams
+  through a single narrow pass (no shuffle until the per-query top-k,
+  which is a tiny aggregation).  At 100 TB-scale embedding stores,
+  this is the pattern: broadcast queries x scan corpus -> partial
+  top-k per partition (AQE) -> final top-k.
+- LSH-bucketed variant: random-hyperplane signs -> cosine only
+  within buckets (the scale path; recall < 1).
+
+Every numpy pass reads `embedding` cast to array<double> (exact for
+the table's array<float>) and runs one kernel: `_emb_matrix` decodes
+the Arrow lists (driver-side query and centroid matrices too),
+`_cosine` scores, `_buckets` signs.  The one NULL/length rule lives
+in `_emb_matrix`: a pair's cos is NULL unless both vectors are
+non-NULL, free of NULL elements and of the same length (the zip_with
+fold's NULL propagation), an invalid vector falls in LSH bucket 0,
+and a zero-norm vector gives NaN, as 0.0/0.0 did JVM-side.  The exact
+all-pairs near-dup path, the multi-probe join and ivf_knn's probe
+scoring stay JVM folds (`_dot`/`_norm`).
+
+knn_bruteforce, knn_lsh and ivf_assign collect() their query or
+centroid vectors when the frame is built (a Spark job, and a snapshot
+of the input); ivf_knn and embedding_dup_recall also
+localCheckpoint(eager=True) a piece.
 """
 
 import math
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
+
+# rows of a hot LSH bucket scored per block: the bucket scorer holds
+# BLOCK x bucket cosines at a time, not bucket x bucket
+BLOCK = 512
 
 
 def _dot(a, b):
@@ -23,6 +45,146 @@ def _dot(a, b):
 
 def _norm(a):
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+
+
+# ---------------------------------------------------------------------
+# the numpy kernel (runs in the workers and on the driver)
+# ---------------------------------------------------------------------
+
+def _emb_matrix(arr, dim):
+    """(E, valid) for an Arrow list<double> array: E is the (n, dim)
+    float64 matrix of its rows, valid marks the rows that are
+    non-NULL, of length dim and free of NULL elements; invalid rows
+    of E are zero.  The module's one NULL/length rule."""
+    offs = arr.offsets.to_numpy()
+    valid = ~np.asarray(arr.is_null()) & (np.diff(offs) == dim)
+    if arr.values.null_count:
+        bad = np.concatenate(
+            [[0], np.cumsum(np.asarray(arr.values.is_null()))])
+        valid &= bad[offs[1:]] == bad[offs[:-1]]
+    vals = np.asarray(arr.values, dtype=np.float64)
+    if valid.all():
+        return vals[offs[0]:offs[-1]].reshape(len(arr), dim), valid
+    E = np.zeros((len(arr), dim))
+    idx = np.flatnonzero(valid)
+    E[idx] = vals[offs[:-1][idx, None] + np.arange(dim)]
+    return E, valid
+
+
+def _norms(E):
+    return np.sqrt((E * E).sum(axis=1))
+
+
+def _cosine(A, B):
+    """round(cos, 6) of every row of A against every row of B; a
+    zero-norm row gives NaN."""
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return np.round((A @ B.T) / np.outer(_norms(A), _norms(B)), 6)
+
+
+def _buckets(E, valid, planes):
+    """Sign-bit LSH bucket of every row of E (bit h set iff the dot
+    with plane h is >= 0); invalid rows get bucket 0."""
+    pw = 1 << np.arange(len(planes), dtype=np.int64)
+    return np.where(valid, ((E @ np.asarray(planes).T) >= 0) @ pw, 0)
+
+
+def _vectors(rows):
+    """Driver side: collected (id, vector) rows, sorted by id, as an
+    int64 id array, an Arrow list<double> array, and the groups
+    [(dim, Q, qvalid)] _cos_matrix scores against: one per distinct
+    length among the non-NULL vectors."""
+    rows = sorted(rows, key=lambda r: r[0])
+    arr = pa.array([r[1] for r in rows], type=pa.list_(pa.float64()))
+    lens = np.diff(arr.offsets.to_numpy())[~np.asarray(arr.is_null())]
+    return (np.asarray([r[0] for r in rows], dtype=np.int64), arr,
+            [(d,) + _emb_matrix(arr, d) for d in sorted(set(lens))])
+
+
+def _cos_matrix(arr, groups, m):
+    """(cos, ok) of every row of an Arrow list<double> array against
+    the m vectors of `groups` (see _vectors): ok marks the pairs
+    valid at the same length, and cos is defined there only."""
+    cos = np.full((len(arr), m), np.nan)
+    ok = np.zeros((len(arr), m), dtype=bool)
+    for dim, Q, qv in groups:
+        E, ev = _emb_matrix(arr, dim)
+        both = ev[:, None] & qv[None, :]
+        cos = np.where(both, _cosine(E, Q), cos)
+        ok |= both
+    return cos, ok
+
+
+def hyperplane_values(dim, n_planes, seed=1234):
+    """The n_planes LSH hyperplanes: component i of plane h is
+    sin(seed * (h*dim + i)).  Computed HERE in Python and injected as
+    literals into both the numpy signature and the SQL oracle —
+    large-argument sine differs in the last ulp across libm
+    implementations, so evaluating it engine-side would risk sign
+    flips at the bucket boundary."""
+    return [[math.sin(seed * (h * dim + i)) for i in range(dim)]
+            for h in range(n_planes)]
+
+
+# ---------------------------------------------------------------------
+# frames
+# ---------------------------------------------------------------------
+
+def _emb_cols(emb: DataFrame, *cols) -> DataFrame:
+    """`cols` plus `embedding` cast to array<double>: what every numpy
+    pass reads.  Ships the package to the workers first, since the
+    passes call this module's kernel."""
+    from .queries import ensure_workers
+    ensure_workers(emb.sparkSession)
+    return emb.select(*cols, F.col("embedding").cast("array<double>")
+                      .alias("embedding"))
+
+
+def _query_rows(emb: DataFrame, query_ids) -> DataFrame:
+    """The query rows (vec_id, embedding as array<double>)."""
+    return _emb_cols(emb.filter(F.col("vec_id").isin(list(query_ids))),
+                     "vec_id")
+
+
+def _top_k(scored: DataFrame, k) -> DataFrame:
+    """Per query the k best (q_id, n_id, cos) rows: cos DESC (NULL
+    last, NaN first, as Spark sorts), ties on n_id ASC."""
+    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(),
+                                          F.col("n_id").asc())
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("q_id", "rank", "n_id", "cos"))
+
+
+def _brute_scores(emb: DataFrame, query_ids, planes=None) -> DataFrame:
+    """(q_id, n_id, cos) for every (corpus row, query row) pair with
+    n_id != q_id: one narrow numpy mapInArrow over the corpus scan,
+    the query vectors fetched once (a Spark job) and shipped in the
+    task closure (bounded by len(query_ids)).  Every query is scored,
+    NULL or ragged ones too (their pairs get cos NULL).  With
+    `planes` (hyperplane_values) a pair is kept only when the corpus
+    row's LSH bucket equals the query's."""
+    qi, qarr, groups = _vectors(_query_rows(emb, query_ids).collect())
+    if planes is not None:
+        qb = _buckets(*_emb_matrix(qarr, len(planes[0])), planes)
+
+    def score(batches):
+        for batch in batches:
+            n_id = batch.column("vec_id").to_numpy()
+            col = batch.column("embedding")
+            cos, ok = _cos_matrix(col, groups, len(qi))
+            keep = n_id[:, None] != qi[None, :]
+            if planes is not None:
+                nb = _buckets(*_emb_matrix(col, len(planes[0])), planes)
+                keep &= nb[:, None] == qb[None, :]
+            r, c = keep.nonzero()
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(qi[c]), pa.array(n_id[r]),
+                 pa.array(cos[r, c], mask=~ok[r, c])],
+                names=["q_id", "n_id", "cos"])
+
+    return (_emb_cols(emb, "vec_id")
+            .mapInArrow(score, schema="q_id long, n_id long, cos double"))
 
 
 def knn_bruteforce(emb: DataFrame, query_ids, k=5) -> DataFrame:
@@ -41,160 +203,38 @@ def knn_bruteforce(emb: DataFrame, query_ids, k=5) -> DataFrame:
     orders was verified empirically at every gate SF (the DuckDB
     oracle already sums in its own order, so the corpus is
     boundary-free by construction; sign/rounding margins ~1e-5 vs
-    float error ~1e-15).  Rows whose embedding is NULL or of a
-    different length than the query vectors score cos=NULL, exactly
-    like the old zip_with fold (NULL-propagating).
+    float error ~1e-15).  A query whose embedding is NULL or ragged
+    still gets its k rows: cos NULL, ranked by n_id.
 
     Building the frame runs a Spark job: the query vectors are
     collect()ed at call time, a snapshot of `emb` as it was then."""
-    qrows = (emb.filter(F.col("vec_id").isin(list(query_ids)))
-             .select("vec_id", "embedding").collect())
-    qrows = sorted((r for r in qrows if r[1] is not None),
-                   key=lambda r: r[0])
-    scored = _brute_scores(emb, qrows)
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(),
-                                          F.col("n_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("q_id", "rank", "n_id", "cos"))
-
-
-def _brute_scores(emb: DataFrame, qrows) -> DataFrame:
-    """(q_id, n_id, cos) for every (corpus row, query row) pair with
-    n_id != q_id: one narrow numpy mapInArrow over the corpus scan,
-    query matrix shipped in the task closure (bounded).  Rows with a
-    NULL or wrong-length embedding get cos=NULL (the old zip_with
-    fold NULL-propagated the same way); a genuinely computed NaN
-    (zero-norm vector) stays NaN, as 0.0/0.0 did JVM-side."""
-    q_ids = [r[0] for r in qrows]
-    q_mat = [list(r[1]) for r in qrows]
-
-    def score(batches):
-        import numpy as _np
-        import pyarrow as _pa
-        qi = _np.asarray(q_ids, dtype=_np.int64)
-        Q = _np.asarray(q_mat, dtype=_np.float64)
-        m = len(qi)
-        if m == 0:
-            return
-        Qn = _np.sqrt((Q * Q).sum(axis=1))
-        dim = Q.shape[1]
-        for batch in batches:
-            tb = _pa.Table.from_batches([batch])
-            n_id = tb.column("n_id").to_numpy()
-            col = tb.column("n_emb").combine_chunks()
-            n = len(n_id)
-            offs = col.offsets.to_numpy()
-            lens = offs[1:] - offs[:-1]
-            valid = (~_np.asarray(col.is_null())) & (lens == dim)
-            vals = _np.asarray(col.values, dtype=_np.float64)
-            cos = _np.full((n, m), _np.nan)
-            if valid.all() and n > 0:
-                E = vals[offs[0]:offs[-1]].reshape(n, dim)
-                En = _np.sqrt((E * E).sum(axis=1))
-                with _np.errstate(invalid="ignore", divide="ignore"):
-                    cos = _np.round(
-                        (E @ Q.T) / (En[:, None] * Qn[None, :]), 6)
-            elif valid.any():
-                idx = _np.flatnonzero(valid)
-                E = _np.empty((len(idx), dim))
-                for j, i in enumerate(idx):
-                    E[j] = vals[offs[i]:offs[i] + dim]
-                En = _np.sqrt((E * E).sum(axis=1))
-                with _np.errstate(invalid="ignore", divide="ignore"):
-                    cos[idx] = _np.round(
-                        (E @ Q.T) / (En[:, None] * Qn[None, :]), 6)
-            qq = _np.tile(qi, n)
-            nn = _np.repeat(n_id, m)
-            cc = cos.reshape(-1)
-            null_mask = _np.repeat(~valid, m)
-            keep = nn != qq
-            yield _pa.RecordBatch.from_arrays(
-                [_pa.array(qq[keep]), _pa.array(nn[keep]),
-                 _pa.array(cc[keep], mask=null_mask[keep])],
-                names=["q_id", "n_id", "cos"])
-
-    return (emb.select(F.col("vec_id").alias("n_id"),
-                       F.col("embedding").alias("n_emb"))
-            .mapInArrow(score, schema="q_id long, n_id long, cos double"))
-
-
-def hyperplane_row(dim, h, seed=1234):
-    """Component i of plane h is sin(seed * (h*dim + i)).  Computed
-    HERE in Python and injected as literals into both the Spark plan
-    and the SQL oracle — large-argument sine differs in the last ulp
-    across libm implementations, so evaluating it engine-side would
-    risk sign flips at the bucket boundary."""
-    return [math.sin(seed * (h * dim + i)) for i in range(dim)]
-
-
-def hyperplane_values(dim, n_planes, seed=1234):
-    """All n_planes rows (the oracle-side entry point)."""
-    return [hyperplane_row(dim, h, seed) for h in range(n_planes)]
-
-
-def _hyperplane(dim, h, seed=1234):
-    return F.array(*[F.lit(v) for v in hyperplane_row(dim, h, seed)])
+    return _top_k(_brute_scores(emb, query_ids), k)
 
 
 def lsh_signature(emb: DataFrame, dim, n_planes=8) -> DataFrame:
-    """Sign-bit signature under deterministic hyperplanes."""
-    sig = None
-    for h in range(n_planes):
-        bit = F.when(_dot(F.col("embedding"),
-                          _hyperplane(dim, h)) >= 0,
-                     F.lit(2 ** h)).otherwise(F.lit(0))
-        sig = bit if sig is None else (sig + bit)
-    return emb.select("vec_id", "embedding", sig.alias("bucket"))
-
-
-def _lsh_signature_np(emb: DataFrame, dim, n_planes=8) -> DataFrame:
-    """lsh_signature + vector norm in ONE numpy mapInArrow pass
-    (r9, guide §4.2): bucket values are INTEGERS decided by dot-sign,
-    so they are identical to the JVM fold's as long as no dot sits
-    within float-reorder error (~1e-15) of zero — measured margins on
-    every gate SF are >= 8.6e-5 (1e10 x clearance), and the DuckDB
-    oracle already computes the same signs with its own summation
-    order.  The old per-row cost was n_planes interpreted HOF folds;
-    this is one (batch x dim) @ (dim x n_planes) matmul per Arrow
-    batch.  NULL/wrong-length embeddings keep the JVM semantics:
-    bucket 0 (every per-plane `when` fell to otherwise(0)) and NULL
-    norm (so any cosine against them stays NULL)."""
-    planes = hyperplane_values(dim, n_planes)
+    """(vec_id, embedding array<double>, nrm, bucket): the sign-bit
+    signature under the deterministic hyperplanes plus the vector
+    norm, in ONE numpy mapInArrow pass — one (batch x dim) @
+    (dim x n_planes) matmul per Arrow batch.  Bucket values are
+    INTEGERS decided by dot-sign; DuckDB's oracle
+    (oracles._lsh_bucket_expr) computes the same signs in its own
+    summation order, and the smallest measured |dot| on the gate SFs
+    is 8.6e-6 against a float-reorder error of ~1e-15.  An invalid
+    embedding gets bucket 0 and a NULL norm (so any cosine against it
+    stays NULL)."""
+    P = hyperplane_values(dim, n_planes)
 
     def sig(batches):
-        import numpy as _np
-        import pyarrow as _pa
-        P = _np.asarray(planes, dtype=_np.float64)
-        pw = (1 << _np.arange(P.shape[0], dtype=_np.int64))
         for batch in batches:
-            tb = _pa.Table.from_batches([batch])
-            col = tb.column("embedding").combine_chunks()
-            n = len(col)
-            offs = col.offsets.to_numpy()
-            lens = offs[1:] - offs[:-1]
-            valid = (~_np.asarray(col.is_null())) & (lens == dim)
-            vals = _np.asarray(col.values, dtype=_np.float64)
-            bucket = _np.zeros(n, dtype=_np.int64)
-            nrm = _np.full(n, _np.nan)
-            if valid.all() and n > 0:
-                E = vals[offs[0]:offs[-1]].reshape(n, dim)
-                bucket = ((E @ P.T) >= 0) @ pw
-                nrm = _np.sqrt((E * E).sum(axis=1))
-            elif valid.any():
-                idx = _np.flatnonzero(valid)
-                E = _np.empty((len(idx), dim))
-                for j, i in enumerate(idx):
-                    E[j] = vals[offs[i]:offs[i] + dim]
-                bucket[idx] = ((E @ P.T) >= 0) @ pw
-                nrm[idx] = _np.sqrt((E * E).sum(axis=1))
-            yield _pa.RecordBatch.from_arrays(
-                [tb.column("vec_id").combine_chunks(), col,
-                 _pa.array(nrm, mask=~valid),
-                 _pa.array(bucket)],
+            col = batch.column("embedding")
+            E, valid = _emb_matrix(col, dim)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("vec_id"), col,
+                 pa.array(_norms(E), mask=~valid),
+                 pa.array(_buckets(E, valid, P))],
                 names=["vec_id", "embedding", "nrm", "bucket"])
 
-    return (emb.select("vec_id", "embedding")
+    return (_emb_cols(emb, "vec_id")
             .mapInArrow(sig, schema="vec_id long, "
                                     "embedding array<double>, "
                                     "nrm double, bucket long"))
@@ -204,97 +244,18 @@ def knn_lsh(emb: DataFrame, query_ids, dim, k=5, n_planes=6) -> DataFrame:
     """Approximate top-k: cosine computed only within LSH buckets.
     Recall depends on n_planes.
 
-    r9 (guide §4.2, same shape as knn_bruteforce): the query set is
-    bounded (len(query_ids) rows), so its vectors are fetched once,
-    their buckets/norms computed driver-side, and the corpus streams
-    through ONE numpy mapInArrow that signatures each batch, keeps
-    rows whose bucket matches a query bucket, and scores only those
-    candidates — the broadcast bucket join, the per-pair HOF dot and
-    the signature round-trip of every embedding all disappear.
-    Bucket bits are sign decisions with measured >= 1e10x margin over
-    summation-order error; rows with NULL/wrong-length embeddings
-    keep the old semantics (bucket 0, cos NULL if matched).  1.03 s
-    (r8 shape) -> 0.66 (r9 join shape) -> ~0.4 s on the 20k probe.
+    knn_bruteforce's scoring pass with a bucket mask: a (corpus row,
+    query) pair is kept only when the corpus row's bucket equals the
+    query's, both computed in the pass with lsh_signature's kernel —
+    no bucket join, no signature round-trip of the embeddings.
+    Invalid vectors (query or corpus) fall in bucket 0, and their
+    pairs have cos NULL.  1.03 s (r8 shape) -> 0.66 (r9 join shape)
+    -> ~0.4 s on the 20k probe.
 
     Building the frame runs a Spark job: the query vectors are
     collect()ed at call time, a snapshot of `emb` as it was then."""
-    qrows = (emb.filter(F.col("vec_id").isin(list(query_ids)))
-             .select("vec_id", "embedding").collect())
-    qrows = sorted((r for r in qrows if r[1] is not None),
-                   key=lambda r: r[0])
-    q_ids = [r[0] for r in qrows]
-    q_mat = [list(r[1]) for r in qrows]
-    planes = hyperplane_values(dim, n_planes)
-
-    def score(batches):
-        import numpy as _np
-        import pyarrow as _pa
-        m = len(q_ids)
-        if m == 0:
-            return
-        qi = _np.asarray(q_ids, dtype=_np.int64)
-        Q = _np.asarray(q_mat, dtype=_np.float64)
-        Qn = _np.sqrt((Q * Q).sum(axis=1))
-        P = _np.asarray(planes, dtype=_np.float64)
-        pw = (1 << _np.arange(P.shape[0], dtype=_np.int64))
-        qb = ((Q @ P.T) >= 0) @ pw
-        for batch in batches:
-            tb = _pa.Table.from_batches([batch])
-            n_id = tb.column("vec_id").to_numpy()
-            col = tb.column("embedding").combine_chunks()
-            n = len(n_id)
-            if n == 0:
-                continue
-            offs = col.offsets.to_numpy()
-            lens = offs[1:] - offs[:-1]
-            valid = (~_np.asarray(col.is_null())) & (lens == dim)
-            vals = _np.asarray(col.values, dtype=_np.float64)
-            if valid.all():
-                E = vals[offs[0]:offs[-1]].reshape(n, dim)
-            else:
-                E = _np.zeros((n, dim))
-                for i in _np.flatnonzero(valid):
-                    E[i] = vals[offs[i]:offs[i] + dim]
-            En = _np.sqrt((E * E).sum(axis=1))
-            bucket = _np.zeros(n, dtype=_np.int64)
-            bucket[valid] = (((E[valid] @ P.T) >= 0) @ pw)
-            out_q, out_n, out_c, out_null = [], [], [], []
-            for j in range(m):
-                hit = (bucket == qb[j]) & (n_id != qi[j])
-                if not hit.any():
-                    continue
-                hv = hit & valid
-                with _np.errstate(invalid="ignore",
-                                  divide="ignore"):
-                    cc = _np.round((E[hv] @ Q[j]) /
-                                   (En[hv] * Qn[j]), 6)
-                out_q.append(_np.full(hv.sum(), qi[j]))
-                out_n.append(n_id[hv])
-                out_c.append(cc)
-                out_null.append(_np.zeros(hv.sum(), dtype=bool))
-                hn = hit & ~valid
-                if hn.any():
-                    out_q.append(_np.full(hn.sum(), qi[j]))
-                    out_n.append(n_id[hn])
-                    out_c.append(_np.full(hn.sum(), _np.nan))
-                    out_null.append(_np.ones(hn.sum(), dtype=bool))
-            if not out_q:
-                continue
-            cc = _np.concatenate(out_c)
-            yield _pa.RecordBatch.from_arrays(
-                [_pa.array(_np.concatenate(out_q)),
-                 _pa.array(_np.concatenate(out_n)),
-                 _pa.array(cc, mask=_np.concatenate(out_null))],
-                names=["q_id", "n_id", "cos"])
-
-    scored = (emb.select("vec_id", "embedding")
-              .mapInArrow(score,
-                          schema="q_id long, n_id long, cos double"))
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(),
-                                          F.col("n_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("q_id", "rank", "n_id", "cos"))
+    return _top_k(_brute_scores(emb, query_ids,
+                                hyperplane_values(dim, n_planes)), k)
 
 
 def embedding_near_dups(emb: DataFrame, threshold=0.95,
@@ -311,8 +272,9 @@ def embedding_near_dups(emb: DataFrame, threshold=0.95,
     i < k) on the left side — the standard multi-probe recall lever
     ((k+1)x candidate cost); embedding_dup_recall() measures what it
     buys on this corpus."""
-    # r9: norms are computed once per row (numpy pass on the LSH
-    # path, one JVM fold on the exact path) instead of once per PAIR
+    # r9: norms are computed once per row (lsh_signature on the
+    # multi-probe path, one JVM fold on the exact path; per block on
+    # the bucket path) instead of once per PAIR
     # inside the pair's cosine — the pair scoring drops from three
     # interpreted HOF folds to one dot; values identical (same
     # doubles divided).
@@ -321,50 +283,41 @@ def embedding_near_dups(emb: DataFrame, threshold=0.95,
         # self-join materialized BOTH 64-dim arrays per candidate
         # pair and paid an interpreted HOF dot each (at 20k vectors
         # in 2^6 buckets that is 17M pairs / ~17 GB through the
-        # filter; measured 248 s).  applyInPandas ships every vector
-        # ONCE per bucket and one numpy matmul scores the whole
-        # upper triangle: 248 s -> ~4 s, identical output (rows with
-        # NULL/invalid embeddings scored cos=NULL before and were
+        # filter; measured 248 s).  applyInArrow ships every vector
+        # ONCE per bucket and numpy scores the upper triangle in
+        # blocks of BLOCK rows, so a hot bucket holds BLOCK x bucket
+        # cosines at a time: 248 s -> ~4 s, identical output (rows
+        # with invalid embeddings scored cos=NULL before and were
         # dropped by the threshold filter, so excluding them up
-        # front changes nothing).  Per-bucket memory is O(size^2)
-        # doubles — same asymptotics the join already had;
-        # embedding_bucket_stats remains the no-silent-caps monitor
-        # for hot buckets.
-        sig = _lsh_signature_np(emb, dim, n_planes)
-        valid = sig.filter(F.col("nrm").isNotNull())
+        # front changes nothing).  embedding_bucket_stats remains the
+        # no-silent-caps monitor for hot buckets.
+        valid = lsh_signature(emb, dim, n_planes) \
+            .filter(F.col("nrm").isNotNull())
 
-        def score_bucket(pdf):
-            import numpy as _np
-            import pandas as _pd
-            n = len(pdf)
-            if n < 2:
-                return _pd.DataFrame(
-                    {"vec_a": _pd.Series(dtype="int64"),
-                     "vec_b": _pd.Series(dtype="int64"),
-                     "cos": _pd.Series(dtype="float64")})
-            order = _np.argsort(pdf["vec_id"].to_numpy())
-            ids = pdf["vec_id"].to_numpy()[order]
-            V = _np.stack(pdf["embedding"].to_numpy()[order])
-            nr = pdf["nrm"].to_numpy()[order]
-            with _np.errstate(invalid="ignore", divide="ignore"):
-                C = _np.round((V @ V.T) / _np.outer(nr, nr), 6)
-            iu, ju = _np.triu_indices(n, k=1)
-            cc = C[iu, ju]
-            # Spark's `cos >= threshold` keeps NaN (NaN compares
-            # GREATER than everything in Spark SQL, and the old join
-            # path emitted NaN-cos pairs for zero-norm vectors);
-            # ~(cc < t) reproduces that exactly in numpy
-            keep = ~(cc < threshold)
-            return _pd.DataFrame({"vec_a": ids[iu[keep]],
-                                  "vec_b": ids[ju[keep]],
-                                  "cos": cc[keep]})
+        def score_bucket(tb):
+            tb = tb.sort_by("vec_id")
+            ids = tb.column("vec_id").to_numpy()
+            E, _ = _emb_matrix(tb.column("embedding").combine_chunks(),
+                               dim)
+            out = []
+            for s in range(0, len(ids), BLOCK):
+                C = _cosine(E[s:s + BLOCK], E[s:])
+                # Spark's `cos >= threshold` keeps NaN (NaN compares
+                # GREATER than everything in Spark SQL, and the old
+                # join path emitted NaN-cos pairs for zero-norm
+                # vectors); ~(C < t) reproduces that exactly in numpy
+                i, j = np.triu(~(C < threshold), 1).nonzero()
+                out.append(pa.table({"vec_a": ids[s + i],
+                                     "vec_b": ids[s + j],
+                                     "cos": C[i, j]}))
+            return pa.concat_tables(out)
 
         return (valid.groupBy("bucket")
-                .applyInPandas(score_bucket,
-                               schema="vec_a long, vec_b long, "
-                                      "cos double"))
+                .applyInArrow(score_bucket,
+                              schema="vec_a long, vec_b long, "
+                                     "cos double"))
     if use_lsh:
-        sig = _lsh_signature_np(emb, dim, n_planes)
+        sig = lsh_signature(emb, dim, n_planes)
         a = sig.select(F.col("vec_id").alias("vec_a"),
                        F.col("embedding").alias("emb_a"),
                        F.col("nrm").alias("nrm_a"),
@@ -517,63 +470,28 @@ def ivf_assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
     rows) disappears entirely.  Tie/NULL/NaN semantics match the old
     window exactly: numpy argmax picks the FIRST maximum (= lowest
     cid, the window's tie-break), a NaN sim ranks greatest exactly
-    like Spark's NaN-largest DESC sort, and an invalid/NULL
-    embedding (all sims NULL -> window fell through to cid ASC)
-    maps to the lowest cid.
+    like Spark's NaN-largest DESC sort, a NULL sim ranks last, and an
+    invalid embedding (all sims NULL -> window fell through to cid
+    ASC) maps to the lowest cid.
 
     Building the frame runs a Spark job: the centroids are
     collect()ed at call time, a snapshot of `cents` as it was then."""
-    crows = sorted(((r["cid"], list(r["centroid"]))
-                    for r in cents.select("cid", "centroid").collect()
-                    if r["centroid"] is not None),
-                   key=lambda t: t[0])
-    cid_list = [c for c, _ in crows]
-    cent_mat = [v for _, v in crows]
+    cids, _, groups = _vectors(r for r in cents.select(
+        "cid", F.col("centroid").cast("array<double>")).collect()
+        if r[1] is not None)
 
     def assign(batches):
-        import numpy as _np
-        import pyarrow as _pa
-        m = len(cid_list)
-        if m == 0:
+        if not len(cids):
             return
-        cids = _np.asarray(cid_list, dtype=_np.int64)
-        C = _np.asarray(cent_mat, dtype=_np.float64)
-        Cn = _np.sqrt((C * C).sum(axis=1))
-        dim = C.shape[1]
         for batch in batches:
-            tb = _pa.Table.from_batches([batch])
-            vec_id = tb.column("vec_id").to_numpy()
-            col = tb.column("embedding").combine_chunks()
-            n = len(vec_id)
-            if n == 0:
-                continue
-            offs = col.offsets.to_numpy()
-            lens = offs[1:] - offs[:-1]
-            valid = (~_np.asarray(col.is_null())) & (lens == dim)
-            vals = _np.asarray(col.values, dtype=_np.float64)
-            best = _np.zeros(n, dtype=_np.int64)   # min-cid default
-            if valid.all():
-                E = vals[offs[0]:offs[-1]].reshape(n, dim)
-                En = _np.sqrt((E * E).sum(axis=1))
-                with _np.errstate(invalid="ignore", divide="ignore"):
-                    sims = _np.round(
-                        (E @ C.T) / (En[:, None] * Cn[None, :]), 6)
-                best = _np.argmax(sims, axis=1)
-            elif valid.any():
-                idx = _np.flatnonzero(valid)
-                E = _np.empty((len(idx), dim))
-                for j, i in enumerate(idx):
-                    E[j] = vals[offs[i]:offs[i] + dim]
-                En = _np.sqrt((E * E).sum(axis=1))
-                with _np.errstate(invalid="ignore", divide="ignore"):
-                    sims = _np.round(
-                        (E @ C.T) / (En[:, None] * Cn[None, :]), 6)
-                best[idx] = _np.argmax(sims, axis=1)
-            yield _pa.RecordBatch.from_arrays(
-                [_pa.array(vec_id), _pa.array(cids[best])],
+            cos, ok = _cos_matrix(batch.column("embedding"), groups,
+                                  len(cids))
+            best = np.where(ok, cos, -np.inf).argmax(axis=1)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("vec_id"), pa.array(cids[best])],
                 names=["vec_id", "cid"])
 
-    return (emb.select("vec_id", "embedding")
+    return (_emb_cols(emb, "vec_id")
             .mapInArrow(assign, schema="vec_id long, cid long"))
 
 
@@ -593,7 +511,7 @@ def ivf_knn(emb: DataFrame, query_ids, k=5, n_centroids=16,
     # (round-2 VERDICT).  It is <= n_centroids rows; materialize once.
     cents = cents.localCheckpoint(eager=True)
     assigned = ivf_assign(emb, cents)
-    q = (emb.filter(F.col("vec_id").isin(list(query_ids)))
+    q = (_query_rows(emb, query_ids)
          .select(F.col("vec_id").alias("q_id"),
                  F.col("embedding").alias("q_emb"),
                  _norm(F.col("embedding")).alias("q_nrm")))
@@ -619,11 +537,7 @@ def ivf_knn(emb: DataFrame, query_ids, k=5, n_centroids=16,
                                    F.col("embedding")) /
                               (F.col("q_nrm") * F.col("nrm")), 6)
                       .alias("cos")))
-    w2 = Window.partitionBy("q_id").orderBy(F.col("cos").desc(),
-                                            F.col("n_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-            .select("q_id", "rank", "n_id", "cos"))
+    return _top_k(scored, k)
 
 
 def semdedup_keep(emb: DataFrame, threshold=0.2, dim=64,

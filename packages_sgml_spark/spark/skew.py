@@ -71,8 +71,3 @@ def salted_join_broadcastable(big: DataFrame, small: DataFrame, key,
                            F.explode(F.sequence(F.lit(0),
                                                 F.lit(shards - 1)))))
     return big_s.join(small_s, [key, "_salt"]).drop("_salt")
-
-
-def host_of(url_col):
-    """Host extraction from a url column (pure SQL)."""
-    return F.regexp_extract(url_col, r"^[a-z]+://([^/]+)", 1)

@@ -49,12 +49,6 @@ from .extract import _node_rows, _page_sink
 _I64 = (1 << 63) - 1
 
 
-def _h64(b: bytes) -> int:
-    """Stable 64-bit hash (md5-derived; never Python's seeded
-    hash())."""
-    return int.from_bytes(hashlib.md5(b).digest()[:8], "big") & _I64
-
-
 def _doc_fingerprints(rows):
     """Per-document bottom-up subtree fingerprints.
 

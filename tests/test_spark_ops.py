@@ -1070,6 +1070,168 @@ def test_embedding_bucket_stats(spark):
     assert max(r.bucket_size for r in hist) >= 10   # the planted clump
 
 
+def test_emb_matrix_null_length_rule():
+    """The one NULL/length rule of the similarity kernel: a row is
+    valid iff it is non-NULL, of the scored length and free of NULL
+    elements; invalid rows decode to zeros.  Sliced arrays too."""
+    import pyarrow as pa
+    from packages_sgml_spark.spark.similarity import _emb_matrix
+    arr = pa.array([[9.0, 9.0], [1.0, 2.0], None, [1.0, None],
+                    [3.0, 4.0, 5.0], [6.0, 7.0], []],
+                   type=pa.list_(pa.float64())).slice(1)
+    E, valid = _emb_matrix(arr, 2)
+    assert valid.tolist() == [True, False, False, False, True, False]
+    assert E.tolist() == [[1.0, 2.0], [0.0, 0.0], [0.0, 0.0],
+                          [0.0, 0.0], [6.0, 7.0], [0.0, 0.0]]
+    E3, valid3 = _emb_matrix(arr, 3)
+    assert valid3.tolist() == [False, False, False, True, False, False]
+    assert E3[3].tolist() == [3.0, 4.0, 5.0]
+    E, valid = _emb_matrix(arr.slice(4, 1), 2)
+    assert valid.tolist() == [True] and E.tolist() == [[6.0, 7.0]]
+    assert _emb_matrix(arr.slice(0, 0), 2)[0].shape == (0, 2)
+
+
+def test_similarity_float_input_matches_cast(spark):
+    """The embeddings table's own array<float> column goes through
+    every numpy pass as is: the LSH near-dup pairs, the semantic
+    dedup keep and the bucket histogram equal their results on the
+    array<double> cast (regression: the LSH signature pass passed the
+    float column through under an array<double> schema and the JVM
+    failed reading it)."""
+    from packages_sgml_spark.spark import similarity as S
+    raw = spark.read.parquet(SF + "/embeddings.parquet")
+    assert raw.schema["embedding"].dataType.simpleString() == \
+        "array<float>"
+    cast = raw.withColumn("embedding",
+                          F.col("embedding").cast("array<double>"))
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    for f in (lambda e: S.embedding_near_dups(e, threshold=0.2,
+                                              use_lsh=True),
+              lambda e: S.semdedup_keep(e, threshold=0.2),
+              S.embedding_bucket_stats):
+        want = rows(f(cast))
+        assert want and rows(f(raw)) == want
+
+
+def _ref_cos(a, b):
+    """The zip_with rule: cos is NULL unless both vectors are
+    non-NULL, NULL-element free and of the same length."""
+    import math
+    if a is None or b is None or len(a) != len(b) or \
+            None in a or None in b:
+        return None
+    d = sum(x * y for x, y in zip(a, b))
+    return round(d / (math.sqrt(sum(x * x for x in a)) *
+                      math.sqrt(sum(y * y for y in b))), 6)
+
+
+def test_knn_null_and_ragged_queries(spark):
+    """A NULL-embedding query keeps its k rows (cos NULL, ranked by
+    n_id) instead of being dropped; a ragged query scores NULL
+    against every other length instead of raising, and a real cos
+    against a corpus row of its own length.  knn_lsh puts invalid
+    vectors in bucket 0 and ranks the same way inside the bucket."""
+    import random
+    from packages_sgml_spark.spark import similarity as S
+    rng = random.Random(17)
+    vecs = {0: None, 1: [rng.uniform(-1, 1) for _ in range(5)],
+            20: [rng.uniform(-1, 1) for _ in range(5)],
+            21: [0.5, None] + [0.25] * 6}
+    vecs.update({i: [rng.uniform(-1, 1) for _ in range(8)]
+                 for i in range(2, 16)})
+    emb = spark.createDataFrame(sorted(vecs.items()),
+                                "vec_id long, embedding array<double>")
+    planes = S.hyperplane_values(8, 1)
+
+    def bucket(v):
+        if v is None or len(v) != 8 or None in v:
+            return 0
+        return sum(1 << h for h, p in enumerate(planes)
+                   if sum(x * y for x, y in zip(v, p)) >= 0)
+
+    def expect(qs, k, same_bucket):
+        out = {}
+        for q in qs:
+            cand = [(n, _ref_cos(vecs[q], v)) for n, v in vecs.items()
+                    if n != q and (not same_bucket or
+                                   bucket(v) == bucket(vecs[q]))]
+            cand.sort(key=lambda t: (t[1] is None, -(t[1] or 0), t[0]))
+            out[q] = cand[:k]
+        return out
+
+    def got(df):
+        out = {}
+        for r in sorted(df.collect(), key=lambda r: (r.q_id, r.rank)):
+            out.setdefault(r.q_id, []).append((r.n_id, r.cos))
+        return out
+
+    def same(g, e):
+        assert set(g) == set(e), (g, e)
+        for q in e:
+            assert [n for n, _ in g[q]] == [n for n, _ in e[q]], q
+            for (_, c), (_, ce) in zip(g[q], e[q]):
+                assert (c is None) == (ce is None), (q, c, ce)
+                assert c is None or abs(c - ce) < 2e-6, (q, c, ce)
+
+    qs = [0, 1, 2, 21]
+    e = expect(qs, 4, False)
+    assert all(c is None for _, c in e[0]) and \
+        [n for n, _ in e[0]] == [1, 2, 3, 4]
+    assert e[1][0][0] == 20 and e[1][0][1] is not None
+    same(got(S.knn_bruteforce(emb, qs, k=4)), e)
+    same(got(S.knn_lsh(emb, qs, dim=8, k=4, n_planes=1)),
+         expect(qs, 4, True))
+
+
+def test_embedding_near_dups_blocked_hot_bucket(spark):
+    """Hot buckets are scored in blocks of BLOCK rows: with one plane
+    every bucket holds more than one block, and the LSH pairs equal
+    the exact all-pairs result restricted to same-bucket pairs, cos
+    values included."""
+    import random
+    from packages_sgml_spark.spark import similarity as S
+    rng = random.Random(23)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(16)])
+            for i in range(2600)]
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>")
+    bucket = dict(S.lsh_signature(emb, 16, 1)
+                  .select("vec_id", "bucket").collect())
+    sizes = [sum(1 for b in bucket.values() if b == x) for x in (0, 1)]
+    assert min(sizes) > S.BLOCK, sizes
+    exact = {(r.vec_a, r.vec_b): r.cos for r in
+             S.embedding_near_dups(emb, threshold=0.7).collect()}
+    lsh = {(r.vec_a, r.vec_b): r.cos for r in
+           S.embedding_near_dups(emb, threshold=0.7, use_lsh=True,
+                                 dim=16, n_planes=1).collect()}
+    want = {p: c for p, c in exact.items()
+            if bucket[p[0]] == bucket[p[1]]}
+    assert len(want) > 1000
+    assert lsh == want
+
+
+@pytest.mark.parametrize("n_planes", [6, 8])
+def test_lsh_signature_matches_duckdb(spark, n_planes):
+    """The LSH reference: the numpy signature's buckets equal the
+    DuckDB oracle's SQL sign sums (oracles._lsh_bucket_expr) on every
+    sf0.001 vector, the array<float> column read as is."""
+    import duckdb
+    from packages_sgml_spark.spark.oracles import _lsh_bucket_expr
+    from packages_sgml_spark.spark.similarity import lsh_signature
+    path = SF + "/embeddings.parquet"
+    got = dict(lsh_signature(spark.read.parquet(path), 64, n_planes)
+               .select("vec_id", "bucket").collect())
+    want = dict(duckdb.connect().execute(
+        "SELECT vec_id, %s FROM (SELECT vec_id, CAST(embedding AS "
+        "DOUBLE[]) AS emb FROM read_parquet('%s'))"
+        % (_lsh_bucket_expr("emb", 64, n_planes), path)).fetchall())
+    assert len(got) == 500 and got == want
+    assert len(set(got.values())) > 1
+
+
 def test_extract_survives_poison_documents(spark):
     """r5: adversarial binaries through the FULL Spark extract path —
     random bytes, bogus UTF-16, lone-surrogate char refs (&#xD800;),
