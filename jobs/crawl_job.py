@@ -12,6 +12,20 @@ text extraction with parse-error metrics [and the quality features]
 in one Python pass per page -> parquet text sink + per-partition
 metrics sidecar [+ per-url quality sidecar] [+ WET archives].
 
+The task plan (warc.plan_ranges, on the driver, no Spark job): every
+locally readable archive of the listing becomes a (path, start, end)
+range, and one pandas-free mapInArrow per task reads its ranges,
+decodes the records, and parses and scores each page
+(warc.warc_text_quality): one Python worker per task, and no page
+bytes cross the Arrow boundary.  `--repartition auto` plans the
+session's default parallelism in tasks: ranges pack into tasks by
+Spark's file-packing rule, and with fewer ranges than cores the
+`.warc.gz` archives split at gzip-member boundaries, so even one
+archive parses on every core.  `--repartition N` asks for at least N
+ranges the same way; `0` reads each archive in one task.  Archives
+on non-local schemes are read through binaryFile, one per row, by the
+same per-archive code.
+
 The parse runs once: its rows are materialized by one eager
 localCheckpoint to disk, and every sink is written from those rows,
 in the order text -> metrics -> quality -> WET -> archive manifest.
@@ -35,9 +49,11 @@ Resume is two-level and always on:
   AFTER the text write commits) are pruned from the next run's input
   at plan time — a killed run re-reads only its own unfinished
   archives;
-- url level: an anti-join against the text sink makes the re-read
-  exact — documents already extracted by the killed run are never
-  appended twice.  The quality sidecar resumes the same way: text
+- url level: an anti-join against the text sink, on the parsed rows
+  after the pass, makes the re-read exact — documents already
+  extracted by the killed run are never appended twice.  Only pages
+  of archives the manifest has not committed are parsed at all, so
+  the join costs the re-read pages of the killed run's own archives.  The quality sidecar resumes the same way: text
   rows of earlier launches with no quality row are sided in this
   launch's quality write.
 
@@ -65,9 +81,9 @@ def run(spark, args):
     from pyspark.sql import Observation, functions as F
 
     from packages_sgml_spark.core.quality import FIELDS
-    from packages_sgml_spark.spark.warc import (warc_pages, warc_todo,
+    from packages_sgml_spark.spark.warc import (warc_text_quality,
+                                                warc_todo,
                                                 write_wet_pages)
-    from packages_sgml_spark.spark.extract import extract_text_quality
     from packages_sgml_spark.spark.checkpoint import (
         append_metrics, append_rows, read_rows, read_parquet_or_none,
         with_lineage, resume_filter)
@@ -87,25 +103,28 @@ def run(spark, args):
     if not todo:
         return summary
 
-    statuses = tuple(int(s) for s in args.statuses.split(",")) \
-        if args.statuses else ()
-    pages = warc_pages(spark, todo, statuses=statuses)
     # the text sink as it stands before this launch writes to it,
     # read with the columns it is known to have (no inference job);
     # its file listing is taken here, so the quality repair below
     # never sees this launch's own text rows
     done_text = read_parquet_or_none(
         spark, text_path, "url string, text_extracted string")
-    if done_text is not None:
-        pages = resume_filter(pages, done_text)
 
+    statuses = tuple(int(s) for s in args.statuses.split(",")) \
+        if args.statuses else ()
     rep = args.repartition
     if rep != "auto":
         rep = int(rep)
-    ex = extract_text_quality(
-        pages, dialect=args.dialect, repartition=rep,
+    # the one Python pass: read, decode, parse and score each page in
+    # the task that reads its archive range
+    ex = warc_text_quality(
+        spark, todo, statuses=statuses, dialect=args.dialect,
         text_format=getattr(args, "text_format", "plain"),
-        quality=args.quality)
+        quality=args.quality, tasks=rep)
+    if done_text is not None:
+        # url-level resume after the pass: only pages of archives the
+        # manifest has not committed are parsed at all
+        ex = resume_filter(ex, done_text)
     rows = with_lineage(ex, args.run_id).localCheckpoint(
         eager=True, storageLevel=StorageLevel.DISK_ONLY)
 
@@ -189,7 +208,10 @@ def main(argv=None):
     ap.add_argument("--statuses", default="200",
                     help="comma list of HTTP statuses to keep; "
                          "empty = all")
-    ap.add_argument("--repartition", default="auto")
+    ap.add_argument("--repartition", default="auto",
+                    help="parse tasks: auto = one per core (archives "
+                         "pack, or split at gzip members); N = at "
+                         "least N; 0 = one per archive")
     ap.add_argument("--wet", action="store_true",
                     help="also publish the text layer as WET archives")
     ap.add_argument("--quality", action="store_true",

@@ -22,28 +22,28 @@ from pyspark.sql import DataFrame, functions as F
 def read_parquet_or_none(spark, path, schema=None):
     """Read a sink that may not exist yet; None means "first run".
     With `schema` (a DDL string of the columns wanted) the read takes
-    it as given: no schema-inference Spark job.
+    it as given: no schema-inference Spark job.  `path` is a literal
+    path, not a glob.
 
-    Only a genuinely-missing or genuinely-empty sink qualifies —
-    PATH_NOT_FOUND / "Path does not exist" for missing,
-    UNABLE_TO_INFER_SCHEMA for a dir a crashed first attempt created
-    but never committed (only _temporary/, or a 0-row partitioned
-    write which produces no part files at all).  Any other read
-    failure (permissions, corrupt footer, FS hiccup) must surface:
-    treating it as "first run" would silently recompute and break
-    exactly-once/resume.  THE one definition — every job's resume
-    path routes through here (a session-5 review catch: four
-    hand-maintained copies of this three-string match would drift
-    on the next Spark error-class rename)."""
+    Only a genuinely-missing or genuinely-empty sink qualifies — a
+    path the file system does not have (one `exists` call: no reader
+    is built and no exception raised), or UNABLE_TO_INFER_SCHEMA for
+    a dir a crashed first attempt created but never committed (only
+    _temporary/, or a 0-row partitioned write which produces no part
+    files at all).  Any other read failure (permissions, corrupt
+    footer, FS hiccup) must surface: treating it as "first run" would
+    silently recompute and break exactly-once/resume.  THE one
+    definition — every job's resume path routes through here."""
     from pyspark.errors import AnalysisException
+    sc = spark.sparkContext
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    if not p.getFileSystem(sc._jsc.hadoopConfiguration()).exists(p):
+        return None
     reader = spark.read if schema is None else spark.read.schema(schema)
     try:
         return reader.parquet(path)
     except AnalysisException as ex:
-        msg = str(ex)
-        if ("PATH_NOT_FOUND" not in msg
-                and "Path does not exist" not in msg
-                and "UNABLE_TO_INFER_SCHEMA" not in msg):
+        if "UNABLE_TO_INFER_SCHEMA" not in str(ex):
             raise
         return None
 

@@ -1,40 +1,18 @@
 """Page sinks: the html binary column -> extracted text, DOM node rows,
 parse errors and the other per-page outputs of the parser.
 
-Every sink is one call to `_page_sink`, the only batch loop that
-parses pages.  It owns:
-
-* the prologue: select (url, html [, pass-through] [, dialect]) and,
-  at 100 TB, repartition by xxhash64(url) so work is uniform
-  regardless of crawl ordering.  The unit of work is a document
-  (embarrassingly parallel), so hot hosts don't matter here.
-  `repartition="auto"` shuffles only when the source has fewer
-  partitions than cores, N > 0 always, 0 never;
-* one Arrow-batched map over pandas frames: no per-row Python UDF
-  dispatch.  Catalyst sees a narrow map over the selected columns, so
-  column pruning and predicate pushdown on the rest still reach the
-  scan;
-* the per-page guards, the max_memory analog of sgml2pl.c:603-615.
-  NULL or empty html is status "empty", html over MAX_HTML_BYTES is
-  "too_large", a parse that raises is "exception"; no bad page fails
-  its task.  Status vocabulary: ok | empty | too_large | exception |
-  not_found (extract_element_text's page without the element);
-* one ParserOptions per dialect per task, not per page (the parsers
-  only read their options).
-
-A sink is a per-page function `page(html: bytes, opts, key)`, where
-`key` is the tuple of the page's url and pass-through values, plus its
-output schema.  There are three output shapes:
-
-1. one status row per page, for a schema with a `status` column:
-   `key + page(...)`, or for a page that was not parsed, NULL values,
-   zero counts, the status, and the guard's message in `parse_errors`
-   where the schema has it (`extract`, `extract_text_quality`,
-   `extract_markdown`, `extract_main`, the one-string sinks);
-2. zero or more rows per page, returned by `page`; a page that was
-   not parsed contributes none (`extract_nodes_rows`,
-   `extract_name_count`, `links.outlinks`, the `templates` passes);
-3. a per-task fold over the shape-2 rows (`extract_tag_counts`).
+Every sink is one call to `_page_sink`: one narrow Arrow-batched map
+over pandas frames (no per-row Python UDF dispatch) whose body is
+`pageloop.page_rows`, the only loop that parses pages.  pageloop's
+docstring states the per-page guards, the status vocabulary and the
+three output shapes.  `_page_sink` owns the prologue: select
+(url, html [, pass-through] [, dialect]) and, at 100 TB, repartition
+by xxhash64(url) so work is uniform regardless of crawl ordering.  The
+unit of work is a document (embarrassingly parallel), so hot hosts
+don't matter here.  `repartition="auto"` shuffles only when the source
+has fewer partitions than cores, N > 0 always, 0 never.  Catalyst sees
+a narrow map over the selected columns, so column pruning and
+predicate pushdown on the rest still reach the scan.
 """
 
 from collections import Counter
@@ -50,8 +28,13 @@ from pyspark.sql.types import (
 
 from ..core.dom import dom_to_json, extract_text, flatten_nodes
 from ..core.parser import (FirstElementTextParser, NodeTableParser,
-                           ParserOptions, SGMLParser, TagCountParser,
-                           TextOnlyParser)
+                           SGMLParser, TagCountParser)
+from .pageloop import (MAX_HTML_BYTES, TEXT_META_SCHEMA, out_schema,
+                       page_rows, text_quality_sink)
+from .pageloop import extract_options as _extract_options
+from .pageloop import markdown as _markdown
+from .pageloop import options as _options
+from .pageloop import text_only as _text_only
 from .util import spread
 
 NODE_TYPE = StructType([
@@ -85,109 +68,25 @@ EXTRACT_SCHEMA = StructType([
     StructField("status", StringType()),
 ])
 
-MAX_HTML_BYTES = 8 * 1024 * 1024   # per-page guard (max_memory analog,
-                                   # sgml2pl.c:603-615)
-
-
-def _options(dialect, **kw):
-    """ParserOptions of the page sinks: UTF-8 input, every error
-    collected."""
-    return ParserOptions(dialect=dialect, encoding="utf-8",
-                         max_errors=-1, **kw)
-
-
 _quiet_options = partial(_options, quiet=True)
-
-
-def _extract_options(dialect):
-    """extract()'s error policy: unlimited collection only for the
-    HTML dialects; strict ones cap at 50 so one garbage page can't
-    accumulate millions of ParseError objects."""
-    return ParserOptions(
-        dialect=dialect, encoding="utf-8",
-        max_errors=-1 if dialect.startswith(("html", "xhtml")) else 50)
-
-
-def _unparsed(cols, status, nbytes, message):
-    """Output columns of a page that was not parsed: NULL values and
-    zero counts, with the guard's message (if any) as its one parse
-    error."""
-    fill = {"parse_errors": [] if message is None else
-            [{"severity": "error", "line": 0, "message": message}],
-            "n_errors": 0 if message is None else 1,
-            "n_nodes": 0, "n_blocks_kept": 0, "html_bytes": nbytes,
-            "status": status}
-    return tuple(fill.get(c) for c in cols)
-
-
-def _page_records(batches, page, options, dialect, status_cols=None):
-    """The batch loop behind every page sink: one list of output
-    records per Arrow batch that has any.
-
-    A batch holds `html`, an optional per-row `dialect` (NULL falls
-    back to `dialect`) and the key columns, url first, that reach
-    `page` as one tuple.  With `status_cols` (the output columns after
-    url) every page yields `key + page(...)` or its status row;
-    without, `page` returns the page's records and a page that was
-    not parsed yields none."""
-    opts = {}
-    for pdf in batches:
-        htmls = pdf["html"].tolist()
-        dialects = (pdf["dialect"].tolist() if "dialect" in pdf.columns
-                    else [None] * len(htmls))
-        keys = zip(*[pdf[c].tolist() for c in pdf.columns
-                     if c not in ("html", "dialect")])
-        recs = []
-        for key, html, d in zip(keys, htmls, dialects):
-            nbytes = 0 if html is None else len(html)
-            if nbytes == 0:
-                status, message = "empty", None
-            elif nbytes > MAX_HTML_BYTES:
-                status, message = ("too_large",
-                                   "Insufficient input buffer resources")
-            else:
-                d = d or dialect
-                o = opts.get(d)
-                if o is None:
-                    o = opts[d] = options(d)
-                try:
-                    out = page(bytes(html), o, key)
-                except Exception as ex:  # noqa: BLE001 per-page isolation
-                    status, message = ("exception",
-                                       "parser exception: %s" % ex)
-                else:
-                    if status_cols is None:
-                        recs.extend(out)
-                    else:
-                        recs.append(key + out)
-                    continue
-            if status_cols is not None:
-                recs.append(key + _unparsed(status_cols, status, nbytes,
-                                            message))
-        # never yield an empty frame: pandas cannot type an empty
-        # column, and Arrow's map converter rejects the guess
-        if recs:
-            yield recs
 
 
 def _page_batches(batches, schema, page, options=_options,
                   dialect="html5", fold=None, derive=None):
-    """`_page_records` as pandas frames of `schema` — the body of a
-    page sink's Python worker, also callable on the driver.  A schema
-    with a `status` column gets one row per page (shape 1); `fold`
-    reduces the task's shape-2 records.  `derive`, a (fields, fn)
-    pair, appends `fn(record)` to every record, status rows included,
-    as the columns `fields` after `schema`'s."""
-    cols = schema.fieldNames()
-    records = _page_records(batches, page, options, dialect,
-                            cols[1:] if "status" in cols else None)
-    if fold:
-        records = fold(records)
-    if derive:
-        fields, fn = derive
-        cols = cols + [f.name for f in fields]
-        records = ([r + fn(r) for r in recs] for recs in records)
-    for recs in records:
+    """`pageloop.page_rows` over pandas batches, as pandas frames of
+    `schema` [+ `derive`'s fields] — the body of a page sink's Python
+    worker, also callable on the driver.  A batch holds `html`, an
+    optional per-row `dialect` and the key columns, url first."""
+    def columns(pdf):
+        keys = zip(*[pdf[c].tolist() for c in pdf.columns
+                     if c not in ("html", "dialect")])
+        return (keys, pdf["html"].tolist(),
+                pdf["dialect"].tolist() if "dialect" in pdf.columns
+                else None)
+
+    cols = out_schema(schema, derive).fieldNames()
+    for recs in page_rows(map(columns, batches), schema, page, options,
+                          dialect, fold, derive):
         yield pd.DataFrame.from_records(recs, columns=cols)
 
 
@@ -211,8 +110,7 @@ def _page_sink(pages: DataFrame, schema, page, options=_options,
         return _page_batches(batches, schema, page, options, dialect,
                              fold, derive)
 
-    out = StructType(schema.fields + derive[0]) if derive else schema
-    return src.mapInPandas(fn, schema=out)
+    return src.mapInPandas(fn, schema=out_schema(schema, derive))
 
 
 def _text_schema(col):
@@ -220,25 +118,6 @@ def _text_schema(col):
     return StructType([StructField("url", StringType()),
                        StructField(col, StringType()),
                        StructField("status", StringType())])
-
-
-def _text_only(html, opts):
-    """A page's plain text and parse errors, without building a DOM."""
-    p = TextOnlyParser(opts)
-    _dom, errors = p.parse(html)
-    return p.text(), errors
-
-
-def _markdown(html, opts):
-    """A page rendered as Markdown and its parse errors.  Renders from
-    the event stream (core/markdown.py MarkdownParser: no Element DOM,
-    rides the compiled executor's tape mode), byte-identical to the
-    dom_to_markdown walker by the differential tests in
-    tests/test_markdown.py."""
-    from ..core.markdown import MarkdownParser
-    p = MarkdownParser(opts)
-    _dom, errors = p.parse(html)
-    return p.markdown(), errors
 
 
 def _node_rows(html, opts):
@@ -327,15 +206,6 @@ def extract_text_only(pages: DataFrame, dialect="html5",
                       _extract_options, dialect, repartition)
 
 
-TEXT_META_SCHEMA = StructType([
-    StructField("url", StringType()),
-    StructField("text_extracted", StringType()),
-    StructField("n_errors", IntegerType()),
-    StructField("html_bytes", LongType()),
-    StructField("status", StringType()),
-])
-
-
 def extract_text_quality(pages: DataFrame, dialect="html5",
                          repartition="auto", text_format="plain",
                          quality=True) -> DataFrame:
@@ -349,20 +219,7 @@ def extract_text_quality(pages: DataFrame, dialect="html5",
     FIELDS DDL; values equal the JVM textops.quality_features over
     the same text (tests/test_jobs.py).  The page's text crosses the Arrow
     boundary once, and the worker ships no parse_errors array back."""
-    if text_format not in ("plain", "markdown"):
-        raise ValueError("text_format must be 'plain' or 'markdown'")
-    render = _markdown if text_format == "markdown" else _text_only
-
-    def page(html, opts, _key):
-        text, errors = render(html, opts)
-        return text, len(errors), len(html), "ok"
-
-    derive = None
-    if quality:
-        from ..core.quality import FIELDS, features
-        fields = StructType.fromDDL(
-            ", ".join("%s %s" % f for f in FIELDS)).fields
-        derive = (fields, lambda rec: features(rec[1]))
+    page, derive = text_quality_sink(text_format, quality)
     return _page_sink(pages, TEXT_META_SCHEMA, page, _extract_options,
                       dialect, repartition, row_dialect=True,
                       derive=derive)

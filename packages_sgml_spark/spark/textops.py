@@ -8,7 +8,7 @@ __spark_entry__.oracle_sql().  The one exception among the SQL-able
 operators is quality_features_arrow, the same features as
 quality_features computed by the Python kernel core.quality in one
 mapInArrow.  The crawl job computes the features in its parse pass
-(extract.extract_text_quality) and uses quality_features_arrow only
+(warc.warc_text_quality) and uses quality_features_arrow only
 to side text rows of earlier launches that have no quality row.
 (fix_text and compression_ratio are pandas UDFs too, because codec
 and zlib work has no Spark builtin.)"""
@@ -276,7 +276,7 @@ def quality_features_arrow(docs: DataFrame) -> DataFrame:
     Callers: jobs/crawl_job.py only, to repair orphans: text rows of
     earlier launches that have no quality row (a crash between the
     text and quality commits).  The crawl's own pages get the same
-    kernel in the parse pass (extract.extract_text_quality), so their
+    kernel in the parse pass (warc.warc_text_quality), so their
     text crosses the Arrow boundary once.  Curate's corpus_keep,
     stream_quality and the registered key keep quality_features: the
     JVM-only curate job would have to start Python workers for it,

@@ -12,43 +12,20 @@ def spread(df: DataFrame, key=None, factor=1) -> DataFrame:
     At crawl scale the input already has >= cores partitions and this
     is a no-op; the repartition only fires (one small shuffle) when it
     buys parallelism.  `key` optionally hashes rows to partitions for
-    uniform work distribution (north rule: repartition by url hash)."""
+    uniform work distribution (north rule: repartition by url hash).
+
+    The width is the RDD's partition count, which builds the frame's
+    RDD on the driver (no job).  Catalyst's size estimate is not a
+    stand-in: over a broadcast join it reports the product of the
+    sides (tens of GB for a one-file scan), which would skip the
+    repartition exactly where the scan is one partition."""
     if df.isStreaming:
         # micro-batch partitioning is the source's concern; .rdd is
         # illegal on streaming plans
         return df
     want = df.sparkSession.sparkContext.defaultParallelism * factor
-    if _est_partitions(df) >= want:
+    if df.rdd.getNumPartitions() >= want:
         return df
     if key is not None:
         return df.repartition(want, key)
     return df.repartition(want)
-
-
-def _est_partitions(df: DataFrame) -> int:
-    """Estimated scan width WITHOUT materializing an RDD plan
-    (`df.rdd.getNumPartitions()` builds the full RDD DAG per call — a
-    per-query driver tax once thousands of queries run).  Catalyst
-    statistics give the same signal planning-side: a file source's
-    `sizeInBytes` is the leaf-file total from the (cached) file index,
-    and Spark splits scans at ~maxPartitionBytes, so
-    size/maxPartitionBytes tracks the scan's partition count.  Small
-    gate inputs (< one split per core) repartition exactly as before;
-    crawl-scale inputs (>= cores splits) stay a no-op."""
-    try:
-        jdf = df._jdf
-        size = int(
-            jdf.queryExecution().optimizedPlan().stats()
-               .sizeInBytes().toString())
-        raw = df.sparkSession.conf.get(
-            "spark.sql.files.maxPartitionBytes", "134217728").lower()
-        mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
-        raw = raw[:-1] if raw.endswith("b") else raw
-        if raw and raw[-1] in mult:
-            max_pb = int(raw[:-1]) * mult[raw[-1]]
-        else:
-            max_pb = int(raw)
-        return max(1, size // max(1, max_pb))
-    except Exception:
-        # non-SQL plans / API drift: fall back to the RDD count
-        return df.rdd.getNumPartitions()

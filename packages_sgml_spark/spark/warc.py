@@ -3,39 +3,44 @@
 Common Crawl's native layout is the scale model here (BASELINE.json
 north star: "Common-Crawl-style web pages"): one crawl is ~70-90k
 ``*.warc.gz`` files of ~1 GB each, every record its own gzip member.
-That layout IS the partitioning strategy — ``binaryFile`` hands each
-archive to one task (one row per file), tasks decompress + scan their
-file independently, and the only exchange in the whole ingest is the
-optional url-hash spread the downstream extract already owns.  Nothing
-here shuffles.
+That layout IS the partitioning strategy: ``plan_ranges`` turns the
+file listing into tasks of (path, start, end) ranges on the driver,
+each task opens and decompresses its own ranges, and nothing here
+shuffles.  A ``.warc.gz`` may split at gzip-member boundaries, so a
+task never holds a multi-GB archive and one archive can still parse on
+every core; splitting never changes the rows.
 
 The file list is driver-side metadata, not data: ``list_archives``
 reads it through the session's Hadoop FileSystem in a fixed number of
 py4j calls per listed root (never one per file) and runs no Spark job.
-One listing serves a whole crawl launch — ``warc_todo`` prunes it
-against the done set, and ``read_warc`` plans its scan (and the r8
-range splits) from it without touching the file system again.
+One listing serves a whole crawl launch: ``warc_todo`` prunes it
+against the done set, and the scans plan their tasks from it without
+touching the file system again.  Local archives are opened by the
+task itself (a ``file:`` URI or a mounted path); archives on other
+schemes are read one file per row through ``binaryFile``, with its
+listing and its 2 GiB row bound, and feed the same per-archive code.
 
-Memory: a task holds one compressed file + one decompressed record at
-a time (member-per-record means members decompress individually);
-the 2 GiB JVM byte-array bound on a ``binaryFile`` row comfortably
-clears CC's 1 GB target size.  Pathological archives (a multi-GB
-single member) are the one shape this reader would refuse — the same
-bound every JVM WARC reader has.
+Memory: a task holds one range's compressed bytes (a whole small file,
+or one member at a time of a split one) and one decompressed record at
+a time (member-per-record means members decompress individually).
 
 Read path: ``read_warc`` -> full record table;  ``warc_pages`` ->
 the authoritative input shape (url, warc_ts, html, text, lang)
-feeding ``extract()`` unchanged.  Write path: ``write_warc_pages``
-emits member-per-record ``.warc.gz``, one file per partition, and
-returns a manifest frame.  All Python work is Arrow-batched
-``mapInPandas`` — no per-row UDFs.
+feeding ``extract()`` unchanged;  ``warc_text_quality`` -> the crawl's
+one pass, the rows of ``extract_text_quality(warc_pages(...))`` from
+one pandas-free ``mapInArrow`` per task that reads, decodes, parses
+and scores its pages (no page bytes cross the Arrow boundary).  All
+three share one record generator, ``warc_rows``.  Write path:
+``write_warc_pages`` emits member-per-record ``.warc.gz``, one file
+per partition, and returns a manifest frame.  All Python work is
+Arrow-batched (``mapInArrow`` for the scans, ``mapInPandas`` for the
+writers): no per-row UDFs.
 """
 
 import fnmatch
 import os
 import re
-
-import pandas as pd
+from functools import partial
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (ArrayType, BinaryType, IntegerType,
@@ -58,21 +63,17 @@ WARC_SCHEMA = StructType([
 ])
 
 
-def _records_frame(path, content, record_types, transcode=False):
-    from ..core.warc import iter_warc_records
-    errors = []
-    return _records_frame_iter(
-        path, iter_warc_records(bytes(content), errors), errors,
-        record_types, transcode)
-
-
-def _records_frame_iter(path, rec_iter, errors, record_types,
-                        transcode=False):
+def warc_rows(fname, recs, errors, record_types, transcode=False):
+    """The record generator: the WARC_SCHEMA row tuple of each record
+    of ``recs`` (one archive's or range's records; the reader appends
+    malformed-content messages to ``errors``) whose type is in
+    ``record_types`` (empty: every type), with ``warc_ts`` still the
+    raw WARC-Date string; then, if there were errors, the file-level
+    ``x-parse-errors`` row (url NULL), so malformed content is
+    observable in the table instead of a driver log."""
     from ..core.warc import (http_content_type, sniff_charset,
                              split_http_response, to_utf8)
-    rows = []
-    fname = _strip_file(path)
-    for rec in rec_iter:
+    for rec in recs:
         rtype = rec.type
         if record_types and rtype not in record_types:
             continue
@@ -90,20 +91,26 @@ def _records_frame_iter(path, rec_iter, errors, record_types,
                     rec_errors.append(enc_err)
             errors.extend("%s @%d: %s" % (rec.url or "?", rec.offset, e)
                           for e in rec_errors)
-        # raw date string here; ONE vectorized to_datetime below —
-        # the scalar call costs ~450 us/record (measured), which at
-        # CC archive sizes (~50k records/file) would dominate the
-        # whole scan task
-        rows.append((rec.url, rec.date, rtype,
-                     rec.record_id, status, mime or None,
-                     charset or None, rec.get("WARC-Payload-Digest"),
-                     payload, fname, rec.offset, None))
+        yield (rec.url, rec.date, rtype,
+               rec.record_id, status, mime or None,
+               charset or None, rec.get("WARC-Payload-Digest"),
+               payload, fname, rec.offset, None)
     if errors:
-        # file-level error row (url NULL) so malformed content is
-        # observable in the table instead of a driver log
-        rows.append((None, None, "x-parse-errors", None, None, None,
-                     None, None, None, fname, None, errors))
-    frame = pd.DataFrame(rows, columns=[f.name for f in WARC_SCHEMA])
+        yield (None, None, "x-parse-errors", None, None, None,
+               None, None, None, fname, None, errors)
+
+
+def _records_frame(path, rec_iter, errors, record_types,
+                        transcode=False):
+    """``warc_rows`` as a pandas frame of WARC_SCHEMA, with the dates
+    parsed: ONE vectorized to_datetime per frame — the scalar call
+    costs ~450 us/record (measured), which at CC archive sizes (~50k
+    records/file) would dominate the whole scan task."""
+    import pandas as pd
+    frame = pd.DataFrame(
+        list(warc_rows(_strip_file(path), rec_iter, errors,
+                       record_types, transcode)),
+        columns=[f.name for f in WARC_SCHEMA])
     raw_dates = frame["warc_ts"]
     ts = pd.to_datetime(raw_dates, utc=True, errors="coerce",
                         format="ISO8601")
@@ -259,10 +266,147 @@ def _binary_files(spark, paths):
         spark._jsparkSession.read().format("binaryFile").load(seq), spark)
 
 
-SPLIT_BYTES = 1536 << 20     # archives larger than this split into
-RANGE_BYTES = 512 << 20      # member-aligned ranges of this size —
-                             # the 2 GiB JVM byte-array bound on a
-                             # binaryFile row never gets hit
+SPLIT_BYTES = 1536 << 20     # archives larger than this always split
+RANGE_BYTES = 512 << 20      # into member-aligned ranges of this size,
+                             # so a task never holds one whole
+
+
+def _ranges(path, length, pieces):
+    """``path`` as ``pieces`` (path, start, end, bytes) ranges of equal
+    size that tile the file; one piece is the whole file (end None)."""
+    if pieces <= 1:
+        return [(path, 0, None, length)]
+    cuts = sorted({length * i // pieces for i in range(pieces + 1)})
+    return [(path, a, b, b - a) for a, b in zip(cuts, cuts[1:])]
+
+
+def plan_ranges(spark, listing, tasks="auto", split_bytes=SPLIT_BYTES,
+                range_bytes=RANGE_BYTES):
+    """The scan plan of a listing [(path, length)], on the driver, with
+    no Spark job: (plan, remote).  ``plan`` is a list of tasks, each a
+    list of (path, start, end) ranges of locally readable archives
+    (``end`` None: the whole file); ``remote`` lists the archives on
+    non-local schemes, which only binaryFile can read.
+
+    A file is one whole range, bar a ``.warc.gz`` larger than
+    ``split_bytes``, which splits into ranges of at most
+    ``range_bytes`` (r8: a task never holds a multi-GB archive).  A
+    range owns the gzip members whose first byte lies in it
+    (core.warc.iter_warc_records_file_range), so ranges tile the file
+    and splitting never changes the rows.
+
+    ``tasks`` is the number of tasks wanted: "auto" for the session's
+    default parallelism, or N.  With fewer ranges than that, the whole
+    ``.warc.gz`` files split, in proportion to their sizes, into at
+    least that many ranges, one task each, so even one archive parses
+    on every core.  Otherwise the ranges pack into tasks by Spark's
+    file-packing rule, as binaryFile packs its files (FilePartition:
+    largest first; a task closes when the next range would take it
+    past min(maxPartitionBytes, max(openCostInBytes, total / wanted)),
+    each range costing its bytes plus openCostInBytes).  0 wants one
+    task per range, so one per archive below ``split_bytes``."""
+    want = (spark.sparkContext.defaultParallelism if tasks == "auto"
+            else int(tasks))
+    # read whether or not the ranges pack: the planner's py4j calls
+    # stay one fixed number
+    conf = spark._jsparkSession.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    max_bytes = conf.filesMaxPartitionBytes()
+    remote, ranges = [], []
+    for p, n in listing:
+        if _local_path(p) is None:
+            remote.append(p)
+        elif p.endswith(".gz") and n > split_bytes:
+            ranges += _ranges(p, n, -(-n // range_bytes))
+        else:
+            ranges.append((p, 0, None, n))
+    whole = [r for r in ranges if r[2] is None and r[0].endswith(".gz")]
+    if whole and len(ranges) < want:
+        k = want - len(ranges) + len(whole)
+        total = sum(r[3] for r in whole) or 1
+        ranges = [r for r in ranges if r not in whole] + [
+            x for p, _s, _e, n in whole
+            for x in _ranges(p, n, -(-n * k // total))]
+        want = len(ranges)
+    if len(ranges) <= want or not want:
+        return [[r[:3]] for r in ranges], remote
+    cap = min(max_bytes,
+              max(open_cost,
+                  sum(r[3] + open_cost for r in ranges) // want))
+    plan, task, size = [], [], 0
+    for r in sorted(ranges, key=lambda r: -r[3]):
+        if task and size + r[3] > cap:
+            plan.append(task)
+            task, size = [], 0
+        task.append(r[:3])
+        size += r[3] + open_cost
+    if task:
+        plan.append(task)
+    return plan, remote
+
+
+def _open_range(path, start, end, errors):
+    """The records of one planned range: the whole file (``end``
+    None), read at once as binaryFile would hand it over, or the gzip
+    members starting in [start, end) of a ``.warc.gz``."""
+    from ..core.warc import (iter_warc_records,
+                             iter_warc_records_file_range)
+    with open(_local_path(path), "rb") as f:
+        if end is not None:
+            yield from iter_warc_records_file_range(f, start, end,
+                                                    errors)
+            return
+        data = f.read()
+    yield from iter_warc_records(data, errors)
+
+
+def _run_ranges(plan, task, batches):
+    """A mapInArrow body over ``spark.range(len(plan))``: each row
+    names its task in ``plan``, whose ranges ``task(path, records,
+    errors)`` turns into Arrow batches."""
+    for batch in batches:
+        for i in batch.column(0).to_pylist():
+            for path, start, end in plan[i]:
+                errors = []
+                yield from task(path, _open_range(path, start, end,
+                                                  errors), errors)
+
+
+def _run_files(task, batches):
+    """``_run_ranges`` over binaryFile rows (path, content)."""
+    from ..core.warc import iter_warc_records
+    for batch in batches:
+        paths, contents = batch.column("path"), batch.column("content")
+        for j in range(batch.num_rows):
+            errors = []
+            yield from task(paths[j].as_py(), iter_warc_records(
+                contents[j].as_py(), errors), errors)
+
+
+def _scan(spark, path, task, schema, tasks="auto",
+          split_bytes=SPLIT_BYTES, range_bytes=RANGE_BYTES):
+    """``task`` over every archive of ``path`` (a path, glob or list of
+    them, or a ``list_archives`` listing) -> a DataFrame of ``schema``:
+    one mapInArrow over the ``plan_ranges`` tasks of the local
+    archives, unioned with one over binaryFile rows for the others.
+    ``task(path, records, errors)`` yields Arrow batches of
+    ``schema``.  Building the scan runs no Spark job."""
+    plan, remote = plan_ranges(spark, _listing(spark, path), tasks,
+                               split_bytes, range_bytes)
+    out = None
+    if plan:
+        out = spark.range(0, len(plan), 1, len(plan)).mapInArrow(
+            partial(_run_ranges, plan, task), schema)
+    if remote:
+        files = _binary_files(spark, remote).select("path", "content") \
+            .mapInArrow(partial(_run_files, task), schema)
+        out = files if out is None else out.unionByName(files)
+    return out if out is not None else spark.createDataFrame([], schema)
+
+
+def _arrow_schema(schema):
+    from pyspark.sql.pandas.types import to_arrow_schema
+    return to_arrow_schema(schema)
 
 
 def read_warc(spark, path, record_types=("response",),
@@ -270,25 +414,20 @@ def read_warc(spark, path, record_types=("response",),
               range_bytes=RANGE_BYTES):
     """WARC archive(s) at ``path`` (a path, glob or list of them, or a
     ``list_archives`` listing; ``.warc`` or ``.warc.gz``) ->
-    WARC_SCHEMA DataFrame.  One task per archive file; no shuffle.
-    ``record_types`` filters records in the scan (None = all types);
-    malformed content lands in ``x-parse-errors`` rows, never raises.
+    WARC_SCHEMA DataFrame; no shuffle.  ``record_types`` filters
+    records in the scan (None = all types); malformed content lands in
+    ``x-parse-errors`` rows, never raises.
 
     The scan is planned from the file listing (paths + sizes, no
     content) on the driver, with no Spark job: a path is listed once
     with ``list_archives``; a listing is used as it stands, so a
     crawl that already listed its archives stats none of them again.
-
-    Oversized archives (r8): ``.warc.gz`` files larger than
-    ``split_bytes`` are read as MULTIPLE ``range_bytes`` tasks — each
-    task scans its compressed byte range for the first validated gzip
-    member and parses every member starting inside the range
-    (core.warc.iter_warc_records_file_range; a member straddling the
-    range end belongs to the task holding its first byte, so ranges
-    tile the archive exactly).  Ranged tasks open the file directly,
-    so they need a locally-readable path (``file:`` URI or mounted
-    FS) — plain ``.warc`` files and non-local schemes keep the
-    single-task binaryFile path and its documented 2 GiB row bound.
+    ``plan_ranges`` states how archives become tasks, one per core
+    (``split_bytes`` and ``range_bytes`` are its knobs): a ``.warc.gz``
+    may be read as several member-aligned ranges, with rows identical
+    to a whole-file read.  Local tasks open their files directly;
+    plain ``.warc`` files never split, and non-local schemes are read
+    one file per row through binaryFile, with its 2 GiB row bound.
 
     ``transcode=True`` normalizes response payloads to UTF-8 in the
     same scan (charset = BOM > HTTP header > WHATWG meta prescan >
@@ -296,54 +435,35 @@ def read_warc(spark, path, record_types=("response",),
     the reference byte-identity contract on utf-8 corpora is
     untouched.  The ``charset`` column then reports the SOURCE
     charset the bytes came from."""
+    return _scan(spark, path, _record_task(record_types, transcode),
+                 WARC_SCHEMA, "auto", split_bytes, range_bytes)
+
+
+def _record_task(record_types, transcode):
+    """The per-archive task of ``read_warc`` and ``stream_warc``: the
+    archive's ``_records_frame`` as one Arrow batch of WARC_SCHEMA."""
     rtypes = tuple(record_types) if record_types else ()
+    arrow_schema = _arrow_schema(WARC_SCHEMA)
 
-    def fn(batches):
-        for pdf in batches:
-            for path_, content in zip(pdf["path"], pdf["content"]):
-                yield _records_frame(path_, content, rtypes,
-                                     transcode)
+    def task(path_, recs, errors):
+        import pyarrow as pa
+        frame = _records_frame(path_, recs, errors, rtypes, transcode)
+        if len(frame):
+            yield pa.RecordBatch.from_pandas(
+                frame, schema=arrow_schema, preserve_index=False)
+    return task
 
-    listing = _listing(spark, path)
-    big = [(p, n) for p, n in listing
-           if n > split_bytes and p.endswith(".gz") and
-           _local_path(p) is not None]
-    big_set = {p for p, _n in big}
-    small = [p for p, _n in listing if p not in big_set]
-    out = None
-    if small:
-        out = (_binary_files(spark, small).select("path", "content")
-               .mapInPandas(fn, schema=WARC_SCHEMA))
-    if not big:
-        return out if out is not None else \
-            spark.createDataFrame([], WARC_SCHEMA)
 
-    tasks = []
-    for p, length in big:
-        s = 0
-        while s < length:
-            tasks.append((p, s, min(s + range_bytes, length)))
-            s += range_bytes
+_PAGE_TYPE = re.compile("html|xml|^text/")
 
-    def range_fn(batches):
-        from ..core.warc import iter_warc_records_file_range
-        for pdf in batches:
-            for path_, start, end in zip(pdf["path"], pdf["start"],
-                                         pdf["end"]):
-                errors = []
-                local = _local_path(path_)
-                with open(local, "rb") as f:
-                    yield _records_frame_iter(
-                        path_,
-                        iter_warc_records_file_range(
-                            f, int(start), int(end), errors),
-                        errors, rtypes, transcode)
 
-    ranged = (spark.createDataFrame(
-                  tasks, "path string, start long, end long")
-              .repartition(len(tasks))
-              .mapInPandas(range_fn, schema=WARC_SCHEMA))
-    return ranged if out is None else out.unionByName(ranged)
+def _is_page(row, statuses):
+    """warc_pages' filter on a ``warc_rows`` row: a url, a content
+    type that is absent or matches ``_PAGE_TYPE``, and, with
+    ``statuses``, an HTTP status among them."""
+    return (row[0] is not None and
+            (row[5] is None or _PAGE_TYPE.search(row[5]) is not None)
+            and (not statuses or row[4] in statuses))
 
 
 def warc_pages(spark, path, statuses=(200,),
@@ -352,22 +472,70 @@ def warc_pages(spark, path, statuses=(200,),
     (url, warc_ts, html, text, lang): the ingest half of the north
     star.  ``text``/``lang`` start NULL — ``extract()`` fills text,
     ``lang_id`` fills lang.  Non-HTML and non-2xx responses are
-    filtered in the same scan stage (predicate on the mapInPandas
-    output; no extra pass).  ``transcode`` (default on) is the
-    WET-style UTF-8 normalization — legacy windows-1252/shift_jis/
-    etc. pages parse correctly downstream while utf-8 pages stay
-    byte-identical."""
+    filtered in the same scan stage (``_is_page``'s rule, as a
+    predicate on the scan's output; no extra pass).  ``transcode``
+    (default on) is the WET-style UTF-8 normalization — legacy
+    windows-1252/shift_jis/etc. pages parse correctly downstream while
+    utf-8 pages stay byte-identical."""
     recs = read_warc(spark, path, record_types=("response",),
                      transcode=transcode)
     keep = ((F.col("url").isNotNull()) &
             (F.col("content_type").isNull() |
-             F.col("content_type").rlike("html|xml|^text/")))
+             F.col("content_type").rlike(_PAGE_TYPE.pattern)))
     if statuses:
         keep = keep & F.col("http_status").isin(*statuses)
     return (recs.where(keep)
             .select("url", "warc_ts", "html",
                     F.lit(None).cast("string").alias("text"),
                     F.lit(None).cast("string").alias("lang")))
+
+
+def warc_text_quality(spark, path, statuses=(200,), transcode=True,
+                      dialect="html5", text_format="plain",
+                      quality=True, tasks="auto") -> DataFrame:
+    """Archives -> TEXT_META_SCHEMA plus, with ``quality``, the 12
+    core.quality FIELDS columns: the rows of
+    ``extract_text_quality(warc_pages(spark, path, statuses,
+    transcode), dialect, text_format=text_format, quality=quality)``
+    from one Python pass per task.  Each task opens its archive
+    ranges, decodes their records with ``warc_rows``, keeps the pages
+    ``_is_page`` keeps, and parses and scores them in
+    ``pageloop.page_rows`` — the loop, guards and status vocabulary of
+    every page sink — in batches of the session's
+    ``arrow.maxRecordsPerBatch`` pages.  No page crosses the Arrow
+    boundary into Python (local tasks get only their task number), its
+    text and features come back once, and the worker never imports
+    pandas.  ``tasks`` is ``plan_ranges``'.  Building the frame runs no
+    Spark job."""
+    from .pageloop import (TEXT_META_SCHEMA, arrow_batch,
+                           extract_options, out_schema, page_rows,
+                           text_quality_sink)
+    page, derive = text_quality_sink(text_format, quality)
+    schema = out_schema(TEXT_META_SCHEMA, derive)
+    arrow_schema = _arrow_schema(schema)
+    statuses = frozenset(statuses or ())
+    batch_rows = int(spark._jsparkSession.sessionState().conf()
+                     .arrowMaxRecordsPerBatch())
+
+    def task(path_, recs, errors):
+        def pages():
+            keys, htmls = [], []
+            for row in warc_rows(None, recs, errors, ("response",),
+                                 transcode):
+                if _is_page(row, statuses):
+                    keys.append((row[0],))
+                    htmls.append(row[8])
+                    if len(htmls) == batch_rows:
+                        yield keys, htmls, None
+                        keys, htmls = [], []
+            if htmls:
+                yield keys, htmls, None
+
+        for out in page_rows(pages(), TEXT_META_SCHEMA, page,
+                             extract_options, dialect, derive=derive):
+            yield arrow_batch(out, arrow_schema)
+
+    return _scan(spark, path, task, schema, tasks)
 
 
 def stream_warc(spark, input_dir, record_types=("response",),
@@ -380,7 +548,6 @@ def stream_warc(spark, input_dir, record_types=("response",),
     ``trigger(availableNow=True)`` for batch catch-up or a processing
     trigger for a live feed.  Caller attaches writeStream with a
     checkpointLocation."""
-    rtypes = tuple(record_types) if record_types else ()
     # streaming sources require an explicit schema; binaryFile's is
     # fixed by the format
     bin_schema = StructType([
@@ -394,14 +561,9 @@ def stream_warc(spark, input_dir, record_types=("response",),
            .option("pathGlobFilter", "*.warc*")
            .load(input_dir)
            .select("path", "content"))
-
-    def fn(batches):
-        for pdf in batches:
-            for path_, content in zip(pdf["path"], pdf["content"]):
-                yield _records_frame(path_, content, rtypes,
-                                     transcode)
-
-    return src.mapInPandas(fn, schema=WARC_SCHEMA)
+    return src.mapInArrow(
+        partial(_run_files, _record_task(record_types, transcode)),
+        WARC_SCHEMA)
 
 
 def warc_todo(spark, path, done=()):
@@ -447,6 +609,7 @@ def write_wet_pages(extracted: DataFrame, out_dir,
 
     def fn(batches):
         from pyspark import TaskContext
+        import pandas as pd
         from ..core.warc import build_record, gzip_member
         pid = TaskContext.get().partitionId()
         fname = os.path.join(out_dir, "%s-%05d.warc.gz" % (prefix, pid))
@@ -505,6 +668,7 @@ def write_warc_pages(pages: DataFrame, out_dir,
 
     def fn(batches):
         from pyspark import TaskContext
+        import pandas as pd
         from ..core.warc import build_response_record, gzip_member
         pid = TaskContext.get().partitionId()
         fname = os.path.join(out_dir, "%s-%05d.warc.gz" % (prefix, pid))

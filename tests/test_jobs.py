@@ -354,7 +354,7 @@ def test_crawl_job_resumed_launch_starts_with_the_parse(
     schema-inference read would run one), and the launch's first SQL
     execution is the parse."""
     import crawl_job
-    from packages_sgml_spark.spark import extract
+    from packages_sgml_spark.spark import warc
     land = tmp_path / "warc"
     land.mkdir()
     out = str(tmp_path / "sink")
@@ -366,13 +366,13 @@ def test_crawl_job_resumed_launch_starts_with_the_parse(
     tracker = spark.sparkContext.statusTracker()
     group = "resumed-launch"
     jobs_before_sink = []
-    sink = extract.extract_text_quality
+    sink = warc.warc_text_quality
 
     def counted(*a, **kw):
         jobs_before_sink.append(len(tracker.getJobIdsForGroup(group)))
         return sink(*a, **kw)
 
-    monkeypatch.setattr(extract, "extract_text_quality", counted)
+    monkeypatch.setattr(warc, "warc_text_quality", counted)
     summary = {}
 
     def launch():
@@ -390,14 +390,14 @@ def test_crawl_job_resumed_launch_starts_with_the_parse(
     assert jobs_before_sink == [0]
     # the tracker does see this launch's jobs
     assert list(tracker.getJobIdsForGroup(group))
-    # the WARC scan's map and the page sink's
-    assert len(_python_maps(plans[0])) == 2, plans[0]
+    # one map reads, decodes, parses and scores the pages
+    assert len(_python_maps(plans[0])) == 1, plans[0]
 
 
 def test_crawl_quality_plan_one_python_pass(spark, tmp_path):
     """A fresh --quality launch sends each page through Python once:
-    the only Python map nodes it executes are the parse's (the WARC
-    scan's and the page sink's, which also computes the quality
+    the only Python map node it executes is the parse's (one map
+    reads the archive, decodes, parses and computes the quality
     features), and the quality write reads the parsed rows with no
     Exchange and no second Python pass."""
     import crawl_job
@@ -409,8 +409,8 @@ def test_crawl_quality_plan_one_python_pass(spark, tmp_path):
     plans = _launch_plans(spark, lambda: crawl_job.run(
         spark, _args(input=str(land), output=out, run_id="r1",
                      quality=True)))
-    assert sum(len(_python_maps(p)) for p in plans) == 2, plans
-    assert len(_python_maps(plans[0])) == 2
+    assert sum(len(_python_maps(p)) for p in plans) == 1, plans
+    assert len(_python_maps(plans[0])) == 1
     writes = [p for p in plans
               if "Execute InsertIntoHadoopFsRelationCommand" in p]
     assert len(writes) == 2                    # text, then quality

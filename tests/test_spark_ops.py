@@ -752,6 +752,27 @@ def test_spread_semantics(spark):
                   .collect()) == list(range(1000))
 
 
+def test_spread_repartitions_join_over_one_file_scan(spark, tmp_path):
+    """A broadcast join over a one-file scan is one partition wide, and
+    spread repartitions it, however large Catalyst estimates the join
+    (the estimate is not the scan width)."""
+    from pyspark.sql import functions as F
+    from packages_sgml_spark.spark.util import spread
+    want = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "docs")
+    spark.range(2000).select(F.col("id").alias("doc_id"),
+                             F.col("id").cast("string").alias("text")) \
+        .coalesce(1).write.parquet(path)
+    docs = spark.read.parquet(path)
+    keep = spark.range(0, 2000, 2).select(F.col("id").alias("doc_id"))
+    kept = docs.join(F.broadcast(keep), "doc_id")
+    assert kept.rdd.getNumPartitions() == 1
+    out = spread(kept, "doc_id")
+    assert out.rdd.getNumPartitions() == want
+    assert sorted(r.doc_id for r in out.collect()) == \
+        list(range(0, 2000, 2))
+
+
 def test_contamination_planted(spark):
     """A doc sharing a 5-gram with the benchmark subset (doc_id % 97
     == 0) is flagged; an unrelated doc is not; benchmark members are

@@ -435,6 +435,151 @@ def test_warc_todo_and_pages_build_run_no_job(spark, archive_dir):
     assert len(todo) == 2 and n == len(docs)
 
 
+def _write_archives(root, n, docs_per=3):
+    """``n`` .warc.gz archives of ``docs_per`` small pages under
+    ``root``; returns the page urls."""
+    root.mkdir()
+    urls = []
+    for a in range(n):
+        recs = [build_response_record(
+            "https://n%d.example/%d" % (a, i), "2026-01-01T00:00:00Z",
+            ("<html><p>archive %d page %d</p></html>" % (a, i)).encode())
+            for i in range(docs_per)]
+        urls += [r.split(b"\r\n")[2][len(b"WARC-Target-URI: "):]
+                 .decode() for r in recs]
+        with open(root / ("c-%03d.warc.gz" % a), "wb") as f:
+            write_warc(f, recs)
+    return urls
+
+
+def test_crawl_pass_build_above_32_archives_runs_no_job(spark,
+                                                        tmp_path):
+    """The crawl's page frame over more archives than Spark's parallel
+    partition discovery threshold (32) is planned from the driver
+    listing: building it runs no Spark job (a binaryFile load of the
+    list would run a parallel listing job)."""
+    from packages_sgml_spark.spark.warc import (warc_text_quality,
+                                                warc_todo)
+    root = tmp_path / "warc"
+    urls = _write_archives(root, 40)
+    sc = spark.sparkContext
+    group = "crawl-pass-40-archives"
+    sc.setJobGroup(group, "planning the crawl pass must not run a job")
+    try:
+        pages = warc_text_quality(spark, warc_todo(spark, str(root)))
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        got = sorted(r.url for r in pages.select("url").collect())
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == sorted(urls)
+
+
+def test_one_archive_parses_on_every_core(spark, tmp_path):
+    """One .warc.gz splits into member-aligned ranges so that its
+    pages parse in at least as many tasks as there are cores (or as
+    ``tasks`` asks), with rows identical to a one-task read."""
+    from packages_sgml_spark.spark.warc import warc_text_quality
+    root = tmp_path / "warc"
+    _write_archives(root, 1, docs_per=64)
+
+    def read(tasks):
+        df = warc_text_quality(spark, str(root), tasks=tasks)
+        rows = df.withColumn("pid", F.spark_partition_id()).collect()
+        return ({r.pid for r in rows},
+                sorted(tuple(r)[:-1] for r in rows))
+
+    one_pids, one = read(0)
+    assert len(one_pids) == 1 and len(one) == 64
+    cores = spark.sparkContext.defaultParallelism
+    for tasks, want in (("auto", cores), (4, 4)):
+        pids, rows = read(tasks)
+        assert len(pids) >= want, (tasks, pids)
+        assert rows == one
+
+
+# builds its input from buffers and reads its output column by
+# column: pyarrow.array and RecordBatch.from_pydict import pandas
+_NO_PANDAS_WORKER = """
+import array, json, pickle, sys
+import pyarrow as pa
+fn = pickle.load(open(sys.argv[1], "rb"))
+ids = pa.Array.from_buffers(pa.int64(), 1,
+                            [None, pa.py_buffer(array.array("q", [0]))])
+rows = []
+for b in fn(iter([pa.RecordBatch.from_arrays([ids], names=["id"])])):
+    rows += zip(b.column("url").to_pylist(),
+                b.column("status").to_pylist())
+print(json.dumps({"rows": sorted(rows),
+                  "pandas": "pandas" in sys.modules}))
+"""
+
+
+def test_crawl_pass_worker_never_imports_pandas(spark, tmp_path,
+                                                monkeypatch):
+    """The function the crawl pass hands mapInArrow, unpickled in a
+    fresh interpreter and run over one small archive, parses its
+    pages without importing pandas."""
+    import json
+    import subprocess
+    import sys
+    from pyspark import cloudpickle
+    from packages_sgml_spark.spark.warc import warc_text_quality
+    root = tmp_path / "warc"
+    urls = _write_archives(root, 1)
+    cls = type(spark.range(1))
+    seen = []
+    map_in_arrow = cls.mapInArrow
+
+    def capture(self, func, *a, **kw):
+        seen.append(func)
+        return map_in_arrow(self, func, *a, **kw)
+
+    monkeypatch.setattr(cls, "mapInArrow", capture)
+    warc_text_quality(spark, str(root), tasks=0)
+    assert len(seen) == 1
+    fn_path = tmp_path / "worker.pkl"
+    fn_path.write_bytes(cloudpickle.dumps(seen[0]))
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo)
+    res = subprocess.run([sys.executable, "-c", _NO_PANDAS_WORKER,
+                          str(fn_path)], capture_output=True, text=True,
+                         env=env, timeout=600)
+    assert res.returncode == 0, res.stderr
+    out = json.loads(res.stdout.strip().splitlines()[-1])
+    assert out["rows"] == [[u, "ok"] for u in sorted(urls)]
+    assert out["pandas"] is False
+
+
+def test_read_parquet_or_none_missing_sink_is_one_lookup(spark,
+                                                         tmp_path):
+    """A missing sink is found missing by the file system, with no
+    Spark job and a fixed, small number of py4j calls; a directory
+    with no part files is None too, and a sink with rows reads
+    back."""
+    from packages_sgml_spark.spark.checkpoint import \
+        read_parquet_or_none
+    missing = str(tmp_path / "missing")
+    sc = spark.sparkContext
+    group = "missing-sink"
+    sc.setJobGroup(group, "a missing sink runs no job")
+    try:
+        got = []
+        n = _count_py4j_calls(spark, lambda: got.append(
+            read_parquet_or_none(spark, missing, "url string")))
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == [None] and n <= 12, n
+    empty = tmp_path / "empty"
+    (empty / "_temporary").mkdir(parents=True)
+    assert read_parquet_or_none(spark, str(empty)) is None
+    sink = str(tmp_path / "sink")
+    spark.createDataFrame([("u",)], "url string").write.parquet(sink)
+    assert [r.url for r in read_parquet_or_none(
+        spark, sink, "url string").collect()] == ["u"]
+
+
 def _count_py4j_calls(spark, fn):
     """py4j round trips made by fn(), bar the memory ("m") commands
     py4j sends whenever Python garbage-collects a Java proxy."""
@@ -525,8 +670,11 @@ def test_non_iso_warc_date_fallback():
            b"WARC-Target-URI: https://d.example/x\r\n"
            b"WARC-Date: Mon, 01 Jan 2026 00:00:00 GMT\r\n"
            b"Content-Length: 2\r\n\r\nhi\r\n\r\n")
+    from packages_sgml_spark.core.warc import iter_warc_records
     from packages_sgml_spark.spark.warc import _records_frame
-    f = _records_frame("f", raw, ("resource",), False)
+    errors = []
+    f = _records_frame("f", iter_warc_records(raw, errors), errors,
+                       ("resource",), False)
     assert str(f["warc_ts"].iloc[0]) == "2026-01-01 00:00:00"
 
 

@@ -14,7 +14,10 @@ sink — text, metrics, [quality,] archives — by
 the rule tools/scale_curate.py and perfbench use: a stage ends when
 its sink's `_SUCCESS` marker is written and starts when the previous
 one ended (the first starts with the job), so `text` also carries the
-planning before the parse.
+planning before the parse.  `peak_rss_mb` is each size's largest
+process-tree RSS over its runs, sampled by perfbench's RssSampler
+(java and python processes only: the driver, its JVM and the Python
+workers), so the probe shows worker memory next to the stage times.
 """
 
 import argparse
@@ -54,10 +57,13 @@ def make_archives(root, n_archives=48, docs_per=600):
 
 def run_once(cpus, warc_dir, out_dir, quality=False):
     """One crawl_job run on a fresh local[cpus] session; returns
-    (wall seconds, summary, stage seconds)."""
+    (wall seconds, summary, stage seconds, peak RSS MB)."""
+    from layers import RssSampler
     from packages_sgml_spark.spark.session import get_spark
     from tools.scale_curate import stage_times
     import crawl_job
+    rss = RssSampler()
+    rss.start()
     spark = get_spark(app="scale-crawl-%d" % cpus, cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     args = argparse.Namespace(
@@ -69,8 +75,9 @@ def run_once(cpus, warc_dir, out_dir, quality=False):
     t0 = time.time()
     summary = crawl_job.run(spark, args)
     dt = time.time() - t0
+    peak = rss.stop()
     spark.stop()
-    return dt, summary, stage_times(out_dir, t0, stages)
+    return dt, summary, stage_times(out_dir, t0, stages), peak
 
 
 def main():
@@ -86,17 +93,19 @@ def main():
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
     sys.path.insert(0, os.path.join(repo, "jobs"))
+    sys.path.insert(0, os.path.join(repo, "perfbench"))
     tmp = tempfile.mkdtemp(prefix="scale_crawl_")
     try:
         warc_dir = os.path.join(tmp, "warc")
         raw = make_archives(warc_dir, n_archives, docs_per)
-        results, stages = {}, {}
+        results, stages, peaks = {}, {}, {}
         # interleave twice, keep best of each (co-tenant noise)
         for cpus in (n_lo, n_hi, n_lo, n_hi):
             out = os.path.join(tmp, "out-%d-%d" % (cpus,
                                                    len(results)))
-            dt, summary, stage_s = run_once(cpus, warc_dir, out,
-                                            opts.quality)
+            dt, summary, stage_s, peak = run_once(
+                cpus, warc_dir, out, opts.quality)
+            peaks[str(cpus)] = round(max(peak, peaks.get(str(cpus), 0)))
             assert summary["docs_new"] == n_archives * docs_per, \
                 summary
             cur = results.get(cpus)
@@ -115,6 +124,7 @@ def main():
             "raw_mb": round(raw / 1e6, 1),
             "sec": {str(k): round(v, 2) for k, v in results.items()},
             "stage_s": stages,
+            "peak_rss_mb": peaks,
             "mb_per_sec": {str(k): round(raw / 1e6 / v, 1)
                            for k, v in results.items()},
         }))
