@@ -22,9 +22,11 @@ session's default parallelism in tasks: ranges pack into tasks by
 Spark's file-packing rule, and with fewer ranges than cores the
 `.warc.gz` archives split at gzip-member boundaries, so even one
 archive parses on every core.  `--repartition N` asks for at least N
-ranges the same way; `0` reads each archive in one task.  Archives
-on non-local schemes are read through binaryFile, one per row, by the
-same per-archive code.
+ranges the same way; `0` reads each archive in one task.  Every local
+`.warc.gz` is read gzip member by member, so the rows do not depend on
+the plan, and a corrupt member is skipped with the rest of its archive
+still read.  Archives on non-local schemes are read whole through
+binaryFile, one per row, by the same per-archive code.
 
 The parse runs once: its rows are materialized by one eager
 localCheckpoint to disk, and every sink is written from those rows,

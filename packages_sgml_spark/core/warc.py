@@ -453,7 +453,7 @@ class _FileWindow:
     def __init__(self, f, pos):
         self.f = f
         self.base = pos
-        self.buf = b""
+        self.buf = bytearray()   # dropping its head moves no bytes
         self.eof = False
         f.seek(pos)
 
@@ -467,7 +467,7 @@ class _FileWindow:
 
     def drop(self, n):
         if n:
-            self.buf = self.buf[n:]
+            del self.buf[:n]
             self.base += n
 
 
@@ -505,12 +505,14 @@ def _find_member(win, rel, limit=None):
         if limit is not None and rel >= limit:
             return -1
         win.ensure(rel + (1 << 20))
+        # a member starting just before ``limit`` is the range's own:
+        # its 3-byte magic may end up to 2 bytes past it
         hi = len(win.buf) if limit is None else min(len(win.buf),
-                                                    limit)
+                                                    limit + 2)
         idx = win.buf.find(GZIP_MAGIC + b"\x08", rel, hi)
         if idx < 0:
             if win.eof or (limit is not None and
-                           len(win.buf) >= limit):
+                           len(win.buf) >= limit + 2):
                 return -1
             # keep a 2-byte overlap so a magic split across the
             # window growth boundary is still found
@@ -540,12 +542,14 @@ def _find_member(win, rel, limit=None):
 
 def iter_warc_records_file_range(f, start, end, errors=None):
     """Yield WarcRecord for every gzip member whose COMPRESSED offset
-    lies in [start, end) of an open ``.warc.gz`` file — the oversized-
-    archive split path (one Spark task per range; a member straddling
-    ``end`` belongs to the range holding its first byte, so ranges
-    tile the file exactly).  Unlike the whole-file reader, a corrupt
-    member resyncs to the next validated member instead of abandoning
-    the file — strictly more recovery, never less."""
+    lies in [start, end) of an open ``.warc.gz`` file — the split
+    path of oversized archives and the crawl pass's reader (one Spark
+    task per range; a member straddling ``end`` belongs to the range
+    holding its first byte, so ranges tile the file exactly, corrupt
+    files included).  Unlike the whole-file reader, a corrupt member
+    (bad deflate data or CRC, or truncated) is reported in ``errors``
+    and skipped: the reader resyncs to the next validated member
+    instead of abandoning the file, and never raises."""
     if errors is None:
         errors = []
     win = _FileWindow(f, start)
@@ -558,7 +562,10 @@ def iter_warc_records_file_range(f, start, end, errors=None):
     while win.base + rel < end:
         win.drop(rel)
         rel = 0
-        plain, consumed, complete = _member_at(win, 0)
+        try:
+            plain, consumed, complete = _member_at(win, 0)
+        except zlib.error:       # bad deflate data or CRC: resync
+            plain, consumed, complete = b"", 0, False
         if not complete or consumed <= 0:
             errors.append("truncated/invalid gzip member at %d"
                           % win.base)

@@ -7,8 +7,9 @@ That layout IS the partitioning strategy: ``plan_ranges`` turns the
 file listing into tasks of (path, start, end) ranges on the driver,
 each task opens and decompresses its own ranges, and nothing here
 shuffles.  A ``.warc.gz`` may split at gzip-member boundaries, so a
-task never holds a multi-GB archive and one archive can still parse on
-every core; splitting never changes the rows.
+task never holds a multi-GB archive and, in the crawl's pass, one
+archive can still parse on every core; the member reader's ranges tile
+the file, so splitting never changes its rows.
 
 The file list is driver-side metadata, not data: ``list_archives``
 reads it through the session's Hadoop FileSystem in a fixed number of
@@ -20,9 +21,11 @@ task itself (a ``file:`` URI or a mounted path); archives on other
 schemes are read one file per row through ``binaryFile``, with its
 listing and its 2 GiB row bound, and feed the same per-archive code.
 
-Memory: a task holds one range's compressed bytes (a whole small file,
-or one member at a time of a split one) and one decompressed record at
-a time (member-per-record means members decompress individually).
+Memory: a task holds one decompressed record at a time
+(member-per-record means members decompress individually) and either
+a whole file's compressed bytes (``read_warc`` below ``split_bytes``)
+or a window over its range of about 1 MiB or one member, whichever
+is larger (the member reader).
 
 Read path: ``read_warc`` -> full record table;  ``warc_pages`` ->
 the authoritative input shape (url, warc_ts, html, text, lang)
@@ -281,7 +284,7 @@ def _ranges(path, length, pieces):
 
 
 def plan_ranges(spark, listing, tasks="auto", split_bytes=SPLIT_BYTES,
-                range_bytes=RANGE_BYTES):
+                range_bytes=RANGE_BYTES, fill=True):
     """The scan plan of a listing [(path, length)], on the driver, with
     no Spark job: (plan, remote).  ``plan`` is a list of tasks, each a
     list of (path, start, end) ranges of locally readable archives
@@ -292,19 +295,20 @@ def plan_ranges(spark, listing, tasks="auto", split_bytes=SPLIT_BYTES,
     ``split_bytes``, which splits into ranges of at most
     ``range_bytes`` (r8: a task never holds a multi-GB archive).  A
     range owns the gzip members whose first byte lies in it
-    (core.warc.iter_warc_records_file_range), so ranges tile the file
-    and splitting never changes the rows.
+    (core.warc.iter_warc_records_file_range), so ranges tile the file:
+    the member reader yields the same records from any split of it.
 
     ``tasks`` is the number of tasks wanted: "auto" for the session's
-    default parallelism, or N.  With fewer ranges than that, the whole
-    ``.warc.gz`` files split, in proportion to their sizes, into at
-    least that many ranges, one task each, so even one archive parses
-    on every core.  Otherwise the ranges pack into tasks by Spark's
-    file-packing rule, as binaryFile packs its files (FilePartition:
-    largest first; a task closes when the next range would take it
-    past min(maxPartitionBytes, max(openCostInBytes, total / wanted)),
-    each range costing its bytes plus openCostInBytes).  0 wants one
-    task per range, so one per archive below ``split_bytes``."""
+    default parallelism, or N.  With ``fill`` and fewer ranges than
+    that, the whole ``.warc.gz`` files split, in proportion to their
+    sizes, into at least that many ranges, one task each, so even one
+    archive parses on every core.  Otherwise the ranges pack into
+    tasks by Spark's file-packing rule, as binaryFile packs its files
+    (FilePartition: largest first; a task closes when the next range
+    would take it past min(maxPartitionBytes, max(openCostInBytes,
+    total / wanted)), each range costing its bytes plus
+    openCostInBytes).  0 wants one task per range, so one per archive
+    below ``split_bytes``."""
     want = (spark.sparkContext.defaultParallelism if tasks == "auto"
             else int(tasks))
     # read whether or not the ranges pack: the planner's py4j calls
@@ -321,7 +325,7 @@ def plan_ranges(spark, listing, tasks="auto", split_bytes=SPLIT_BYTES,
         else:
             ranges.append((p, 0, None, n))
     whole = [r for r in ranges if r[2] is None and r[0].endswith(".gz")]
-    if whole and len(ranges) < want:
+    if fill and whole and len(ranges) < want:
         k = want - len(ranges) + len(whole)
         total = sum(r[3] for r in whole) or 1
         ranges = [r for r in ranges if r not in whole] + [
@@ -345,14 +349,24 @@ def plan_ranges(spark, listing, tasks="auto", split_bytes=SPLIT_BYTES,
     return plan, remote
 
 
-def _open_range(path, start, end, errors):
-    """The records of one planned range: the whole file (``end``
-    None), read at once as binaryFile would hand it over, or the gzip
-    members starting in [start, end) of a ``.warc.gz``."""
+def _open_range(path, start, end, errors, members):
+    """The records of one planned range: the gzip members starting in
+    [start, end) of a ``.warc.gz`` (``end`` None: to the end of the
+    file) -- a split range always, a whole file with ``members`` --
+    or else the whole file read at once, as binaryFile hands it over.
+
+    The two readers agree on every valid archive.  On a corrupt one
+    the member reader resyncs past a bad member and keeps the members
+    after it, and drops a truncated last member, where the whole-file
+    reader stops at the first bad member and parses a truncated one
+    as far as it goes; ranges of the member reader tile the file, so
+    its rows never depend on how the file was split."""
     from ..core.warc import (iter_warc_records,
                              iter_warc_records_file_range)
     with open(_local_path(path), "rb") as f:
-        if end is not None:
+        if end is not None or (members and path.endswith(".gz")):
+            if end is None:
+                end = os.fstat(f.fileno()).st_size
             yield from iter_warc_records_file_range(f, start, end,
                                                     errors)
             return
@@ -360,16 +374,18 @@ def _open_range(path, start, end, errors):
     yield from iter_warc_records(data, errors)
 
 
-def _run_ranges(plan, task, batches):
-    """A mapInArrow body over ``spark.range(len(plan))``: each row
-    names its task in ``plan``, whose ranges ``task(path, records,
-    errors)`` turns into Arrow batches."""
+def _run_ranges(plan, task, members, batches):
+    """A mapInArrow body over ``spark.range(n)``: each row names its
+    task in ``plan`` (a broadcast, loaded once per Python worker),
+    whose ranges ``task(path, records, errors)`` turns into Arrow
+    batches."""
     for batch in batches:
         for i in batch.column(0).to_pylist():
-            for path, start, end in plan[i]:
+            for path, start, end in plan.value[i]:
                 errors = []
                 yield from task(path, _open_range(path, start, end,
-                                                  errors), errors)
+                                                  errors, members),
+                                errors)
 
 
 def _run_files(task, batches):
@@ -384,19 +400,26 @@ def _run_files(task, batches):
 
 
 def _scan(spark, path, task, schema, tasks="auto",
-          split_bytes=SPLIT_BYTES, range_bytes=RANGE_BYTES):
+          split_bytes=SPLIT_BYTES, range_bytes=RANGE_BYTES,
+          members=False):
     """``task`` over every archive of ``path`` (a path, glob or list of
     them, or a ``list_archives`` listing) -> a DataFrame of ``schema``:
     one mapInArrow over the ``plan_ranges`` tasks of the local
     archives, unioned with one over binaryFile rows for the others.
     ``task(path, records, errors)`` yields Arrow batches of
-    ``schema``.  Building the scan runs no Spark job."""
+    ``schema``.  With ``members`` every ``.warc.gz`` is read by the
+    member reader, so the plan may split any of them to fill the
+    tasks (``_open_range``).  Building the scan runs no Spark job."""
     plan, remote = plan_ranges(spark, _listing(spark, path), tasks,
-                               split_bytes, range_bytes)
+                               split_bytes, range_bytes, fill=members)
     out = None
     if plan:
+        # as a broadcast the plan is shipped and unpickled once per
+        # Python worker; pickled into the function, every task would
+        # unpickle the ranges of every task
+        shared = spark.sparkContext.broadcast(plan)
         out = spark.range(0, len(plan), 1, len(plan)).mapInArrow(
-            partial(_run_ranges, plan, task), schema)
+            partial(_run_ranges, shared, task, members), schema)
     if remote:
         files = _binary_files(spark, remote).select("path", "content") \
             .mapInArrow(partial(_run_files, task), schema)
@@ -422,12 +445,15 @@ def read_warc(spark, path, record_types=("response",),
     content) on the driver, with no Spark job: a path is listed once
     with ``list_archives``; a listing is used as it stands, so a
     crawl that already listed its archives stats none of them again.
-    ``plan_ranges`` states how archives become tasks, one per core
-    (``split_bytes`` and ``range_bytes`` are its knobs): a ``.warc.gz``
-    may be read as several member-aligned ranges, with rows identical
-    to a whole-file read.  Local tasks open their files directly;
-    plain ``.warc`` files never split, and non-local schemes are read
-    one file per row through binaryFile, with its 2 GiB row bound.
+    ``plan_ranges`` (without ``fill``) states how archives become
+    tasks: each archive is read whole, and the archives pack into
+    about one task per core by Spark's file-packing rule, bar a
+    ``.warc.gz`` above ``split_bytes``, which is read as member-aligned
+    ranges of ``range_bytes`` (``_open_range``: the two readers' rows
+    differ only on corrupt archives).  Local tasks open their files
+    directly; plain ``.warc`` files never split, and non-local schemes
+    are read one file per row through binaryFile, with its 2 GiB row
+    bound.
 
     ``transcode=True`` normalizes response payloads to UTF-8 in the
     same scan (charset = BOM > HTTP header > WHATWG meta prescan >
@@ -505,8 +531,12 @@ def warc_text_quality(spark, path, statuses=(200,), transcode=True,
     ``arrow.maxRecordsPerBatch`` pages.  No page crosses the Arrow
     boundary into Python (local tasks get only their task number), its
     text and features come back once, and the worker never imports
-    pandas.  ``tasks`` is ``plan_ranges``'.  Building the frame runs no
-    Spark job."""
+    pandas.  ``tasks`` is ``plan_ranges``'.  Every ``.warc.gz`` is
+    read by the gzip-member reader, so the rows are the same however
+    the archives split into tasks; they equal the composition above on
+    every valid archive, and on a corrupt one keep the members after a
+    bad one (``_open_range``).  Building the frame runs no Spark
+    job."""
     from .pageloop import (TEXT_META_SCHEMA, arrow_batch,
                            extract_options, out_schema, page_rows,
                            text_quality_sink)
@@ -535,7 +565,7 @@ def warc_text_quality(spark, path, statuses=(200,), transcode=True,
                              extract_options, dialect, derive=derive):
             yield arrow_batch(out, arrow_schema)
 
-    return _scan(spark, path, task, schema, tasks)
+    return _scan(spark, path, task, schema, tasks, members=True)
 
 
 def stream_warc(spark, input_dir, record_types=("response",),

@@ -498,11 +498,160 @@ def test_one_archive_parses_on_every_core(spark, tmp_path):
         assert rows == one
 
 
-# builds its input from buffers and reads its output column by
-# column: pyarrow.array and RecordBatch.from_pydict import pandas
+def _mixed_archive(path):
+    """One .warc.gz holding every kind of record the crawl pass must
+    keep or drop as warc_pages does; returns the kept page urls."""
+    from packages_sgml_spark.spark.extract import MAX_HTML_BYTES
+    page = b"<html><body><p>one two three four five</p></body></html>"
+    recs = [build_response_record("https://m.example/ok/%d" % i,
+                                  "2026-01-01T00:00:00Z", page)
+            for i in range(12)]
+    recs += [
+        build_response_record("https://m.example/404",
+                              "2026-01-01T00:00:00Z", page,
+                              status=404, reason="Not Found"),
+        build_response_record("https://m.example/pdf",
+                              "2026-01-01T00:00:00Z", b"%PDF-1.4",
+                              http_content_type="application/pdf"),
+        build_response_record("https://m.example/empty",
+                              "2026-01-01T00:00:00Z", b""),
+        build_response_record("https://m.example/big",
+                              "2026-01-01T00:00:00Z",
+                              b"<p>" + b"x" * (MAX_HTML_BYTES + 1)),
+        build_response_record(
+            "https://m.example/latin1", "2026-01-01T00:00:00Z",
+            "<p>caf\u00e9 cr\u00e8me br\u00fbl\u00e9e</p>"
+            .encode("latin-1"),
+            http_content_type="text/html; charset=ISO-8859-1"),
+        # no Content-Type header: a NULL content type is a page
+        build_record("response",
+                     b"HTTP/1.1 200 OK\r\n\r\n<p>no type given</p>",
+                     url="https://m.example/untyped",
+                     date="2026-01-01T00:00:00Z",
+                     content_type="application/http;msgtype=response"),
+        # not an HTTP message: no status, so no page
+        build_record("response", b"<p>raw</p>",
+                     url="https://m.example/raw",
+                     date="2026-01-01T00:00:00Z",
+                     content_type="text/html"),
+        # no url
+        build_record("response",
+                     b"HTTP/1.1 200 OK\r\nContent-Type: text/html"
+                     b"\r\n\r\n<p>nowhere</p>",
+                     date="2026-01-01T00:00:00Z",
+                     content_type="application/http;msgtype=response"),
+        build_record("request", b"GET / HTTP/1.1\r\n\r\n",
+                     url="https://m.example/ok/0",
+                     date="2026-01-01T00:00:00Z"),
+        build_record("warcinfo", b"software: test\r\n",
+                     date="2026-01-01T00:00:00Z"),
+    ]
+    with open(path, "wb") as f:
+        write_warc(f, recs)
+    return {"https://m.example/ok/%d" % i for i in range(12)} | {
+        "https://m.example/empty", "https://m.example/big",
+        "https://m.example/latin1", "https://m.example/untyped"}
+
+
+def test_crawl_pass_equals_extract_text_quality_of_warc_pages(
+        spark, tmp_path):
+    """warc_text_quality is the fused form of extract_text_quality over
+    warc_pages: the same rows, every column, on an archive with
+    non-200, non-HTML, untyped, empty, oversized, Latin-1, url-less
+    and non-response records, split over every core or read in one
+    task."""
+    from packages_sgml_spark.spark.extract import extract_text_quality
+    from packages_sgml_spark.spark.warc import (warc_pages,
+                                                warc_text_quality)
+    root = tmp_path / "warc"
+    root.mkdir()
+    kept = _mixed_archive(root / "mixed.warc.gz")
+    want = sorted(tuple(r) for r in extract_text_quality(
+        warc_pages(spark, str(root))).collect())
+    assert {r[0] for r in want} == kept
+    status = {r[0]: r[4] for r in want}
+    assert status["https://m.example/empty"] == "empty"
+    assert status["https://m.example/big"] == "too_large"
+    assert {r[1] for r in want
+            if r[0] == "https://m.example/latin1"} == {
+        "caf\u00e9 cr\u00e8me br\u00fbl\u00e9e"}
+    for tasks in (0, "auto"):
+        df = warc_text_quality(spark, str(root), tasks=tasks)
+        assert df.columns == extract_text_quality(
+            warc_pages(spark, str(root))).columns
+        assert sorted(tuple(r) for r in df.collect()) == want, tasks
+
+
+def _corrupt_archive(path, n=24, bad=10):
+    """A .warc.gz of ``n`` pages whose member ``bad`` has a flipped
+    byte inside its deflate data; returns the page urls."""
+    recs = [build_response_record(
+        "https://z.example/%d" % i, "2026-01-01T00:00:00Z",
+        ("<html><p>page %d of a damaged archive</p></html>" % i)
+        .encode()) for i in range(n)]
+    buf = io.BytesIO()
+    write_warc(buf, recs)
+    data = bytearray(buf.getvalue())
+    at = [off for off, _plain in iter_gzip_members(bytes(data))][bad]
+    data[at + 20] ^= 0xFF
+    path.write_bytes(bytes(data))
+    return ["https://z.example/%d" % i for i in range(n)]
+
+
+def test_corrupt_small_archive_never_raises(spark, tmp_path):
+    """A small .warc.gz with one corrupt gzip member, on a session
+    with more cores than archives: read_warc keeps the whole-file
+    reader's rows (the records before the bad member, then one
+    x-parse-errors row for the file), and the crawl pass, which splits
+    the archive over every core, resyncs past the bad member and keeps
+    the same rows however the archive is split.  Nothing raises."""
+    from packages_sgml_spark.spark.warc import (read_warc, warc_pages,
+                                                warc_rows,
+                                                warc_text_quality)
+    root = tmp_path / "warc"
+    root.mkdir()
+    arc = root / "bad.warc.gz"
+    urls = _corrupt_archive(arc)
+    errors = []
+    whole = list(warc_rows(str(arc), iter_warc_records(
+        arc.read_bytes(), errors), errors, ("response",)))
+    assert any("gzip stream error" in e for e in errors)
+    assert [r[0] for r in whole] == urls[:10] + [None]
+
+    def key(url, offset, rtype, errs):
+        return (url or "", -1 if offset is None else offset, rtype,
+                tuple(errs or ()))
+
+    got = sorted(key(r.url, r.warc_offset, r.record_type, r.warc_errors)
+                 for r in read_warc(spark, str(root)).collect())
+    assert got == sorted(key(r[0], r[10], r[2], r[11]) for r in whole)
+    assert sorted(r.url for r in warc_pages(spark, str(root))
+                  .select("url").collect()) == sorted(urls[:10])
+
+    cores = spark.sparkContext.defaultParallelism
+    assert cores > 1
+    seen = {}
+    for tasks in (0, "auto", 3):
+        rows = warc_text_quality(spark, str(root), tasks=tasks) \
+            .withColumn("pid", F.spark_partition_id()).collect()
+        seen[tasks] = sorted(tuple(r)[:-1] for r in rows)
+        if tasks == "auto":
+            assert len({r.pid for r in rows}) > 1
+    assert seen[0] == seen["auto"] == seen[3]
+    assert sorted(r[0] for r in seen[0]) == sorted(
+        urls[:10] + urls[11:])
+    assert {r[4] for r in seen[0]} == {"ok"}
+
+
+# registers the function's broadcasts as a Python worker does, builds
+# its input from buffers and reads its output column by column:
+# pyarrow.array and RecordBatch.from_pydict import pandas
 _NO_PANDAS_WORKER = """
 import array, json, pickle, sys
 import pyarrow as pa
+from pyspark.core.broadcast import Broadcast, _broadcastRegistry
+for bid, path in json.loads(sys.argv[2]):
+    _broadcastRegistry[bid] = Broadcast(path=path)
 fn = pickle.load(open(sys.argv[1], "rb"))
 ids = pa.Array.from_buffers(pa.int64(), 1,
                             [None, pa.py_buffer(array.array("q", [0]))])
@@ -524,6 +673,7 @@ def test_crawl_pass_worker_never_imports_pandas(spark, tmp_path,
     import subprocess
     import sys
     from pyspark import cloudpickle
+    from pyspark.core.broadcast import Broadcast
     from packages_sgml_spark.spark.warc import warc_text_quality
     root = tmp_path / "warc"
     urls = _write_archives(root, 1)
@@ -540,11 +690,15 @@ def test_crawl_pass_worker_never_imports_pandas(spark, tmp_path,
     assert len(seen) == 1
     fn_path = tmp_path / "worker.pkl"
     fn_path.write_bytes(cloudpickle.dumps(seen[0]))
+    shared = json.dumps([[b._jbroadcast.id(), b._path]
+                         for b in seen[0].args
+                         if isinstance(b, Broadcast)])
+    assert shared != "[]"             # the task plan is a broadcast
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ, PYTHONPATH=repo)
     res = subprocess.run([sys.executable, "-c", _NO_PANDAS_WORKER,
-                          str(fn_path)], capture_output=True, text=True,
-                         env=env, timeout=600)
+                          str(fn_path), shared], capture_output=True,
+                         text=True, env=env, timeout=600)
     assert res.returncode == 0, res.stderr
     out = json.loads(res.stdout.strip().splitlines()[-1])
     assert out["rows"] == [[u, "ok"] for u in sorted(urls)]
@@ -662,6 +816,74 @@ def test_warc_reader_mutation_fuzz():
         assert out or errors, "silent empty parse on trial %d" % trial
 
 
+def test_range_reader_mutation_fuzz():
+    """The member-range reader under the whole-file reader's mutation
+    fuzz: rows + error strings, never an exception, and on corrupt
+    archives too its adjacent ranges yield exactly the records of one
+    range over the file, so a split never changes what is read."""
+    import random
+    from packages_sgml_spark.core.warc import iter_warc_records_file_range
+    rng = random.Random(0xC0FFEE)
+    recs = [build_response_record(
+        "https://f.example/%d" % i, "2026-01-01T00:00:%02dZ" % i,
+        ("<html><p>doc %d</p></html>" % i).encode())
+        for i in range(8)]
+    gz = io.BytesIO()
+    write_warc(gz, recs)
+    src = gz.getvalue()
+
+    def read(data, cuts, errors):
+        return [(r.offset, r.url, r.body) for a, b in zip(cuts, cuts[1:])
+                for r in iter_warc_records_file_range(io.BytesIO(data),
+                                                      a, b, errors)]
+
+    for trial in range(300):
+        base = bytearray(src)
+        op = trial % 4
+        if op == 0:      # flip 1-8 bytes
+            for _ in range(rng.randint(1, 8)):
+                base[rng.randrange(len(base))] = rng.randrange(256)
+        elif op == 1:    # truncate
+            del base[rng.randrange(1, len(base)):]
+        elif op == 2:    # splice junk
+            pos = rng.randrange(len(base))
+            base[pos:pos] = bytes(rng.randrange(256)
+                                  for _ in range(rng.randint(1, 64)))
+        else:            # duplicate a slice (resync stress)
+            a = rng.randrange(len(base))
+            b = min(len(base), a + rng.randint(1, 200))
+            base[a:a] = base[a:b]
+        data = bytes(base)
+        errors = []
+        one = read(data, [0, len(data)], errors)
+        assert one or errors, "silent empty parse on trial %d" % trial
+        for n in (2, 3, 5):
+            step = len(data) // n + 1
+            cuts = list(range(0, len(data), step)) + [len(data)]
+            assert read(data, cuts, []) == one, (trial, n)
+
+
+def test_range_reader_owns_member_at_range_end():
+    """A range whose only member starts in its last two bytes owns
+    that member: the member's 3-byte magic ends past the range."""
+    from packages_sgml_spark.core.warc import iter_warc_records_file_range
+    recs = [build_response_record(
+        "https://e.example/%d" % i, "2026-01-01T00:00:00Z",
+        ("<html><p>doc %d</p></html>" % i).encode()) for i in range(6)]
+    buf = io.BytesIO()
+    write_warc(buf, recs)
+    data = buf.getvalue()
+    starts = [off for off, _plain in iter_gzip_members(data)]
+    whole = [r.offset for r in iter_warc_records(data)]
+    for p, m in zip(starts, starts[1:]):
+        for k in (1, 2, 3):
+            cuts = [0, p + 1, m + k, len(data)]
+            got = [r.offset for a, b in zip(cuts, cuts[1:])
+                   for r in iter_warc_records_file_range(
+                       io.BytesIO(data), a, b)]
+            assert got == whole, (m, k)
+
+
 def test_non_iso_warc_date_fallback():
     """Non-conforming writers emit RFC-1123 dates; the vectorized
     ISO fast path must fall back, not null them out."""
@@ -716,10 +938,11 @@ def test_range_reader_tiles_file_exactly(tmp_path):
 
 def test_read_warc_split_matches_single_task(spark, tmp_path):
     """A .warc.gz above split_bytes reads as N range tasks with rows
-    identical to the single-task binaryFile read."""
+    identical to a whole-file read: the core reader over each file's
+    bytes, which read_warc below split_bytes matches too."""
     from packages_sgml_spark.core.warc import (build_response_record,
                                                write_warc)
-    from packages_sgml_spark.spark.warc import read_warc
+    from packages_sgml_spark.spark.warc import read_warc, warc_rows
     recs = [build_response_record(
         "https://s%d.example/p/%d" % (i % 11, i),
         "2026-01-02T03:04:05Z",
@@ -739,7 +962,15 @@ def test_read_warc_split_matches_single_task(spark, tmp_path):
         return sorted((r.url, r.warc_offset, bytes(r.html or b""),
                        r.record_type) for r in df.collect())
 
-    single = rows(read_warc(spark, str(tmp_path) + "/*.warc.gz"))
+    single = []
+    for arc in (big, small):
+        errors = []
+        single += [(r[0], r[10], r[8], r[2]) for r in warc_rows(
+            str(arc), iter_warc_records(arc.read_bytes(), errors),
+            errors, ("response",))]
+    single.sort()
+    assert len(single) == 405
+    assert rows(read_warc(spark, str(tmp_path) + "/*.warc.gz")) == single
     split = read_warc(spark, str(tmp_path) + "/*.warc.gz",
                       split_bytes=100_000, range_bytes=30_000)
     # the big file must ACTUALLY have split into range tasks — a
