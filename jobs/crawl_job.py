@@ -28,18 +28,15 @@ the plan, and a corrupt member is skipped with the rest of its archive
 still read.  Archives on non-local schemes are read whole through
 binaryFile, one per row, by the same per-archive code.
 
-The parse runs once: its rows are materialized by one eager
-localCheckpoint to disk, and every sink is written from those rows,
-in the order text -> metrics -> quality -> WET -> archive manifest.
-`docs_new` and the metrics sidecar count exactly the rows this launch
-wrote, never a re-read of a sink.  The checkpoint, not a persist(),
-also cuts the rows' lineage to the text sink they were resumed
-against: Spark re-caches a persisted plan over a path when that path
-is written, which would re-run the anti-join against the new sink.
-The trade-off: the checkpoint's blocks live on executor-local disk
-and cannot be recomputed, so an executor lost after the parse fails
-the launch's remaining writes, and the launch's whole parse is lost,
-not one task.  No data is: the archive manifest is committed last,
+The parse runs once: checkpoint.write_text_sink materializes its
+rows by one eager localCheckpoint to disk, and every sink is written
+from those rows, in the order text -> metrics -> quality -> WET ->
+archive manifest.  `docs_new` and the metrics sidecar count exactly
+the rows this launch wrote, never a re-read of a sink.  The
+trade-off: the checkpoint's blocks live on executor-local disk and
+cannot be recomputed, so an executor lost after the parse fails the
+launch's remaining writes, and the launch's whole parse is lost, not
+one task.  No data is: the archive manifest is committed last,
 so a relaunch re-reads the launch's archives and the url-level
 anti-join skips every page whose text row was committed.  A reliable
 checkpoint() to a checkpoint directory would survive the loss, at
@@ -71,7 +68,6 @@ no broadcast of 10^12 urls).
 """
 
 import argparse
-import json
 import sys
 import time
 
@@ -79,7 +75,6 @@ import time
 def run(spark, args):
     """Body, session-injected so tests and notebooks can drive it;
     returns the summary dict that main() prints."""
-    from pyspark import StorageLevel
     from pyspark.sql import Observation, functions as F
 
     from packages_sgml_spark.core.quality import FIELDS
@@ -87,12 +82,11 @@ def run(spark, args):
                                                 warc_todo,
                                                 write_wet_pages)
     from packages_sgml_spark.spark.checkpoint import (
-        append_metrics, append_rows, read_rows, read_parquet_or_none,
-        with_lineage, resume_filter)
+        append_rows, read_rows, read_parquet_or_none, resume_filter,
+        write_text_sink)
 
     out = args.output.rstrip("/")
     archives_path = out + "/archives"
-    text_path = out + "/text"
     quality_path = out + "/quality"
 
     # file-level resume on the driver: the one listing of the input,
@@ -110,7 +104,7 @@ def run(spark, args):
     # its file listing is taken here, so the quality repair below
     # never sees this launch's own text rows
     done_text = read_parquet_or_none(
-        spark, text_path, "url string, text_extracted string")
+        spark, out + "/text", "url string, text_extracted string")
 
     statuses = tuple(int(s) for s in args.statuses.split(",")) \
         if args.statuses else ()
@@ -127,15 +121,7 @@ def run(spark, args):
         # url-level resume after the pass: only pages of archives the
         # manifest has not committed are parsed at all
         ex = resume_filter(ex, done_text)
-    rows = with_lineage(ex, args.run_id).localCheckpoint(
-        eager=True, storageLevel=StorageLevel.DISK_ONLY)
-
-    rows.select("url", "url_hash", "text_extracted", "n_errors",
-                "html_bytes", "status", "run_id", "partition_id") \
-        .write.mode("append").parquet(text_path)
-
-    # one row per partition: collected and committed by the driver
-    summary["docs_new"] = append_metrics(spark, out + "/metrics", rows)
+    rows, summary["docs_new"] = write_text_sink(ex, out, args.run_id)
 
     if args.quality:
         # doc-level corpus filters over the fresh extractions:
@@ -196,6 +182,7 @@ def run(spark, args):
 
 
 def main(argv=None):
+    from packages_sgml_spark.spark.session import launch
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True,
                     help="WARC dir or glob (*.warc / *.warc.gz)")
@@ -219,15 +206,7 @@ def main(argv=None):
     ap.add_argument("--quality", action="store_true",
                     help="also write a per-url quality sidecar "
                          "(Gopher rules + C4 line filter + lang-id)")
-    args = ap.parse_args(argv)
-
-    from pyspark.sql import SparkSession
-    spark = SparkSession.builder.appName(
-        "packages-sgml-spark-crawl").getOrCreate()
-    summary = run(spark, args)
-    print(json.dumps(summary, sort_keys=True))
-    spark.stop()
-    return 0
+    return launch("packages-sgml-spark-crawl", ap, run, argv)
 
 
 if __name__ == "__main__":

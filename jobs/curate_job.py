@@ -52,18 +52,13 @@ import sys
 import time
 
 
-def _read_or_none(spark, path):
-    from packages_sgml_spark.spark.checkpoint import \
-        read_parquet_or_none
-    return read_parquet_or_none(spark, path)
-
-
 def run(spark, args):
     """Body, session-injected so tests and notebooks can drive it;
     returns the summary dict that main() prints."""
     from pyspark.sql import functions as F
 
-    from packages_sgml_spark.spark.checkpoint import append_rows
+    from packages_sgml_spark.spark.checkpoint import (
+        append_rows, read_parquet_or_none)
     from packages_sgml_spark.spark.datafilters import (
         corpus_keep, dedup_spans, shard_assign)
 
@@ -81,7 +76,7 @@ def run(spark, args):
          "strip_spans": bool(args.strip_spans), "ngram": args.ngram,
          "min_kept_words": args.min_kept_words,
          "n_shards": args.n_shards}, sort_keys=True)
-    manifest = _read_or_none(spark, stages_path)
+    manifest = read_parquet_or_none(spark, stages_path)
     done = set()
     mrows = []
     if manifest is not None:
@@ -102,7 +97,7 @@ def run(spark, args):
         # part files at all (partitionBy writes nothing for 0 rows),
         # which reads as UNABLE_TO_INFER_SCHEMA — that is a valid
         # empty result, not a missing stage
-        df = _read_or_none(spark, path)
+        df = read_parquet_or_none(spark, path)
         return 0 if df is None else df.count()
 
     def commit_stage(stage, rows):
@@ -195,6 +190,7 @@ def run(spark, args):
 
 
 def main(argv=None):
+    from packages_sgml_spark.spark.session import launch
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True,
                     help="documents parquet (dir or glob)")
@@ -212,15 +208,7 @@ def main(argv=None):
                     help="drop docs with fewer surviving words "
                          "after span removal")
     ap.add_argument("--n-shards", type=int, default=8)
-    args = ap.parse_args(argv)
-
-    from pyspark.sql import SparkSession
-    spark = SparkSession.builder.appName(
-        "packages-sgml-spark-curate").getOrCreate()
-    summary = run(spark, args)
-    print(json.dumps(summary, sort_keys=True, default=str))
-    spark.stop()
-    return 0
+    return launch("packages-sgml-spark-curate", ap, run, argv)
 
 
 if __name__ == "__main__":

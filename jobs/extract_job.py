@@ -1,16 +1,24 @@
 #!/usr/bin/env python3
-"""Production extraction job — launched via spark-submit --py-files.
+"""Production extraction job over a pages table — launched via
+spark-submit --py-files:
 
     spark-submit --py-files packages_sgml_spark.zip \
         jobs/extract_job.py --input <pages_parquet_or_table> \
-        --output <sink_dir> --run-id run42 [--dialect html5] \
-        [--repartition N] [--resume]
+        --output <sink_dir> [--run-id run42] [--dialect html5] \
+        [--repartition N]
 
-Reads the pages table (url, warc_ts, html, text, lang), extracts text
-+ parse metrics with the packages_sgml_spark engine, writes parquet
-sinks with per-partition lineage + metrics (north rule).  On a real
-cluster, pass --repartition ~2-3x total cores; with --resume the job
-anti-joins the existing sink and only processes new urls.
+Reads the pages table (url, html [, dialect]; e.g. warc_pages or
+docs_as_pages output), extracts each page's text and parse metrics
+with the packages_sgml_spark engine in one Python pass
+(extract.extract_text_quality without the quality columns), and
+appends them to the parquet text sink plus the per-partition metrics
+sidecar with lineage (checkpoint.write_text_sink, the crawl job's
+writer).  Prints one JSON line, {"docs_new", "run_id"}.
+
+Resume is url-level and always on, as in the crawl job: pages whose
+url the text sink already holds are dropped before the parse, so a
+rerun into the same output appends only new urls.  On a real
+cluster, pass --repartition ~2-3x total cores.
 """
 
 import argparse
@@ -18,7 +26,29 @@ import sys
 import time
 
 
+def run(spark, args):
+    """Body, session-injected so tests and notebooks can drive it;
+    returns the summary dict that main() prints."""
+    from packages_sgml_spark.spark.checkpoint import (
+        read_parquet_or_none, resume_filter, write_text_sink)
+    from packages_sgml_spark.spark.extract import extract_text_quality
+
+    out = args.output.rstrip("/")
+    pages = spark.read.parquet(args.input)
+    done = read_parquet_or_none(spark, out + "/text", "url string")
+    if done is not None:
+        pages = resume_filter(pages, done)
+    rep = args.repartition
+    if rep != "auto":
+        rep = int(rep)
+    ex = extract_text_quality(pages, dialect=args.dialect,
+                              repartition=rep, quality=False)
+    _rows, docs_new = write_text_sink(ex, out, args.run_id)
+    return {"run_id": args.run_id, "docs_new": docs_new}
+
+
 def main(argv=None):
+    from packages_sgml_spark.spark.session import launch
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
@@ -28,42 +58,7 @@ def main(argv=None):
                     help="N (url-hash shuffle to N partitions), "
                          "0 (keep source partitioning), or 'auto' "
                          "(spread only when under-partitioned)")
-    ap.add_argument("--resume", action="store_true")
-    args = ap.parse_args(argv)
-
-    from pyspark import StorageLevel
-    from pyspark.sql import SparkSession
-    spark = SparkSession.builder.appName(
-        "packages-sgml-spark-extract").getOrCreate()
-
-    from packages_sgml_spark.spark.extract import extract
-    from packages_sgml_spark.spark.checkpoint import (
-        append_metrics, with_lineage, resume_filter)
-
-    pages = spark.read.parquet(args.input)
-    if args.resume:
-        from packages_sgml_spark.spark.checkpoint import \
-            read_parquet_or_none
-        done = read_parquet_or_none(spark, args.output + "/text")
-        if done is not None:
-            pages = resume_filter(pages, done)
-    rep = args.repartition
-    if rep != "auto":
-        rep = int(rep)
-    ex = extract(pages, dialect=args.dialect, nodes=False,
-                 repartition=rep)
-    # materialized once: the text write and the metrics both read it,
-    # and the metrics cover the rows this launch wrote, nothing else
-    rows = with_lineage(ex, args.run_id).localCheckpoint(
-        eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    cols = ["url", "url_hash", "text_extracted", "n_errors",
-            "html_bytes", "status", "run_id", "partition_id"]
-    rows.select(*cols).write.mode("append") \
-        .parquet(args.output + "/text")
-    n = append_metrics(spark, args.output + "/metrics", rows)
-    print("extracted %d documents (run_id=%s)" % (n, args.run_id))
-    spark.stop()
-    return 0
+    return launch("packages-sgml-spark-extract", ap, run, argv)
 
 
 if __name__ == "__main__":

@@ -18,8 +18,8 @@ semantics, not Python's:
 - the C4 five-word test is an anchored ASCII ``\\s``/``\\S`` match.
 
 NULL text gives NULL lang_pred and lang_score; every other feature
-reads it as "".  Imports only re, decimal and (for the Arrow batch
-loop) pyarrow, so workers and the driver load it without Spark.
+reads it as "".  Imports only re and decimal, so workers and the
+driver load it without Spark.
 """
 
 import re
@@ -50,8 +50,6 @@ FIELDS = (("n_words", "bigint not null"), ("mean_word_len", "double"),
           ("n_stop_hits", "int not null"), ("gopher_pass", "int"),
           ("n_kept", "int not null"), ("c4_keep", "int not null"),
           ("lang_pred", "string"), ("lang_score", "int"))
-_ARROW_TYPES = {"bigint": "int64", "double": "float64", "int": "int32",
-                "string": "string"}
 
 _WORD = re.compile("[^ \t\n\x0b\f\r]+")
 _LINE = re.compile("\r?\n")
@@ -120,18 +118,3 @@ def features(text):
             ellipsis_frac, alpha_word_frac, n_stop_hits, gopher_pass,
             n_kept, c4_keep, lang_pred, lang_score)
 
-
-def arrow_batches(batches):
-    """mapInArrow body: (key, text) record batches in, the key plus
-    the 12 FIELDS columns out."""
-    import pyarrow as pa
-    names = [name for name, _ in FIELDS]
-    types = [getattr(pa, _ARROW_TYPES[t.split()[0]])()
-             for _, t in FIELDS]
-    for batch in batches:
-        rows = [features(t) for t in batch.column(1).to_pylist()]
-        cols = zip(*rows) if rows else [()] * len(FIELDS)
-        yield pa.RecordBatch.from_arrays(
-            [batch.column(0)] +
-            [pa.array(c, type=t) for c, t in zip(cols, types)],
-            names=[batch.schema.names[0]] + names)

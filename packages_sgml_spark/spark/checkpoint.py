@@ -182,26 +182,21 @@ def resume_filter(pages: DataFrame, done: DataFrame) -> DataFrame:
     return pages.join(done.select("url"), "url", "left_anti")
 
 
-def run_extract_with_checkpoint(pages: DataFrame, out_dir: str,
-                                run_id: str, dialect="html5"):
-    """One resumable extraction pass: filters done urls, extracts,
-    appends results + metrics.  Returns (n_new, metrics table); n_new
-    and the metrics appended cover the rows this pass wrote."""
+def write_text_sink(extracted: DataFrame, out: str, run_id: str):
+    """Append TEXT_META_SCHEMA rows to the text sink at `out`/text
+    and their metrics to `out`/metrics; returns (rows, docs_new).
+
+    The rows, tagged with lineage, are materialized once by an eager
+    DISK_ONLY localCheckpoint: the text write, the metrics and the
+    caller's further sinks all read them, and docs_new and the
+    metrics count exactly the rows this call wrote.  The checkpoint
+    also cuts the rows' lineage to a text sink they were resumed
+    against, which a persist() would not: Spark re-caches a plan over
+    a path when that path is written."""
     from pyspark import StorageLevel
-
-    from .extract import extract
-
-    spark = pages.sparkSession
-    text_path = out_dir + "/text"
-    metrics_path = out_dir + "/metrics"
-    done = read_parquet_or_none(spark, text_path)
-    todo = pages if done is None else resume_filter(pages, done)
-    ex = extract(todo, dialect=dialect, nodes=False)
-    # materialized once: the text write and the metrics both read it
-    rows = with_lineage(ex, run_id).localCheckpoint(
+    rows = with_lineage(extracted, run_id).localCheckpoint(
         eager=True, storageLevel=StorageLevel.DISK_ONLY)
     rows.select("url", "url_hash", "text_extracted", "n_errors",
                 "html_bytes", "status", "run_id", "partition_id") \
-        .write.mode("append").parquet(text_path)
-    n_new = append_metrics(spark, metrics_path, rows)
-    return n_new, spark.read.parquet(metrics_path)
+        .write.mode("append").parquet(out + "/text")
+    return rows, append_metrics(rows.sparkSession, out + "/metrics", rows)

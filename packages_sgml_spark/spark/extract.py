@@ -429,13 +429,6 @@ def c14n_pages(pages: DataFrame, dialect="xml", method=None,
                       dialect, repartition)
 
 
-def extracted_with_meta(pages: DataFrame, extracted: DataFrame) -> DataFrame:
-    """Join extraction output back to page metadata (broadcast-free:
-    both sides share the url key; Catalyst picks SMJ / shuffle hash)."""
-    meta = pages.select("url", "warc_ts", "lang")
-    return extracted.join(meta, "url", "left")
-
-
 MAIN_SCHEMA = StructType([
     StructField("url", StringType()),
     StructField("text_main", StringType()),

@@ -282,14 +282,28 @@ def quality_features_arrow(docs: DataFrame) -> DataFrame:
     JVM-only curate job would have to start Python workers for it,
     which raised its peak RSS from 3030 to ~3620 MB (+19.5%) for no
     wall-time gain."""
-    from ..core.quality import FIELDS, arrow_batches
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    from ..core.quality import FIELDS, features
+    from .pageloop import arrow_batch
     from .util import spread
     docs = spread(docs, "doc_id")
     key = docs.schema["doc_id"].dataType.simpleString()
-    schema = ", ".join(["doc_id " + key] +
-                       ["%s %s" % field for field in FIELDS])
-    return docs.select("doc_id", "text").mapInArrow(arrow_batches,
-                                                    schema)
+    fields = ["%s %s" % field for field in FIELDS]
+    arrow_fields = to_arrow_schema(StructType.fromDDL(", ".join(fields)))
+
+    def batches(it):
+        # the features built from buffers (no pandas), the key passed
+        # through
+        for b in it:
+            if b.num_rows:
+                yield arrow_batch(
+                    [features(t) for t in b.column(1).to_pylist()],
+                    arrow_fields).add_column(0, "doc_id", b.column(0))
+
+    return docs.select("doc_id", "text").mapInArrow(
+        batches, ", ".join(["doc_id " + key] + fields))
 
 
 def fix_text(docs: DataFrame, nfc=True) -> DataFrame:

@@ -1,8 +1,8 @@
 """Job scripts under jobs/: the end-to-end crawl pipeline (WARC in ->
-text + metrics + WET out, two-level resume) driven in-process, and
-one REAL ``spark-submit --py-files`` launch — the north rule's stated
-launch mode — as a subprocess with the package shipped only via the
-zip."""
+text + metrics + WET out, two-level resume), the extract and curate
+jobs, driven in-process, and REAL ``spark-submit --py-files`` launches
+of all three — the north rule's stated launch mode — as subprocesses
+with the package shipped only via the zip."""
 
 import json
 import os
@@ -13,6 +13,9 @@ import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "jobs"))
+SF = "/root/testdata/sf0.001"
+needs_sf = pytest.mark.skipif(not os.path.isdir(SF),
+                              reason="testdata absent")
 
 
 def _write_archive(path, docs):
@@ -178,18 +181,13 @@ def test_crawl_job_never_records_archive_in_flight(spark, tmp_path):
         "c-00000.warc.gz", "c-00001.warc.gz", "c-00002.warc.gz"]
 
 
-@pytest.mark.slow
-def test_spark_submit_py_files_launch(tmp_path):
-    """The real launch mode: a fresh spark-submit JVM, package code
-    shipped ONLY through --py-files (cwd outside the repo), crawl job
-    end-to-end."""
+def _spark_submit(tmp_path, job, argv):
+    """Launch jobs/<job>.py in a fresh spark-submit JVM, the package
+    shipped ONLY through --py-files and cwd outside the repo; returns
+    the JSON summary line it printed."""
     sys.path.insert(0, REPO)
     from tools.make_pyfiles_zip import build
     zip_path = build(str(tmp_path / "packages_sgml_spark.zip"))
-    land = tmp_path / "warc"
-    land.mkdir()
-    _write_archive(land / "c-00000.warc.gz", DOCS1)
-    out = str(tmp_path / "sink")
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)
     env["PYSPARK_PYTHON"] = sys.executable
@@ -199,17 +197,40 @@ def test_spark_submit_py_files_launch(tmp_path):
          "--conf", "spark.ui.enabled=false",
          "--conf", "spark.sql.shuffle.partitions=4",
          "--py-files", zip_path,
-         os.path.join(REPO, "jobs", "crawl_job.py"),
-         "--input", str(land), "--output", out,
-         "--run-id", "submit1", "--wet"],
+         os.path.join(REPO, "jobs", job + ".py")] + argv,
         cwd=str(tmp_path), env=env, capture_output=True, text=True,
         timeout=600)
     assert proc.returncode == 0, proc.stderr[-4000:]
-    summary = json.loads(
+    return json.loads(
         [l for l in proc.stdout.splitlines()
          if l.startswith("{")][-1])
-    assert summary == {"archives": 1, "docs_new": 2, "run_id": "submit1",
-                       "wet_records": 2}
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("job", ["crawl_job", "extract_job"])
+def test_spark_submit_py_files_launch(tmp_path, job):
+    """The real launch mode, end to end: the crawl job over one
+    archive, or the extract job over the same pages as a table."""
+    out = str(tmp_path / "sink")
+    if job == "crawl_job":
+        land = tmp_path / "warc"
+        land.mkdir()
+        _write_archive(land / "c-00000.warc.gz", DOCS1)
+        argv = ["--input", str(land), "--wet"]
+        want = {"archives": 1, "docs_new": 2, "run_id": "submit1",
+                "wet_records": 2}
+    else:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        pages = str(tmp_path / "pages.parquet")
+        pq.write_table(pa.table({"url": [u for u, _, _ in DOCS1],
+                                 "html": [h for _, _, h in DOCS1]}),
+                       pages)
+        argv = ["--input", pages]
+        want = {"docs_new": 2, "run_id": "submit1"}
+    summary = _spark_submit(tmp_path, job, argv + [
+        "--output", out, "--run-id", "submit1"])
+    assert summary == want
     assert os.path.exists(out + "/text/_SUCCESS")
 
 
@@ -313,6 +334,76 @@ def test_crawl_job_same_run_id_rerun_counts_each_doc_once(spark,
     assert sum(r.docs for r in metrics) == 2
     assert {r.run_id for r in metrics} == {"r1"}
     assert spark.read.parquet(out + "/text").count() == 2
+
+
+def _pages(spark, tmp_path, n=None):
+    """The first `n` (all) sf0.001 documents as a pages parquet
+    (docs_as_pages), the extract job's input; returns its path."""
+    from packages_sgml_spark.spark.pages import docs_as_pages
+    docs = spark.read.parquet(SF + "/documents.parquet")
+    path = str(tmp_path / "pages")
+    docs_as_pages(docs if n is None else docs.limit(n)) \
+        .write.parquet(path)
+    return path
+
+
+def _extract(spark, inp, out, run_id):
+    import argparse
+
+    import extract_job
+    return extract_job.run(spark, argparse.Namespace(
+        input=inp, output=out, run_id=run_id, dialect="html5",
+        repartition="auto"))
+
+
+@needs_sf
+def test_extract_job_resume(spark, tmp_path):
+    from pyspark.sql import functions as F
+    inp = _pages(spark, tmp_path, 40)
+    out = str(tmp_path / "sink")
+    assert _extract(spark, inp, out, "run1") == {"docs_new": 40,
+                                                 "run_id": "run1"}
+    # second run: everything done -> 0 new rows, idempotent sink
+    assert _extract(spark, inp, out, "run2")["docs_new"] == 0
+    assert spark.read.parquet(out + "/text").count() == 40
+    m = spark.read.parquet(out + "/metrics")
+    assert m.filter(F.col("run_id") == "run1").agg(
+        F.sum("docs")).collect()[0][0] == 40
+
+
+@needs_sf
+def test_extract_job_same_run_id_rerun_counts_once(spark, tmp_path):
+    """A second pass under the same run_id extracts nothing new, so
+    it reports and records nothing new: docs_new and the metrics
+    cover the rows a pass wrote, not every text row carrying its
+    run_id."""
+    inp = _pages(spark, tmp_path, 6)
+    out = str(tmp_path / "sink")
+    n = [_extract(spark, inp, out, "run1")["docs_new"]
+         for _ in range(2)]
+    assert n == [6, 0]
+    m = spark.read.parquet(out + "/metrics")
+    assert m.agg({"docs": "sum"}).collect()[0][0] == 6
+    assert spark.read.parquet(out + "/text").count() == 6
+
+
+@needs_sf
+def test_extract_job_text_sink_matches_extract(spark, tmp_path):
+    """The extract job's text sink holds extract(nodes=False)'s
+    values for every page."""
+    from packages_sgml_spark.spark.checkpoint import with_lineage
+    from packages_sgml_spark.spark.extract import extract
+    inp = _pages(spark, tmp_path)
+    out = str(tmp_path / "sink")
+    _extract(spark, inp, out, "r")
+    cols = ["url", "url_hash", "text_extracted", "n_errors",
+            "html_bytes", "status"]
+    got = spark.read.parquet(out + "/text").select(*cols).collect()
+    want = with_lineage(extract(spark.read.parquet(inp), nodes=False),
+                        "r").select(*cols).collect()
+    assert len(got) == len(want) == 500
+    assert {r.url: tuple(r) for r in got} == \
+        {r.url: tuple(r) for r in want}
 
 
 def _launch_plans(spark, fn):
@@ -870,33 +961,13 @@ def test_crawl_to_curate_pipeline(spark, tmp_path):
 
 @pytest.mark.slow
 def test_spark_submit_curate_launch(spark, tmp_path):
-    """The curation job's real launch mode: fresh spark-submit JVM,
-    package shipped ONLY via --py-files, cwd outside the repo."""
-    sys.path.insert(0, REPO)
-    from tools.make_pyfiles_zip import build
-    zip_path = build(str(tmp_path / "packages_sgml_spark.zip"))
+    """The curation job's real launch mode."""
     inp = str(tmp_path / "docs")
     _curate_corpus(spark).write.parquet(inp)
     out = str(tmp_path / "cur")
-    env = dict(os.environ)
-    env.pop("PYTHONPATH", None)
-    env["PYSPARK_PYTHON"] = sys.executable
-    env["PYSPARK_DRIVER_PYTHON"] = sys.executable
-    proc = subprocess.run(
-        ["spark-submit", "--master", "local[4]",
-         "--conf", "spark.ui.enabled=false",
-         "--conf", "spark.sql.shuffle.partitions=4",
-         "--py-files", zip_path,
-         os.path.join(REPO, "jobs", "curate_job.py"),
-         "--input", inp, "--output", out,
-         "--run-id", "submit-cur", "--strip-spans",
-         "--n-shards", "4"],
-        cwd=str(tmp_path), env=env, capture_output=True, text=True,
-        timeout=600)
-    assert proc.returncode == 0, proc.stderr[-4000:]
-    summary = json.loads(
-        [l for l in proc.stdout.splitlines()
-         if l.startswith("{")][-1])
+    summary = _spark_submit(tmp_path, "curate_job", [
+        "--input", inp, "--output", out, "--run-id", "submit-cur",
+        "--strip-spans", "--n-shards", "4"])
     assert summary["docs_in"] == 5 and summary["docs_out"] == 3
     assert os.path.exists(out + "/stages/_SUCCESS")
     assert os.path.exists(out + "/decisions/_SUCCESS")

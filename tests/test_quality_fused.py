@@ -11,9 +11,11 @@ driver: the planted rows below trip every way a naive Python port
 differs from Spark's string semantics."""
 
 import math
+import os
 
 import pytest
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -177,3 +179,39 @@ def test_fused_plan_shape(spark, form):
     if form == "quality_features_arrow":
         assert plan.count("MapInArrow") == 1, plan
         assert "Generate" not in plan, plan
+
+
+def test_arrow_worker_is_pandas_free(spark, monkeypatch, tmp_path):
+    """quality_features_arrow's mapInArrow body, shipped as Spark
+    ships it (cloudpickle), runs over one batch in a fresh interpreter
+    without importing pandas."""
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from packages_sgml_spark.spark.textops import quality_features_arrow
+    docs = _planted(spark)
+    shipped = {}
+    monkeypatch.setattr(type(docs), "mapInArrow",
+                        lambda self, fn, schema: shipped.setdefault(
+                            "fn", fn))
+    quality_features_arrow(docs)
+    (tmp_path / "fn.pkl").write_bytes(cloudpickle.dumps(shipped["fn"]))
+    code = """if 1:
+        import pickle, sys
+        import pyarrow as pa
+        from packages_sgml_spark.spark.pageloop import arrow_batch
+        fn = pickle.load(open(sys.argv[1], "rb"))
+        batch = arrow_batch([(1, "The cat sat."), (2, None)], pa.schema(
+            [("doc_id", pa.int64()), ("text", pa.string())]))
+        out = list(fn(iter([batch, batch.slice(0, 0)])))
+        assert [b.num_rows for b in out] == [2], out
+        assert out[0].column(0).to_pylist() == [1, 2]
+        print("pandas" in sys.modules)
+        """
+    proc = subprocess.run([sys.executable, "-c", code,
+                           str(tmp_path / "fn.pkl")],
+                          capture_output=True, text=True, cwd=REPO)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.split() == ["False"]

@@ -263,14 +263,13 @@ def test_warc_pages_feeds_extract(spark, archive_dir):
 def test_wet_roundtrip_from_extraction(spark, tmp_path, archive_dir):
     """End-to-end CC trio: WARC in -> extract -> WET out -> WET in,
     text byte-identical through the conversion records."""
-    from packages_sgml_spark.spark.extract import extract, \
-        extracted_with_meta
+    from packages_sgml_spark.spark.extract import extract
     from packages_sgml_spark.spark.warc import (read_wet, warc_pages,
                                                 write_wet_pages)
     path, docs = archive_dir
     pages = warc_pages(spark, str(path) + "/*.warc*")
-    extracted = extracted_with_meta(
-        pages, extract(pages, nodes=False)).select(
+    extracted = extract(pages, nodes=False).join(
+        pages.select("url", "warc_ts"), "url", "left").select(
         "url", "warc_ts", F.col("text_extracted").alias("text"))
     out = tmp_path / "wet"
     manifest = write_wet_pages(extracted, str(out)).collect()
