@@ -22,11 +22,12 @@ session's default parallelism in tasks: ranges pack into tasks by
 Spark's file-packing rule, and with fewer ranges than cores the
 `.warc.gz` archives split at gzip-member boundaries, so even one
 archive parses on every core.  `--repartition N` asks for at least N
-ranges the same way; `0` reads each archive in one task.  Every local
-`.warc.gz` is read gzip member by member, so the rows do not depend on
-the plan, and a corrupt member is skipped with the rest of its archive
-still read.  Archives on non-local schemes are read whole through
-binaryFile, one per row, by the same per-archive code.
+ranges the same way; `0` reads each archive in one task.  Every
+`.warc.gz` is read gzip member by member by the one reader of every
+WARC scan, so the rows do not depend on the plan: a corrupt member is
+skipped with the rest of its archive still read, and a truncated last
+member is dropped.  Archives on non-local schemes are read whole
+through binaryFile, one per row, by the same reader.
 
 The parse runs once: checkpoint.write_text_sink materializes its
 rows by one eager localCheckpoint to disk, and every sink is written
@@ -52,9 +53,10 @@ Resume is two-level and always on:
   after the pass, makes the re-read exact — documents already
   extracted by the killed run are never appended twice.  Only pages
   of archives the manifest has not committed are parsed at all, so
-  the join costs the re-read pages of the killed run's own archives.  The quality sidecar resumes the same way: text
-  rows of earlier launches with no quality row are sided in this
-  launch's quality write.
+  the join costs the re-read pages of the killed run's own archives.
+  The quality sidecar resumes the same way: text rows of earlier
+  launches with no quality row are sided in this launch's quality
+  write.
 
 At crawl scale (~10^5 archives of ~1 GB) the archive list and its
 manifest are driver-side metadata, read on the driver: the input is

@@ -519,25 +519,28 @@ def _find_member(win, rel, limit=None):
             rel = max(rel, len(win.buf) - 2)
             win.ensure(len(win.buf) + (1 << 20))
             continue
-        d = zlib.decompressobj(wbits=31)
-        out = b""
-        fed = idx
-        ok = True
-        while len(out) < 5 and not d.eof:
-            win.ensure(fed + 65536)
-            chunk = win.buf[fed:fed + 65536]
-            if not chunk:
-                ok = False
-                break
-            try:
-                out += d.decompress(chunk)
-            except zlib.error:
-                ok = False
-                break
-            fed += len(chunk)
-        if ok and out[:5] == b"WARC/":
+        if _is_member(win, idx):
             return idx
         rel = idx + 1
+
+
+def _is_member(win, rel):
+    """Whether a real member starts at window-relative ``rel``: its
+    decompressed prefix is a WARC version line."""
+    d = zlib.decompressobj(wbits=31)
+    out = b""
+    fed = rel
+    while len(out) < 5 and not d.eof:
+        win.ensure(fed + 65536)
+        chunk = win.buf[fed:fed + 65536]
+        if not chunk:
+            return False
+        try:
+            out += d.decompress(chunk)
+        except zlib.error:
+            return False
+        fed += len(chunk)
+    return out[:5] == b"WARC/"
 
 
 def iter_warc_records_file_range(f, start, end, errors=None):
@@ -549,7 +552,9 @@ def iter_warc_records_file_range(f, start, end, errors=None):
     files included).  Unlike the whole-file reader, a corrupt member
     (bad deflate data or CRC, or truncated) is reported in ``errors``
     and skipped: the reader resyncs to the next validated member
-    instead of abandoning the file, and never raises."""
+    instead of abandoning the file, and never raises.  A bad member is
+    reported once, by the range that owns it or, when it is the first
+    member of its range, by the range holding the member before it."""
     if errors is None:
         errors = []
     win = _FileWindow(f, start)
@@ -577,3 +582,12 @@ def iter_warc_records_file_range(f, start, end, errors=None):
         yield from parse_warc_buffer(plain, errors,
                                      base_offset=win.base)
         rel = consumed
+        if win.base + rel >= end:
+            # the member after this range's last one lies in a later
+            # range, whose resync cannot tell a bad member from a magic
+            # inside this one's payload and skips it unreported: only
+            # this range knows where it starts
+            win.ensure(rel + 1)
+            if len(win.buf) > rel and not _is_member(win, rel):
+                errors.append("truncated/invalid gzip member at %d"
+                              % (win.base + rel))

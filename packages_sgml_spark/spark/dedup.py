@@ -300,39 +300,11 @@ def ngram_jaccard(docs: DataFrame, pairs: DataFrame) -> DataFrame:
                              F.col("n_inter")), 6).alias("jaccard")))
 
 
-def simhash_fast(docs: DataFrame, bits=32) -> DataFrame:
-    """SimHash over words: per-bit majority vote of word hashes.
-    Uses xxhash64 (JVM-side) — the performance path for real
-    clusters.  xxhash64 has no DuckDB twin, so the *registered*
-    `simhash` query is simhash_md5 (identical construction, portable
-    projection bits); this variant is planted-truth pytest'd
-    (tests/test_spark_ops.py) instead."""
-    from .util import spread
-    docs = spread(docs, "doc_id")
-    words = F.explode(norm_words(F.col("text")))
-    wh = docs.select("doc_id", words.alias("w")) \
-             .select("doc_id", F.xxhash64("w").alias("h"))
-    bit_sums = [
-        F.sum(F.when(F.shiftright(F.col("h"), i).bitwiseAND(1) == 1,
-                     1).otherwise(-1)).alias("b%d" % i)
-        for i in range(bits)]
-    agg = wh.groupBy("doc_id").agg(*bit_sums)
-    sig = None
-    for i in range(bits):
-        bit = F.when(F.col("b%d" % i) > 0,
-                     F.lit(2 ** i)).otherwise(F.lit(0))
-        sig = bit if sig is None else (sig + bit)
-    return agg.select("doc_id", sig.cast("long").alias("simhash"))
-
-
-_HEX_HIGH = ("8", "9", "a", "b", "c", "d", "e", "f")
-
-
 def simhash_md5(docs: DataFrame, bits=32) -> DataFrame:
     """SimHash with md5-derived projection bits (bit i = high bit of
     hex digit i of md5(word)) — engine-portable, so the DuckDB oracle
-    verifies it exactly; same per-bit majority-vote construction as
-    simhash().
+    verifies it exactly; bit i of the signature is the per-word
+    majority vote on projection bit i.
 
     r9 (guide §1.2 per-task work): the per-word bit tests used to be
     32 x (substring(hex, i, 1) IN eight 1-char strings) — 32 string

@@ -25,15 +25,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
-    ArrayType, BinaryType, FloatType, IntegerType, StringType,
+    ArrayType, FloatType, IntegerType, StringType,
     StructField, StructType)
-
-MEDIA_SCHEMA = StructType([
-    StructField("media_id", StringType()),
-    StructField("kind", StringType()),        # image|audio|video
-    StructField("payload", BinaryType()),
-    StructField("mime", StringType()),
-])
 
 IMAGE_FEATURES_SCHEMA = StructType([
     StructField("media_id", StringType()),
@@ -131,19 +124,6 @@ def media_from_docs(docs: DataFrame) -> DataFrame:
         kind.alias("kind"),
         F.encode(payload, "utf-8").alias("payload"),
         F.lit("application/fake").alias("mime"))
-
-
-def synthetic_media(spark, n=100) -> DataFrame:
-    """Deterministic fake media table for tests."""
-    df = spark.range(n)
-    return df.select(
-        F.concat(F.lit("m"), F.col("id").cast("string")).alias("media_id"),
-        F.when(F.col("id") % 3 == 0, "audio").otherwise("image")
-         .alias("kind"),
-        F.encode(F.repeat(F.concat(F.lit("px"),
-                                   F.col("id").cast("string")), 32),
-                 "utf-8").alias("payload"),
-        F.lit("image/fake").alias("mime"))
 
 
 FRAME_SCHEMA = StructType([

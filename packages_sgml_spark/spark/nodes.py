@@ -254,20 +254,3 @@ def named_subtree_text(nodes: DataFrame, name) -> DataFrame:
                     F.array_sort(F.collect_list(
                         F.struct("node_id", "text"))),
                     lambda s: s["text"])).alias("text_subtree")))
-
-
-def sibling_index(nodes: DataFrame) -> DataFrame:
-    """position()/last() analog (xpath.pl:352-439): per-name sibling
-    rank and count among same-name siblings."""
-    w = Window.partitionBy("url", "parent_id", "name").orderBy("ord")
-    wc = Window.partitionBy("url", "parent_id", "name")
-    return (nodes.filter(F.col("kind") == "element")
-            .withColumn("sib_index", F.row_number().over(w))
-            .withColumn("sib_count", F.count("*").over(wc)))
-
-
-def count_named(nodes: DataFrame) -> DataFrame:
-    """count_named_elements analog (xpath.pl:352-371)."""
-    return (nodes.filter(F.col("kind") == "element")
-            .groupBy("url", "name")
-            .agg(F.count("*").alias("n")))

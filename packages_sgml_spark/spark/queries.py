@@ -303,8 +303,7 @@ def q_minhash_lsh_pairs(spark, sf_dir):
 
 def q_simhash(spark, sf_dir):
     """Registered simhash = the md5-projection variant (fully
-    DuckDB-oracled).  dedup.simhash_fast (xxhash64) is the library
-    perf path, planted-truth pytest'd."""
+    DuckDB-oracled)."""
     return dedup.simhash_md5(_t(spark, sf_dir, "documents"))
 
 
@@ -468,8 +467,6 @@ def q_embedding_dups(spark, sf_dir):
     all-pairs variant remains the small-scale cross-check in pytest
     (tests/test_spark_ops.py)."""
     emb = _t(spark, sf_dir, "embeddings")
-    emb = emb.withColumn("embedding",
-                         F.col("embedding").cast("array<double>"))
     return similarity.embedding_near_dups(emb, threshold=0.2,
                                           use_lsh=True, dim=64,
                                           n_planes=6)
@@ -810,8 +807,6 @@ def q_embedding_dup_recall(spark, sf_dir):
     """LSH near-dup recall vs the exact pair set (r4): same threshold
     and hyperplanes as the registered embedding_dups query."""
     emb = _t(spark, sf_dir, "embeddings")
-    emb = emb.withColumn("embedding",
-                         F.col("embedding").cast("array<double>"))
     return similarity.embedding_dup_recall(emb, threshold=0.2,
                                            dim=64, n_planes=6)
 

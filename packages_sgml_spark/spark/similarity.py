@@ -10,16 +10,17 @@
 - LSH-bucketed variant: random-hyperplane signs -> cosine only
   within buckets (the scale path; recall < 1).
 
-Every numpy pass reads `embedding` cast to array<double> (exact for
-the table's array<float>) and runs one kernel: `_emb_matrix` decodes
-the Arrow lists (driver-side query and centroid matrices too),
-`_cosine` scores, `_buckets` signs.  The one NULL/length rule lives
-in `_emb_matrix`: a pair's cos is NULL unless both vectors are
-non-NULL, free of NULL elements and of the same length (the zip_with
-fold's NULL propagation), an invalid vector falls in LSH bucket 0,
-and a zero-norm vector gives NaN, as 0.0/0.0 did JVM-side.  The exact
-all-pairs near-dup path, the multi-probe join and ivf_knn's probe
-scoring stay JVM folds (`_dot`/`_norm`).
+Every pass reads `embedding` cast to array<double> (exact for the
+table's array<float>) through `_emb_cols`, so the JVM folds score the
+same doubles as the numpy passes, which run one kernel: `_emb_matrix`
+decodes the Arrow lists (driver-side query and centroid matrices too),
+`_cosine` scores, `_buckets` signs.  The one NULL/length rule lives in
+`_emb_matrix`: a pair's cos is NULL unless both vectors are non-NULL,
+free of NULL elements and of the same length (the zip_with fold's NULL
+propagation), an invalid vector falls in LSH bucket 0, and a zero-norm
+vector gives NaN, as 0.0/0.0 did JVM-side.  The exact all-pairs
+near-dup path, the multi-probe join and ivf_knn's probe scoring stay
+JVM folds (`_dot`/`_norm`).
 
 knn_bruteforce, knn_lsh and ivf_assign collect() their query or
 centroid vectors when the frame is built (a Spark job, and a snapshot
@@ -131,8 +132,8 @@ def hyperplane_values(dim, n_planes, seed=1234):
 # ---------------------------------------------------------------------
 
 def _emb_cols(emb: DataFrame, *cols) -> DataFrame:
-    """`cols` plus `embedding` cast to array<double>: what every numpy
-    pass reads.  Ships the package to the workers first, since the
+    """`cols` plus `embedding` cast to array<double>: what every pass
+    reads.  Ships the package to the workers first, since the
     passes call this module's kernel."""
     from .queries import ensure_workers
     ensure_workers(emb.sparkSession)
@@ -340,12 +341,13 @@ def embedding_near_dups(emb: DataFrame, threshold=0.95,
                                 "vec_b", "emb_b", "nrm_b")
                   .dropDuplicates(["vec_a", "vec_b"]))
     else:
-        a = emb.select(F.col("vec_id").alias("vec_a"),
-                       F.col("embedding").alias("emb_a"),
-                       _norm(F.col("embedding")).alias("nrm_a"))
-        b = emb.select(F.col("vec_id").alias("vec_b"),
-                       F.col("embedding").alias("emb_b"),
-                       _norm(F.col("embedding")).alias("nrm_b"))
+        e = _emb_cols(emb, "vec_id")
+        a = e.select(F.col("vec_id").alias("vec_a"),
+                     F.col("embedding").alias("emb_a"),
+                     _norm(F.col("embedding")).alias("nrm_a"))
+        b = e.select(F.col("vec_id").alias("vec_b"),
+                     F.col("embedding").alias("emb_b"),
+                     _norm(F.col("embedding")).alias("nrm_b"))
         joined = a.join(b, F.col("vec_a") < F.col("vec_b"))
     scored = joined.select(
         "vec_a", "vec_b",
@@ -431,14 +433,16 @@ def embedding_bucket_stats(emb: DataFrame, dim=64,
 def ivf_centroids(emb: DataFrame, k=16, iterations=0,
                   dim=None) -> DataFrame:
     """Deterministic IVF coarse quantizer: seed centroids = the k
-    lowest vec_ids (cid = rank among them), refined by `iterations`
-    Lloyd steps (mean of assigned vectors).  Pure DataFrame ops;
-    centroids stay tiny and broadcastable.
+    lowest vec_ids with a non-NULL embedding (cid = rank among them;
+    the oracle's seeds), refined by `iterations` Lloyd steps (mean of
+    assigned vectors).  Pure DataFrame ops; centroids stay tiny and
+    broadcastable.
 
     iterations=0 (the oracled default) keeps centroids = exact data
     vectors — no cross-engine float-mean drift; Lloyd refinement is a
     library capability verified by pytest recall tests."""
-    seeds = emb.orderBy("vec_id").limit(k)
+    seeds = emb.filter(F.col("embedding").isNotNull()) \
+        .orderBy("vec_id").limit(k)
     w = Window.partitionBy(F.lit(0)).orderBy("vec_id")
     cents = seeds.select((F.row_number().over(w) - 1).alias("cid"),
                          F.col("embedding").alias("centroid"))

@@ -1,5 +1,5 @@
-"""Skew handling: salted two-stage aggregation and salted joins
-(north rule: 'salts skewed hosts').
+"""Skew handling: salted two-stage aggregation (north rule: 'salts
+skewed hosts').
 
 At crawl scale a handful of hosts hold billions of pages; a plain
 groupBy(host) sends each hot host to one reducer.  Salting splits
@@ -11,8 +11,7 @@ shuffle distribution changes.
 
 AQE's skewJoin handles the *join* case automatically
 (spark.sql.adaptive.skewJoin.enabled=true in session.py); explicit
-salting remains the tool for skewed aggregations and for joins
-against non-splittable single-partition keys.
+salting remains the tool for skewed aggregations.
 """
 
 from pyspark.sql import DataFrame, functions as F
@@ -58,16 +57,3 @@ def salted_agg(df: DataFrame, keys, aggs, shards=16,
             raise ValueError(fn)
     stage1 = salted.groupBy(*(keys + ["_salt"])).agg(*partial)
     return stage1.groupBy(*keys).agg(*final)
-
-
-def salted_join_broadcastable(big: DataFrame, small: DataFrame, key,
-                              shards=8) -> DataFrame:
-    """Skew-proof join of a big skewed table against a small dim:
-    explode the small side across shards and join on (key, salt).
-    Equivalent rows to big.join(small, key)."""
-    big_s = with_salt(big, shards=shards)
-    small_s = (small
-               .withColumn("_salt",
-                           F.explode(F.sequence(F.lit(0),
-                                                F.lit(shards - 1)))))
-    return big_s.join(small_s, [key, "_salt"]).drop("_salt")

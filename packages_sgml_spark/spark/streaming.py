@@ -3,12 +3,11 @@
 The reference's incremental push-parse (resumable per character,
 parser.c:4682-4718) maps at job level to Structured Streaming over
 arriving page files: readStream -> the same extract() mapInPandas ->
-sink with checkpointLocation.  Late/ordered data semantics (not in
-the reference — documents are independent) are provided for the
-events table via watermarked tumbling windows.
+sink with checkpointLocation.  Documents are independent, so every
+stream here is a stateless projection: no state store, no watermark.
 """
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from .extract import extract
 
@@ -21,110 +20,6 @@ def stream_extract(spark, input_dir: str, schema,
     pages = (spark.readStream.schema(schema)
              .parquet(input_dir))
     return extract(pages, dialect=dialect, nodes=False)
-
-
-def windowed_event_counts(events: DataFrame, watermark="10 minutes",
-                          window="1 hour") -> DataFrame:
-    """Watermarked tumbling-window aggregation (late data dropped
-    after the watermark)."""
-    return (events
-            .withWatermark("ts", watermark)
-            .groupBy(F.window("ts", window).alias("w"), "event_type")
-            .agg(F.count("*").alias("n_events"),
-                 F.sum("value").alias("sum_value"))
-            .select(F.col("w.start").alias("window_start"),
-                    "event_type", "n_events", "sum_value"))
-
-
-def run_stream_to_memory(spark, input_dir, schema, query_name,
-                         dialect="html5"):
-    """availableNow streaming extraction into an in-memory sink;
-    returns the finished query's result DataFrame (test helper)."""
-    sdf = stream_extract(spark, input_dir, schema, dialect)
-    q = (sdf.select("url", "text_extracted", "n_errors", "status")
-         .writeStream.format("memory").queryName(query_name)
-         .trigger(availableNow=True)
-         .option("checkpointLocation",
-                 input_dir.rstrip("/") + "_ckpt_" + query_name)
-         .start())
-    q.awaitTermination(120)
-    return spark.table(query_name)
-
-
-# ----------------------------------------------------------------------
-# custom stateful operator: applyInPandasWithState sessionizer
-# ----------------------------------------------------------------------
-
-SESSION_OUTPUT = ("user_id long, session_start timestamp, "
-                  "last_ts timestamp, n_events long, sum_value double, "
-                  "closed boolean")
-SESSION_STATE = ("session_start timestamp, last_ts timestamp, "
-                 "n_events long, sum_value double")
-
-
-def _sessionize_fn(gap_seconds):
-    import datetime as _dt
-
-    def fn(key, pdf_iter, state):
-        import pandas as pd
-        (user_id,) = key
-        if state.hasTimedOut:
-            (s0, s1, n, sv) = state.get
-            state.remove()
-            yield pd.DataFrame([{
-                "user_id": user_id, "session_start": s0,
-                "last_ts": s1, "n_events": n, "sum_value": sv,
-                "closed": True}])
-            return
-        rows = []
-        for pdf in pdf_iter:
-            rows.append(pdf[["ts", "value"]])
-        batch = pd.concat(rows).sort_values("ts")
-        if state.exists:
-            (s0, s1, n, sv) = state.get
-        else:
-            s0 = s1 = None
-            n, sv = 0, 0.0
-        out = []
-        gap = _dt.timedelta(seconds=gap_seconds)
-        for ts, value in zip(batch["ts"], batch["value"]):
-            ts = ts.to_pydatetime()
-            if s0 is None:
-                s0, s1, n, sv = ts, ts, 1, float(value)
-            elif ts - s1 >= gap:
-                out.append({"user_id": user_id, "session_start": s0,
-                            "last_ts": s1, "n_events": n,
-                            "sum_value": sv, "closed": True})
-                s0, s1, n, sv = ts, ts, 1, float(value)
-            else:
-                s1 = max(s1, ts)
-                n += 1
-                sv += float(value)
-        state.update((s0, s1, n, sv))
-        state.setTimeoutDuration(gap_seconds * 1000)
-        out.append({"user_id": user_id, "session_start": s0,
-                    "last_ts": s1, "n_events": n, "sum_value": sv,
-                    "closed": False})
-        yield pd.DataFrame(out)
-
-    return fn
-
-
-def stateful_sessionize(event_stream, gap_seconds=600):
-    """Custom stateful streaming operator (applyInPandasWithState,
-    SURVEY §2.10): per-user session accumulation with processing-time
-    timeout close.  Emits an open-session update each batch and a
-    closed record when the gap elapses."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return (event_stream
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _sessionize_fn(gap_seconds),
-                outputStructType=SESSION_OUTPUT,
-                stateStructType=SESSION_STATE,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.ProcessingTimeTimeout))
 
 
 def stream_quality(spark, input_dir: str, schema) -> DataFrame:

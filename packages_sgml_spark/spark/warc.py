@@ -7,9 +7,9 @@ That layout IS the partitioning strategy: ``plan_ranges`` turns the
 file listing into tasks of (path, start, end) ranges on the driver,
 each task opens and decompresses its own ranges, and nothing here
 shuffles.  A ``.warc.gz`` may split at gzip-member boundaries, so a
-task never holds a multi-GB archive and, in the crawl's pass, one
-archive can still parse on every core; the member reader's ranges tile
-the file, so splitting never changes its rows.
+task never holds a multi-GB archive and one archive can still parse
+on every core; every ``.warc.gz`` is read by the gzip-member reader,
+whose ranges tile the file, so splitting never changes its rows.
 
 The file list is driver-side metadata, not data: ``list_archives``
 reads it through the session's Hadoop FileSystem in a fixed number of
@@ -22,10 +22,9 @@ schemes are read one file per row through ``binaryFile``, with its
 listing and its 2 GiB row bound, and feed the same per-archive code.
 
 Memory: a task holds one decompressed record at a time
-(member-per-record means members decompress individually) and either
-a whole file's compressed bytes (``read_warc`` below ``split_bytes``)
-or a window over its range of about 1 MiB or one member, whichever
-is larger (the member reader).
+(member-per-record means members decompress individually) and a
+window over its range of about 1 MiB or one member, whichever is
+larger; a plain ``.warc`` is read whole, as is a binaryFile row.
 
 Read path: ``read_warc`` -> full record table;  ``warc_pages`` ->
 the authoritative input shape (url, warc_ts, html, text, lang)
@@ -33,7 +32,8 @@ feeding ``extract()`` unchanged;  ``warc_text_quality`` -> the crawl's
 one pass, the rows of ``extract_text_quality(warc_pages(...))`` from
 one pandas-free ``mapInArrow`` per task that reads, decodes, parses
 and scores its pages (no page bytes cross the Arrow boundary).  All
-three share one record generator, ``warc_rows``.  Write path:
+three share one reader, ``_records``, and one record generator,
+``warc_rows``.  Write path:
 ``write_warc_pages`` emits member-per-record ``.warc.gz``, one file
 per partition, and returns a manifest frame.  All Python work is
 Arrow-batched (``mapInArrow`` for the scans, ``mapInPandas`` for the
@@ -41,6 +41,7 @@ writers): no per-row UDFs.
 """
 
 import fnmatch
+import io
 import os
 import re
 from functools import partial
@@ -71,7 +72,7 @@ def warc_rows(fname, recs, errors, record_types, transcode=False):
     of ``recs`` (one archive's or range's records; the reader appends
     malformed-content messages to ``errors``) whose type is in
     ``record_types`` (empty: every type), with ``warc_ts`` still the
-    raw WARC-Date string; then, if there were errors, the file-level
+    raw WARC-Date string; then, if there were errors, the range's
     ``x-parse-errors`` row (url NULL), so malformed content is
     observable in the table instead of a driver log."""
     from ..core.warc import (http_content_type, sniff_charset,
@@ -283,8 +284,7 @@ def _ranges(path, length, pieces):
     return [(path, a, b, b - a) for a, b in zip(cuts, cuts[1:])]
 
 
-def plan_ranges(spark, listing, tasks="auto", split_bytes=SPLIT_BYTES,
-                range_bytes=RANGE_BYTES, fill=True):
+def plan_ranges(spark, listing, tasks="auto"):
     """The scan plan of a listing [(path, length)], on the driver, with
     no Spark job: (plan, remote).  ``plan`` is a list of tasks, each a
     list of (path, start, end) ranges of locally readable archives
@@ -292,23 +292,23 @@ def plan_ranges(spark, listing, tasks="auto", split_bytes=SPLIT_BYTES,
     non-local schemes, which only binaryFile can read.
 
     A file is one whole range, bar a ``.warc.gz`` larger than
-    ``split_bytes``, which splits into ranges of at most
-    ``range_bytes`` (r8: a task never holds a multi-GB archive).  A
+    ``SPLIT_BYTES``, which splits into ranges of at most
+    ``RANGE_BYTES`` (r8: a task never holds a multi-GB archive).  A
     range owns the gzip members whose first byte lies in it
     (core.warc.iter_warc_records_file_range), so ranges tile the file:
     the member reader yields the same records from any split of it.
 
     ``tasks`` is the number of tasks wanted: "auto" for the session's
-    default parallelism, or N.  With ``fill`` and fewer ranges than
-    that, the whole ``.warc.gz`` files split, in proportion to their
-    sizes, into at least that many ranges, one task each, so even one
-    archive parses on every core.  Otherwise the ranges pack into
-    tasks by Spark's file-packing rule, as binaryFile packs its files
+    default parallelism, or N.  With fewer ranges than that, the whole
+    ``.warc.gz`` files split, in proportion to their sizes, into at
+    least that many ranges, one task each, so even one archive parses
+    on every core.  With more, the ranges pack into tasks by Spark's
+    file-packing rule, as binaryFile packs its files
     (FilePartition: largest first; a task closes when the next range
     would take it past min(maxPartitionBytes, max(openCostInBytes,
     total / wanted)), each range costing its bytes plus
     openCostInBytes).  0 wants one task per range, so one per archive
-    below ``split_bytes``."""
+    below ``SPLIT_BYTES``."""
     want = (spark.sparkContext.defaultParallelism if tasks == "auto"
             else int(tasks))
     # read whether or not the ranges pack: the planner's py4j calls
@@ -320,12 +320,12 @@ def plan_ranges(spark, listing, tasks="auto", split_bytes=SPLIT_BYTES,
     for p, n in listing:
         if _local_path(p) is None:
             remote.append(p)
-        elif p.endswith(".gz") and n > split_bytes:
-            ranges += _ranges(p, n, -(-n // range_bytes))
+        elif p.endswith(".gz") and n > SPLIT_BYTES:
+            ranges += _ranges(p, n, -(-n // RANGE_BYTES))
         else:
             ranges.append((p, 0, None, n))
     whole = [r for r in ranges if r[2] is None and r[0].endswith(".gz")]
-    if fill and whole and len(ranges) < want:
+    if whole and len(ranges) < want:
         k = want - len(ranges) + len(whole)
         total = sum(r[3] for r in whole) or 1
         ranges = [r for r in ranges if r not in whole] + [
@@ -349,32 +349,31 @@ def plan_ranges(spark, listing, tasks="auto", split_bytes=SPLIT_BYTES,
     return plan, remote
 
 
-def _open_range(path, start, end, errors, members):
-    """The records of one planned range: the gzip members starting in
-    [start, end) of a ``.warc.gz`` (``end`` None: to the end of the
-    file) -- a split range always, a whole file with ``members`` --
-    or else the whole file read at once, as binaryFile hands it over.
+def _records(path, f, start, end, errors):
+    """The records of the range [start, end) of the open archive ``f``
+    at ``path`` (``end`` None: to the end of the file), the one reader
+    of every scan.  A ``.gz`` name or a gzip stream (told by its magic
+    bytes) is read member by member
+    (core.warc.iter_warc_records_file_range): a range owns the members
+    whose first byte lies in it, a bad member is reported in
+    ``errors`` and skipped with the members after it kept, and a
+    truncated last member is dropped; the name decides first, so an
+    archive whose first bytes are damaged still resyncs to its later
+    members.  Any other file is a plain ``.warc``, parsed whole
+    (``plan_ranges`` never splits it)."""
+    from ..core.warc import (GZIP_MAGIC, iter_warc_records_file_range,
+                             parse_warc_buffer)
+    if end is None:
+        end = f.seek(0, os.SEEK_END)
+    f.seek(0)
+    if path.endswith(".gz") or f.read(2) == GZIP_MAGIC:
+        yield from iter_warc_records_file_range(f, start, end, errors)
+    else:
+        f.seek(0)
+        yield from parse_warc_buffer(f.read(), errors)
 
-    The two readers agree on every valid archive.  On a corrupt one
-    the member reader resyncs past a bad member and keeps the members
-    after it, and drops a truncated last member, where the whole-file
-    reader stops at the first bad member and parses a truncated one
-    as far as it goes; ranges of the member reader tile the file, so
-    its rows never depend on how the file was split."""
-    from ..core.warc import (iter_warc_records,
-                             iter_warc_records_file_range)
-    with open(_local_path(path), "rb") as f:
-        if end is not None or (members and path.endswith(".gz")):
-            if end is None:
-                end = os.fstat(f.fileno()).st_size
-            yield from iter_warc_records_file_range(f, start, end,
-                                                    errors)
-            return
-        data = f.read()
-    yield from iter_warc_records(data, errors)
 
-
-def _run_ranges(plan, task, members, batches):
+def _run_ranges(plan, task, batches):
     """A mapInArrow body over ``spark.range(n)``: each row names its
     task in ``plan`` (a broadcast, loaded once per Python worker),
     whose ranges ``task(path, records, errors)`` turns into Arrow
@@ -383,35 +382,31 @@ def _run_ranges(plan, task, members, batches):
         for i in batch.column(0).to_pylist():
             for path, start, end in plan.value[i]:
                 errors = []
-                yield from task(path, _open_range(path, start, end,
-                                                  errors, members),
-                                errors)
+                with open(_local_path(path), "rb") as f:
+                    yield from task(path, _records(path, f, start, end,
+                                                   errors), errors)
 
 
 def _run_files(task, batches):
     """``_run_ranges`` over binaryFile rows (path, content)."""
-    from ..core.warc import iter_warc_records
     for batch in batches:
         paths, contents = batch.column("path"), batch.column("content")
         for j in range(batch.num_rows):
             errors = []
-            yield from task(paths[j].as_py(), iter_warc_records(
-                contents[j].as_py(), errors), errors)
+            path = paths[j].as_py()
+            yield from task(path, _records(
+                path, io.BytesIO(contents[j].as_py()), 0, None, errors),
+                errors)
 
 
-def _scan(spark, path, task, schema, tasks="auto",
-          split_bytes=SPLIT_BYTES, range_bytes=RANGE_BYTES,
-          members=False):
+def _scan(spark, path, task, schema, tasks="auto"):
     """``task`` over every archive of ``path`` (a path, glob or list of
     them, or a ``list_archives`` listing) -> a DataFrame of ``schema``:
     one mapInArrow over the ``plan_ranges`` tasks of the local
     archives, unioned with one over binaryFile rows for the others.
     ``task(path, records, errors)`` yields Arrow batches of
-    ``schema``.  With ``members`` every ``.warc.gz`` is read by the
-    member reader, so the plan may split any of them to fill the
-    tasks (``_open_range``).  Building the scan runs no Spark job."""
-    plan, remote = plan_ranges(spark, _listing(spark, path), tasks,
-                               split_bytes, range_bytes, fill=members)
+    ``schema``.  Building the scan runs no Spark job."""
+    plan, remote = plan_ranges(spark, _listing(spark, path), tasks)
     out = None
     if plan:
         # as a broadcast the plan is shipped and unpickled once per
@@ -419,7 +414,7 @@ def _scan(spark, path, task, schema, tasks="auto",
         # unpickle the ranges of every task
         shared = spark.sparkContext.broadcast(plan)
         out = spark.range(0, len(plan), 1, len(plan)).mapInArrow(
-            partial(_run_ranges, shared, task, members), schema)
+            partial(_run_ranges, shared, task), schema)
     if remote:
         files = _binary_files(spark, remote).select("path", "content") \
             .mapInArrow(partial(_run_files, task), schema)
@@ -433,8 +428,7 @@ def _arrow_schema(schema):
 
 
 def read_warc(spark, path, record_types=("response",),
-              transcode=False, split_bytes=SPLIT_BYTES,
-              range_bytes=RANGE_BYTES):
+              transcode=False):
     """WARC archive(s) at ``path`` (a path, glob or list of them, or a
     ``list_archives`` listing; ``.warc`` or ``.warc.gz``) ->
     WARC_SCHEMA DataFrame; no shuffle.  ``record_types`` filters
@@ -445,15 +439,16 @@ def read_warc(spark, path, record_types=("response",),
     content) on the driver, with no Spark job: a path is listed once
     with ``list_archives``; a listing is used as it stands, so a
     crawl that already listed its archives stats none of them again.
-    ``plan_ranges`` (without ``fill``) states how archives become
-    tasks: each archive is read whole, and the archives pack into
-    about one task per core by Spark's file-packing rule, bar a
-    ``.warc.gz`` above ``split_bytes``, which is read as member-aligned
-    ranges of ``range_bytes`` (``_open_range``: the two readers' rows
-    differ only on corrupt archives).  Local tasks open their files
+    ``plan_ranges`` states how archives become tasks: about one per
+    core, a ``.warc.gz`` splitting at gzip members to fill the cores
+    or when it is above ``SPLIT_BYTES``.  Every archive is read by
+    ``_records``, so the rows never depend on the split: a corrupt
+    gzip member is skipped and the members after it kept, a truncated
+    last member is dropped, and each range with malformed content
+    adds one ``x-parse-errors`` row.  Local tasks open their files
     directly; plain ``.warc`` files never split, and non-local schemes
     are read one file per row through binaryFile, with its 2 GiB row
-    bound.
+    bound, by the same reader.
 
     ``transcode=True`` normalizes response payloads to UTF-8 in the
     same scan (charset = BOM > HTTP header > WHATWG meta prescan >
@@ -462,7 +457,7 @@ def read_warc(spark, path, record_types=("response",),
     untouched.  The ``charset`` column then reports the SOURCE
     charset the bytes came from."""
     return _scan(spark, path, _record_task(record_types, transcode),
-                 WARC_SCHEMA, "auto", split_bytes, range_bytes)
+                 WARC_SCHEMA)
 
 
 def _record_task(record_types, transcode):
@@ -531,12 +526,10 @@ def warc_text_quality(spark, path, statuses=(200,), transcode=True,
     ``arrow.maxRecordsPerBatch`` pages.  No page crosses the Arrow
     boundary into Python (local tasks get only their task number), its
     text and features come back once, and the worker never imports
-    pandas.  ``tasks`` is ``plan_ranges``'.  Every ``.warc.gz`` is
-    read by the gzip-member reader, so the rows are the same however
-    the archives split into tasks; they equal the composition above on
-    every valid archive, and on a corrupt one keep the members after a
-    bad one (``_open_range``).  Building the frame runs no Spark
-    job."""
+    pandas.  ``tasks`` is ``plan_ranges``'.  The archives are read by
+    ``_records``, as ``warc_pages`` reads them, so the rows equal the
+    composition above however the archives split into tasks, corrupt
+    archives included.  Building the frame runs no Spark job."""
     from .pageloop import (TEXT_META_SCHEMA, arrow_batch,
                            extract_options, out_schema, page_rows,
                            text_quality_sink)
@@ -565,14 +558,14 @@ def warc_text_quality(spark, path, statuses=(200,), transcode=True,
                              extract_options, dialect, derive=derive):
             yield arrow_batch(out, arrow_schema)
 
-    return _scan(spark, path, task, schema, tasks, members=True)
+    return _scan(spark, path, task, schema, tasks)
 
 
 def stream_warc(spark, input_dir, record_types=("response",),
                 transcode=False) -> DataFrame:
     """Continuous WARC ingest from a landing directory: the
     binaryFile STREAM source discovers newly-arrived archives, each
-    becoming one input row parsed by the same scan as read_warc.
+    becoming one input row read by read_warc's reader and task.
     Exactly-once at file granularity comes from the stream
     checkpoint (the file source journals seen files); pair with
     ``trigger(availableNow=True)`` for batch catch-up or a processing
@@ -612,11 +605,6 @@ def warc_todo(spark, path, done=()):
     return [(p, n) for p, n in todo if p not in done]
 
 
-def warc_todo_paths(spark, path, done=()):
-    """The paths of ``warc_todo(spark, path, done)``."""
-    return [p for p, _n in warc_todo(spark, path, done)]
-
-
 WRITE_MANIFEST_SCHEMA = StructType([
     StructField("warc_file", StringType()),
     StructField("n_records", LongType()),
@@ -632,7 +620,8 @@ def write_wet_pages(extracted: DataFrame, out_dir,
     member-per-record ``.warc.gz`` — the exact shape Common Crawl
     publishes its text layer in, so downstream WET consumers can read
     our extraction output unchanged.  One file per partition, same
-    manifest/idempotency contract as write_warc_pages."""
+    manifest/idempotency contract as write_warc_pages.  Read back with
+    ``read_warc(spark, path, record_types=("conversion",))``."""
     cols = [c for c in ("url", "warc_ts", "text")
             if c in extracted.columns]
     src = extracted.select(*cols)
@@ -671,16 +660,6 @@ def write_wet_pages(extracted: DataFrame, out_dir,
                            columns=["warc_file", "n_records", "bytes"])
 
     return src.mapInPandas(fn, schema=WRITE_MANIFEST_SCHEMA)
-
-
-def read_wet(spark, path) -> DataFrame:
-    """WET archives -> (url, warc_ts, text): the inverse of
-    write_wet_pages, and a reader for Common Crawl's own WET layer
-    (records typed ``conversion``, text/plain UTF-8 bodies)."""
-    recs = read_warc(spark, path, record_types=("conversion",))
-    return (recs.where(F.col("url").isNotNull())
-            .select("url", "warc_ts",
-                    F.decode(F.col("html"), "UTF-8").alias("text")))
 
 
 def write_warc_pages(pages: DataFrame, out_dir,

@@ -108,9 +108,10 @@ def test_crawl_job_two_level_resume(spark, tmp_path):
     assert per_run == {"r1": 2, "r3": 1}
 
     # WET layer reads back with the extracted text
-    from packages_sgml_spark.spark.warc import read_wet
-    wet = {r.url: r.text for r in
-           read_wet(spark, out + "/wet/*.warc.gz").collect()}
+    from packages_sgml_spark.spark.warc import read_warc
+    wet = {r.url: bytes(r.html).decode("utf-8") for r in
+           read_warc(spark, out + "/wet/*.warc.gz",
+                     record_types=("conversion",)).collect()}
     assert wet["https://j.example/1"] == "Onealpha"
     assert wet["https://j.example/3"] == "Threegamma"
 
@@ -148,15 +149,15 @@ def test_crawl_job_never_records_archive_in_flight(spark, tmp_path):
     once it is complete, the next run extracts its records."""
     import crawl_job
     from packages_sgml_spark.spark.checkpoint import read_rows
-    from packages_sgml_spark.spark.warc import warc_todo_paths
+    from packages_sgml_spark.spark.warc import warc_todo
     land = tmp_path / "warc"
     land.mkdir()
     out = str(tmp_path / "sink")
     _write_archive(land / "c-00000.warc.gz", DOCS1)
     (land / "c-00001.warc.gz").write_bytes(b"")
     _write_archive(land / "c-00002.warc.gz._COPYING_", DOCS2)
-    assert [os.path.basename(p) for p in
-            warc_todo_paths(spark, str(land))] == ["c-00000.warc.gz"]
+    assert [os.path.basename(p) for p, _n in
+            warc_todo(spark, str(land))] == ["c-00000.warc.gz"]
     s1 = crawl_job.run(spark, _args(input=str(land), output=out,
                                     run_id="r1"))
     assert s1["archives"] == 1 and s1["docs_new"] == 2

@@ -38,52 +38,42 @@ def test_extract_golden_rows(spark):
         assert got["test://sgml/" + fn] == extract_text(dom), fn
 
 
-def test_nodes_sibling_index(spark):
-    from packages_sgml_spark.spark.pages import docs_as_pages
-    from packages_sgml_spark.spark.extract import extract
-    from packages_sgml_spark.spark.nodes import (
-        explode_nodes, sibling_index, elements_named)
-
-    docs = spark.read.parquet(SF + "/documents.parquet").limit(20)
-    ex = extract(docs_as_pages(docs, links=True), dialect="html5")
-    nodes = explode_nodes(ex)
-    si = sibling_index(nodes)
-    links = si.filter(F.col("name") == "a")
-    row = links.groupBy("url").agg(
-        F.max("sib_index").alias("mx"),
-        F.max("sib_count").alias("ct")).collect()
-    for r in row:
-        assert r.mx == r.ct     # position() <= last() everywhere
-    assert elements_named(nodes, "title").count() == 20
-
-
 def test_streaming_extract(spark, tmp_path):
     from packages_sgml_spark.spark.pages import docs_as_pages
-    from packages_sgml_spark.spark.streaming import run_stream_to_memory
+    from packages_sgml_spark.spark.streaming import stream_extract
 
     docs = spark.read.parquet(SF + "/documents.parquet").limit(25)
     pages = docs_as_pages(docs)
     in_dir = str(tmp_path / "in")
     pages.write.parquet(in_dir)
     schema = spark.read.parquet(in_dir).schema
-    res = run_stream_to_memory(spark, in_dir, schema, "q_stream_t")
+    q = (stream_extract(spark, in_dir, schema)
+         .select("url", "text_extracted", "n_errors", "status")
+         .writeStream.format("memory").queryName("q_stream_t")
+         .trigger(availableNow=True)
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .start())
+    q.awaitTermination(120)
+    res = spark.table("q_stream_t")
     assert res.count() == 25
     assert res.filter(F.col("status") == "ok").count() == 25
 
 
-def test_streaming_windowed(spark):
-    from packages_sgml_spark.spark.streaming import windowed_event_counts
-    ev = spark.read.parquet(SF + "/events.parquet")
-    # batch semantics of the same expression (watermark is a no-op in
-    # batch mode): window starts align to the hour
-    out = windowed_event_counts(ev).collect()
-    assert all(r.window_start.minute == 0 for r in out)
-    assert sum(r.n_events for r in out) == ev.count()
+def synthetic_media(spark, n=100):
+    """Deterministic fake media table (media_id, kind, payload, mime):
+    every third row audio, the rest image."""
+    return spark.range(n).select(
+        F.concat(F.lit("m"), F.col("id").cast("string")).alias("media_id"),
+        F.when(F.col("id") % 3 == 0, "audio").otherwise("image")
+         .alias("kind"),
+        F.encode(F.repeat(F.concat(F.lit("px"),
+                                   F.col("id").cast("string")), 32),
+                 "utf-8").alias("payload"),
+        F.lit("image/fake").alias("mime"))
 
 
 def test_multimodal_plumbing(spark):
-    from packages_sgml_spark.spark.multimodal import (
-        synthetic_media, image_features)
+    from packages_sgml_spark.spark.multimodal import image_features
     media = synthetic_media(spark, 30)
     feats = image_features(media, fake=True)
     rows = feats.collect()
@@ -155,39 +145,6 @@ def test_parallelism_determinism(spark):
     ra = sorted((r.url, r.text_extracted, r.n_errors) for r in a.collect())
     rb = sorted((r.url, r.text_extracted, r.n_errors) for r in b.collect())
     assert ra == rb
-
-
-def test_stateful_sessionize(spark, tmp_path):
-    """applyInPandasWithState custom operator end-to-end via a file
-    stream + memory sink (single availableNow batch)."""
-    from packages_sgml_spark.spark.streaming import stateful_sessionize
-
-    ev = spark.read.parquet(SF + "/events.parquet") \
-        .select("user_id", "ts", "value").limit(500)
-    in_dir = str(tmp_path / "sess_in")
-    ev.write.parquet(in_dir)
-    schema = spark.read.parquet(in_dir).schema
-    stream = spark.readStream.schema(schema).parquet(in_dir)
-    out = stateful_sessionize(stream, gap_seconds=600)
-    q = (out.writeStream.format("memory").queryName("sess_t")
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "sess_ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    res = spark.table("sess_t")
-    rows = res.collect()
-    assert len(rows) > 0
-    # every input event is accounted for in emitted session states
-    per_user = {}
-    for r in rows:
-        per_user.setdefault(r.user_id, 0)
-        per_user[r.user_id] += 0  # presence check
-    n_users = ev.select("user_id").distinct().count()
-    assert len({r.user_id for r in rows}) == n_users
-    # open-session updates cover all events in this single batch
-    open_counts = sum(r.n_events for r in rows if not r.closed)
-    closed_counts = sum(r.n_events for r in rows if r.closed)
-    assert open_counts + closed_counts == ev.count()
 
 
 def test_ivf_recall(spark):
@@ -277,7 +234,7 @@ def test_golden_compare_join(spark):
 
 def test_multimodal_frames_and_audio(spark):
     from packages_sgml_spark.spark.multimodal import (
-        synthetic_media, video_frame_sample, audio_features)
+        video_frame_sample, audio_features)
     media = synthetic_media(spark, 24)
     frames = video_frame_sample(media).collect()
     assert len(frames) > 0
@@ -290,18 +247,6 @@ def test_multimodal_frames_and_audio(spark):
     ok = [r for r in audio if r.status == "ok"]
     assert len(ok) == 8                      # the kind=='audio' third
     assert all(len(r.mfcc) == 13 for r in ok)
-
-
-def test_salted_join_equals_plain_join(spark):
-    from packages_sgml_spark.spark.skew import salted_join_broadcastable
-    big = spark.range(5000).select((F.col("id") % 7).alias("k"),
-                                   F.col("id").alias("v"))
-    dim = spark.range(7).select(F.col("id").alias("k"),
-                                (F.col("id") * 10).alias("d"))
-    a = sorted((r.k, r.v, r.d) for r in
-               salted_join_broadcastable(big, dim, "k").collect())
-    b = sorted((r.k, r.v, r.d) for r in big.join(dim, "k").collect())
-    assert a == b
 
 
 def test_dedup_components_planted(spark):
@@ -347,12 +292,10 @@ def test_compression_ratio_planted(spark):
 
 
 def test_simhash_planted_properties(spark):
-    """Planted-truth properties for the xxhash64 simhash (engine
-    hash, no SQL oracle): identical text -> identical signature;
-    near-identical -> small hamming distance; disjoint vocabulary ->
-    large distance.  Same assertions against simhash_md5 keep both
-    constructions honest."""
-    from packages_sgml_spark.spark.dedup import simhash_fast, simhash_md5
+    """Planted-truth properties of simhash_md5: identical text ->
+    identical signature; near-identical -> small hamming distance;
+    disjoint vocabulary -> large distance."""
+    from packages_sgml_spark.spark.dedup import simhash_md5
     base = ("the quick brown fox jumps over the lazy dog "
             "while the rain falls on the quiet empty street") * 3
     near = base.replace("quiet", "busy")
@@ -365,11 +308,10 @@ def test_simhash_planted_properties(spark):
     def ham(a, b):
         return bin(a ^ b).count("1")
 
-    for fn in (simhash_fast, simhash_md5):
-        sig = {r.doc_id: r.simhash for r in fn(docs).collect()}
-        assert sig[0] == sig[1]
-        assert ham(sig[0], sig[2]) <= 6, ham(sig[0], sig[2])
-        assert ham(sig[0], sig[3]) > ham(sig[0], sig[2])
+    sig = {r.doc_id: r.simhash for r in simhash_md5(docs).collect()}
+    assert sig[0] == sig[1]
+    assert ham(sig[0], sig[2]) <= 6, ham(sig[0], sig[2])
+    assert ham(sig[0], sig[3]) > ham(sig[0], sig[2])
 
 
 def test_simhash_pairs_planted_vs_bruteforce(spark):
@@ -464,6 +406,54 @@ def test_ivf_lloyd_derives_dim(spark):
         assert all(c is not None for c in r.centroid), r
     asg = ivf_assign(emb, ivf_centroids(emb, k=4, iterations=1))
     assert asg.count() == 40
+
+
+def test_knn_ivf_seeds_skip_null_embeddings(spark, tmp_path,
+                                           check_correctness):
+    """IVF seeds are the lowest vec_ids WITH an embedding, as the
+    knn_ivf oracle's e CTE seeds them: on a table whose vec_id 0 is
+    NULL, the rows of queries 1-7 equal DuckDB's (query 0, a NULL
+    vector, is kept by the engine and dropped by the oracle)."""
+    import random
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from packages_sgml_spark.spark.oracles import ORACLES
+    from packages_sgml_spark.spark.queries import QUERIES
+    rng = random.Random(60)
+    vecs = [None] + [[rng.uniform(-1, 1) for _ in range(8)]
+                     for _ in range(59)]
+    path = tmp_path / "embeddings.parquet"
+    pq.write_table(pa.table({
+        "vec_id": pa.array(range(60), pa.int64()),
+        "embedding": pa.array(vecs, pa.list_(pa.float32()))}), path)
+    df = QUERIES["knn_ivf"](spark, str(tmp_path))
+    got = [tuple(r) for r in df.collect() if r.q_id != 0]
+    con = duckdb.connect()
+    con.execute("CREATE VIEW embeddings AS SELECT * FROM "
+                "read_parquet('%s')" % path)
+    cur = con.execute(ORACLES["knn_ivf"])
+    want = cur.fetchall()
+    assert {r[0] for r in want} == set(range(1, 8))
+    h = check_correctness.table_hash
+    assert h(df.columns, got) == h([d[0] for d in cur.description],
+                                   want), (sorted(got), sorted(want))
+
+
+def test_embedding_near_dups_exact_reads_float_as_double(spark):
+    """The exact all-pairs path scores array<float> input in doubles,
+    as the numpy paths read it: its rows equal those of the
+    array<double> cast."""
+    from packages_sgml_spark.spark import similarity as S
+    emb = spark.read.parquet(SF + "/embeddings.parquet")
+    as_double = emb.withColumn(
+        "embedding", F.col("embedding").cast("array<double>"))
+
+    def rows(e):
+        return sorted(tuple(r) for r in
+                      S.embedding_near_dups(e, threshold=0.2).collect())
+    got = rows(emb)
+    assert got and got == rows(as_double)
 
 
 def test_extract_element_text_matches_dom_path(spark):

@@ -264,7 +264,7 @@ def test_wet_roundtrip_from_extraction(spark, tmp_path, archive_dir):
     """End-to-end CC trio: WARC in -> extract -> WET out -> WET in,
     text byte-identical through the conversion records."""
     from packages_sgml_spark.spark.extract import extract
-    from packages_sgml_spark.spark.warc import (read_wet, warc_pages,
+    from packages_sgml_spark.spark.warc import (read_warc, warc_pages,
                                                 write_wet_pages)
     path, docs = archive_dir
     pages = warc_pages(spark, str(path) + "/*.warc*")
@@ -276,8 +276,9 @@ def test_wet_roundtrip_from_extraction(spark, tmp_path, archive_dir):
     assert sum(m.n_records for m in manifest) == len(docs)
     direct = {r.url: (r.warc_ts, r.text) for r in
               extracted.select("url", "warc_ts", "text").collect()}
-    back = {r.url: (r.warc_ts, r.text) for r in
-            read_wet(spark, str(out) + "/*.warc.gz").collect()}
+    back = {r.url: (r.warc_ts, bytes(r.html).decode("utf-8")) for r in
+            read_warc(spark, str(out) + "/*.warc.gz",
+                      record_types=("conversion",)).collect()}
     assert back == direct
     assert back["https://a.example/1"][1] == "Onealpha"
 
@@ -338,18 +339,20 @@ def test_stream_warc_incremental(spark, tmp_path):
 
 def test_warc_todo_paths(spark, archive_dir):
     """File-level batch resume: archives minus the processed set."""
-    from packages_sgml_spark.spark.warc import read_warc, \
-        warc_todo_paths
+    from packages_sgml_spark.spark.warc import read_warc, warc_todo
+
+    def todo_paths(path, done):
+        return [p for p, _n in warc_todo(spark, path, done)]
     path, _docs = archive_dir
     glob = str(path) + "/*.warc*"
     empty = []
-    todo0 = warc_todo_paths(spark, glob, empty)
+    todo0 = todo_paths(glob, empty)
     assert sorted(os.path.basename(p) for p in todo0) == \
         ["crawl-00000.warc.gz", "crawl-00001.warc"]
     # mark the first archive done via its own read output
     done = [r.warc_file for r in
             read_warc(spark, todo0[0]).select("warc_file").collect()]
-    todo1 = warc_todo_paths(spark, glob, done)
+    todo1 = todo_paths(glob, done)
     assert [os.path.basename(p) for p in todo1] == \
         [os.path.basename(p) for p in todo0 if p != todo0[0]]
     # the returned paths load directly
@@ -415,15 +418,14 @@ def test_warc_todo_and_pages_build_run_no_job(spark, archive_dir):
     listing: pruning the archives and building warc_pages over the
     todo listing launch no Spark job."""
     from packages_sgml_spark.spark.warc import (list_archives,
-                                                warc_pages, warc_todo,
-                                                warc_todo_paths)
+                                                warc_pages, warc_todo)
     path, docs = archive_dir
     listing = list_archives(spark, str(path))
     sc = spark.sparkContext
     group = "warc-todo-no-job"
     sc.setJobGroup(group, "listing and planning must not run a job")
     try:
-        todo = warc_todo_paths(spark, str(path), ["/elsewhere.warc"])
+        todo = warc_todo(spark, str(path), ["/elsewhere.warc"])
         pages = warc_pages(spark, warc_todo(spark, listing))
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
         # the tracker does see jobs of this group
@@ -581,9 +583,10 @@ def test_crawl_pass_equals_extract_text_quality_of_warc_pages(
         assert sorted(tuple(r) for r in df.collect()) == want, tasks
 
 
-def _corrupt_archive(path, n=24, bad=10):
-    """A .warc.gz of ``n`` pages whose member ``bad`` has a flipped
-    byte inside its deflate data; returns the page urls."""
+def _corrupt_archive(path, n=24, bad=10, flip=20):
+    """A .warc.gz of ``n`` pages whose member ``bad`` has its byte
+    ``flip`` flipped (by default inside its deflate data); returns the
+    page urls and the bad member's offset."""
     recs = [build_response_record(
         "https://z.example/%d" % i, "2026-01-01T00:00:00Z",
         ("<html><p>page %d of a damaged archive</p></html>" % i)
@@ -592,40 +595,69 @@ def _corrupt_archive(path, n=24, bad=10):
     write_warc(buf, recs)
     data = bytearray(buf.getvalue())
     at = [off for off, _plain in iter_gzip_members(bytes(data))][bad]
-    data[at + 20] ^= 0xFF
+    data[at + flip] ^= 0xFF
     path.write_bytes(bytes(data))
-    return ["https://z.example/%d" % i for i in range(n)]
+    return ["https://z.example/%d" % i for i in range(n)], at
+
+
+def _range_errors(spark, root, tasks):
+    """The errors the member reader reports over the ranges that
+    ``plan_ranges`` plans for the archives of ``root`` at ``tasks``:
+    the crawl pass's reads, without its page sink (which keeps no
+    error rows)."""
+    from packages_sgml_spark.spark.warc import (_local_path, _records,
+                                                list_archives, plan_ranges)
+    plan, remote = plan_ranges(spark, list_archives(spark, str(root)),
+                               tasks)
+    assert not remote
+    errors = []
+    for path, start, end in (r for task in plan for r in task):
+        with open(_local_path(path), "rb") as f:
+            for _rec in _records(path, f, start, end, errors):
+                pass
+    return len(plan), errors
 
 
 def test_corrupt_small_archive_never_raises(spark, tmp_path):
     """A small .warc.gz with one corrupt gzip member, on a session
-    with more cores than archives: read_warc keeps the whole-file
-    reader's rows (the records before the bad member, then one
-    x-parse-errors row for the file), and the crawl pass, which splits
-    the archive over every core, resyncs past the bad member and keeps
-    the same rows however the archive is split.  Nothing raises."""
-    from packages_sgml_spark.spark.warc import (read_warc, warc_pages,
-                                                warc_rows,
+    with more cores than archives: every scan (read_warc, warc_pages,
+    stream_warc and the crawl pass) reads it with the gzip-member
+    reader, which resyncs past the bad member and keeps the members
+    after it, with the same pages and the bad member reported exactly
+    once however the archive is split.  Nothing raises."""
+    from packages_sgml_spark.core.warc import iter_warc_records_file_range
+    from packages_sgml_spark.spark.warc import (read_warc, stream_warc,
+                                                warc_pages, warc_rows,
                                                 warc_text_quality)
     root = tmp_path / "warc"
     root.mkdir()
     arc = root / "bad.warc.gz"
-    urls = _corrupt_archive(arc)
+    urls, at = _corrupt_archive(arc)
+    kept = sorted(urls[:10] + urls[11:])
+    want_errors = ["truncated/invalid gzip member at %d" % at]
     errors = []
-    whole = list(warc_rows(str(arc), iter_warc_records(
-        arc.read_bytes(), errors), errors, ("response",)))
-    assert any("gzip stream error" in e for e in errors)
-    assert [r[0] for r in whole] == urls[:10] + [None]
+    with open(arc, "rb") as f:
+        whole = list(warc_rows(str(arc), iter_warc_records_file_range(
+            f, 0, arc.stat().st_size, errors), errors, ("response",)))
+    assert errors == want_errors
+    assert [r[0] for r in whole] == urls[:10] + urls[11:] + [None]
 
-    def key(url, offset, rtype, errs):
-        return (url or "", -1 if offset is None else offset, rtype,
-                tuple(errs or ()))
+    def errors_of(rows):
+        return sorted(e for r in rows if r.url is None
+                      for e in r.warc_errors)
 
-    got = sorted(key(r.url, r.warc_offset, r.record_type, r.warc_errors)
-                 for r in read_warc(spark, str(root)).collect())
-    assert got == sorted(key(r[0], r[10], r[2], r[11]) for r in whole)
+    rows = read_warc(spark, str(root)).collect()
+    assert sorted(r.url for r in rows if r.url is not None) == kept
+    assert errors_of(rows) == want_errors
     assert sorted(r.url for r in warc_pages(spark, str(root))
-                  .select("url").collect()) == sorted(urls[:10])
+                  .select("url").collect()) == kept
+    q = (stream_warc(spark, str(root)).writeStream.format("memory")
+         .queryName("corrupt_stream").trigger(availableNow=True)
+         .option("checkpointLocation", str(tmp_path / "chk")).start())
+    assert q.awaitTermination(180)
+    rows = spark.table("corrupt_stream").collect()
+    assert sorted(r.url for r in rows if r.url is not None) == kept
+    assert errors_of(rows) == want_errors
 
     cores = spark.sparkContext.defaultParallelism
     assert cores > 1
@@ -636,10 +668,32 @@ def test_corrupt_small_archive_never_raises(spark, tmp_path):
         seen[tasks] = sorted(tuple(r)[:-1] for r in rows)
         if tasks == "auto":
             assert len({r.pid for r in rows}) > 1
+        n_tasks, errors = _range_errors(spark, root, tasks)
+        assert errors == want_errors, (tasks, n_tasks, errors)
     assert seen[0] == seen["auto"] == seen[3]
-    assert sorted(r[0] for r in seen[0]) == sorted(
-        urls[:10] + urls[11:])
+    assert sorted(r[0] for r in seen[0]) == kept
     assert {r[4] for r in seen[0]} == {"ok"}
+
+
+@pytest.mark.parametrize("flip", [0, 1])
+def test_damaged_gzip_magic_keeps_later_members(spark, tmp_path, flip):
+    """A .warc.gz whose first member has a damaged magic byte is still
+    read member by member, since its name says gzip: read_warc and the
+    crawl pass lose that member only, at every split, and report it."""
+    from packages_sgml_spark.spark.warc import read_warc, warc_text_quality
+    root = tmp_path / "warc"
+    root.mkdir()
+    urls, at = _corrupt_archive(root / "bad.warc.gz", bad=0, flip=flip)
+    assert at == 0
+    rows = read_warc(spark, str(root)).collect()
+    assert sorted(r.url for r in rows if r.url is not None) == \
+        sorted(urls[1:])
+    assert [e for r in rows if r.url is None for e in r.warc_errors] == \
+        ["truncated/invalid gzip member at 0"]
+    for tasks in (0, "auto", 3):
+        got = warc_text_quality(spark, str(root), tasks=tasks) \
+            .select("url").collect()
+        assert sorted(r.url for r in got) == sorted(urls[1:]), tasks
 
 
 # registers the function's broadcasts as a Python worker does, builds
@@ -818,8 +872,9 @@ def test_warc_reader_mutation_fuzz():
 def test_range_reader_mutation_fuzz():
     """The member-range reader under the whole-file reader's mutation
     fuzz: rows + error strings, never an exception, and on corrupt
-    archives too its adjacent ranges yield exactly the records of one
-    range over the file, so a split never changes what is read."""
+    archives too its adjacent ranges yield exactly the records and
+    errors of one range over the file, so a split never changes what
+    is read."""
     import random
     from packages_sgml_spark.core.warc import iter_warc_records_file_range
     rng = random.Random(0xC0FFEE)
@@ -859,7 +914,10 @@ def test_range_reader_mutation_fuzz():
         for n in (2, 3, 5):
             step = len(data) // n + 1
             cuts = list(range(0, len(data), step)) + [len(data)]
-            assert read(data, cuts, []) == one, (trial, n)
+            split_errors = []
+            assert read(data, cuts, split_errors) == one, (trial, n)
+            # a bad member is reported once whichever range owns it
+            assert sorted(split_errors) == sorted(errors), (trial, n)
 
 
 def test_range_reader_owns_member_at_range_end():
@@ -936,9 +994,10 @@ def test_range_reader_tiles_file_exactly(tmp_path):
 
 
 def test_read_warc_split_matches_single_task(spark, tmp_path):
-    """A .warc.gz above split_bytes reads as N range tasks with rows
+    """Two .warc.gz archives on a session with more cores than that
+    split into member-aligned ranges, one task per core, with rows
     identical to a whole-file read: the core reader over each file's
-    bytes, which read_warc below split_bytes matches too."""
+    bytes."""
     from packages_sgml_spark.core.warc import (build_response_record,
                                                write_warc)
     from packages_sgml_spark.spark.warc import read_warc, warc_rows
@@ -969,16 +1028,30 @@ def test_read_warc_split_matches_single_task(spark, tmp_path):
             errors, ("response",))]
     single.sort()
     assert len(single) == 405
-    assert rows(read_warc(spark, str(tmp_path) + "/*.warc.gz")) == single
-    split = read_warc(spark, str(tmp_path) + "/*.warc.gz",
-                      split_bytes=100_000, range_bytes=30_000)
-    # the big file must ACTUALLY have split into range tasks — a
-    # silent fall-back to the single-task path would keep rows equal
-    # while the whole range code path goes unexercised (review r8:
-    # the original assert here was vacuous)
-    n_tasks = split.rdd.getNumPartitions()
-    assert n_tasks >= size // 30_000, (n_tasks, size)
+    split = read_warc(spark, str(tmp_path) + "/*.warc.gz")
+    # the archives must ACTUALLY have split into range tasks — a
+    # silent fall-back to one task per file would keep rows equal
+    # while the range code path goes unexercised (an earlier assert
+    # here was vacuous)
+    cores = spark.sparkContext.defaultParallelism
+    assert cores > 2
+    assert split.rdd.getNumPartitions() >= cores
     assert rows(split) == single
+
+
+def test_plan_splits_large_archive_without_opening_it(spark):
+    """The split rule on a driver-only listing: a 3 GiB .warc.gz (no
+    such file exists) plans into ranges of at most RANGE_BYTES that
+    tile it, however many tasks are wanted."""
+    from packages_sgml_spark.spark.warc import RANGE_BYTES, plan_ranges
+    path, size = "/nonexistent/big.warc.gz", 3 << 30
+    for tasks in (0, 1, "auto"):
+        plan, remote = plan_ranges(spark, [(path, size)], tasks)
+        ranges = sorted(r for task in plan for r in task)
+        assert remote == [] and {r[0] for r in ranges} == {path}
+        assert ranges[0][1] == 0 and ranges[-1][2] == size
+        assert all(a[2] == b[1] for a, b in zip(ranges, ranges[1:]))
+        assert all(e - s <= RANGE_BYTES for _p, s, e in ranges), tasks
 
 
 def test_range_task_bounded_when_member_exceeds_range():
